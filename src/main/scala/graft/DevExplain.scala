@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: print the executed plan of named queries (after AQE
   * re-planning where it applies, via `explain("formatted")` on the
   * unexecuted frame) — the `.explain`-and-iterate loop SURVEY §7.5
@@ -13,17 +11,8 @@ object DevExplain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: DevExplain <sfDir> <query> [query...]")
     val sf = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.hadoop.fs.file.impl",
-        "graft.hadoop.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.hadoop.NioLocalFs")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession
+      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.drop(1).foreach { name =>
       println(s"===== $name =====")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: run a named query in a loop (noop sink) so a profiler /
   * jstack sampler can attach. Usage: DevLoop <sfDir> <query> [n]
   */
@@ -10,18 +8,7 @@ object DevLoop {
     val sf = args(0)
     val n = if (args.length > 2) args(2).toInt else 30
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.hadoop.fs.file.impl",
-        "graft.hadoop.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.hadoop.NioLocalFs")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(args(1))
     (0 until n).foreach { i =>

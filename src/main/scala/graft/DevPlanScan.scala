@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Dev-only: construct every declared query and report which (if any)
@@ -9,17 +8,7 @@ import scala.util.control.NonFatal
 object DevPlanScan {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.hadoop.fs.file.impl",
-        "graft.hadoop.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.hadoop.NioLocalFs")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

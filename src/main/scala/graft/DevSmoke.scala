@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke: drives SparkEntry.entry the way the driver's t1 gate does
   * (rows > 0 on sf0.001) and prints the plan for eyeballing.
   */
 object DevSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.hadoop.fs.file.impl",
-        "graft.hadoop.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.hadoop.NioLocalFs")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.filter(SparkEntry.queries.contains).foreach { name =>
       println(s"=== PLAN $name ===")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: dump the plan flip TopKBroadcastHint's POST-PUSHDOWN
   * branch produces (VERDICT r21 next-round #7) — a skewed-string
   * catalog table joined on a rare-value filter, explained BEFORE and
@@ -15,17 +13,8 @@ object DevTopKPlan {
   def main(args: Array[String]): Unit = {
     val wh = if (args.nonEmpty) args(0)
       else java.nio.file.Files.createTempDirectory("graft_topk").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.hadoop.fs.file.impl",
-        "graft.hadoop.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.hadoop.NioLocalFs")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession
+      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val cat = "topkcat"

@@ -14,8 +14,10 @@ import graft.functions.{DotProductDouble, Md5Hash32, MinhashSignature, SortedInt
   * — the deployment path on a shared cluster, where users reach
   * `graft_dot` / `graft_minhash` / `graft_intersect_size` /
   * `graft_md5_32` from plain SQL without touching the Scala API.
-  * (Query builders also self-register via GraftFunctions.register, so
-  * the extension is optional in library use.)
+  * [[GraftSession]] builds every spec and dev session this way.
+  * Query builders still self-register the scalar functions via
+  * GraftFunctions.register, so those need no extension in library use;
+  * the `table_changes` TVF (query p34) and the SQL rules do.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -3,7 +3,7 @@ package graft.hadoop
 import java.nio.file.{Files, LinkOption, Paths}
 import java.nio.file.attribute.{PosixFileAttributeView, PosixFilePermission}
 
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** `file:` filesystem for hosts without the Hadoop native library
@@ -16,7 +16,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * a multi-commit lake operation pays hundreds of them, all serial
   * driver time (guide §7.3: driver-side gaps between jobs).
   *
-  * This subclass answers both through java.nio instead:
+  * [[NioRawLocalFileSystem]] answers both through java.nio instead:
   *
   *  - [[setPermission]] → `Files.setPosixFilePermissions` (one
   *    syscall). All internal Hadoop call sites (`create`, `mkdirs`,
@@ -29,12 +29,20 @@ import org.apache.hadoop.fs.permission.FsPermission
   * Semantics are unchanged (same bits on disk, same visibility);
   * only the syscall path differs. Select it per session with
   * `spark.hadoop.fs.file.impl=graft.hadoop.NioLocalFileSystem`.
-  * Note this replaces the checksumming `LocalFileSystem` wrapper, so
-  * `.crc` sidecars are not written — the manifest commit protocol
-  * carries its own integrity (hard-link CAS + immutable files), and
-  * parquet pages carry format-level checksums.
+  * It is the checksumming `LocalFileSystem` wrapper over
+  * [[NioRawLocalFileSystem]], because Hadoop's `FileSystem.getLocal`
+  * casts the `file:` filesystem to that class (the RocksDB state
+  * store uploads its snapshots through it). Checksums are off, so no
+  * `.crc` sidecars are written — the manifest commit protocol carries
+  * its own integrity (hard-link CAS + immutable files), and parquet
+  * pages carry format-level checksums.
   */
-/** The [[NioLocalFileSystem]] as an `AbstractFileSystem`, for the
+class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem) {
+  setWriteChecksum(false)
+  setVerifyChecksum(false)
+}
+
+/** The NIO raw filesystem as an `AbstractFileSystem`, for the
   * FileContext API — Spark's STREAMING checkpoint/state-store writes
   * go through `CheckpointFileManager` → `FileContext`, which resolves
   * `fs.AbstractFileSystem.file.impl`, NOT `fs.file.impl`; without
@@ -46,9 +54,10 @@ import org.apache.hadoop.fs.permission.FsPermission
 class NioLocalFs(uri: java.net.URI,
     conf: org.apache.hadoop.conf.Configuration)
   extends org.apache.hadoop.fs.DelegateToFileSystem(
-    uri, new NioLocalFileSystem, conf, "file", false)
+    uri, new NioRawLocalFileSystem, conf, "file", false)
 
-class NioLocalFileSystem extends RawLocalFileSystem {
+/** The raw `file:` filesystem with the NIO permission and status paths. */
+class NioRawLocalFileSystem extends RawLocalFileSystem {
 
   override def setPermission(p: Path, permission: FsPermission): Unit =
     try {

@@ -1599,7 +1599,9 @@ object PipelineOps {
     * precomputed rows; the shared oracle (p32Sql) proves the SQL path
     * hash-equal to the programmatic `rowChanges`. The TVF arguments
     * are literals because they parameterize planning: the function
-    * resolves which commit ranges to read before any row flows.
+    * resolves which commit ranges to read before any row flows. The
+    * TVF is injected by [[graft.GraftExtensions]], so p34 needs a
+    * session built with it.
     */
   def p34TableChanges(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -1608,11 +1610,6 @@ object PipelineOps {
     val inv = p34Invocation.incrementAndGet()
     val table = graft.sinks.Sinks.sessionScratchPath(spark,
       "p34_cdf_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + inv)
-    // TVF registration (config-time path: spark.sql.extensions)
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.GraftExtensions().apply(ext)
-    org.apache.spark.sql.GraftColumnBridge
-      .registerTableFunctionsInto(ext, spark)
     graft.sinks.ManifestTable.write(spark,
       docs.filter(col("doc_id") % 2 === 0)
         .repartitionByRange(8, col("doc_id")), table)

@@ -749,13 +749,18 @@ object TextOps {
           concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
           .otherwise(concat(acc, array(s))))
 
-  /** Rank-ordered application of a learned merge table — the t05
-    * consumption path (train → apply): pre-tokens re-segment under the
-    * learned vocabulary.
+  /** Rank-ordered application of a learned merge table to the symbol
+    * array column `c` — the train → apply path: pre-tokens re-segment
+    * under the learned vocabulary. One projection per rule, each
+    * reading the previous rule's output attribute: applyMerge uses its
+    * input ~3×, so nesting the rules in one expression would build a
+    * 3ⁿ-node tree.
     */
-  private[graft] def applyMerges(syms: Column,
-      merges: Seq[(String, String)]): Column =
-    merges.foldLeft(syms) { case (c, (l, r)) => applyMerge(c, l, r) }
+  private[graft] def applyMergeRules(df: DataFrame, c: String,
+      merges: Seq[(String, String)]): DataFrame =
+    merges.foldLeft(df) { case (d, (l, r)) =>
+      d.withColumn(c, applyMerge(col(c), l, r))
+    }
 
   /** The FROZEN production merge table: t15's deterministic training
     * output on the sf0.001 corpus (20 rounds, rank order) — the
@@ -785,12 +790,10 @@ object TextOps {
     * sf0.1 when the fold moved off the occurrence stream). The
     * corpus-sized work is one (doc, word) count collapse; the segmented
     * vocabulary broadcasts back onto it and the per-document economy
-    * is a weighted sum. Inside the vocabulary pass the rules apply as
-    * one projection per rule, each referencing the previous rule's
-    * OUTPUT ATTRIBUTE: applyMerge uses its input ~3×, so inlining all
-    * 20 rules into one expression is a 3²⁰-node tree (measured: OOM in
-    * the optimizer), while the attribute boundary keeps the plan
-    * linear and CollapseProject leaves multi-use non-cheap producers
+    * is a weighted sum. Inside the vocabulary pass the rules apply
+    * through [[applyMergeRules]], one projection per rule (one
+    * 3²⁰-node expression measured OOM in the optimizer);
+    * CollapseProject leaves those multi-use non-cheap producers
     * alone. The oracle replays the identical fold as a recursive-CTE
     * state machine over the same distinct vocabulary (DuckDB 1.0 has
     * no list-accumulator reduce), so the driver gate stays hash-exact.
@@ -803,10 +806,9 @@ object TextOps {
       .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("n"))
     val vocab0 = wc.select(col("w")).distinct()
       .select(col("w"), expr("split(w, '')").as("cur"))
-    val vocab = FrozenMerges.foldLeft(vocab0) { case (df, (l, r)) =>
-      df.withColumn("cur", applyMerge(col("cur"), l, r))
-    }.select(col("w"), length(col("w")).cast("long").as("nc"),
-      size(col("cur")).cast("long").as("ns"))
+    val vocab = applyMergeRules(vocab0, "cur", FrozenMerges)
+      .select(col("w"), length(col("w")).cast("long").as("nc"),
+        size(col("cur")).cast("long").as("ns"))
     wc.join(broadcast(vocab), Seq("w"))
       .groupBy(col("doc_id"))
       .agg(sum(col("n")).as("n_pretok"),

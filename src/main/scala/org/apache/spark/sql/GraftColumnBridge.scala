@@ -45,21 +45,6 @@ object GraftColumnBridge {
     () => ser.value
   }
 
-  /** Apply a SparkSessionExtensions' injected functions to an existing
-    * session's registry (normally this happens only at session build;
-    * tests use this to exercise the extension against a shared
-    * session).
-    */
-  def registerInto(ext: SparkSessionExtensions, spark: SparkSession): Unit =
-    ext.registerFunctions(spark.sessionState.functionRegistry)
-
-  /** Resolve an extensions object's injected planner strategies
-    * (private[sql] buildPlannerStrategies) — lets tests assert the
-    * config-time wiring without building a whole new session.
-    */
-  def plannerStrategies(ext: SparkSessionExtensions, spark: SparkSession): Seq[execution.SparkStrategy] =
-    ext.buildPlannerStrategies(spark.asInstanceOf[classic.SparkSession])
-
   /** Build a DataFrame from a custom logical plan (the private[sql]
     * Dataset.ofRows) — how extension libraries surface custom
     * LogicalPlan operators behind a plain DataFrame API.
@@ -67,18 +52,6 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** A NEW session on the same SparkContext with the given extensions
-    * applied — what `spark.sql.extensions` at build time produces,
-    * reachable from a test JVM whose shared session was already built
-    * without the config (extensions bind at SessionState construction
-    * and cannot be added to a live session). Uses the classic
-    * builder's `create()` (not getOrCreate), which always builds a
-    * fresh session honoring `withExtensions`.
-    */
-  def sessionWithExtensions(
-      f: SparkSessionExtensions => Unit): SparkSession =
-    classic.SparkSession.builder().withExtensions(f).create()
 
   /** The micro-batch Dataset a V1 streaming Sink's `addBatch`
     * receives is bound to the stream's IncrementalExecution — calling
@@ -118,16 +91,6 @@ object GraftColumnBridge {
       name: String): connector.catalog.CatalogPlugin =
     spark.asInstanceOf[classic.SparkSession].sessionState.catalogManager
       .catalog(name)
-
-  /** Apply an extensions object's injected TABLE functions to an
-    * existing session's table-function registry (the TVF twin of
-    * [[registerInto]]).
-    */
-  def registerTableFunctionsInto(ext: SparkSessionExtensions,
-      spark: SparkSession): Unit =
-    ext.registerTableFunctions(
-      spark.asInstanceOf[classic.SparkSession].sessionState
-        .tableFunctionRegistry)
 
   /** Idempotently add a planner strategy to a live session (the
     * config-time path is GraftExtensions.injectPlannerStrategy; this

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops._
 import graft.streaming.StreamingOps
@@ -10,15 +9,8 @@ import graft.streaming.StreamingOps
   * streaming/batch agreement, the mapPartitions decode stub, LSH
   * recall vs brute force, minhash estimate sanity.
   */
-class AnalyticsSpec extends AnyFunSuite {
+class AnalyticsSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("streaming tumbling windows agree with the batch formulation") {
     val streamed = StreamingOps.runTumblingToCompletion(spark, sf)

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -11,14 +10,7 @@ import java.nio.file.Files
   * (dataChange = false), so streaming/micro-append workloads keep a
   * bounded live-file count without an OPTIMIZE operator in the loop.
   */
-class AutoCompactSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class AutoCompactSpec extends AnyFunSuite with SparkSuite {
   private def fresh(): String =
     Files.createTempDirectory("graft_autoc").resolve("t").toString
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.TextOps
 
@@ -19,29 +18,65 @@ import graft.ops.TextOps
   *      learned table compresses the corpus and leaves NO residual
   *      adjacency for any learned pair (merges only destroy
   *      adjacencies — replacing two neighbors with their concatenation
-  *      never makes two OLD symbols newly adjacent).
+  *      never makes two OLD symbols newly adjacent);
+  *   5. the whole merge table equals a plain-Scala reference trainer's,
+  *      on the controlled corpus and on the fixture text.
   */
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+
+  private type Merge = (Int, String, String, String, Long)
+
+  private def mergeTable(df: org.apache.spark.sql.DataFrame): Seq[Merge] =
+    df.collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
+      r.getString(3), r.getLong(4))).toSeq
+
+  private val handWords = Seq(("hug", 10L), ("pug", 5L), ("pun", 12L),
+    ("bun", 4L), ("hugs", 5L))
+
+  private def symbolTable(words: Seq[(String, Long)]) = {
+    import spark.implicits._
+    words.toDF("w", "freq")
+      .select(expr("split(w, '')").as("syms"), col("freq"))
+  }
+
+  /** Plain-Scala reference trainer: the textbook BPE loop over a
+    * word-frequency table. Each round sums every adjacent pair's word
+    * frequencies, takes the highest count (ties: smallest left, then
+    * smallest right symbol; String order equals Spark's byte order on
+    * the ASCII fixtures), records it and rewrites every word
+    * leftmost-greedy. Stops early when no word has two symbols.
+    */
+  private def referenceTrain(words: Seq[(String, Long)],
+      nMerges: Int): Seq[Merge] = {
+    def merge(syms: Vector[String], l: String, r: String): Vector[String] =
+      syms.foldLeft(Vector.empty[String]) { (acc, s) =>
+        if (acc.nonEmpty && acc.last == l && s == r) acc.init :+ (l + r)
+        else acc :+ s
+      }
+    var table = words.map { case (w, f) => (w.map(_.toString).toVector, f) }
+    val out = Vector.newBuilder[Merge]
+    var round = 1
+    var exhausted = false
+    while (round <= nMerges && !exhausted) {
+      val counts = table.flatMap { case (syms, f) =>
+        syms.sliding(2).collect { case Seq(l, r) => ((l, r), f) }
+      }.groupMapReduce(_._1)(_._2)(_ + _)
+      if (counts.isEmpty) exhausted = true
+      else {
+        val ((l, r), n) = counts.minBy { case ((l, r), n) => (-n, l, r) }
+        out += ((round, l, r, l + r, n))
+        table = table.map { case (syms, f) => (merge(syms, l, r), f) }
+        round += 1
+      }
+    }
+    out.result()
+  }
 
   test("hand-computed merge sequence: tie-break, greedy apply, exhaustion") {
-    import spark.implicits._
-    val words = Seq(("hug", 10L), ("pug", 5L), ("pun", 12L),
-        ("bun", 4L), ("hugs", 5L))
-      .toDF("w", "freq")
-      .select(expr("split(w, '')").as("syms"), col("freq"))
     // asked for 8 merges; the corpus only yields 7 before no pair is
     // left. Round 5 is the tie: (hug,s)=5 vs (p,ug)=5 → "hug" < "p".
-    val got = TextOps.bpeTrainOn(words, 8)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getLong(4))).toSeq
+    val got = mergeTable(TextOps.bpeTrainOn(symbolTable(handWords), 8))
     val expected = Seq(
       (1, "u", "g", "ug", 20L),
       (2, "u", "n", "un", 16L),
@@ -53,9 +88,8 @@ class BpeSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
-  private lazy val fixtureMerges =
-    TextOps.t15BpeTrain(spark, sf, 10).collect()
-      .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq
+  private lazy val fixtureTable = mergeTable(TextOps.t15BpeTrain(spark, sf, 10))
+  private lazy val fixtureMerges = fixtureTable.map(m => (m._2, m._3, m._5))
 
   test("fixture training: monotone best-pair counts, deterministic replay") {
     val counts = fixtureMerges.map(_._3)
@@ -74,9 +108,8 @@ class BpeSpec extends AnyFunSuite {
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .select(expr("split(w, '')").as("syms"), col("freq"))
       .cache()
-    val applied = words
-      .select(TextOps.applyMerges(col("syms"),
-        fixtureMerges.map(m => (m._1, m._2))).as("syms"), col("freq"))
+    val applied = TextOps.applyMergeRules(words, "syms",
+        fixtureMerges.map(m => (m._1, m._2)))
       .cache()
     def corpusTokens(df: org.apache.spark.sql.DataFrame): Long =
       df.agg(sum(size(col("syms")) * col("freq"))).collect()(0).getLong(0)
@@ -97,6 +130,19 @@ class BpeSpec extends AnyFunSuite {
       .count()
     assert(residual == 0L, s"$residual adjacencies of learned pairs survive")
     words.unpersist(); applied.unpersist()
+  }
+
+  test("trainer equals the plain-Scala reference: hand corpus and fixture text") {
+    assert(mergeTable(TextOps.bpeTrainOn(symbolTable(handWords), 8)) ==
+      referenceTrain(handWords, 8))
+    // t15's pre-tokenizer, replayed with the same java.util.regex pattern
+    val pretok = " ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+".r
+    val words = graft.ops.Tables.documents(spark, sf).select("text")
+      .collect().toSeq.flatMap(r => pretok.findAllIn(r.getString(0)))
+      .groupMapReduce(identity)(_ => 1L)(_ + _).toSeq
+    val reference = referenceTrain(words, 10)
+    assert(fixtureTable == reference,
+      s"\n  trainer  =$fixtureTable\n  reference=$reference")
   }
 
   /** VERDICT r7 #6: t18 consumes the TRAINED artifact — the frozen

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -11,14 +10,7 @@ import java.nio.file.Files
   * pruning through the SQL scan path, and agreement with the
   * programmatic API on the same table.
   */
-class CatalogSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CatalogSpec extends AnyFunSuite with SparkSuite {
   /** Each test gets its own catalog name + warehouse: catalog configs
     * are lazily bound per name, so a fresh name always picks up its
     * own warehouse even on the shared test session.
@@ -991,11 +983,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("table_changes TVF serves the row-level change feed from SQL text") {
-    // config-time wiring is spark.sql.extensions=graft.GraftExtensions;
-    // the shared test session registers the injected TVFs directly
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    org.apache.spark.sql.GraftColumnBridge.registerTableFunctionsInto(ext, spark)
+    // the TVF comes from spark.sql.extensions=graft.GraftExtensions
     val (cat, wh) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.db")
     spark.sql(s"CREATE TABLE $cat.db.tc (id BIGINT, tag STRING) " +

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import graft.sinks.ManifestTable
 
@@ -12,20 +11,7 @@ import graft.sinks.ManifestTable
   * the mass where it is, the filtered side estimates tiny, and the
   * SAME query broadcast-joins. The spec pins exactly that flip.
   */
-class CboHistogramSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = org.apache.spark.sql.GraftColumnBridge.sessionWithExtensions(
-      new GraftExtensions().apply(_))
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s
-  }
-
+class CboHistogramSpec extends AnyFunSuite with SparkSuite {
   test("a skewed-range filter flips SMJ to broadcast once the histogram lands") {
     import spark.implicits._
     val cat = "cbocat"

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 
@@ -13,13 +12,7 @@ import graft.ops.Dedup
   * degenerate ones (no edges, one giant clique, self-loops,
   * duplicated/reversed edge listings).
   */
-class CcPropertySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CcPropertySpec extends AnyFunSuite with SparkSuite {
   /** Union-find ground truth: component min per node. */
   private def unionFind(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -13,20 +12,7 @@ import java.nio.file.Files
   * source's vacuum honors the clone-protection marker instead of
   * reclaiming files only the clone still references.
   */
-class CloneSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = org.apache.spark.sql.GraftColumnBridge.sessionWithExtensions(
-      new GraftExtensions().apply(_))
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s
-  }
-
+class CloneSpec extends AnyFunSuite with SparkSuite {
   private def fresh(name: String): String =
     Files.createTempDirectory("graft_clone").resolve(name).toString
 

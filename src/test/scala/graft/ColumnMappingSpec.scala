@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -12,14 +11,7 @@ import java.nio.file.Files
   * physical → logical, time travel reads each version under its own
   * names, and a re-added name never resurrects dropped data.
   */
-class ColumnMappingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ColumnMappingSpec extends AnyFunSuite with SparkSuite {
   private def freshTable(): String =
     Files.createTempDirectory("graft_colmap").resolve("t").toString
 
@@ -124,30 +116,28 @@ class ColumnMappingSpec extends AnyFunSuite {
     val t = freshTable()
     seed(t)
     val wh = new java.io.File(t).getParent
-    val ext = org.apache.spark.sql.GraftColumnBridge
-      .sessionWithExtensions(new GraftExtensions().apply(_))
-    ext.conf.set("spark.sql.shuffle.partitions", "4")
     val cat = "cmap"
-    ext.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftCatalog")
-    ext.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    ext.sql(s"ALTER TABLE $cat.t RENAME COLUMN qty TO amount")
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"ALTER TABLE $cat.t RENAME COLUMN qty TO amount")
     // the extension session reads through the mapping-aware native scan
-    assert(ext.sql(s"SELECT sum(amount) AS s FROM $cat.t").head().getLong(0)
+    assert(spark.sql(s"SELECT sum(amount) AS s FROM $cat.t").head().getLong(0)
       == (0L until 100L).map(_ * 2).sum)
-    assert(ext.sql(s"SELECT id FROM $cat.t WHERE amount = 10").head()
+    assert(spark.sql(s"SELECT id FROM $cat.t WHERE amount = 10").head()
       .getLong(0) == 5L)
-    ext.sql(s"ALTER TABLE $cat.t DROP COLUMN tag")
-    assert(ext.sql(s"SELECT * FROM $cat.t").columns.toSeq ==
+    spark.sql(s"ALTER TABLE $cat.t DROP COLUMN tag")
+    assert(spark.sql(s"SELECT * FROM $cat.t").columns.toSeq ==
       Seq("id", "amount"))
     // INSERT through the catalog writes the physical column correctly
-    ext.sql(s"INSERT INTO $cat.t VALUES (500, 777)")
-    assert(ext.sql(s"SELECT amount FROM $cat.t WHERE id = 500").head()
+    spark.sql(s"INSERT INTO $cat.t VALUES (500, 777)")
+    assert(spark.sql(s"SELECT amount FROM $cat.t WHERE id = 500").head()
       .getLong(0) == 777L)
     // a session WITHOUT the extension refuses rather than misread
-    spark.conf.set(s"spark.sql.catalog.${cat}2", "graft.catalog.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.${cat}2.warehouse", wh)
+    val bare = bareSession()
+    bare.conf.set(s"spark.sql.catalog.${cat}2", "graft.catalog.GraftCatalog")
+    bare.conf.set(s"spark.sql.catalog.${cat}2.warehouse", wh)
     val e = intercept[Exception](
-      spark.sql(s"SELECT * FROM ${cat}2.t").collect())
+      bare.sql(s"SELECT * FROM ${cat}2.t").collect())
     def msgs(x: Throwable): Seq[String] =
       if (x == null) Seq.empty
       else Option(x.getMessage).toSeq ++ msgs(x.getCause)

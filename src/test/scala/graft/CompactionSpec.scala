@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import graft.ops.Tables
@@ -15,15 +15,8 @@ import graft.sinks.Sinks
   * (c) keep the invariant its layout exists for — row-group skipping
   * for the sorted flavor, directory pruning for the partitioned one.
   */
-class CompactionSpec extends AnyFunSuite {
+class CompactionSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.01"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Order-insensitive multiset fingerprint: count + sum of per-row
     * 64-bit hashes over all columns.

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -12,14 +11,7 @@ import java.nio.file.Files
   * turned adopted `k=v/file.parquet` paths into file-as-basePath
   * errors or silently dropped partition columns).
   */
-class ConvertedLayoutSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ConvertedLayoutSpec extends AnyFunSuite with SparkSuite {
   private def freshDir(): String =
     Files.createTempDirectory("graft_convert").resolve("t").toString
 

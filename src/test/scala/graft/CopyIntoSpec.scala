@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -12,20 +11,7 @@ import java.nio.file.Files
   * commit: re-runs load nothing, new files load exactly once across a
   * crash-replay, modified landing files fail loudly.
   */
-class CopyIntoSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = org.apache.spark.sql.GraftColumnBridge.sessionWithExtensions(
-      new GraftExtensions().apply(_))
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s
-  }
-
+class CopyIntoSpec extends AnyFunSuite with SparkSuite {
   private def landFile(dir: String, name: String, ids: Seq[Long]): Unit = {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft_copy_stage").toString

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Tables}
 
@@ -10,15 +9,7 @@ import graft.ops.{Dedup, Tables}
   * as much of the brute-force ground truth as the label-blocked d05
   * does — otherwise it wouldn't be a production replacement.
   */
-class DedupLshSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DedupLshSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("banded-LSH blocking recall >= label blocking recall vs brute-force truth") {

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -11,14 +10,7 @@ import java.nio.file.Files
   * anti-join, disjoint accumulation, materialization by compaction,
   * sidecar vacuum, and the reader feature gate on the SQL catalog.
   */
-class DeletionVectorSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DeletionVectorSpec extends AnyFunSuite with SparkSuite {
   private def freshTable(): String =
     Files.createTempDirectory("graft_dv").resolve("t").toString
 
@@ -345,18 +337,20 @@ class DeletionVectorSpec extends AnyFunSuite {
     val t = rangedTable()
     val wh = new java.io.File(t).getParent
     val cat = "dvgate"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    assert(spark.sql(s"SELECT count(*) AS c FROM $cat.t").head().getLong(0) == 100)
+    // the gate is what a session without GraftExtensions' DV read rule sees
+    val bare = bareSession()
+    bare.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftCatalog")
+    bare.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    assert(bare.sql(s"SELECT count(*) AS c FROM $cat.t").head().getLong(0) == 100)
     ManifestTable.deleteVectors(spark, t, col("id") === 3L)
-    val e = intercept[Exception](spark.sql(s"SELECT * FROM $cat.t").collect())
+    val e = intercept[Exception](bare.sql(s"SELECT * FROM $cat.t").collect())
     def msgs(x: Throwable): Seq[String] =
       if (x == null) Seq.empty
       else Option(x.getMessage).toSeq ++ msgs(x.getCause)
     assert(msgs(e).exists(_.contains("deletion vectors")),
       s"catalog must refuse, not resurrect: $e")
     ManifestTable.compact(spark, t)
-    assert(spark.sql(s"SELECT count(*) AS c FROM $cat.t").head().getLong(0) == 99,
+    assert(bare.sql(s"SELECT count(*) AS c FROM $cat.t").head().getLong(0) == 99,
       "compaction re-admits the table with the delete applied")
   }
 
@@ -379,32 +373,28 @@ class DeletionVectorSpec extends AnyFunSuite {
   test("GraftExtensions session reads a DV-bearing table through SQL (merge-on-read)") {
     val t = rangedTable()
     val wh = new java.io.File(t).getParent
-    // the DV-capable reader is the extension's analyzer rule — build
-    // the deployment-shape session (extensions bind at session build)
-    val ext = org.apache.spark.sql.GraftColumnBridge
-      .sessionWithExtensions(new GraftExtensions().apply(_))
-    ext.conf.set("spark.sql.shuffle.partitions", "4")
+    // the DV-capable reader is the extension's analyzer rule
     val cat = "dvread"
-    ext.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftCatalog")
-    ext.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
     ManifestTable.deleteVectors(spark, t, col("id") % 10 === 3L)
     // SQL read equals the programmatic DV-applying read — no refusal,
     // no resurrected rows
-    assert(ext.sql(s"SELECT count(*) AS c FROM $cat.t").head().getLong(0) == 90L)
-    val ids = ext.sql(s"SELECT id FROM $cat.t WHERE id < 20 ORDER BY id")
+    assert(spark.sql(s"SELECT count(*) AS c FROM $cat.t").head().getLong(0) == 90L)
+    val ids = spark.sql(s"SELECT id FROM $cat.t WHERE id < 20 ORDER BY id")
       .collect().map(_.getLong(0)).toSeq
     assert(ids == (0L until 20L).filterNot(_ % 10 == 3),
       s"DV anti-join must drop exactly the deleted rows: $ids")
     // predicates/projections still work through the rewritten plan
-    assert(ext.sql(s"SELECT sum(id) AS s FROM $cat.t WHERE tag = 'tag3'")
+    assert(spark.sql(s"SELECT sum(id) AS s FROM $cat.t WHERE tag = 'tag3'")
       .head().getLong(0) ==
       (0L until 100L).filter(i => i % 7 == 3 && i % 10 != 3).sum)
     // writes on the DV-bearing table keep working through the catalog
-    ext.sql(s"INSERT INTO $cat.t VALUES (1000, 'tagX')")
-    assert(ext.sql(s"SELECT count(*) AS c FROM $cat.t").head().getLong(0) == 91L)
-    // and compaction still materializes: post-compact both sessions agree
+    spark.sql(s"INSERT INTO $cat.t VALUES (1000, 'tagX')")
+    assert(spark.sql(s"SELECT count(*) AS c FROM $cat.t").head().getLong(0) == 91L)
+    // and compaction still materializes
     ManifestTable.compact(spark, t)
-    assert(ext.sql(s"SELECT count(*) AS c FROM $cat.t").head().getLong(0) == 91L)
+    assert(spark.sql(s"SELECT count(*) AS c FROM $cat.t").head().getLong(0) == 91L)
     assert(spark.sql(s"SELECT 1").count() == 1L) // shared context intact
   }
 

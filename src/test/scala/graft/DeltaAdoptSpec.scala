@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -16,14 +16,7 @@ import java.nio.file.Files
   * first-class citizen (reads, DML, skipping). Unsupported reader
   * semantics refuse loudly.
   */
-class DeltaAdoptSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DeltaAdoptSpec extends AnyFunSuite with SparkSuite {
   private val mapper = new ObjectMapper()
 
   private def fresh(): String =

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Tables, TextOps}
 import graft.sinks.Sinks
@@ -15,15 +14,8 @@ import graft.sinks.Sinks
   * plan (PartitionFilters + pruned directory count) AND the rows
   * (identical to the flat table).
   */
-class DocumentLayoutSpec extends AnyFunSuite {
+class DocumentLayoutSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("t01 over lang-partitioned documents: PartitionFilters prune, rows unchanged") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_docs_lang").toString

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.ops.Tables
@@ -20,15 +20,7 @@ import java.nio.file.{Files, Path, StandardCopyOption}
   * arms no longer depends on which other suites happen to synthesize
   * legacy files.
   */
-class EventTimeUnitsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class EventTimeUnitsSpec extends AnyFunSuite with SparkSuite {
   private val baseUs = 1704067200000000L // 2024-01-01 00:00:00 UTC
   // sub-second micros exercise precision below the second AND the
   // nanos→micros division; hours spread rows across two 6h windows

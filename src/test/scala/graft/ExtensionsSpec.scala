@@ -1,27 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{GraftColumnBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.classic
 
 /** GraftExtensions must expose the native functions to plain SQL — the
   * shared-cluster deployment path is
-  * `spark.sql.extensions=graft.GraftExtensions` at session build; here
-  * the injections are applied to the suite's shared session through
-  * the bridge (extensions only run at build time, and the test JVM's
-  * session is shared across suites).
+  * `spark.sql.extensions=graft.GraftExtensions` at session build, which
+  * is how the specs' shared session is built.
   */
-class ExtensionsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ExtensionsSpec extends AnyFunSuite with SparkSuite {
   test("injected functions resolve and evaluate from plain SQL") {
-    val ext = new SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    GraftColumnBridge.registerInto(ext, spark)
-
     val dot = spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head().getDouble(0)
     assert(dot == 11.0)
@@ -37,9 +25,8 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("extension wires the TopKPerKey planner strategy (config-time path)") {
-    val ext = new SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    assert(GraftColumnBridge.plannerStrategies(ext, spark)
+    val planner = spark.asInstanceOf[classic.SparkSession].sessionState.planner
+    assert(planner.extraPlanningStrategies
       .contains(graft.plans.TopKPerKeyStrategy))
   }
 
@@ -52,18 +39,21 @@ class ExtensionsSpec extends AnyFunSuite {
         size(array_intersect(split(col("text"), " "),
           split(concat_ws(" ", col("lang"), col("source")), " "))).as("n"))
       .orderBy("doc_id")
-    val reference = query.collect().map(_.getInt(1)).toSeq // rule OFF
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ graft.plans.IntersectSizeRewrite
-    try {
-      val df = query
-      assert(df.queryExecution.optimizedPlan.toString.contains("graft_intersect_size"))
-      assert(df.collect().map(_.getInt(1)).toSeq == reference)
-      // non-eligible types (nullable elements) stay on the built-in path
-      val nn = Seq((Seq(Some("a"), None), Seq(Some("a")))).toDF("a", "b")
-        .select(size(array_intersect(col("a"), col("b"))).as("n"))
-      assert(!nn.queryExecution.optimizedPlan.toString.contains("graft_intersect_size"))
-      assert(nn.head().getInt(0) == 1)
-    } finally spark.experimental.extraOptimizations = prev
+    val ruleOff = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(ruleOff, graft.plans.IntersectSizeRewrite.ruleName)
+    val reference =
+      try {
+        val off = query
+        assert(!off.queryExecution.optimizedPlan.toString.contains("graft_intersect_size"))
+        off.collect().map(_.getInt(1)).toSeq
+      } finally spark.conf.unset(ruleOff)
+    val df = query
+    assert(df.queryExecution.optimizedPlan.toString.contains("graft_intersect_size"))
+    assert(df.collect().map(_.getInt(1)).toSeq == reference)
+    // non-eligible types (nullable elements) stay on the built-in path
+    val nn = Seq((Seq(Some("a"), None), Seq(Some("a")))).toDF("a", "b")
+      .select(size(array_intersect(col("a"), col("b"))).as("n"))
+    assert(!nn.queryExecution.optimizedPlan.toString.contains("graft_intersect_size"))
+    assert(nn.head().getInt(0) == 1)
   }
 }

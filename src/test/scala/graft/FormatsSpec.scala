@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ingest.Ingest
 import graft.ops.Tables
@@ -10,14 +9,8 @@ import graft.ops.Tables
   * + schema inference (the reference's Excel-ingest stand-in) and JSON
   * lines, round-tripped against the parquet source of truth.
   */
-class FormatsSpec extends AnyFunSuite {
+class FormatsSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("CSV round-trip with header + inferSchema preserves values and types") {
     val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString + "/nation"

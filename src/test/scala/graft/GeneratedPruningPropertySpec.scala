@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 
@@ -13,20 +12,7 @@ import graft.sinks.ManifestTable
   * arithmetic (strict bounds at unit boundaries, week truncation,
   * DIV on negatives).
   */
-class GeneratedPruningPropertySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = org.apache.spark.sql.GraftColumnBridge.sessionWithExtensions(
-      new GraftExtensions().apply(_))
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s
-  }
-
+class GeneratedPruningPropertySpec extends AnyFunSuite with SparkSuite {
   private val n = new java.util.concurrent.atomic.AtomicInteger(0)
   private def freshCat(): (String, String) = {
     val cat = s"gppcat${n.incrementAndGet()}"

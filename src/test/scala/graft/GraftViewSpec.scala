@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.connector.catalog.Identifier
 import java.nio.file.Files
 
@@ -13,20 +13,7 @@ import java.nio.file.Files
   * persist as JSON under the namespace's `_views/` dir — stateless
   * like tables, no metastore.
   */
-class GraftViewSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = GraftColumnBridge.sessionWithExtensions(
-      new GraftExtensions().apply(_))
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s
-  }
-
+class GraftViewSpec extends AnyFunSuite with SparkSuite {
   private val n = new java.util.concurrent.atomic.AtomicInteger(0)
   private def freshCatalog(): (String, String) = {
     val cat = s"viewc${n.incrementAndGet()}"

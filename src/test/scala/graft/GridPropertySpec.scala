@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Scale
 
@@ -11,14 +10,7 @@ import graft.ops.Scale
   * set equals the plain blocked self-join's. This is the invariant the
   * d04/d05 oracles rely on.
   */
-class GridPropertySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GridPropertySpec extends AnyFunSuite with SparkSuite {
   test("grid pair set == plain pair set over random block structures") {
     import spark.implicits._
     val rnd = new scala.util.Random(20260812L)

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Tables
 
@@ -12,15 +11,8 @@ import graft.ops.Tables
   * lists caching as a wished-for feature; here it is the built-in
   * columnar InMemoryRelation).
   */
-class HintsAndCacheSpec extends AnyFunSuite {
+class HintsAndCacheSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def joinPlan(hint: String): String = {
     val o = Tables.orders(spark, sf)

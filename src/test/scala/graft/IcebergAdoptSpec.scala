@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
@@ -16,14 +15,7 @@ import java.nio.file.Files
   * honored; v2 delete files, non-identity transforms and field-id
   * renames refuse loudly.
   */
-class IcebergAdoptSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class IcebergAdoptSpec extends AnyFunSuite with SparkSuite {
   private def fresh(): String =
     Files.createTempDirectory("graft_ice").resolve("t").toString
 

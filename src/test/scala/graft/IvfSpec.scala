@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -11,15 +10,8 @@ import graft.ops.Similarity
   * trained codebook SQL-inexpressible — while `s03_knn_ivf` itself
   * stays on the deterministic codebook the DuckDB oracle replays.
   */
-class IvfSpec extends AnyFunSuite {
+class IvfSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** ANN recall pinned against brute-force truth, the same discipline
     * as d10/d04b: s02's banded multi-probe (4 bands × 2 planes,

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -15,15 +14,8 @@ import graft.ops.Similarity
   * this spec proves s06 actually rides it and that its result is
   * invariant under forced maximal splitting.
   */
-class KnnGraphSpec extends AnyFunSuite {
+class KnnGraphSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** The anti-cliff property itself: expected bucket size
     * n / 2^ppb(n) stays ≤ targetRows (32) until the clamp, across

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.{ManifestTable, Sinks}
 import java.nio.file.Files
@@ -11,14 +10,7 @@ import java.nio.file.Files
   * just result equality), copy-on-write rewrite narrowness, and the
   * fail-open contract for stats-less files.
   */
-class ManifestSkippingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ManifestSkippingSpec extends AnyFunSuite with SparkSuite {
   private def freshTable(): String =
     Files.createTempDirectory("graft_skip").resolve("t").toString
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -10,14 +9,7 @@ import java.nio.file.Files
   * exactly-once across restarts from checkpoint, idle triggers,
   * compaction skipping, and the rewrite failure contract.
   */
-class ManifestStreamSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ManifestStreamSpec extends AnyFunSuite with SparkSuite {
   private def freshRoot(): String =
     Files.createTempDirectory("graft_stream").toString
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -9,14 +8,7 @@ import java.nio.file.Files
 /** Manifest-committed table: snapshot isolation, append, compaction,
   * vacuum, and the commit CAS.
   */
-class ManifestTableSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ManifestTableSpec extends AnyFunSuite with SparkSuite {
   private def freshTable(): String =
     Files.createTempDirectory("graft_manifest").resolve("t").toString
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Multimodal
 
@@ -9,13 +8,7 @@ import graft.ops.Multimodal
   * only meaningful when payload bytes == characters; non-ASCII
   * payloads must fail fast, not emit replacement characters.
   */
-class MultimodalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MultimodalSpec extends AnyFunSuite with SparkSuite {
   private def media(text: String) = {
     import spark.implicits._
     Seq((1L, text)).toDF("doc_id", "text")

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -12,20 +12,7 @@ import java.nio.file.Files
   * identity across restarts, partitioned staging, rate-limit option
   * passthrough, CDC reads, and the append-only refusal.
   */
-class NamedStreamSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = GraftColumnBridge.sessionWithExtensions(
-      new GraftExtensions().apply(_))
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s
-  }
-
+class NamedStreamSpec extends AnyFunSuite with SparkSuite {
   private val n = new java.util.concurrent.atomic.AtomicInteger(0)
   private def freshCatalog(): (String, String) = {
     val cat = s"nstream${n.incrementAndGet()}"

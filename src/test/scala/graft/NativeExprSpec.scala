@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.{GraftFunctions, PortableHash}
 
@@ -10,14 +9,7 @@ import graft.functions.{GraftFunctions, PortableHash}
   * keeps the DuckDB oracle valid), in BOTH codegen and interpreted
   * paths.
   */
-class NativeExprSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NativeExprSpec extends AnyFunSuite with SparkSuite {
   private def withCodegen[T](on: Boolean)(f: => T): T = {
     val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     spark.conf.set("spark.sql.codegen.wholeStage", on.toString)

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.plans.TopKPerKey
@@ -12,15 +11,8 @@ import graft.ops.Tables
   * exchange/final-above plan shape that makes it a constant-factor
   * shuffle, and the small-group edge (k > group size).
   */
-class NativeTopKSpec extends AnyFunSuite {
+class NativeTopKSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("native top-k equals the window row_number form") {
     val src = Tables.lineitem(spark, sf).select(

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sinks.ManifestTable
@@ -13,23 +12,7 @@ import java.nio.file.Files
   * physical names / leaf widening), writes rename back to physical,
   * and each version time-travels under its own nested shape.
   */
-class NestedEvolutionSpec extends AnyFunSuite {
-  // extensions-enabled session (built via the bridge — the shared test
-  // JVM session may predate this suite): SQL reads of column-mapped
-  // tables route through the injected DV/mapping read rule
-  lazy val spark: SparkSession = {
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = org.apache.spark.sql.GraftColumnBridge.sessionWithExtensions(
-      new GraftExtensions().apply(_))
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s
-  }
-
+class NestedEvolutionSpec extends AnyFunSuite with SparkSuite {
   private def freshTable(): String =
     Files.createTempDirectory("graft_nested").resolve("t").toString
 

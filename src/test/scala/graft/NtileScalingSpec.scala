@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** q25's cross-SF scaling contract (round 7) — the evidence that
@@ -23,15 +22,7 @@ import org.apache.spark.sql.functions._
   * cap (≤ ~55 occupied $200 buckets per nation, ≤ 200 $1 buckets per
   * $200 bucket, plus same-dollar ties), independent of corpus size.
   */
-class NtileScalingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NtileScalingSpec extends AnyFunSuite with SparkSuite {
   /** Max single-window-partition input rows for both forms, computed
     * from the same bucket expressions q25Of uses.
     */

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** Plan-shape audit over EVERY declared query: no accidental
   * cartesian products (the one crossJoin in the IVF codebook
@@ -9,27 +8,8 @@ import org.apache.spark.sql.SparkSession
   * as such), and every parquet scan prunes columns (never reads a
   * full 11-column lineitem row for a narrow projection).
   */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = {
-    // the audits run EVERY declared query, and the SQL row-level
-    // queries (p29/p30) need the injected resolution rule — build the
-    // deployment-shaped session (extensions bind at session build, so
-    // the JVM's shared session cannot be upgraded in place)
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = org.apache.spark.sql.GraftColumnBridge.sessionWithExtensions(
-      new GraftExtensions().apply(_))
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s
-  }
 
   test("no query plans a CartesianProduct") {
     SparkEntry.queries.foreach { case (name, fn) =>

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.PipelineOps
@@ -16,14 +15,7 @@ import graft.ops.PipelineOps
   * check on the fixture; the property test fuzzes the edge shapes the
   * fixture doesn't contain.
   */
-class PrefixSumPropertySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PrefixSumPropertySpec extends AnyFunSuite with SparkSuite {
   private val rnd = new scala.util.Random(20260813L)
 
   private def randomDocs(n: Int) = {

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops._
 
@@ -9,15 +8,8 @@ import graft.ops._
   * shape assertions (broadcast where expected, pushdown reaching the
   * scan) — SURVEY.md §7.3 M4 discipline enforced early.
   */
-class RelationalSpec extends AnyFunSuite {
+class RelationalSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q14 approx distinct is within 5% of exact") {
     val approx = Aggs.q14ApproxDistinct(spark, sf).collect()

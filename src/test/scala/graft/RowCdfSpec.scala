@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -11,14 +10,7 @@ import java.nio.file.Files
   * overwrites/truncates and compactions, plus the exactly-once
   * row-level consumer that makes rewrites non-fatal.
   */
-class RowCdfSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RowCdfSpec extends AnyFunSuite with SparkSuite {
   private def freshTable(): String =
     Files.createTempDirectory("graft_rowcdf").resolve("t").toString
 

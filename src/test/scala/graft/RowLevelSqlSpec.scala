@@ -1,33 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
 
 /** SQL UPDATE and MERGE INTO on graft catalog tables — the injected
   * GraftRowLevelRule rewriting the resolved V2 commands onto
-  * ManifestTable.update/merge. Needs an extensions-enabled session
-  * (built via the bridge because the test JVM's shared session may
-  * predate this suite).
+  * ManifestTable.update/merge.
   */
-class RowLevelSqlSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    // ensure a context exists, then build a FRESH session with the
-    // extension applied (extensions bind at session build only)
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = GraftColumnBridge.sessionWithExtensions(
-      new GraftExtensions().apply(_))
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s
-  }
-
+class RowLevelSqlSpec extends AnyFunSuite with SparkSuite {
   private val n = new java.util.concurrent.atomic.AtomicInteger(0)
   private def freshCatalog(): (String, String) = {
     val cat = s"rlsql${n.incrementAndGet()}"

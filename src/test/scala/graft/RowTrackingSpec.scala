@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -13,14 +12,7 @@ import java.nio.file.Files
   * bypass the synthesizing funnel) read null. Plain reads never see
   * the internal column.
   */
-class RowTrackingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RowTrackingSpec extends AnyFunSuite with SparkSuite {
   private def fresh(): String =
     Files.createTempDirectory("graft_rt").resolve("t").toString
 

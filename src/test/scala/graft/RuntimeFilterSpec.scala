@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Tables
 import graft.sinks.Sinks
@@ -21,15 +20,8 @@ import graft.sinks.Sinks
   * Results must be identical with the features on or off — these are
   * plan-only accelerations, so only plan assertions can pin them.
   */
-class RuntimeFilterSpec extends AnyFunSuite {
+class RuntimeFilterSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("dynamic partition pruning reaches the partitioned fact scan") {
     import spark.implicits._

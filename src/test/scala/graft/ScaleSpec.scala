@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Scale, Tables}
 import graft.sinks.Sinks
@@ -10,18 +9,8 @@ import graft.sinks.Sinks
   * their direct forms; partitioned sinks prune; bucketed tables join
   * without a shuffle.
   */
-class ScaleSpec extends AnyFunSuite {
+class ScaleSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  private lazy val warehouse =
-    java.nio.file.Files.createTempDirectory("graft_wh").toString
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("salted agg equals direct groupBy") {
     val direct = Tables.lineitem(spark, sf)
@@ -160,20 +149,8 @@ class ScaleSpec extends AnyFunSuite {
     } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
-  private def dropTable(name: String): Unit = {
+  private def dropTable(name: String): Unit =
     spark.sql(s"DROP TABLE IF EXISTS $name")
-    // a previous JVM's managed-table directory survives the catalog;
-    // Spark refuses to CREATE over the orphaned location — remove it
-    val loc = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(loc)
-    }
-  }
 
   test("bucketed tables join without a shuffle") {
     dropTable("orders_b")

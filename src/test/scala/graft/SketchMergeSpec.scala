@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Aggs, Stats, Tables}
 
@@ -18,15 +17,8 @@ import graft.ops.{Aggs, Stats, Tables}
   * within 5% of the exact percentile (the same bound RelationalSpec
   * pins for the declared query).
   */
-class SketchMergeSpec extends AnyFunSuite {
+class SketchMergeSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.01"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val partitionings = Seq(1, 4, 32)
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import graft.ops.Tables
@@ -19,15 +18,8 @@ import graft.sinks.Sinks
   * decode. Unsorted: every group spans the full user range, nothing
   * skips. Results must be identical — layout is a read-cost knob only.
   */
-class SortSkipSpec extends AnyFunSuite {
+class SortSkipSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.01"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Rows the parquet reader actually surfaced (post group-skip,
     * pre residual filter) for a shuffle-free scan query.

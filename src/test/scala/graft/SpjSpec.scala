@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 
@@ -12,20 +11,7 @@ import org.apache.spark.sql.execution.joins.SortMergeJoinExec
   * `spark.sql.sources.v2.bucketing.enabled` opt-in — and the default
   * (conf off) plan stays byte-identical to before.
   */
-class SpjSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = org.apache.spark.sql.GraftColumnBridge.sessionWithExtensions(
-      new GraftExtensions().apply(_))
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s
-  }
-
+class SpjSpec extends AnyFunSuite with SparkSuite {
   test("co-partitioned graft tables join with zero shuffle exchanges") {
     import spark.implicits._
     val cat = "spjcat"

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -11,20 +11,7 @@ import java.nio.file.Files
   * RESTORE as first-class SQL, with untouched fallthrough for
   * everything else.
   */
-class SqlDialectSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s = GraftColumnBridge.sessionWithExtensions(
-      new GraftExtensions().apply(_))
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s
-  }
-
+class SqlDialectSpec extends AnyFunSuite with SparkSuite {
   private val n = new java.util.concurrent.atomic.AtomicInteger(0)
   private def freshCatalog(): (String, String) = {
     val cat = s"dial${n.incrementAndGet()}"
@@ -172,10 +159,8 @@ class SqlDialectSpec extends AnyFunSuite {
     val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.db.alt (id BIGINT)")
     // direct parse() calls below bypass sql()'s withActive wrapper —
-    // pin the catalog-bearing session as the active one, RESTORED in
-    // the finally (a leaked active session makes later suites'
-    // getOrCreate() return THIS extensions session and un-gates their
-    // bare-session feature-refusal tests)
+    // pin the catalog-bearing session as the active one, restored in
+    // the finally
     val prevActive = org.apache.spark.sql.SparkSession.getActiveSession
     org.apache.spark.sql.SparkSession.setActiveSession(spark)
     try {

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.EventOps
 import graft.streaming.StatefulRetention
@@ -10,15 +9,8 @@ import graft.streaming.StatefulRetention.RetState
 /** Streaming retention cohorts: pure-transition edges plus
   * streaming == batch e20 equivalence on the fixture.
   */
-class StatefulRetentionSpec extends AnyFunSuite {
+class StatefulRetentionSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("mondayOf truncates to ISO Monday") {
     // 2024-01-01 is a Monday: epoch day 19723

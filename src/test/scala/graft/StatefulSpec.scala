@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{EventOps, Tables}
 import graft.streaming.StatefulSessions
@@ -9,15 +8,8 @@ import graft.streaming.StatefulSessions.{Ev, SessionState}
 import graft.functions.WeightedAvg
 
 /** Stateful streaming sessionization + typed Aggregator semantics. */
-class StatefulSpec extends AnyFunSuite {
+class StatefulSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("session state machine: gap splits, accumulation, carryover") {
     val gap = StatefulSessions.GapUs

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.streaming.{StatefulFunnel, StatefulRetention, StreamingOps}
 import java.nio.file.{Files, Path, StandardCopyOption}
@@ -20,14 +20,7 @@ import java.nio.file.{Files, Path, StandardCopyOption}
   * the same event starts a fresh one — the two outcomes differ only
   * through the TTL.
   */
-class StatefulTtlSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class StatefulTtlSpec extends AnyFunSuite with SparkSuite {
   private val baseUs = 1704067200000000L // 2024-01-01 00:00:00 UTC (a Monday)
   private def atHourNs(h: Long): Long = (baseUs + h * 3600000000L) * 1000L
   private def atDayNs(d: Long): Long = (baseUs + d * 86400000000L) * 1000L

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import graft.ingest.Ingest
 import graft.transfer.Transfer
@@ -10,14 +9,7 @@ import graft.transfer.Transfer
   * casts, parquet round-trip with overwrite/append (SURVEY.md §5.5 —
   * parquet stands in for the offline JDBC sinks).
   */
-class TransferSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TransferSpec extends AnyFunSuite with SparkSuite {
   private def dirtyDf = {
     import spark.implicits._
     Seq(("ann", 5L, true), ("bob", 7L, false))

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingOps
 
@@ -25,15 +25,7 @@ import graft.streaming.StreamingOps
   *  - a batch control over the same rows shows the difference is
   *    exactly the late row, so the drop is the watermark's doing.
   */
-class WatermarkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class WatermarkSpec extends AnyFunSuite with SparkSuite {
   private val baseUs = 1704067200000000L // 2024-01-01 00:00:00 UTC, micros
   private def atMin(m: Long): Long = (baseUs + m * 60000000L) * 1000L // nanos
 

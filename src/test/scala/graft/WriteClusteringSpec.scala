@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.ManifestTable
 import java.nio.file.Files
@@ -12,14 +11,7 @@ import java.nio.file.Files
   * table is skippable without an OPTIMIZE ZORDER pass, and
   * auto-compact restores the property across merged commits.
   */
-class WriteClusteringSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class WriteClusteringSpec extends AnyFunSuite with SparkSuite {
   private def fresh(): String =
     Files.createTempDirectory("graft_wclu").resolve("t").toString
 

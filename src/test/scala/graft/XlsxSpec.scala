@@ -2,7 +2,6 @@ package graft
 
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.ingest.{Ingest, Xlsx}
 
 /** Excel ingest (O1 parity): the dependency-free XLSX reader against a
@@ -10,13 +9,7 @@ import graft.ingest.{Ingest, Xlsx}
   * inline strings, numbers, booleans, missing cells, and the rich-text
   * split shared-string case openpyxl emits.
   */
-class XlsxSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class XlsxSpec extends AnyFunSuite with SparkSuite {
   private def writeZip(parts: Seq[(String, String)]): String = {
     val path = java.nio.file.Files.createTempFile("graft_wb", ".xlsx").toString
     val zos = new ZipOutputStream(new java.io.FileOutputStream(path))

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import graft.ops.Tables
@@ -22,15 +21,8 @@ import graft.sinks.Sinks
   * every layout must return identical results — layout is a read-cost
   * knob, never a semantics knob.
   */
-class ZOrderSpec extends AnyFunSuite {
+class ZOrderSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.01"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** (result rows, rows the scan surfaced post group-skip) for a
     * shuffle-free filter query; asserts the predicate reached the
