@@ -922,7 +922,6 @@ object ManifestTable {
   private def writeRefData(spark: SparkSession, table: Path, version: Long,
       files: Seq[String], stats: Map[String, FileStats],
       dvs: Map[String, Seq[DvRef]]): (String, Long, Option[Long]) = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val ref = s"$ManifestDir/cpdata/r$version-${java.util.UUID.randomUUID()}"
     val rows = new java.util.ArrayList[org.apache.spark.sql.Row](files.size)
     files.foreach { f =>
@@ -942,14 +941,10 @@ object ManifestTable {
       }
       rows.add(org.apache.spark.sql.Row(f, statJson.orNull, dvJson.orNull)): Unit
     }
-    val schema = StructType(Seq(
-      StructField("file", StringType, nullable = false),
-      StructField("stat", StringType, nullable = true),
-      StructField("dv", StringType, nullable = true)))
     // ~200k rows per output file: a million-file base becomes a few
     // parquet parts a later resolution scans in parallel
     val parts = math.max(1, files.size / 200000)
-    spark.createDataFrame(rows, schema)
+    spark.createDataFrame(rows, RefSidecarSchema)
       .repartition(parts)
       .write.mode(SaveMode.ErrorIfExists)
       .parquet(new Path(table, ref).toString)
@@ -973,14 +968,6 @@ object ManifestTable {
     */
   val DefaultDistributedParseThreshold = 500000
 
-  /** Load a [[Ref]] sidecar back into (files, stats, dvs) — a columnar
-    * scan plus per-row JSON parses, distributed into the Spark job
-    * above [[DefaultDistributedParseThreshold]] rows (VERDICT r13
-    * next-round #4) so a 10⁷-file base never runs a single-threaded
-    * driver parse loop; never one giant JSON tree either way. The
-    * file LIST itself legitimately lands on the driver (the FileIndex
-    * contract needs it there); the parse is the part that scales.
-    */
   /** The fixed sidecar schema [[writeRefData]] writes — reading with
     * it skips footer inference (and its Spark job) on every resolve
     * that loads a ref checkpoint.
@@ -993,6 +980,14 @@ object ManifestTable {
       StructField("dv", StringType, nullable = true)))
   }
 
+  /** Load a [[Ref]] sidecar back into (files, stats, dvs) — a columnar
+    * scan plus per-row JSON parses, distributed into the Spark job
+    * above [[DefaultDistributedParseThreshold]] rows (VERDICT r13
+    * next-round #4) so a 10⁷-file base never runs a single-threaded
+    * driver parse loop; never one giant JSON tree either way. The
+    * file LIST itself legitimately lands on the driver (the FileIndex
+    * contract needs it there); the parse is the part that scales.
+    */
   private def loadRef(spark: SparkSession, table: Path,
       ref: String, nFiles: Long): (Seq[String], Map[String, FileStats],
       Map[String, Seq[DvRef]]) = {
@@ -1687,6 +1682,94 @@ object ManifestTable {
     throw new java.io.IOException(
       s"manifest commit lost the race for v$version of $table; " +
         "snapshot dir left for vacuum — re-read and retry")
+
+  /** One optimistic attempt's view of the table, for [[transact]]: the
+    * base version from ONE `_manifests` listing, its manifest parsed
+    * once and its recorded schema parsed once. Every row-level and
+    * overwrite commit derives what it needs from the log through this
+    * value; the resolved snapshot is lazy, so an attempt that needs
+    * none (a replayed dynamic overwrite) never resolves one.
+    */
+  private final class Txn(val spark: SparkSession, val table: String,
+      val fs: FileSystem, val p: Path, val base: Long,
+      val m: Option[Manifest], checkpoints: Set[Long],
+      partitionCols: Seq[String]) {
+    lazy val snap: Snapshot = resolve(spark, fs, p, base, checkpoints)
+    val recorded: Option[org.apache.spark.sql.types.StructType] =
+      recordedSchema(m)
+    val mapping: Option[org.apache.spark.sql.types.StructType] =
+      recorded.filter(columnMapped)
+    lazy val lstats: Map[String, FileStats] = logicalStats(snap.stats, mapping)
+    val props: Map[String, String] = m.map(_.props).getOrElse(Map.empty)
+    val txns: Map[String, Long] = m.map(_.txns).getOrElse(Map.empty)
+    private val recordedParts = m.map(_.parts).getOrElse(Seq.empty)
+    val parts: Seq[String] = stickyParts(partitionCols, recordedParts)
+    def next: Long = base + 1
+
+    /** Merge-on-read iff the attempt's own manifest sets `modeProp` so. */
+    def mor(modeProp: String): Boolean =
+      props.get(modeProp).exists(_.equalsIgnoreCase("merge-on-read"))
+
+    /** `files` with the snapshot's deletion vectors applied, under the
+      * recorded schema (logical names, exists-defaults, widening).
+      */
+    def read(files: Seq[String], keepIdentity: Boolean = false): DataFrame =
+      readFiles(spark, table, files, snap.dvs, keepIdentity, mapping, recorded)
+
+    /** The live files whose statistics admit `e`. */
+    def prune(e: org.apache.spark.sql.catalyst.expressions.Expression)
+        : Seq[String] = {
+      val pe = prunePredicate(spark, recorded, recordedParts, e)
+      snap.files.filter(f => DataSkipping.mayMatch(lstats.get(f), pe))
+    }
+
+    def op(operation: String, params: (String, String)*): Map[String, String] =
+      opInfo(m, operation, params: _*)
+  }
+
+  /** What a [[transact]] attempt publishes as the delta on base + 1. */
+  private final case class Commit(add: Seq[String],
+      stats: Map[String, FileStats], remove: Seq[String],
+      dvs: Map[String, Seq[DvRef]], schemaJson: Option[String],
+      props: Map[String, String], cdc: Option[String],
+      op: Map[String, String], txns: Option[Map[String, Long]] = None,
+      mor: Boolean = false)
+
+  /** The optimistic commit loop of every row-level and overwrite
+    * commit. Each attempt builds one [[Txn]] and hands it to `attempt`,
+    * which declines (None: nothing to change, the base version is
+    * returned) or yields its [[Commit]]. A commit publishes, then the
+    * interval checkpoint runs and, after a merge-on-read commit, the
+    * auto-compaction check. A lost CAS re-runs the attempt against the
+    * new state (its orphaned files are vacuum's); after `maxAttempts`
+    * lost races the commit fails with [[raceLost]].
+    */
+  private def transact(spark: SparkSession, table: String, maxAttempts: Int,
+      partitionCols: Seq[String] = Seq.empty)(
+      attempt: Txn => Option[Commit]): Long = {
+    val (fs, p) = fsOf(spark, table)
+    var n = 0
+    while (n < maxAttempts) {
+      val (vs, cs) = listLog(fs, p)
+      val base = vs.lastOption.getOrElse(0L)
+      require(base > 0, s"no committed version in $table")
+      val t = new Txn(spark, table, fs, p, base, manifestAt(fs, p, base), cs,
+        partitionCols)
+      attempt(t) match {
+        case None => return base
+        case Some(c) =>
+          if (commitDelta(fs, p, t.next, c.add, c.txns.getOrElse(t.txns),
+            c.stats, c.remove, t.parts, c.schemaJson, dvs = c.dvs,
+            props = c.props, cdcDir = c.cdc, op = c.op)) {
+            maybeCheckpoint(spark, fs, p, t.next)
+            if (c.mor) maybeAutoCompact(spark, fs, p, table, t.next)
+            return t.next
+          }
+      }
+      n += 1 // lost the race; the attempt's files are vacuum's
+    }
+    raceLost(table, currentVersion(spark, table) + 1)
+  }
 
   /** Write `df` as the next snapshot of `table` and commit it. The
     * snapshot REPLACES the table contents (overwrite semantics — the
@@ -2775,11 +2858,12 @@ object ManifestTable {
     * still filter rows with the ORIGINAL predicate; the derived
     * conjuncts are implied, so adding them to the file walk is sound.
     */
-  private def prunePredicate(spark: SparkSession, m: Option[Manifest],
+  private def prunePredicate(spark: SparkSession,
+      recorded: Option[org.apache.spark.sql.types.StructType],
+      parts: Seq[String],
       predExpr: org.apache.spark.sql.catalyst.expressions.Expression)
       : org.apache.spark.sql.catalyst.expressions.Expression =
-    GeneratedPruning.derive(spark, recordedSchema(m),
-      m.map(_.parts).getOrElse(Seq.empty), predExpr)
+    GeneratedPruning.derive(spark, recorded, parts, predExpr)
       .foldLeft(predExpr)(
         org.apache.spark.sql.catalyst.expressions.And(_, _))
 
@@ -3299,6 +3383,9 @@ object ManifestTable {
   private val DvFileCol = "_graft_dv_file"
   private val DvIdxCol = "_graft_dv_idx"
   private val AbsPathCol = "_graft_abs_path"
+  /** Marks the rows a row-level join flagged as touched. */
+  private val HitCol = "_graft_hit"
+  private val RowIdentityCols = Set(AbsPathCol, DvFileCol, DvIdxCol, HitCol)
 
   /** A row's source file as a table-relative path, derived from the
     * hidden parquet `_metadata` column — relocation-stable (no table
@@ -3357,11 +3444,10 @@ object ManifestTable {
       .otherwise(adopted)
   }
 
-  /** The (file, idx) pairs of the given sidecar dirs as one frame. */
   /** Every DV sidecar is written as exactly (file STRING, idx BIGINT)
-    * — see the four `write.parquet(s"$table/$dvDir")` sites. Passing
-    * the schema explicitly skips footer inference (and its Spark job)
-    * on every sidecar read.
+    * — see the one writer in [[rewriteRows]]. Passing the schema
+    * explicitly skips footer inference (and its Spark job) on every
+    * sidecar read.
     */
   private val DvSidecarSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("file",
@@ -3369,6 +3455,7 @@ object ManifestTable {
     org.apache.spark.sql.types.StructField("idx",
       org.apache.spark.sql.types.LongType)))
 
+  /** The (file, idx) pairs of the given sidecar dirs as one frame. */
   private def dvEntries(spark: SparkSession, table: String,
       dvDirs: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -3459,18 +3546,6 @@ object ManifestTable {
         .drop(DvFileCol, DvIdxCol)
     }
 
-  /** Read `relFiles` with the snapshot's DELETION VECTORS applied —
-    * the merge-on-read core every read path funnels through. With no
-    * DV on any requested file this is exactly [[unionSnapshots]]
-    * (identical plan, zero overhead); otherwise each branch tags rows
-    * with their (file, row-index) identity from the hidden `_metadata`
-    * column and one distributed LEFT ANTI join against the sidecar
-    * entries drops the deleted rows — broadcast when the DV is small
-    * (the point-delete case), shuffled when it is not; never a driver
-    * loop. `keepIdentity` retains the identity columns (plus the
-    * absolute path) for callers that need them ([[deleteVectors]],
-    * [[hitFiles]]).
-    */
   /** Cast any column whose inferred file type is NARROWER than the
     * recorded schema's up to the recorded type — the reader-side half
     * of zero-rewrite type widening (VERDICT r14 #4): files written
@@ -3499,6 +3574,17 @@ object ManifestTable {
       }: _*)
     }
 
+  /** Read `relFiles` with the snapshot's DELETION VECTORS applied —
+    * the merge-on-read core every read path funnels through. With no
+    * DV on any requested file this is exactly [[unionSnapshots]]
+    * (identical plan, zero overhead); otherwise each branch tags rows
+    * with their (file, row-index) identity from the hidden `_metadata`
+    * column and one distributed LEFT ANTI join against the sidecar
+    * entries drops the deleted rows — broadcast when the DV is small
+    * (the point-delete case), shuffled when it is not; never a driver
+    * loop. `keepIdentity` retains the identity columns (plus the
+    * absolute path) for callers that need them ([[rewriteRows]]).
+    */
   private def readFiles(spark: SparkSession, table: String,
       relFiles: Seq[String], dvs: Map[String, Seq[DvRef]],
       keepIdentity: Boolean = false,
@@ -3633,7 +3719,8 @@ object ManifestTable {
     // (`ts >= X` over a table partitioned by `dt = to_date(ts)`)
     // implies bounds on the generated partition column — prune with
     // them, filter rows with the original predicate only
-    val pruneExpr = prunePredicate(spark, m, predExpr)
+    val pruneExpr = prunePredicate(spark, recordedSchema(m),
+      m.map(_.parts).getOrElse(Seq.empty), predExpr)
     val kept = bloomPrune(spark, p, snap.files.filter(f =>
       DataSkipping.mayMatch(stats.get(f), pruneExpr)), stats, predExpr)
     if (snap.files.isEmpty) emptyTyped(spark, fs, p, v).filter(predicate)
@@ -3803,7 +3890,8 @@ object ManifestTable {
     val (fs, p, v, snap) = resolveAt(spark, table, version)
     val m = manifestAt(fs, p, v)
     val stats = logicalStats(snap.stats, mappingOf(m))
-    val predExpr = prunePredicate(spark, m,
+    val predExpr = prunePredicate(spark, recordedSchema(m),
+      m.map(_.parts).getOrElse(Seq.empty),
       DataSkipping.expressionOf(predicate)) // normalize once
     val kept = bloomPrune(spark, p, snap.files.filter(f =>
       DataSkipping.mayMatch(stats.get(f), predExpr)), stats, predExpr)
@@ -5379,7 +5467,8 @@ object ManifestTable {
         case Some(cond) =>
           val mapping = mappingOf(m)
           val lstats = logicalStats(snapB.stats, mapping)
-          val sel = prunePredicate(spark, m,
+          val sel = prunePredicate(spark, recordedSchema(m),
+            m.map(_.parts).getOrElse(Seq.empty),
             DataSkipping.expressionOf(cond))
           val selected = before.filter(f =>
             DataSkipping.mayMatch(lstats.get(f), sel))
@@ -5621,23 +5710,226 @@ object ManifestTable {
       s"input file $abs not among candidate files"))
   }
 
-  /** Which of `candidates` actually contain LIVE rows selected by
-    * `selector`? One distributed pass tagging rows with their source
-    * file (deletion vectors applied first — a row a DV already removed
-    * must not count as a hit); the collect is file-NAME-sized
-    * (metadata), never row-sized.
+  /** One row-level change for [[rewriteRows]], built per attempt:
+    *
+    *  - `touched` keeps the rows of a target read that the change
+    *    touches: a predicate, a semi-join on source keys, a join on
+    *    pinned row ids, or the clause join;
+    *  - `rewrite` maps the rows of the touched files to what they
+    *    become under copy-on-write: touched rows dropped or projected,
+    *    the rest kept;
+    *  - `post` is a touched row's new image (None: touched rows leave
+    *    the table), which merge-on-read appends;
+    *  - `inserts` builds the new rows from the touched ones (an upsert
+    *    inherits their ids) and names the identity columns they draw.
+    *
+    * `pinned`: the touched rows' (file, row-index) ids, evaluated and
+    * pinned already; the candidates are then exactly the files holding
+    * them, and reads carry the row-identity columns. `always` commits
+    * even when nothing is touched (an upsert of an empty source).
+    * `changes` replaces the default change rows of the touched rows,
+    * given the hit files and those rows; `expect` adds checks on the
+    * inserts.
     */
-  private def hitFiles(spark: SparkSession, table: String,
-      candidates: Seq[String], dvs: Map[String, Seq[DvRef]],
-      selector: DataFrame => DataFrame,
-      mapping: Option[org.apache.spark.sql.types.StructType] = None,
-      recorded: Option[org.apache.spark.sql.types.StructType] = None)
-      : Seq[String] = {
-    val tagged = readFiles(spark, table, candidates, dvs,
-      keepIdentity = true, mapping = mapping, recorded = recorded)
-    selector(tagged).select(AbsPathCol).distinct()
-      .collect().map(r => matchRel(r.getString(0), candidates))
-      .toSeq.distinct.sorted
+  private final case class RowChange(candidates: Seq[String],
+      touched: DataFrame => DataFrame,
+      rewrite: DataFrame => DataFrame,
+      post: Option[DataFrame => DataFrame] = None,
+      inserts: Option[Option[DataFrame] => (DataFrame, Seq[(String, Long)])] =
+        None,
+      expect: Seq[Expectation] = Seq.empty,
+      pinned: Option[DataFrame] = None,
+      always: Boolean = false,
+      changes: Option[(Seq[String], DataFrame) => DataFrame] = None)
+
+  /** How a delete or update finds its rows: `flag` adds what `hit`
+    * reads (nothing for a predicate, the `pinned` row ids for a
+    * condition builder). A row where `hit` is NULL stays untouched (SQL
+    * DELETE and UPDATE semantics).
+    */
+  private final case class Find(candidates: Seq[String],
+      flag: DataFrame => DataFrame, hit: Column,
+      pinned: Option[DataFrame] = None) {
+    private def live: Column =
+      org.apache.spark.sql.functions.coalesce(hit,
+        org.apache.spark.sql.functions.lit(false))
+    def deleting: RowChange = RowChange(candidates, flag(_).filter(hit),
+      flag(_).filter(!live), pinned = pinned)
+    def setting(t: Txn, set: Map[String, Column]): RowChange =
+      deleting.copy(rewrite = d => assign(t, set, Some(live))(flag(d)),
+        post = Some(assign(t, set, None)))
+  }
+
+  /** Rows where `predicate` holds, re-evaluated on every read. */
+  private def byPredicate(t: Txn, predicate: Column): Find =
+    Find(t.prune(DataSkipping.expressionOf(predicate)), identity, predicate)
+
+  /** The [[deleteWhere]]/[[updateWhere]] find: `condFor` runs ONCE on
+    * the identity-tagged candidate frame and the matched (file,
+    * row-index) ids are pinned — the Delta source-materialization
+    * recipe: subqueries and other external state are consulted one
+    * time, and every later read flags its touched rows by joining
+    * those exact ids, so duplicates and map-typed columns need no
+    * whole-row value equality. The ids are narrow and stay
+    * distributed; only the hit file names reach the driver.
+    */
+  private def byRowIds(t: Txn, condFor: DataFrame => Column,
+      prune: Option[org.apache.spark.sql.catalyst.expressions.Expression])
+      : Find = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val candidates = prune.fold(t.snap.files)(t.prune)
+    if (candidates.isEmpty) return Find(Seq.empty, identity, lit(false))
+    val frame = t.read(candidates, keepIdentity = true)
+    val ids = frame.filter(coalesce(condFor(frame), lit(false)))
+      .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol),
+        lit(true).as(HitCol))
+      .localCheckpoint()
+    val hits = ids.select(AbsPathCol).distinct().collect()
+      .map(r => matchRel(r.getString(0), candidates)).toSeq.distinct.sorted
+    Find(hits, _.join(ids.drop(AbsPathCol), Seq(DvFileCol, DvIdxCol),
+      "left_outer"), col(HitCol), Some(ids))
+  }
+
+  /** UPDATE's SET over a target frame: assigned columns take their new
+    * value where `hit` holds (on every row when None); generated
+    * dependents REGENERATE (a stale dependent of an updated input would
+    * silently lie), while untouched rows get back their stored values
+    * by determinism. Updated columns must exist and may not be
+    * synthesized ones.
+    */
+  private def assign(t: Txn, set: Map[String, Column],
+      hit: Option[Column])(f: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, when}
+    val cols = f.columns.toIndexedSeq.filterNot(RowIdentityCols)
+    val unknown = set.keySet -- cols
+    require(unknown.isEmpty,
+      s"UPDATE sets unknown column(s) ${unknown.mkString(", ")} — " +
+        "add columns by appending data that carries them")
+    refuseSynthesizedTargets(set.keySet, t.recorded, t.table, "UPDATE")
+    recomputeGenerated(f.select(cols.map(c => set.get(c).fold(col(c))(v =>
+      hit.fold(v)(when(_, v).otherwise(col(c))).as(c))): _*), t.recorded)
+  }
+
+  /** The audit's file count: files rewritten, or files given vectors. */
+  private def counts(mor: Boolean, n: Int): Seq[(String, String)] =
+    if (mor) Seq("mode" -> "merge-on-read", "targetFiles" -> n.toString)
+    else Seq("rewrittenFiles" -> n.toString)
+
+  /** Fill the identity values and row ids that `df`'s rows still lack;
+    * pinned when anything is drawn, so the change feed and the write
+    * see the SAME ids.
+    */
+  private def drawIds(df: DataFrame, t: Txn): (DataFrame, Seq[(String, Long)]) = {
+    val (withIds, ids) = fillIdentity(df, t.recorded, t.props)
+    val (filled, rowIds) = fillRowIds(withIds, t.props)
+    val drawn = ids ++ rowIds
+    (if (drawn.isEmpty) filled else filled.localCheckpoint(), drawn)
+  }
+
+  /** The row-level core every delete, update, merge and replaceWhere
+    * attempt runs. Copy-on-write finds the touched files with one scan
+    * of the candidates (collecting file NAMES only — statistics already
+    * pruned the candidates), rewrites them through `rewrite` and
+    * removes them: an O(touched files) delta. Merge-on-read pins the
+    * touched rows ONCE (just their row ids when nothing reads them
+    * again), so the sidecar, the post-images, inherited ids and the
+    * change feed are provably the same rows; it writes ONE deletion-
+    * vector sidecar of their (file, row-index) ids and appends their
+    * post-images, rewriting nothing — reads through the DV-filtered
+    * scan keep repeated vectors disjoint, so counts add. Either way the
+    * inserts append in the same commit. The new content is schema-
+    * checked and evolves the recorded schema (all written rows when the
+    * change sets values, else the inserts), CHECK and NOT NULL
+    * constraints apply to it, and the change feed records the touched
+    * rows (as deletes, or paired update images) and the inserts. `op`
+    * stamps the audit from the number of files rewritten or vectored.
+    * None when nothing changes.
+    */
+  private def rewriteRows(t: Txn, mor: Boolean, c: RowChange)(
+      op: Int => Map[String, String]): Option[Commit] = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    def strip(df: DataFrame): DataFrame = {
+      val tags = df.columns.filter(RowIdentityCols)
+      if (tags.isEmpty) df else df.drop(tags.toIndexedSeq: _*)
+    }
+    def touchedIn(files: Seq[String], ids: Boolean): DataFrame =
+      c.touched(t.read(files, keepIdentity = ids || c.pinned.isDefined))
+    def rel(r: org.apache.spark.sql.Row) = matchRel(r.getString(0), c.candidates)
+    val keepRows = c.post.isDefined || c.inserts.isDefined
+    val matched =
+      if (!mor || c.candidates.isEmpty) None
+      else if (keepRows) Some(touchedIn(c.candidates, ids = true)
+        .localCheckpoint())
+      else c.pinned.orElse(Some(touchedIn(c.candidates, ids = true)
+        .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol))
+        .localCheckpoint()))
+    val byFile = matched.toSeq.flatMap(_.groupBy(col(AbsPathCol))
+      .agg(count(lit(1))).collect()) // file-NAME-sized
+    val hits: Seq[String] =
+      if (mor) byFile.map(rel).sorted
+      else if (c.pinned.isDefined || c.candidates.isEmpty) c.candidates
+      else touchedIn(c.candidates, ids = true).select(AbsPathCol).distinct()
+        .collect().map(rel).toSeq.distinct.sorted
+    // the touched rows in target columns — lazy: only merge-on-read,
+    // inserts and the change feed read them
+    lazy val pre = if (hits.isEmpty) None else Some(strip(
+      if (mor && keepRows) matched.get
+      else touchedIn(if (mor) c.candidates else hits, ids = false)))
+    val inserts = c.inserts.map(_(pre))
+    if (hits.isEmpty && inserts.forall(i => !c.always && i._1.isEmpty))
+      return None
+    lazy val post = c.post.flatMap(f => pre.map(f))
+    val kept =
+      if (hits.isEmpty) None
+      else if (mor) post
+      else Some(strip(c.rewrite(t.read(hits,
+        keepIdentity = c.pinned.isDefined))))
+    val written = (kept.toSeq ++ inserts.map(_._1))
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+    // type changes abort BEFORE any commit (the lake contract)
+    val checked = if (c.post.isDefined) written else inserts.map(_._1)
+    val schema = checked.fold(t.recorded) { f =>
+      val e = enforceSchema(t.recorded, f.schema, t.table)
+      Some(if (inserts.isEmpty) e
+        else stampNewFields(e, t.recorded.exists(columnMapped)))
+    }
+    // when the change sets values the checked rows are the written ones,
+    // pinned if constraints exist (SET expressions may be rand-bearing);
+    // inserts arrive pinned already
+    val out = checked.map(enforceConstraints(_, t.props, t.table,
+      pin = c.post.isDefined, recorded = schema, extra = c.expect))
+    val mapping = schema.filter(columnMapped)
+    val dvs: Map[String, Seq[DvRef]] =
+      if (byFile.isEmpty) Map.empty
+      else {
+        val dir = s"deletes/d${t.next}-${java.util.UUID.randomUUID()}"
+        matched.get.select(col(DvFileCol).as("file"), col(DvIdxCol).as("idx"))
+          .write.parquet(s"${t.table}/$dir")
+        byFile.map(r => rel(r) -> Seq(DvRef(dir, r.getLong(1)))).toMap
+      }
+    val fresh = (if (c.post.isDefined) out else written).fold(Seq.empty[String])(
+      w => writeSnapshot(t.fs, t.p, toPhysical(w, mapping), t.next, t.parts, 0L))
+    val cdc =
+      if (!changeFeedOn(t.m)) None
+      else {
+        // PAIRED update tags (the Delta CDF contract, VERDICT r18 #5):
+        // consumers read pre/post images directly instead of
+        // reconstructing them from a delete+insert multiset
+        val own = pre.toSeq.flatMap(r => c.changes.fold(
+          r.withColumn(ChangeTypeCol,
+            lit(if (c.post.isDefined) "update_preimage" else "delete")) +:
+            post.toSeq.map(_.withColumn(ChangeTypeCol, lit("update_postimage")))
+        )(f => Seq(f(hits, r))))
+        (own ++ inserts.map(_._1.withColumn(ChangeTypeCol, lit("insert"))))
+          .reduceOption(_.unionByName(_, allowMissingColumns = true))
+          .map(writeChangeDir(t.spark, t.p, t.next, _))
+      }
+    val stats = collectStats(t.spark, t.p, fresh, t.props)
+    Some(Commit(fresh, stats, if (mor) Seq.empty else hits, dvs,
+      if (checked.isEmpty) t.m.flatMap(_.schemaJson) else schema.map(_.json),
+      advanceIdentity(t.spark, t.p, fresh, stats, mapping, t.props,
+        inserts.toSeq.flatMap(_._2)),
+      cdc, op(if (mor) dvs.size else hits.size), mor = mor))
   }
 
   /** Row-level DELETE, copy-on-write: remove the rows matching
@@ -5650,73 +5942,30 @@ object ManifestTable {
     * selective delete on a million-file table rewrites a handful of
     * files and commits kilobytes. Rows where the predicate is NULL are
     * kept (SQL DELETE semantics). Old snapshots still see the deleted
-    * rows (time travel); [[vacuum]] reclaims the removed files.
+    * rows (time travel); [[vacuum]] reclaims the removed files. With
+    * [[DeleteModeProp]] at `merge-on-read` the delete commits deletion
+    * vectors instead ([[deleteVectors]]) — a point delete in a wide
+    * file then commits kilobytes instead of a rewrite.
     * Returns the committed version (the current one if nothing
     * matched). Optimistic: retries against fresh state if a
     * concurrent commit wins the version race.
     */
   def delete(spark: SparkSession, table: String, predicate: Column,
       partitionCols: Seq[String] = Seq.empty,
-      maxAttempts: Int = 5): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val (fs, p) = fsOf(spark, table)
-    // opt-in merge-on-read strategy, the twin of [[UpdateModeProp]]:
-    // the property routes every delete surface (API and SQL) through
-    // the deletion-vector commit — a point delete in a wide file
-    // commits kilobytes instead of a rewrite
-    if (manifestAt(fs, p, currentVersion(spark, table))
-      .map(_.props).exists(_.get(DeleteModeProp)
-        .exists(_.equalsIgnoreCase("merge-on-read"))))
-      return deleteVectors(spark, table, predicate, maxAttempts)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = currentVersion(spark, table)
-      require(base > 0, s"no committed version in $table")
-      val (_, cs) = listLog(fs, p)
-      val m = manifestAt(fs, p, base) // ONE read serves txns/parts/schema
-      val snap = resolve(spark, fs, p, base, cs)
-      val parts = stickyParts(partitionCols, m.map(_.parts).getOrElse(Seq.empty))
-      val mapping = mappingOf(m)
-      val lstats = logicalStats(snap.stats, mapping)
-      val predExpr = prunePredicate(spark, m,
-        DataSkipping.expressionOf(predicate)) // normalize once
-      val candidates = snap.files.filter(f =>
-        DataSkipping.mayMatch(lstats.get(f), predExpr))
-      if (candidates.isEmpty) return base
-      val hits = hitFiles(spark, table, candidates, snap.dvs,
-        _.filter(predicate), mapping, recorded = recordedSchema(m))
-      if (hits.isEmpty) return base
-      // DV-filtered read: a rewrite must not resurrect rows an earlier
-      // deletion vector removed (the rewrite drops the files' DVs)
-      val survivors = readFiles(spark, table, hits, snap.dvs,
-        mapping = mapping, recorded = recordedSchema(m))
-        .filter(not(coalesce(predicate, lit(false))))
-      val fresh = writeSnapshot(fs, p,
-        toPhysical(survivors, mapping), base + 1, parts, 0L)
-      // change feed: persist the deleted rows as this commit's change
-      // files (one extra filtered scan of the hit files — feed-gated)
-      val cdc =
-        if (!changeFeedOn(m)) None
-        else Some(writeChangeDir(spark, p, base + 1,
-          readFiles(spark, table, hits, snap.dvs, mapping = mapping,
-            recorded = recordedSchema(m))
-            .filter(coalesce(predicate, lit(false)))
-            .withColumn(ChangeTypeCol, lit("delete"))))
-      if (commitDelta(fs, p, base + 1, fresh,
-        m.map(_.txns).getOrElse(Map.empty),
-        collectStats(spark, p, fresh, m.map(_.props).getOrElse(Map.empty)), remove = hits, parts = parts,
-        schemaJson = m.flatMap(_.schemaJson),
-        props = m.map(_.props).getOrElse(Map.empty),
-        cdcDir = cdc,
-        op = opInfo(m, "delete", "predicate" -> predicate.toString,
-          "rewrittenFiles" -> hits.size.toString))) {
-        maybeCheckpoint(spark, fs, p, base + 1)
-        return base + 1
-      }
-      attempt += 1 // lost the version race; orphaned snapshot is vacuum's
+      maxAttempts: Int = 5): Long =
+    transact(spark, table, maxAttempts, partitionCols) { t =>
+      deleteRows(t, t.mor(DeleteModeProp), byPredicate(t, predicate),
+        predicate.toString)
     }
-    raceLost(table, currentVersion(spark, table) + 1)
-  }
+
+  private def deleteRows(t: Txn, mor: Boolean, find: Find,
+      predicate: String): Option[Commit] =
+    rewriteRows(t, mor, find.deleting) { n =>
+      if (mor) t.op("delete-vectors", "predicate" -> predicate,
+        "targetFiles" -> n.toString)
+      else t.op("delete", "predicate" -> predicate,
+        "rewrittenFiles" -> n.toString)
+    }
 
   /** Row-level DELETE for conditions a plain [[Column]] predicate
     * cannot carry through [[delete]]'s per-frame re-evaluation —
@@ -5725,87 +5974,21 @@ object ManifestTable {
     * (SELECT ...)` shape (VERDICT r17 #1). The caller supplies a
     * CONDITION BUILDER invoked on the identity-tagged scan frame, so
     * resolved subquery plans can be re-rooted onto the frame's
-    * attributes. The matched set is materialized ONCE as pinned
-    * (file, row-index) ids — the Delta source-materialization recipe:
-    * the subquery (and any other external state) is consulted exactly
-    * one time, and the guard scan, rewrite and CDC all anti/semi-join
-    * those EXACT row identities, so duplicates and map-typed columns
-    * need no whole-row value equality.
-    *
-    * Scale: `prune` (the subquery-free conjuncts of the condition)
-    * stats-prunes candidates exactly like [[delete]] — subquery
-    * conjuncts fail open in the skipper; the matched-id frame is the
-    * pruning source for the rewrite (only files CONTAINING matches
-    * rewrite), and the ids are 2 narrow columns, distributed, joined
-    * by (file, row-index) — never a driver collect of row values.
+    * attributes; the matched rows are pinned once as (file, row-index)
+    * ids ([[byRowIds]]). `prune` (the subquery-free conjuncts of the
+    * condition) stats-prunes candidates exactly like [[delete]] —
+    * subquery conjuncts fail open in the skipper. [[DeleteModeProp]]
+    * routes it like [[delete]]: the pinned ids become the deletion
+    * vector.
     */
   def deleteWhere(spark: SparkSession, table: String,
       condFor: DataFrame => Column,
       prune: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None,
-      maxAttempts: Int = 5): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
-    val (fs, p) = fsOf(spark, table)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = currentVersion(spark, table)
-      require(base > 0, s"no committed version in $table")
-      val (_, cs) = listLog(fs, p)
-      val m = manifestAt(fs, p, base)
-      val snap = resolve(spark, fs, p, base, cs)
-      val parts = stickyParts(Seq.empty, m.map(_.parts).getOrElse(Seq.empty))
-      val mapping = mappingOf(m)
-      val lstats = logicalStats(snap.stats, mapping)
-      val candidates = prune match {
-        case Some(e) =>
-          val pe = prunePredicate(spark, m, e) // derive ONCE per commit
-          snap.files.filter(f => DataSkipping.mayMatch(lstats.get(f), pe))
-        case None => snap.files
-      }
-      if (candidates.isEmpty) return base
-      val cframe = readFiles(spark, table, candidates, snap.dvs,
-        keepIdentity = true, mapping = mapping,
-        recorded = recordedSchema(m))
-      // ONE pinned evaluation of the matched row ids (subqueries et
-      // al. run here and never again); rows where the condition is
-      // NULL are untouched (SQL DELETE semantics)
-      val matched = cframe.filter(coalesce(condFor(cframe), lit(false)))
-        .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol))
-        .localCheckpoint()
-      val byFile = matched.groupBy(col(AbsPathCol)).agg(count(lit(1)))
-        .collect() // file-NAME-sized, bounded by the candidate list
-      if (byFile.isEmpty) return base
-      val hits = byFile.map(r => matchRel(r.getString(0), candidates))
-        .toSeq.sorted
-      val ids = matched.select(col(DvFileCol), col(DvIdxCol))
-      def hframe = readFiles(spark, table, hits, snap.dvs,
-        keepIdentity = true, mapping = mapping,
-        recorded = recordedSchema(m))
-      val survivors = hframe.join(ids, Seq(DvFileCol, DvIdxCol), "left_anti")
-        .drop(AbsPathCol, DvFileCol, DvIdxCol)
-      val fresh = writeSnapshot(fs, p,
-        toPhysical(survivors, mapping), base + 1, parts, 0L)
-      val cdc =
-        if (!changeFeedOn(m)) None
-        else Some(writeChangeDir(spark, p, base + 1,
-          hframe.join(ids, Seq(DvFileCol, DvIdxCol), "left_semi")
-            .drop(AbsPathCol, DvFileCol, DvIdxCol)
-            .withColumn(ChangeTypeCol, lit("delete"))))
-      if (commitDelta(fs, p, base + 1, fresh,
-        m.map(_.txns).getOrElse(Map.empty),
-        collectStats(spark, p, fresh, m.map(_.props).getOrElse(Map.empty)),
-        remove = hits, parts = parts,
-        schemaJson = m.flatMap(_.schemaJson),
-        props = m.map(_.props).getOrElse(Map.empty),
-        cdcDir = cdc,
-        op = opInfo(m, "delete", "predicate" -> "<row-identity join>",
-          "rewrittenFiles" -> hits.size.toString))) {
-        maybeCheckpoint(spark, fs, p, base + 1)
-        return base + 1
-      }
-      attempt += 1 // lost the version race; orphaned snapshot is vacuum's
+      maxAttempts: Int = 5): Long =
+    transact(spark, table, maxAttempts) { t =>
+      deleteRows(t, t.mor(DeleteModeProp), byRowIds(t, condFor, prune),
+        "<row-identity join>")
     }
-    raceLost(table, currentVersion(spark, table) + 1)
-  }
 
   /** ATOMIC predicate-scoped overwrite (the Delta `replaceWhere`
     * contract): in ONE commit, delete every existing row matching
@@ -5833,8 +6016,7 @@ object ManifestTable {
     */
   def replaceWhere(spark: SparkSession, df: DataFrame, table: String,
       condition: Column, maxAttempts: Int = 5): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not, sum, when}
-    val (fs, p) = fsOf(spark, table)
+    import org.apache.spark.sql.functions.{coalesce, lit, sum, when}
     // pin ONE evaluation of the caller's frame (ADVICE r14) WHEN
     // required: the slice-membership check below, the constraint
     // check, the write and the CDC tagging all re-evaluate it, and a
@@ -5851,83 +6033,19 @@ object ManifestTable {
         s"satisfy the replace condition ($condition) — writing them " +
         "would widen the replacement beyond the declared slice; " +
         "filter the input or widen the condition")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = currentVersion(spark, table)
-      require(base > 0, s"no committed version in $table")
-      val (_, cs) = listLog(fs, p)
-      val m = manifestAt(fs, p, base)
-      val snap = resolve(spark, fs, p, base, cs)
-      val parts = stickyParts(Seq.empty, m.map(_.parts).getOrElse(Seq.empty))
-      val mapping = mappingOf(m)
-      val lstats = logicalStats(snap.stats, mapping)
-      val props0 = m.map(_.props).getOrElse(Map.empty)
-      // generated/identity synthesis for the REPLACEMENT rows; pinned
-      // again when identity is drawn so the write and the CDC image
-      // carry the same ids
-      val (prepped0, genExps, idCols) = synthesizeColumns(spark, pinned,
-        recordedSchema(m), props0, table)
-      val prepped =
-        if (idCols.isEmpty) prepped0 else prepped0.localCheckpoint()
-      val active = recordedSchema(m).exists(columnMapped)
-      val evolved = stampNewFields(
-        enforceSchema(recordedSchema(m), prepped.schema, table), active)
-      enforceConstraints(prepped, props0,
-        table, pin = false, recorded = Some(evolved),
-        extra = genExps): Unit
-      val predExpr = prunePredicate(spark, m,
-        DataSkipping.expressionOf(condition))
-      val candidates = snap.files.filter(f =>
-        DataSkipping.mayMatch(lstats.get(f), predExpr))
-      val hits =
-        if (candidates.isEmpty) Seq.empty
-        else hitFiles(spark, table, candidates, snap.dvs,
-          _.filter(condition), mapping)
-      // nothing to delete AND nothing to insert: no commit
-      if (hits.isEmpty && pinned.isEmpty) return base
-      val survivors =
-        if (hits.isEmpty) None
-        else Some(readFiles(spark, table, hits, snap.dvs, mapping = mapping,
-          recorded = recordedSchema(m))
-          .filter(not(coalesce(condition, lit(false)))))
-      val combined = survivors
-        .fold(prepped)(_.unionByName(prepped, allowMissingColumns = true))
-      val fresh = writeSnapshot(fs, p,
-        toPhysical(combined, Some(evolved).filter(columnMapped)),
-        base + 1, parts, 0L)
-      // change feed: the replaced slice as deletes, the new rows as
-      // inserts (both exact — no diffing needed)
-      val cdc =
-        if (!changeFeedOn(m)) None
-        else {
-          val dels =
-            if (hits.isEmpty) None
-            else Some(readFiles(spark, table, hits, snap.dvs,
-              mapping = mapping, recorded = recordedSchema(m))
-              .filter(coalesce(condition, lit(false)))
-              .withColumn(ChangeTypeCol, lit("delete")))
-          val ins = prepped.withColumn(ChangeTypeCol, lit("insert"))
-          Some(writeChangeDir(spark, p, base + 1,
-            dels.fold(ins)(_.unionByName(ins, allowMissingColumns = true))))
-        }
-      val stats = collectStats(spark, p, fresh, props0)
-      if (commitDelta(fs, p, base + 1, fresh,
-        m.map(_.txns).getOrElse(Map.empty),
-        stats,
-        remove = hits, parts = parts,
-        schemaJson = Some(evolved.json),
-        props = advanceIdentity(spark, p, fresh, stats,
-          Some(evolved).filter(columnMapped), props0, idCols),
-        cdcDir = cdc,
-        op = opInfo(m, "replace-where",
-          "condition" -> condition.toString,
-          "rewrittenFiles" -> hits.size.toString))) {
-        maybeCheckpoint(spark, fs, p, base + 1)
-        return base + 1
+    transact(spark, table, maxAttempts) { t =>
+      // generated/identity synthesis for the REPLACEMENT rows, pinned
+      // when identity is drawn so the write and the CDC image carry
+      // the same ids
+      val (prepped, genExps, ids) =
+        synthesizeColumns(spark, pinned, t.recorded, t.props, table)
+      val rows = if (ids.isEmpty) prepped else prepped.localCheckpoint()
+      rewriteRows(t, mor = false, byPredicate(t, condition).deleting.copy(
+        inserts = Some(_ => (rows, ids)), expect = genExps)) { n =>
+        t.op("replace-where", "condition" -> condition.toString,
+          "rewrittenFiles" -> n.toString)
       }
-      attempt += 1
     }
-    raceLost(table, currentVersion(spark, table) + 1)
   }
 
   /** Commit a DYNAMIC PARTITION OVERWRITE: the staged files (already
@@ -5958,7 +6076,6 @@ object ManifestTable {
       staged: Seq[String], maxAttempts: Int = 5,
       txn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions.lit
-    val (fs, p) = fsOf(spark, table)
     // partition fragment of a rel path (`data/sX/a=1/b=2/f.parquet` →
     // `a=1/b=2`; unpartitioned → ""). Selected by SEGMENT SHAPE, not
     // position: converted tables ([[convertToGraft]]) carry fragments
@@ -5971,72 +6088,49 @@ object ManifestTable {
       // commit (the Hive/Delta dynamic-overwrite contract)
       return currentVersion(spark, table)
     val touched = staged.map(fragOf).distinct.toSet
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = currentVersion(spark, table)
-      require(base > 0, s"no committed version in $table")
-      val (_, cs) = listLog(fs, p)
-      val m = manifestAt(fs, p, base)
-      val txns0 = m.map(_.txns).getOrElse(Map.empty)
-      txn match {
-        case Some((app, v)) if txns0.get(app).exists(_ >= v) =>
-          return base // replay — already folded in; staged files are
-                      // unpublished orphans, vacuum's problem
-        case _ => ()
+    transact(spark, table, maxAttempts) { t =>
+      // a replay is already folded in: the staged files stay
+      // unpublished orphans, vacuum's problem
+      if (txn.exists { case (app, v) => t.txns.get(app).exists(_ >= v) }) None
+      else {
+        require(!t.recorded.exists(columnMapped),
+          s"dynamic partition overwrite on column-mapped $table is not " +
+            "supported — the V2 writer stages logical-named files; use " +
+            "replaceWhere")
+        // staged bytes cannot take synthesized identity/generated
+        // values after the fact — refuse rather than publish nulls
+        require(t.recorded.forall(s =>
+          !org.apache.spark.sql.catalyst.util.GeneratedColumn
+            .hasGeneratedColumns(s) &&
+          !org.apache.spark.sql.catalyst.util.IdentityColumn
+            .hasIdentityColumns(s)),
+          s"dynamic partition overwrite on $table cannot synthesize its " +
+            "GENERATED/IDENTITY columns (the writer staged the files " +
+            "already) — use replaceWhere or INSERT OVERWRITE")
+        val remove =
+          if (t.parts.isEmpty) t.snap.files // unpartitioned: full overwrite
+          else t.snap.files.filter(f => touched.contains(fragOf(f)))
+        // staged files are immutable — the checked rows ARE the
+        // committed rows, no pin needed
+        enforceConstraints(readFiles(spark, table, staged, Map.empty),
+          t.props, table, pin = false, recorded = t.recorded): Unit
+        val cdc =
+          if (!changeFeedOn(t.m)) None
+          else {
+            val ins = readFiles(spark, table, staged, Map.empty)
+              .withColumn(ChangeTypeCol, lit("insert"))
+            Some(writeChangeDir(spark, t.p, t.next,
+              if (remove.isEmpty) ins
+              else t.read(remove).withColumn(ChangeTypeCol, lit("delete"))
+                .unionByName(ins, allowMissingColumns = true)))
+          }
+        Some(Commit(staged, collectStats(spark, t.p, staged, t.props), remove,
+          Map.empty, t.m.flatMap(_.schemaJson), t.props, cdc,
+          t.op("dynamic-overwrite", "partitions" -> touched.size.toString,
+            "replacedFiles" -> remove.size.toString),
+          txns = Some(txn.fold(t.txns) { case (app, v) => t.txns + (app -> v) })))
       }
-      require(!recordedSchema(m).exists(columnMapped),
-        s"dynamic partition overwrite on column-mapped $table is not " +
-          "supported — the V2 writer stages logical-named files; use " +
-          "replaceWhere")
-      // staged bytes cannot take synthesized identity/generated
-      // values after the fact — refuse rather than publish nulls
-      require(recordedSchema(m).forall(s =>
-        !org.apache.spark.sql.catalyst.util.GeneratedColumn
-          .hasGeneratedColumns(s) &&
-        !org.apache.spark.sql.catalyst.util.IdentityColumn
-          .hasIdentityColumns(s)),
-        s"dynamic partition overwrite on $table cannot synthesize its " +
-          "GENERATED/IDENTITY columns (the writer staged the files " +
-          "already) — use replaceWhere or INSERT OVERWRITE")
-      val snap = resolve(spark, fs, p, base, cs)
-      val parts = m.map(_.parts).getOrElse(Seq.empty)
-      val remove =
-        if (parts.isEmpty) snap.files // unpartitioned: full overwrite
-        else snap.files.filter(f => touched.contains(fragOf(f)))
-      val props = m.map(_.props).getOrElse(Map.empty)
-      // staged files are immutable — the checked rows ARE the
-      // committed rows, no pin needed
-      enforceConstraints(readFiles(spark, table, staged, Map.empty),
-        props, table, pin = false, recorded = recordedSchema(m)): Unit
-      val cdc =
-        if (!changeFeedOn(m)) None
-        else {
-          val dels =
-            if (remove.isEmpty) None
-            else Some(readFiles(spark, table, remove, snap.dvs,
-              mapping = mappingOf(m), recorded = recordedSchema(m))
-              .withColumn(ChangeTypeCol, lit("delete")))
-          val ins = readFiles(spark, table, staged, Map.empty)
-            .withColumn(ChangeTypeCol, lit("insert"))
-          Some(writeChangeDir(spark, p, base + 1,
-            dels.fold(ins)(_.unionByName(ins, allowMissingColumns = true))))
-        }
-      if (commitDelta(fs, p, base + 1, staged,
-        txn.fold(txns0) { case (app, v) => txns0 + (app -> v) },
-        collectStats(spark, p, staged, props),
-        remove = remove, parts = parts,
-        schemaJson = m.flatMap(_.schemaJson),
-        props = props,
-        cdcDir = cdc,
-        op = opInfo(m, "dynamic-overwrite",
-          "partitions" -> touched.size.toString,
-          "replacedFiles" -> remove.size.toString))) {
-        maybeCheckpoint(spark, fs, p, base + 1)
-        return base + 1
-      }
-      attempt += 1
     }
-    raceLost(table, currentVersion(spark, table) + 1)
   }
 
   /** Row-level DELETE, MERGE-ON-READ (deletion vectors): remove the
@@ -6062,68 +6156,10 @@ object ManifestTable {
     * matched).
     */
   def deleteVectors(spark: SparkSession, table: String, predicate: Column,
-      maxAttempts: Int = 5): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
-    val (fs, p) = fsOf(spark, table)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = currentVersion(spark, table)
-      require(base > 0, s"no committed version in $table")
-      val (_, cs) = listLog(fs, p)
-      val m = manifestAt(fs, p, base)
-      val snap = resolve(spark, fs, p, base, cs)
-      val mapping = mappingOf(m)
-      val lstats = logicalStats(snap.stats, mapping)
-      val predExpr = prunePredicate(spark, m,
-        DataSkipping.expressionOf(predicate))
-      val candidates = snap.files.filter(f =>
-        DataSkipping.mayMatch(lstats.get(f), predExpr))
-      if (candidates.isEmpty) return base
-      // matched rows THROUGH the DV-filtered read: disjoint from every
-      // earlier DV by construction, so counts are additive. The
-      // projection is 3 metadata-ish columns; localCheckpoint pins one
-      // evaluation for the count pass and the sidecar write.
-      val matched = readFiles(spark, table, candidates, snap.dvs,
-        keepIdentity = true, mapping = mapping,
-        recorded = recordedSchema(m))
-        .filter(coalesce(predicate, lit(false)))
-        .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol))
-        .localCheckpoint()
-      val byFile = matched.groupBy(col(AbsPathCol)).agg(count(lit(1)).as("n"))
-        .collect() // file-NAME-sized, bounded by the candidate list
-      if (byFile.isEmpty) return base
-      val dvDir = s"deletes/d${base + 1}-${java.util.UUID.randomUUID()}"
-      matched.select(col(DvFileCol).as("file"), col(DvIdxCol).as("idx"))
-        .write.parquet(s"$table/$dvDir")
-      val refs: Map[String, Seq[DvRef]] = byFile.map { r =>
-        matchRel(r.getString(0), candidates) -> Seq(DvRef(dvDir, r.getLong(1)))
-      }.toMap
-      val cdc =
-        if (!changeFeedOn(m)) None
-        else Some(writeChangeDir(spark, p, base + 1,
-          readFiles(spark, table, candidates, snap.dvs, mapping = mapping,
-            recorded = recordedSchema(m))
-            .filter(coalesce(predicate, lit(false)))
-            .withColumn(ChangeTypeCol, lit("delete"))))
-      if (commitDelta(fs, p, base + 1, Seq.empty,
-        m.map(_.txns).getOrElse(Map.empty),
-        parts = m.map(_.parts).getOrElse(Seq.empty),
-        schemaJson = m.flatMap(_.schemaJson),
-        dvs = refs,
-        props = m.map(_.props).getOrElse(Map.empty),
-        cdcDir = cdc,
-        op = opInfo(m, "delete-vectors", "predicate" -> predicate.toString,
-          "targetFiles" -> refs.size.toString))) {
-        maybeCheckpoint(spark, fs, p, base + 1)
-        // DV-ratio self-heal: the commit that crosses the shadowed-row
-        // threshold triggers the scoped materialization itself
-        maybeAutoCompact(spark, fs, p, table, base + 1)
-        return base + 1
-      }
-      attempt += 1 // lost the race; the orphaned sidecar is vacuum's
+      maxAttempts: Int = 5): Long =
+    transact(spark, table, maxAttempts) { t =>
+      deleteRows(t, mor = true, byPredicate(t, predicate), predicate.toString)
     }
-    raceLost(table, currentVersion(spark, table) + 1)
-  }
 
   /** Row-level UPDATE, copy-on-write: set `set`'s columns to their
     * new expressions on every row matching `predicate`, rewriting ONLY
@@ -6134,110 +6170,38 @@ object ManifestTable {
     * columns must already exist and keep their types (the recorded
     * schema is enforced before commit — type changes need a rewrite
     * via [[write]]). Deletion vectors on touched files are applied
-    * and materialized by the rewrite. Returns the committed version
-    * (the current one if nothing matched).
+    * and materialized by the rewrite. With [[UpdateModeProp]] at
+    * `merge-on-read` it runs as [[updateVectors]]. Returns the
+    * committed version (the current one if nothing matched).
     */
   def update(spark: SparkSession, table: String, predicate: Column,
       set: Map[String, Column], partitionCols: Seq[String] = Seq.empty,
       maxAttempts: Int = 5): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(set.nonEmpty, "update needs at least one SET column")
-    val (fs, p) = fsOf(spark, table)
-    // opt-in merge-on-read strategy (the Delta DV-update recipe):
-    // the table property routes EVERY update surface — API and SQL —
-    // through the sidecar + post-image-append commit
-    if (manifestAt(fs, p, currentVersion(spark, table))
-      .map(_.props).exists(_.get(UpdateModeProp)
-        .exists(_.equalsIgnoreCase("merge-on-read"))))
-      return updateVectors(spark, table, predicate, set, maxAttempts)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = currentVersion(spark, table)
-      require(base > 0, s"no committed version in $table")
-      val (_, cs) = listLog(fs, p)
-      val m = manifestAt(fs, p, base)
-      val snap = resolve(spark, fs, p, base, cs)
-      val parts = stickyParts(partitionCols, m.map(_.parts).getOrElse(Seq.empty))
-      val mapping = mappingOf(m)
-      val lstats = logicalStats(snap.stats, mapping)
-      val predExpr = prunePredicate(spark, m,
-        DataSkipping.expressionOf(predicate))
-      val candidates = snap.files.filter(f =>
-        DataSkipping.mayMatch(lstats.get(f), predExpr))
-      if (candidates.isEmpty) return base
-      val hits = hitFiles(spark, table, candidates, snap.dvs,
-        _.filter(predicate), mapping, recorded = recordedSchema(m))
-      if (hits.isEmpty) return base
-      val src = readFiles(spark, table, hits, snap.dvs, mapping = mapping,
-        recorded = recordedSchema(m))
-      val unknown = set.keySet -- src.columns
-      require(unknown.isEmpty,
-        s"UPDATE sets unknown column(s) ${unknown.mkString(", ")} — " +
-          "add columns by appending data that carries them")
-      refuseSynthesizedTargets(set.keySet, recordedSchema(m), table,
-        "UPDATE")
-      val matched = coalesce(predicate, lit(false))
-      // generated columns REGENERATE after the SET (a stale dependent
-      // of an updated input would silently lie); untouched rows get
-      // back their stored values by determinism
-      val rewritten = recomputeGenerated(
-        src.select(src.columns.toIndexedSeq.map { c =>
-          set.get(c).fold(col(c))(v =>
-            when(matched, v).otherwise(col(c)).as(c))
-        }: _*), recordedSchema(m))
-      // type changes abort BEFORE any commit (the lake contract)
-      val evolved = enforceSchema(recordedSchema(m), rewritten.schema, table)
-      // checked == rewritten unless constraints exist, in which case it
-      // is the pinned evaluation (SET expressions may be rand-bearing)
-      val checked = enforceConstraints(rewritten,
-        m.map(_.props).getOrElse(Map.empty), table,
-        recorded = Some(evolved))
-      val fresh = writeSnapshot(fs, p,
-        toPhysical(checked, mapping), base + 1, parts, 0L)
-      // change feed: the matched rows' pre-image as deletes and their
-      // post-image (SET applied) as inserts
-      val cdc =
-        if (!changeFeedOn(m)) None
-        else {
-          val pre = src.filter(matched)
-          val post = recomputeGenerated(
-            pre.select(pre.columns.toIndexedSeq.map { c =>
-              set.get(c).fold(col(c))(_.as(c)) }: _*), recordedSchema(m))
-          // PAIRED update tags (the Delta CDF contract, VERDICT r18
-          // #5): consumers that key on the pairing (audit diffing,
-          // CDC sinks) read pre/post images directly instead of
-          // reconstructing them from a delete+insert multiset
-          Some(writeChangeDir(spark, p, base + 1,
-            pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(post.withColumn(ChangeTypeCol,
-                lit("update_postimage")))))
-        }
-      if (commitDelta(fs, p, base + 1, fresh,
-        m.map(_.txns).getOrElse(Map.empty),
-        collectStats(spark, p, fresh, m.map(_.props).getOrElse(Map.empty)), remove = hits, parts = parts,
-        schemaJson = Some(evolved.json),
-        props = m.map(_.props).getOrElse(Map.empty),
-        cdcDir = cdc,
-        op = opInfo(m, "update", "predicate" -> predicate.toString,
-          "columns" -> set.keys.toSeq.sorted.mkString(","),
-          "rewrittenFiles" -> hits.size.toString))) {
-        maybeCheckpoint(spark, fs, p, base + 1)
-        return base + 1
-      }
-      attempt += 1
+    transact(spark, table, maxAttempts, partitionCols) { t =>
+      updateRows(t, t.mor(UpdateModeProp), byPredicate(t, predicate),
+        predicate.toString, set)
     }
-    raceLost(table, currentVersion(spark, table) + 1)
   }
+
+  private def updateRows(t: Txn, mor: Boolean, find: Find, predicate: String,
+      set: Map[String, Column]): Option[Commit] =
+    rewriteRows(t, mor, find.setting(t, set)) { n =>
+      t.op("update", Seq("predicate" -> predicate,
+        "columns" -> set.keys.toSeq.sorted.mkString(",")) ++ counts(mor, n): _*)
+    }
 
   /** Table property selecting [[update]]'s physical strategy:
     * `copy-on-write` (default — rewrite the touched files) or
     * `merge-on-read` (commit deletion vectors + post-image appends,
-    * [[updateVectors]]).
+    * [[updateVectors]]). [[updateWhere]] honors it too.
     */
   val UpdateModeProp = "graft.update.mode"
 
   /** Table property selecting [[delete]]'s physical strategy:
     * `copy-on-write` (default) or `merge-on-read` ([[deleteVectors]]).
+    * It routes every delete surface, API and SQL: [[delete]] and
+    * [[deleteWhere]].
     */
   val DeleteModeProp = "graft.delete.mode"
 
@@ -6258,87 +6222,11 @@ object ManifestTable {
     */
   def updateVectors(spark: SparkSession, table: String, predicate: Column,
       set: Map[String, Column], maxAttempts: Int = 5): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
     require(set.nonEmpty, "update needs at least one SET column")
-    val (fs, p) = fsOf(spark, table)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = currentVersion(spark, table)
-      require(base > 0, s"no committed version in $table")
-      val (_, cs) = listLog(fs, p)
-      val m = manifestAt(fs, p, base)
-      val snap = resolve(spark, fs, p, base, cs)
-      val parts = m.map(_.parts).getOrElse(Seq.empty)
-      val mapping = mappingOf(m)
-      val lstats = logicalStats(snap.stats, mapping)
-      val predExpr = prunePredicate(spark, m,
-        DataSkipping.expressionOf(predicate))
-      val candidates = snap.files.filter(f =>
-        DataSkipping.mayMatch(lstats.get(f), predExpr))
-      if (candidates.isEmpty) return base
-      // matched rows through the DV-filtered read, pinned ONCE: the
-      // sidecar rows and the post-images must be the same rows
-      val matched = readFiles(spark, table, candidates, snap.dvs,
-        keepIdentity = true, mapping = mapping,
-        recorded = recordedSchema(m))
-        .filter(coalesce(predicate, lit(false)))
-        .localCheckpoint()
-      val dataCols = matched.columns.toIndexedSeq
-        .filterNot(Set(AbsPathCol, DvFileCol, DvIdxCol))
-      val unknown = set.keySet -- dataCols
-      require(unknown.isEmpty,
-        s"UPDATE sets unknown column(s) ${unknown.mkString(", ")} — " +
-          "add columns by appending data that carries them")
-      refuseSynthesizedTargets(set.keySet, recordedSchema(m), table,
-        "UPDATE")
-      val byFile = matched.groupBy(col(AbsPathCol)).agg(count(lit(1)).as("n"))
-        .collect() // file-NAME-sized, bounded by the candidate list
-      if (byFile.isEmpty) return base
-      val dvDir = s"deletes/d${base + 1}-${java.util.UUID.randomUUID()}"
-      matched.select(col(DvFileCol).as("file"), col(DvIdxCol).as("idx"))
-        .write.parquet(s"$table/$dvDir")
-      val refs: Map[String, Seq[DvRef]] = byFile.map { r =>
-        matchRel(r.getString(0), candidates) -> Seq(DvRef(dvDir, r.getLong(1)))
-      }.toMap
-      // post-images: SET applied to every (matched) row, generated
-      // dependents regenerated, types enforced against the record
-      val post0 = recomputeGenerated(
-        matched.select(dataCols.map(c =>
-          set.get(c).fold(col(c))(_.as(c))): _*), recordedSchema(m))
-      val evolved = enforceSchema(recordedSchema(m), post0.schema, table)
-      val checked = enforceConstraints(post0,
-        m.map(_.props).getOrElse(Map.empty), table,
-        recorded = Some(evolved))
-      val fresh = writeSnapshot(fs, p,
-        toPhysical(checked, mapping), base + 1, parts, 0L)
-      val cdc =
-        if (!changeFeedOn(m)) None
-        else {
-          val pre = matched.drop(AbsPathCol, DvFileCol, DvIdxCol)
-          Some(writeChangeDir(spark, p, base + 1,
-            pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(post0.withColumn(ChangeTypeCol,
-                lit("update_postimage")))))
-        }
-      if (commitDelta(fs, p, base + 1, fresh,
-        m.map(_.txns).getOrElse(Map.empty),
-        collectStats(spark, p, fresh, m.map(_.props).getOrElse(Map.empty)),
-        parts = parts,
-        schemaJson = Some(evolved.json),
-        dvs = refs,
-        props = m.map(_.props).getOrElse(Map.empty),
-        cdcDir = cdc,
-        op = opInfo(m, "update", "predicate" -> predicate.toString,
-          "columns" -> set.keys.toSeq.sorted.mkString(","),
-          "mode" -> "merge-on-read",
-          "targetFiles" -> refs.size.toString))) {
-        maybeCheckpoint(spark, fs, p, base + 1)
-        maybeAutoCompact(spark, fs, p, table, base + 1)
-        return base + 1
-      }
-      attempt += 1 // lost the race; orphaned sidecar/files are vacuum's
+    transact(spark, table, maxAttempts) { t =>
+      updateRows(t, mor = true, byPredicate(t, predicate),
+        predicate.toString, set)
     }
-    raceLost(table, currentVersion(spark, table) + 1)
   }
 
   /** Row-level UPDATE for conditions with subqueries — the
@@ -6349,102 +6237,18 @@ object ManifestTable {
     * re-evaluating the predicate per frame (`UPDATE t SET ... WHERE
     * EXISTS (SELECT ...)`, VERDICT r17 #1). SET expressions stay
     * row-local Columns resolved on the rewrite frame. Same narrowing,
-    * schema enforcement, constraints, CDC and commit shape as
-    * [[update]].
+    * schema enforcement, constraints, CDC, commit shape and
+    * [[UpdateModeProp]] routing as [[update]].
     */
   def updateWhere(spark: SparkSession, table: String,
       condFor: DataFrame => Column, set: Map[String, Column],
       prune: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None,
       maxAttempts: Int = 5): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
     require(set.nonEmpty, "update needs at least one SET column")
-    val (fs, p) = fsOf(spark, table)
-    val MarkCol = "_graft_row_hit"
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = currentVersion(spark, table)
-      require(base > 0, s"no committed version in $table")
-      val (_, cs) = listLog(fs, p)
-      val m = manifestAt(fs, p, base)
-      val snap = resolve(spark, fs, p, base, cs)
-      val parts = stickyParts(Seq.empty, m.map(_.parts).getOrElse(Seq.empty))
-      val mapping = mappingOf(m)
-      val lstats = logicalStats(snap.stats, mapping)
-      val candidates = prune match {
-        case Some(e) =>
-          val pe = prunePredicate(spark, m, e) // derive ONCE per commit
-          snap.files.filter(f => DataSkipping.mayMatch(lstats.get(f), pe))
-        case None => snap.files
-      }
-      if (candidates.isEmpty) return base
-      val cframe = readFiles(spark, table, candidates, snap.dvs,
-        keepIdentity = true, mapping = mapping,
-        recorded = recordedSchema(m))
-      val matched = cframe.filter(coalesce(condFor(cframe), lit(false)))
-        .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol))
-        .localCheckpoint()
-      val byFile = matched.groupBy(col(AbsPathCol)).agg(count(lit(1)))
-        .collect()
-      if (byFile.isEmpty) return base
-      val hits = byFile.map(r => matchRel(r.getString(0), candidates))
-        .toSeq.sorted
-      val ids = matched.select(col(DvFileCol), col(DvIdxCol))
-      val src = readFiles(spark, table, hits, snap.dvs,
-        keepIdentity = true, mapping = mapping,
-        recorded = recordedSchema(m))
-      val dataCols = src.columns.toIndexedSeq
-        .filterNot(Set(AbsPathCol, DvFileCol, DvIdxCol))
-      val unknown = set.keySet -- dataCols
-      require(unknown.isEmpty,
-        s"UPDATE sets unknown column(s) ${unknown.mkString(", ")} — " +
-          "add columns by appending data that carries them")
-      refuseSynthesizedTargets(set.keySet, recordedSchema(m), table,
-        "UPDATE")
-      val flagged = src.join(ids.withColumn(MarkCol, lit(true)),
-        Seq(DvFileCol, DvIdxCol), "left_outer")
-      val isMatched = coalesce(col(MarkCol), lit(false))
-      val rewritten = recomputeGenerated(flagged.select(dataCols.map { c =>
-        set.get(c).fold(col(c))(v =>
-          when(isMatched, v).otherwise(col(c)).as(c))
-      }: _*), recordedSchema(m))
-      // type changes abort BEFORE any commit (the lake contract)
-      val evolved = enforceSchema(recordedSchema(m), rewritten.schema, table)
-      val checked = enforceConstraints(rewritten,
-        m.map(_.props).getOrElse(Map.empty), table,
-        recorded = Some(evolved))
-      val fresh = writeSnapshot(fs, p,
-        toPhysical(checked, mapping), base + 1, parts, 0L)
-      // change feed: matched rows' pre-image as deletes, post-image
-      // (SET applied) as inserts — selected by row identity
-      val cdc =
-        if (!changeFeedOn(m)) None
-        else {
-          val pre = src.join(ids, Seq(DvFileCol, DvIdxCol), "left_semi")
-            .drop(AbsPathCol, DvFileCol, DvIdxCol)
-          val post = recomputeGenerated(
-            pre.select(pre.columns.toIndexedSeq.map { c =>
-              set.get(c).fold(col(c))(_.as(c)) }: _*), recordedSchema(m))
-          Some(writeChangeDir(spark, p, base + 1,
-            pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(post.withColumn(ChangeTypeCol,
-                lit("update_postimage")))))
-        }
-      if (commitDelta(fs, p, base + 1, fresh,
-        m.map(_.txns).getOrElse(Map.empty),
-        collectStats(spark, p, fresh, m.map(_.props).getOrElse(Map.empty)),
-        remove = hits, parts = parts,
-        schemaJson = Some(evolved.json),
-        props = m.map(_.props).getOrElse(Map.empty),
-        cdcDir = cdc,
-        op = opInfo(m, "update", "predicate" -> "<row-identity join>",
-          "columns" -> set.keys.toSeq.sorted.mkString(","),
-          "rewrittenFiles" -> hits.size.toString))) {
-        maybeCheckpoint(spark, fs, p, base + 1)
-        return base + 1
-      }
-      attempt += 1
+    transact(spark, table, maxAttempts) { t =>
+      updateRows(t, t.mor(UpdateModeProp), byRowIds(t, condFor, prune),
+        "<row-identity join>", set)
     }
-    raceLost(table, currentVersion(spark, table) + 1)
   }
 
   /** ADD-COLUMN schema evolution as an explicit DDL commit (the
@@ -6793,160 +6597,16 @@ object ManifestTable {
     * is the CDC-apply / dimension-refresh primitive at lake scale: a
     * 1000-row upsert into a million-file table touches the few files
     * those 1000 keys live in. NULL-keyed source rows never match
-    * (SQL join semantics) and insert. Returns the committed version.
+    * (SQL join semantics) and insert. With [[MergeModeProp]] at
+    * `merge-on-read` it runs as [[mergeVectors]]. Returns the
+    * committed version.
     */
   def merge(spark: SparkSession, source: DataFrame, table: String,
       keyCols: Seq[String], partitionCols: Seq[String] = Seq.empty,
-      maxAttempts: Int = 5): Long = {
-    import org.apache.spark.sql.functions.{col, lit, max => fmax, min => fmin}
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val (fs, p) = fsOf(spark, table)
-    // opt-in merge-on-read strategy, the twin of [[UpdateModeProp]]
-    if (manifestAt(fs, p, currentVersion(spark, table))
-      .map(_.props).exists(_.get(MergeModeProp)
-        .exists(_.equalsIgnoreCase("merge-on-read"))))
-      return mergeVectors(spark, source, table, keyCols, maxAttempts)
-    // pin ONE evaluation of the source (the mergeClauses discipline,
-    // extended here per ADVICE r14) WHEN required: the key-bounds agg,
-    // the hit scan, the rewrite union, the constraint check and the
-    // CDC tagging all re-evaluate it — a non-deterministic source
-    // could otherwise pass the checks on one evaluation and commit
-    // different rows (deterministic + contract-free stays lazy)
-    val src = pinIfNeeded(spark, source, table)
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = currentVersion(spark, table)
-      require(base > 0, s"no committed version in $table")
-      val (_, cs) = listLog(fs, p)
-      val m = manifestAt(fs, p, base) // ONE read serves txns/parts/schema
-      val snap = resolve(spark, fs, p, base, cs)
-      val parts = stickyParts(partitionCols, m.map(_.parts).getOrElse(Seq.empty))
-      val mapping0 = mappingOf(m)
-      val snapL = snap.copy(stats = logicalStats(snap.stats, mapping0))
-      val candidates =
-        mergeKeyCandidates(src, keyCols.map(k => k -> k), snapL)
-      val hits =
-        if (candidates.isEmpty) Seq.empty[String]
-        else hitFiles(spark, table, candidates, snap.dvs,
-          _.join(srcKeys, keyCols, "left_semi"), mapping0,
-          recorded = recordedSchema(m))
-      val props0 = m.map(_.props).getOrElse(Map.empty)
-      val rec = recordedSchema(m)
-      // generated/identity completion for the whole-row upsert:
-      // generated columns recompute from the source's values; an
-      // identity column a source row omits (or carries null) INHERITS
-      // the replaced target row's id for an existing key — an upsert
-      // is an update, not a re-keying — and draws a fresh value for a
-      // new key. Pinned when identity is drawn: the CDC tagging and
-      // the write must see the SAME drawn ids.
-      val (srcPrepped, idCols) = {
-        val gens = recomputeGenerated(src, rec)
-        val specs = identityOf(rec)
-        // row ids inherit EXACTLY like identity values: an upsert is
-        // an update, so a source row replacing a tracked target row
-        // keeps that row's id; a new key draws a fresh one
-        val trackRow = rowTracking(props0)
-        if (specs.isEmpty && !trackRow) (gens, Seq.empty[(String, Long)])
-        else {
-          val idNames = specs.map(_._1.name) ++
-            (if (trackRow) Seq(RowIdCol) else Seq.empty)
-          val inherited =
-            if (hits.isEmpty) gens
-            else {
-              val oldsBase = readFiles(spark, table, hits, snap.dvs,
-                mapping = mapping0, recorded = rec)
-              // files written before tracking carry no id column —
-              // their matched rows draw fresh ids instead
-              val names = idNames.filter(oldsBase.columns.contains)
-              val olds = oldsBase
-                .join(srcKeys, keyCols, "left_semi")
-                .select((keyCols ++ names).map(col): _*)
-                .select(keyCols.map(col) ++ names.map(n =>
-                  col(n).as(s"_graft_old_$n")): _*)
-              val joined = gens.join(olds, keyCols, "left")
-              names.foldLeft(joined) { (d, n) =>
-                val merged =
-                  if (d.columns.contains(n))
-                    org.apache.spark.sql.functions.coalesce(
-                      col(n), col(s"_graft_old_$n"))
-                  else col(s"_graft_old_$n")
-                d.withColumn(n, merged)
-              }.drop(names.map(n => s"_graft_old_$n"): _*)
-            }
-          val (filled0, ids) = fillIdentity(inherited, rec, props0)
-          val (filled, rids) = fillRowIds(filled0, props0)
-          (filled.localCheckpoint(), ids ++ rids)
-        }
-      }
-      val newData =
-        if (hits.isEmpty) srcPrepped
-        else readFiles(spark, table, hits, snap.dvs, mapping = mapping0,
-          recorded = rec)
-          .join(srcKeys, keyCols, "left_anti")
-          .unionByName(srcPrepped, allowMissingColumns = true)
-      val active = rec.exists(columnMapped)
-      val evolved = stampNewFields(
-        enforceSchema(rec, srcPrepped.schema, table), active)
-      // the source rows are the only NEW content (whole-row upsert);
-      // untouched survivor rows already satisfied the constraints —
-      // src is pinned above, so no second pin
-      enforceConstraints(srcPrepped,
-        props0, table, pin = false,
-        recorded = Some(evolved)): Unit
-      val fresh = writeSnapshot(fs, p,
-        toPhysical(newData, Some(evolved).filter(columnMapped)),
-        base + 1, parts, 0L)
-      // change feed: replaced target rows as deletes, every source row
-      // (replacement or new) as an insert
-      val cdc =
-        if (!changeFeedOn(m)) None
-        else {
-          import org.apache.spark.sql.functions.lit
-          val replaced =
-            if (hits.isEmpty) None
-            else Some(readFiles(spark, table, hits, snap.dvs,
-              mapping = mappingOf(m), recorded = rec)
-              .join(srcKeys, keyCols, "left_semi")
-              .withColumn(ChangeTypeCol, lit("delete")))
-          val added = srcPrepped.withColumn(ChangeTypeCol, lit("insert"))
-          Some(writeChangeDir(spark, p, base + 1,
-            replaced.fold(added)(r =>
-              r.unionByName(added, allowMissingColumns = true))))
-        }
-      val stats = collectStats(spark, p, fresh, props0)
-      if (commitDelta(fs, p, base + 1, fresh,
-        m.map(_.txns).getOrElse(Map.empty),
-        stats, remove = hits, parts = parts,
-        schemaJson = Some(evolved.json),
-        props = advanceIdentity(spark, p, fresh, stats,
-          Some(evolved).filter(columnMapped), props0, idCols),
-        cdcDir = cdc,
-        op = opInfo(m, "merge", "keys" -> keyCols.mkString(","),
-          "rewrittenFiles" -> hits.size.toString))) {
-        maybeCheckpoint(spark, fs, p, base + 1)
-        return base + 1
-      }
-      attempt += 1
-    }
-    raceLost(table, currentVersion(spark, table) + 1)
-  }
+      maxAttempts: Int = 5): Long =
+    upsert(spark, source, table, keyCols, partitionCols, maxAttempts,
+      _.mor(MergeModeProp))
 
-  /** ONE multi-agg over the merge source serving two purposes: (1) the
-    * duplicate-key guard — SQL MERGE errors when several source rows
-    * match one target row; silently landing both copies would corrupt
-    * key uniqueness (ADVICE r11): rows whose key is fully non-null
-    * (the only rows that can match) vs distinct such keys (when()
-    * nulls out partially-null keys so count_distinct skips them — a
-    * struct with null FIELDS is itself non-null and would mask
-    * duplicates; NULL-keyed rows never match and may repeat); (2)
-    * PER-COLUMN key bounds for stats pruning: a file can only hold a
-    * matched key if every key column's file range overlaps that
-    * column's source range (min/max ignore nulls; an all-null column
-    * proves no source row can match at all). `keyPairs` maps target
-    * key column → source key column (they differ when the SQL ON
-    * clause equates differently-named columns).
-    */
   /** Table property selecting [[merge]]'s physical strategy:
     * `copy-on-write` (default) or `merge-on-read` ([[mergeVectors]]).
     */
@@ -6964,126 +6624,82 @@ object ManifestTable {
     * via [[MergeModeProp]].
     */
   def mergeVectors(spark: SparkSession, source: DataFrame, table: String,
-      keyCols: Seq[String], maxAttempts: Int = 5): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
+      keyCols: Seq[String], maxAttempts: Int = 5): Long =
+    upsert(spark, source, table, keyCols, Seq.empty, maxAttempts, _ => true)
+
+  /** [[merge]] and [[mergeVectors]]: the touched rows are the target
+    * rows whose key the source carries, and they leave the table;
+    * every source row inserts ([[upsertRows]]); the change feed tags
+    * replaced rows as deletes and source rows as inserts. The source
+    * is pinned ONCE when required ([[pinIfNeeded]]): the key-bounds
+    * agg, the hit scan, the rewrite union, the constraint check and
+    * the CDC tagging all re-evaluate it, and a non-deterministic
+    * source could otherwise pass the checks on one evaluation and
+    * commit different rows.
+    */
+  private def upsert(spark: SparkSession, source: DataFrame, table: String,
+      keyCols: Seq[String], partitionCols: Seq[String], maxAttempts: Int,
+      mor: Txn => Boolean): Long = {
+    import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    val (fs, p) = fsOf(spark, table)
     val src = pinIfNeeded(spark, source, table)
     val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = currentVersion(spark, table)
-      require(base > 0, s"no committed version in $table")
-      val (_, cs) = listLog(fs, p)
-      val m = manifestAt(fs, p, base)
-      val snap = resolve(spark, fs, p, base, cs)
-      val parts = m.map(_.parts).getOrElse(Seq.empty)
-      val mapping0 = mappingOf(m)
-      val rec = recordedSchema(m)
-      val props0 = m.map(_.props).getOrElse(Map.empty)
-      val snapL = snap.copy(stats = logicalStats(snap.stats, mapping0))
-      val candidates =
-        mergeKeyCandidates(src, keyCols.map(k => k -> k), snapL)
-      // the matched target rows, pinned ONCE: the sidecar ids, the
-      // inherited identity values and the CDC pre-images must agree
-      val matched =
-        if (candidates.isEmpty) None
-        else {
-          val mf = readFiles(spark, table, candidates, snap.dvs,
-            keepIdentity = true, mapping = mapping0, recorded = rec)
-            .join(srcKeys, keyCols, "left_semi")
-            .localCheckpoint()
-          if (mf.isEmpty) None else Some(mf)
-        }
-      // identity + row-id inheritance + fresh draws, exactly
-      // [[merge]]'s rule (a MoR upsert is still an update)
-      val (srcPrepped, idCols) = {
-        val gens = recomputeGenerated(src, rec)
-        val specs = identityOf(rec)
-        val trackRow = rowTracking(props0)
-        if (specs.isEmpty && !trackRow) (gens, Seq.empty[(String, Long)])
-        else {
-          val idNames = specs.map(_._1.name) ++
-            (if (trackRow) Seq(RowIdCol) else Seq.empty)
-          val inherited = matched match {
-            case None => gens
-            case Some(mf) =>
-              val names = idNames.filter(mf.columns.contains)
-              val olds = mf
-                .select((keyCols ++ names).map(col): _*)
-                .select(keyCols.map(col) ++ names.map(n =>
-                  col(n).as(s"_graft_old_$n")): _*)
-              val joined = gens.join(olds, keyCols, "left")
-              names.foldLeft(joined) { (d, n) =>
-                val merged =
-                  if (d.columns.contains(n)) coalesce(col(n),
-                    col(s"_graft_old_$n"))
-                  else col(s"_graft_old_$n")
-                d.withColumn(n, merged)
-              }.drop(names.map(n => s"_graft_old_$n"): _*)
-          }
-          val (filled0, ids) = fillIdentity(inherited, rec, props0)
-          val (filled, rids) = fillRowIds(filled0, props0)
-          (filled.localCheckpoint(), ids ++ rids)
-        }
+    transact(spark, table, maxAttempts, partitionCols) { t =>
+      val onRead = mor(t)
+      rewriteRows(t, onRead, RowChange(
+        mergeKeyCandidates(src, keyCols.map(k => k -> k), t),
+        _.join(srcKeys, keyCols, "left_semi"),
+        _.join(srcKeys, keyCols, "left_anti"),
+        inserts = Some(upsertRows(t, src, keyCols, _)), always = true)) { n =>
+        t.op("merge", ("keys" -> keyCols.mkString(",")) +: counts(onRead, n): _*)
       }
-      val active = rec.exists(columnMapped)
-      val evolved = stampNewFields(
-        enforceSchema(rec, srcPrepped.schema, table), active)
-      enforceConstraints(srcPrepped, props0, table, pin = false,
-        recorded = Some(evolved)): Unit
-      // DV sidecar hiding the matched rows in their original files
-      val refs: Map[String, Seq[DvRef]] = matched match {
-        case None => Map.empty
-        case Some(mf) =>
-          val byFile = mf.groupBy(col(AbsPathCol))
-            .agg(count(lit(1)).as("n")).collect()
-          if (byFile.isEmpty) Map.empty
-          else {
-            val dvDir = s"deletes/d${base + 1}-${java.util.UUID.randomUUID()}"
-            mf.select(col(DvFileCol).as("file"), col(DvIdxCol).as("idx"))
-              .write.parquet(s"$table/$dvDir")
-            byFile.map(r => matchRel(r.getString(0), candidates) ->
-              Seq(DvRef(dvDir, r.getLong(1)))).toMap
-          }
-      }
-      val fresh = writeSnapshot(fs, p,
-        toPhysical(srcPrepped, Some(evolved).filter(columnMapped)),
-        base + 1, parts, 0L)
-      val cdc =
-        if (!changeFeedOn(m)) None
-        else {
-          val replaced = matched.map(
-            _.drop(AbsPathCol, DvFileCol, DvIdxCol)
-              .withColumn(ChangeTypeCol, lit("delete")))
-          val added = srcPrepped.withColumn(ChangeTypeCol, lit("insert"))
-          Some(writeChangeDir(spark, p, base + 1,
-            replaced.fold(added)(r =>
-              r.unionByName(added, allowMissingColumns = true))))
-        }
-      val stats = collectStats(spark, p, fresh, props0)
-      if (commitDelta(fs, p, base + 1, fresh,
-        m.map(_.txns).getOrElse(Map.empty),
-        stats, parts = parts,
-        schemaJson = Some(evolved.json),
-        dvs = refs,
-        props = advanceIdentity(spark, p, fresh, stats,
-          Some(evolved).filter(columnMapped), props0, idCols),
-        cdcDir = cdc,
-        op = opInfo(m, "merge", "keys" -> keyCols.mkString(","),
-          "mode" -> "merge-on-read",
-          "targetFiles" -> refs.size.toString))) {
-        maybeCheckpoint(spark, fs, p, base + 1)
-        maybeAutoCompact(spark, fs, p, table, base + 1)
-        return base + 1
-      }
-      attempt += 1
     }
-    raceLost(table, currentVersion(spark, table) + 1)
   }
 
+  /** The upsert's source rows, ready to write: generated columns
+    * recompute from the source's values, and an identity column — or,
+    * under row tracking, the row id — that a source row omits or
+    * carries null INHERITS the replaced target row's value for an
+    * existing key (an upsert is an update, not a re-keying) and draws
+    * a fresh one for a new key ([[drawIds]]). `olds` are the touched
+    * target rows; files written before tracking carry no id column, so
+    * their matched rows draw fresh ids instead.
+    */
+  private def upsertRows(t: Txn, src: DataFrame, keyCols: Seq[String],
+      olds: Option[DataFrame]): (DataFrame, Seq[(String, Long)]) = {
+    import org.apache.spark.sql.functions.{coalesce, col}
+    val gens = recomputeGenerated(src, t.recorded)
+    val names = identityOf(t.recorded).map(_._1.name) ++
+      (if (rowTracking(t.props)) Seq(RowIdCol) else Seq.empty)
+    val inherited = olds.filter(_ => names.nonEmpty).fold(gens) { o =>
+      val have = names.filter(o.columns.contains)
+      def old(n: String) = s"_graft_old_$n"
+      val prev = o.select(keyCols.map(col) ++ have.map(n => col(n).as(old(n))): _*)
+      have.foldLeft(gens.join(prev, keyCols, "left")) { (d, n) =>
+        d.withColumn(n, if (d.columns.contains(n)) coalesce(col(n), col(old(n)))
+          else col(old(n)))
+      }.drop(have.map(old): _*)
+    }
+    drawIds(inherited, t)
+  }
+
+  /** ONE multi-agg over the merge source serving two purposes: (1) the
+    * duplicate-key guard — SQL MERGE errors when several source rows
+    * match one target row; silently landing both copies would corrupt
+    * key uniqueness (ADVICE r11): rows whose key is fully non-null
+    * (the only rows that can match) vs distinct such keys (when()
+    * nulls out partially-null keys so count_distinct skips them — a
+    * struct with null FIELDS is itself non-null and would mask
+    * duplicates; NULL-keyed rows never match and may repeat); (2)
+    * PER-COLUMN key bounds for stats pruning: a file can only hold a
+    * matched key if every key column's file range overlaps that
+    * column's source range (min/max ignore nulls; an all-null column
+    * proves no source row can match at all). `keyPairs` maps target
+    * key column → source key column (they differ when the SQL ON
+    * clause equates differently-named columns).
+    */
   private def mergeKeyCandidates(source: DataFrame,
-      keyPairs: Seq[(String, String)], snap: Snapshot): Seq[String] = {
+      keyPairs: Seq[(String, String)], t: Txn): Seq[String] = {
     import org.apache.spark.sql.functions.{col, count_distinct, lit, struct, sum, when, max => fmax, min => fmin}
     val sCols = keyPairs.map(_._2)
     val nonNull = sCols.map(col(_).isNotNull).reduce(_ && _)
@@ -7107,8 +6723,7 @@ object ManifestTable {
         col(t) >= lit(r.get(2 * i)) && col(t) <= lit(r.get(2 * i + 1))
       }.reduce(_ && _)
       val predExpr = DataSkipping.expressionOf(pred)
-      snap.files.filter(f =>
-        DataSkipping.mayMatch(snap.stats.get(f), predExpr))
+      t.snap.files.filter(f => DataSkipping.mayMatch(t.lstats.get(f), predExpr))
     }
   }
 
@@ -7140,6 +6755,9 @@ object ManifestTable {
     * one pass finds the files whose rows actually CHANGE under the
     * clause conditions, only those are rewritten, inserts land as
     * fresh files, and the commit is one O(touched files) delta.
+    * Under [[MergeModeProp]] = `merge-on-read` the clause-affected
+    * rows hide behind a deletion-vector sidecar and only the
+    * UPDATE-clause post-images (plus inserts) append.
     * `keyPairs` maps target key columns to source key columns (the ON
     * equi-condition); NULL-keyed rows never match (SQL join
     * semantics). The source must have at most one row per key (the
@@ -7169,24 +6787,55 @@ object ManifestTable {
     // on the equality columns — stricter than SQL's runtime
     // cardinality error, but deterministic and checked before any
     // write.
-    val (fs, p) = fsOf(spark, table)
-    val MarkCol = "_graft_src_hit"
     // the source is re-evaluated across the guard agg, the hit scan,
     // the rewrite and the insert — pin ONE evaluation so a
     // non-deterministic source cannot diverge between them
     // (deterministic + contract-free stays lazy — ADVICE r15 low)
     val src = pinIfNeeded(spark, source, table)
-    val srcMarked = src.withColumn(MarkCol, lit(true)).alias("s")
-    def keyCond: Column = keyPairs.map { case (t, s) =>
+    val srcMarked = src.withColumn(HitCol, lit(true)).alias("s")
+    val keyCond = keyPairs.map { case (t, s) =>
       col(s"t.$t") === col(s"s.$s") }.reduce(_ && _)
     // matched ⟺ a source row key-joined AND the extra ON conjuncts
     // hold on the pair (NULL extra = not matched, SQL semantics)
-    def matchedFlag: Column = {
-      val hit = coalesce(col(s"s.$MarkCol"), lit(false))
+    val isMatched = {
+      val hit = coalesce(col(s"s.$HitCol"), lit(false))
       extraOn.fold(hit)(x => hit && coalesce(x, lit(false)))
     }
-    def condOf(c: Option[Column]): Column =
-      c.map(x => coalesce(x, lit(false))).getOrElse(lit(true))
+    // first-match application: per clause an `applies` predicate
+    // (state && own condition && no earlier clause applied)
+    def firstMatch[A](state: Column,
+        clauses: Seq[(Option[Column], A)]): Seq[(Column, A)] = {
+      var noEarlier = lit(true)
+      clauses.map { case (c, a) =>
+        val here = state && c.fold(lit(true))(x => coalesce(x, lit(false)))
+        val applies = here && noEarlier
+        noEarlier = noEarlier && !here
+        (applies, a)
+      }
+    }
+    val changing =
+      firstMatch(isMatched, matched.map(c => c.condition -> c.set)) ++
+        firstMatch(!isMatched, bySource.map(c => c.condition -> c.set))
+    val anyChange =
+      changing.map(_._1).reduceOption(_ || _).getOrElse(lit(false))
+    val del = changing.collect { case (a, None) => a }
+      .reduceOption(_ || _).getOrElse(lit(false))
+    val ups = changing.collect { case (a, Some(set)) => (a, set) }
+    def joined(target: DataFrame) =
+      target.alias("t").join(srcMarked, keyCond, "left_outer")
+    def targetCols(target: DataFrame) =
+      target.columns.toIndexedSeq.filterNot(RowIdentityCols)
+    // the clauses applied to target rows: DELETE-clause rows leave,
+    // UPDATE-clause rows take their SET, the rest pass; generated
+    // dependents of updated inputs regenerate ([[recomputeGenerated]])
+    def applied(target: DataFrame,
+        rec: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+      recomputeGenerated(joined(target).filter(!del)
+        .select(targetCols(target).map { c =>
+          ups.foldRight(col(s"t.$c")) { case ((a, set), acc) =>
+            set.get(c).fold(acc)(v => when(a, v).otherwise(acc))
+          }.as(c)
+        }: _*), rec)
     // strip the t-alias off a by-source condition for stats pruning
     // (fail-open: shapes the skipper cannot prove keep their files)
     def pruneExpr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
@@ -7196,140 +6845,28 @@ object ManifestTable {
           org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
             Seq(a.nameParts.last))
       }
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = currentVersion(spark, table)
-      require(base > 0, s"no committed version in $table")
-      val (_, cs) = listLog(fs, p)
-      val m = manifestAt(fs, p, base)
-      val snap = resolve(spark, fs, p, base, cs)
-      val parts = stickyParts(partitionCols, m.map(_.parts).getOrElse(Seq.empty))
-      val recorded = recordedSchema(m)
+    transact(spark, table, maxAttempts, partitionCols) { t =>
       // synthesized columns are not assignment targets: UPDATE-shaped
       // clauses never touch them (generated recompute, identity is
       // immutable), INSERT clauses may assign a BY DEFAULT identity
       refuseSynthesizedTargets(
         (matched.flatMap(_.set.toSeq.flatMap(_.keys)) ++
           bySource.flatMap(_.set.toSeq.flatMap(_.keys))).toSet,
-        recorded, table, "MERGE UPDATE")
+        t.recorded, table, "MERGE UPDATE")
       refuseSynthesizedTargets(
         notMatched.flatMap(_.values.keys).toSet,
-        recorded, table, "MERGE INSERT", allowByDefaultIdentity = true)
-      val props0 = m.map(_.props).getOrElse(Map.empty)
-      val mapping0 = mappingOf(m)
-      val lstats = logicalStats(snap.stats, mapping0)
+        t.recorded, table, "MERGE INSERT", allowByDefaultIdentity = true)
       // candidate files: those that could hold a matched key, plus —
       // when by-source clauses exist — those where a by-source
       // condition could hold (an unconditioned clause keeps them all)
-      val keyCand =
-        mergeKeyCandidates(src, keyPairs, snap.copy(stats = lstats))
+      val keyCand = mergeKeyCandidates(src, keyPairs, t)
       val bySourceCand: Seq[String] =
         if (bySource.isEmpty) Seq.empty
-        else if (bySource.exists(_.condition.isEmpty)) snap.files
+        else if (bySource.exists(_.condition.isEmpty)) t.snap.files
         else {
           val preds = bySource.flatMap(_.condition).map(pruneExpr)
-          snap.files.filter(f =>
-            preds.exists(e => DataSkipping.mayMatch(lstats.get(f), e)))
-        }
-      val candidates = (keyCand ++ bySourceCand).distinct.sorted
-      // first-match application, shared by the hit scan and the
-      // rewrite: per clause an `applies` predicate (matched state &&
-      // own condition && no earlier clause applied)
-      def clausePlan(matchedFlag: Column): (Column /*anyChange*/,
-          Column /*delete*/, Seq[(Column, Map[String, Column])] /*updates*/) = {
-        var noEarlierM = lit(true)
-        val mApplies = matched.map { cl =>
-          val a = matchedFlag && condOf(cl.condition) && noEarlierM
-          noEarlierM = noEarlierM && !(matchedFlag && condOf(cl.condition))
-          (a, cl)
-        }
-        var noEarlierB = lit(true)
-        val bApplies = bySource.map { cl =>
-          val a = !matchedFlag && condOf(cl.condition) && noEarlierB
-          noEarlierB = noEarlierB && !(!matchedFlag && condOf(cl.condition))
-          (a, cl)
-        }
-        val all = mApplies.map { case (a, cl) => (a, cl.set) } ++
-          bApplies.map { case (a, cl) => (a, cl.set) }
-        val anyChange = all.map(_._1).reduceOption(_ || _).getOrElse(lit(false))
-        val del = all.collect { case (a, None) => a }
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val ups = all.collect { case (a, Some(set)) => (a, set) }
-        (anyChange, del, ups)
-      }
-      val hits =
-        if (candidates.isEmpty) Seq.empty[String]
-        else hitFiles(spark, table, candidates, snap.dvs, { tagged =>
-          val joined = tagged.alias("t")
-            .join(srcMarked, keyCond, "left_outer")
-          val (anyChange, _, _) = clausePlan(matchedFlag)
-          joined.filter(anyChange)
-        }, mapping0, recorded = recorded)
-      // MERGE-ON-READ clause mode ([[MergeModeProp]]): the clause-
-      // affected rows hide behind a deletion-vector sidecar and only
-      // the UPDATE-clause post-images (plus inserts) append — zero
-      // file rewrites; survivors of a hit file stay in place
-      val morMode = props0.get(MergeModeProp)
-        .exists(_.equalsIgnoreCase("merge-on-read"))
-      val morJoin: Option[(DataFrame, Seq[String])] =
-        if (!morMode || hits.isEmpty) None
-        else {
-          val tagged = readFiles(spark, table, hits, snap.dvs,
-            keepIdentity = true, mapping = mapping0, recorded = recorded)
-          val tcols = tagged.columns.toIndexedSeq
-            .filterNot(Set(AbsPathCol, DvFileCol, DvIdxCol))
-          Some((tagged.alias("t").join(srcMarked, keyCond, "left_outer"),
-            tcols))
-        }
-      // rewrite the hit files under the clause plan (copy-on-write)
-      val rewritten: Option[DataFrame] =
-        if (hits.isEmpty || morMode) None
-        else {
-          val tgt = readFiles(spark, table, hits, snap.dvs,
-            mapping = mapping0, recorded = recorded)
-          val cols = tgt.columns.toIndexedSeq
-          val joined = tgt.alias("t").join(srcMarked, keyCond, "left_outer")
-          val (_, del, ups) = clausePlan(matchedFlag)
-          val out = cols.map { c =>
-            ups.foldRight(col(s"t.$c")) { case ((a, set), acc) =>
-              set.get(c).fold(acc)(v => when(a, v).otherwise(acc))
-            }.as(c)
-          }
-          // generated dependents of updated inputs regenerate (the
-          // UPDATE-staleness contract, see [[recomputeGenerated]])
-          Some(recomputeGenerated(
-            joined.filter(!del).select(out: _*), recorded))
-        }
-      // MoR: sidecar ids + UPDATE-clause post-images from ONE clause
-      // join (lazily re-evaluated under the pinned src, the same
-      // single-evaluation discipline as the CoW branch)
-      val (morRefs, morPost)
-          : (Map[String, Seq[DvRef]], Option[DataFrame]) =
-        morJoin match {
-          case None => (Map.empty, None)
-          case Some((joined, tcols)) =>
-            val (anyChange, del, ups) = clausePlan(matchedFlag)
-            val matchedRows = joined.filter(anyChange)
-            val byFile = matchedRows.groupBy(col(AbsPathCol))
-              .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-              .collect()
-            if (byFile.isEmpty) (Map.empty, None)
-            else {
-              val dvDir =
-                s"deletes/d${base + 1}-${java.util.UUID.randomUUID()}"
-              matchedRows.select(col(DvFileCol).as("file"),
-                col(DvIdxCol).as("idx")).write.parquet(s"$table/$dvDir")
-              val refs = byFile.map(r =>
-                matchRel(r.getString(0), hits) ->
-                  Seq(DvRef(dvDir, r.getLong(1)))).toMap
-              val out = tcols.map { c =>
-                ups.foldRight(col(s"t.$c")) { case ((a, set), acc) =>
-                  set.get(c).fold(acc)(v => when(a, v).otherwise(acc))
-                }.as(c)
-              }
-              (refs, Some(recomputeGenerated(
-                matchedRows.filter(!del).select(out: _*), recorded)))
-            }
+          t.snap.files.filter(f =>
+            preds.exists(e => DataSkipping.mayMatch(t.lstats.get(f), e)))
         }
       // inserts: source rows whose key matches NO live target row.
       // Key lookup scans only the key-candidate files (other files
@@ -7337,170 +6874,85 @@ object ManifestTable {
       val inserts: Option[DataFrame] =
         if (notMatched.isEmpty) None
         else {
-          val unmatched0 = src.alias("s")
           // NOT MATCHED ⟺ no live target row satisfies the FULL ON
           // (keys ∧ extraOn): with extra conjuncts the anti-join needs
           // the target columns they reference, so it joins the
           // key-candidate files' rows under the t alias; the keys-only
           // projection stays for the plain case (narrower scan)
           val unmatched =
-            if (keyCand.isEmpty) unmatched0
+            if (keyCand.isEmpty) src.alias("s")
             else extraOn match {
               case Some(x) =>
-                val tgt = readFiles(spark, table, keyCand, snap.dvs,
-                  mapping = mapping0, recorded = recorded).alias("t")
-                unmatched0.join(tgt,
+                src.alias("s").join(t.read(keyCand).alias("t"),
                   keyCond && coalesce(x, lit(false)), "left_anti")
               case None =>
-                val targetKeys = readFiles(spark, table, keyCand, snap.dvs,
-                  mapping = mapping0, recorded = recorded)
-                  .select(keyPairs.map(kp =>
-                    col(kp._1).as(s"_graft_tk_${kp._1}")): _*)
-                unmatched0.join(targetKeys,
+                val targetKeys = t.read(keyCand).select(keyPairs.map(kp =>
+                  col(kp._1).as(s"_graft_tk_${kp._1}")): _*)
+                src.alias("s").join(targetKeys,
                   keyPairs.map(kp =>
                     col(s"s.${kp._2}") === col(s"_graft_tk_${kp._1}"))
                     .reduce(_ && _),
                   "left_anti")
             }
-          var noEarlier = lit(true)
-          val applies = notMatched.map { cl =>
-            val a = condOf(cl.condition) && noEarlier
-            noEarlier = noEarlier && !condOf(cl.condition)
-            (a, cl.values)
-          }
-          val any = applies.map(_._1).reduce(_ || _)
+          val applies =
+            firstMatch(lit(true), notMatched.map(c => c.condition -> c.values))
           // insert rows take the TARGET schema: assigned columns from
-          // the clause, the rest null (cast to the recorded types)
-          val tgtFields: Seq[org.apache.spark.sql.types.StructField] =
-            recorded.map(_.fields.toSeq).getOrElse {
+          // the clause, the rest null (cast to the recorded types); on a
+          // legacy table without a recorded schema the insert must
+          // assign every column it wants, typed by the values
+          def value(c: String,
+              typed: Option[org.apache.spark.sql.types.DataType]): Column =
+            applies.foldRight(typed.fold(lit(null))(lit(null).cast(_))) {
+              case ((a, values), acc) => values.get(c).fold(acc)(v =>
+                when(a, typed.fold(v)(v.cast(_))).otherwise(acc))
+            }.as(c)
+          val out = t.recorded match {
+            case Some(rec) => rec.fields.toSeq.map(f =>
+              value(f.name, Some(f.dataType)))
+            case None =>
               val assigned = applies.flatMap(_._2.keys).distinct
               require(assigned.nonEmpty, "INSERT clause assigns no columns")
-              // legacy table without a recorded schema: the insert must
-              // assign every column it wants; types come from the values
-              Seq.empty
-            }
-          val outCols: Seq[Column] =
-            if (tgtFields.nonEmpty) tgtFields.map { f =>
-              applies.foldRight(lit(null).cast(f.dataType)) {
-                case ((a, values), acc) =>
-                  values.get(f.name).fold(acc)(v =>
-                    when(a, v.cast(f.dataType)).otherwise(acc))
-              }.as(f.name)
-            }
-            else applies.flatMap(_._2.keys).distinct.map { c =>
-              applies.foldRight(lit(null): Column) { case ((a, values), acc) =>
-                values.get(c).fold(acc)(v => when(a, v).otherwise(acc))
-              }.as(c)
-            }
-          Some(unmatched.filter(any).select(outCols: _*))
-        }
-      // inserted rows synthesize their generated values and draw
-      // identity for null slots; pinned when identity is drawn so the
-      // CDC image and the written rows carry the SAME ids
-      val (insertsPrepped, idCols) = inserts match {
-        case None => (None, Seq.empty[(String, Long)])
-        case Some(ins) =>
-          val gens = recomputeGenerated(ins, recorded)
-          val (filled0, ids0) = fillIdentity(gens, recorded, props0)
-          // inserted rows draw fresh row ids; matched rows keep theirs
-          // through the rewrite/post-image projections
-          val (filled, rids) = fillRowIds(filled0, props0)
-          val ids = ids0 ++ rids
-          (Some(if (ids.isEmpty) filled else filled.localCheckpoint()),
-            ids)
-      }
-      val newData: Option[DataFrame] =
-        (rewritten.orElse(morPost), insertsPrepped) match {
-          case (Some(r), Some(i)) =>
-            Some(r.unionByName(i, allowMissingColumns = true))
-          case (r, i) => r.orElse(i)
-        }
-      newData match {
-        case None => return base // nothing to change
-        case Some(nd) =>
-          // an insert-only merge with zero insert rows must not commit
-          val hasRows = (if (morMode) morRefs.nonEmpty else hits.nonEmpty) ||
-            nd.limit(1).count() > 0
-          if (!hasRows) return base
-          val active = recorded.exists(columnMapped)
-          val evolved =
-            stampNewFields(enforceSchema(recorded, nd.schema, table), active)
-          // nd derives from the pinned src but clause SET expressions
-          // may be rand-bearing — checked is the pinned evaluation when
-          // constraints exist, nd itself otherwise
-          val checked = enforceConstraints(nd,
-            m.map(_.props).getOrElse(Map.empty), table,
-            recorded = Some(evolved))
-          val fresh = writeSnapshot(fs, p,
-            toPhysical(checked, Some(evolved).filter(columnMapped)),
-            base + 1, parts, 0L)
-          // change feed. CoW: multiset diff of the hit files'
-          // pre-image vs their rewrite (updates = delete+insert,
-          // unchanged cancel) plus the insert rows. MoR: the clause
-          // join is EXACT — delete-clause rows tag delete, update-
-          // clause rows tag paired pre/post images, inserts insert.
-          val cdc =
-            if (!changeFeedOn(m)) None
-            else if (morMode) {
-              val frames: Seq[DataFrame] = (morJoin match {
-                case Some((joined, tcols)) if morRefs.nonEmpty =>
-                  val (anyChange, del, _) = clausePlan(matchedFlag)
-                  Seq(joined.filter(anyChange)
-                    .withColumn(ChangeTypeCol, when(del, lit("delete"))
-                      .otherwise(lit("update_preimage")))
-                    .select((tcols.map(c => col(s"t.$c").as(c)) :+
-                      col(ChangeTypeCol)): _*)) ++
-                    morPost.map(_.withColumn(ChangeTypeCol,
-                      lit("update_postimage"))).toSeq
-                case _ => Seq.empty
-              }) ++ insertsPrepped.map(
-                _.withColumn(ChangeTypeCol, lit("insert"))).toSeq
-              if (frames.isEmpty) None
-              else Some(writeChangeDir(spark, p, base + 1,
-                frames.reduce(
-                  _.unionByName(_, allowMissingColumns = true))))
-            }
-            else {
-              val rewriteDiffs: Seq[DataFrame] = (rewritten, hits) match {
-                case (Some(rw), hs) if hs.nonEmpty =>
-                  val old = readFiles(spark, table, hs, snap.dvs,
-                    mapping = mapping0, recorded = recorded)
-                  Seq(old.exceptAll(rw)
-                    .withColumn(ChangeTypeCol, lit("delete")),
-                    rw.exceptAll(old)
-                      .withColumn(ChangeTypeCol, lit("insert")))
-                case _ => Seq.empty
-              }
-              val diffs = rewriteDiffs ++ insertsPrepped.map(
-                _.withColumn(ChangeTypeCol, lit("insert"))).toSeq
-              Some(writeChangeDir(spark, p, base + 1,
-                diffs.reduce(_.unionByName(_, allowMissingColumns = true))))
-            }
-          val stats = collectStats(spark, p, fresh, props0)
-          if (commitDelta(fs, p, base + 1, fresh,
-            m.map(_.txns).getOrElse(Map.empty),
-            stats, remove = (if (morMode) Seq.empty else hits),
-            parts = parts,
-            schemaJson = Some(evolved.json),
-            dvs = morRefs,
-            props = advanceIdentity(spark, p, fresh, stats,
-              Some(evolved).filter(columnMapped), props0, idCols),
-            cdcDir = cdc,
-            op = opInfo(m, "merge",
-              "keys" -> keyPairs.map(_._1).mkString(","),
-              "clauses" -> (matched.size + notMatched.size +
-                bySource.size).toString,
-              "mode" -> (if (morMode) "merge-on-read" else "copy-on-write"),
-              "rewrittenFiles" ->
-                (if (morMode) "0" else hits.size.toString)))) {
-            maybeCheckpoint(spark, fs, p, base + 1)
-            if (morMode) maybeAutoCompact(spark, fs, p, table, base + 1)
-            return base + 1
+              assigned.map(value(_, None))
           }
+          Some(unmatched.filter(applies.map(_._1).reduce(_ || _))
+            .select(out: _*))
+        }
+      val mor = t.mor(MergeModeProp)
+      rewriteRows(t, mor, RowChange((keyCand ++ bySourceCand).distinct.sorted,
+        joined(_).filter(anyChange).select("t.*"),
+        applied(_, t.recorded), post = Some(applied(_, t.recorded)),
+        // inserted rows synthesize their generated values and draw
+        // identity and row ids; matched rows keep theirs through the
+        // rewrite and post-image projections
+        inserts = inserts.map(i => _ =>
+          drawIds(recomputeGenerated(i, t.recorded), t)),
+        changes = Some { (hits, pre) =>
+          // merge-on-read: the clause join is EXACT — delete-clause
+          // rows tag delete, update-clause rows paired pre/post images.
+          // Copy-on-write: multiset diff of the hit files' pre-image
+          // vs their rewrite (updates = delete+insert, unchanged cancel)
+          if (mor) joined(pre)
+            .withColumn(ChangeTypeCol, when(del, lit("delete"))
+              .otherwise(lit("update_preimage")))
+            .select(targetCols(pre).map(c => col(s"t.$c").as(c)) :+
+              col(ChangeTypeCol): _*)
+            .unionByName(applied(pre, t.recorded)
+              .withColumn(ChangeTypeCol, lit("update_postimage")))
+          else {
+            val old = t.read(hits)
+            val rw = applied(old, t.recorded)
+            old.exceptAll(rw).withColumn(ChangeTypeCol, lit("delete"))
+              .unionByName(rw.exceptAll(old)
+                .withColumn(ChangeTypeCol, lit("insert")))
+          }
+        })) { n =>
+        t.op("merge", "keys" -> keyPairs.map(_._1).mkString(","),
+          "clauses" -> (matched.size + notMatched.size +
+            bySource.size).toString,
+          "mode" -> (if (mor) "merge-on-read" else "copy-on-write"),
+          "rewrittenFiles" -> (if (mor) "0" else n.toString))
       }
-      attempt += 1
     }
-    raceLost(table, currentVersion(spark, table) + 1)
   }
 
   /** ANALYZE: compute per-file, per-column NDV sketches (DataSketches

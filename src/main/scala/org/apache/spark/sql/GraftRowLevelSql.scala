@@ -29,6 +29,10 @@ import graft.sinks.ManifestTable
   *  - `DELETE FROM t WHERE cond` with subqueries or conjuncts the V2
   *    filter pushdown cannot translate ([[ManifestTable.deleteWhere]];
   *    translatable deletes stay on the `SupportsDelete` path);
+  *  - every route honors the table's mode properties
+  *    ([[ManifestTable.DeleteModeProp]], [[ManifestTable.UpdateModeProp]],
+  *    [[ManifestTable.MergeModeProp]]): copy-on-write by default,
+  *    deletion vectors under `merge-on-read`;
   *  - `MERGE INTO t USING s ON t.k = s.k [AND <extra>] WHEN ...` —
   *    whole-row upserts take [[ManifestTable.merge]]; every other
   *    clause combination (and non-equality ON conjuncts, which become

@@ -104,6 +104,23 @@ class DefaultColumnsSpec extends AnyFunSuite with SparkSuite {
     assert(after == Seq((1L, "basic"), (3L, "gold")), s"got $after")
   }
 
+  test("replaceWhere matches pre-ALTER rows by their EXISTS default") {
+    import spark.implicits._
+    val cat = freshCat()
+    spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT)")
+    spark.sql(s"INSERT INTO $cat.db.t VALUES (1), (2)")
+    spark.sql(s"ALTER TABLE $cat.db.t ADD COLUMN tier STRING DEFAULT 'basic'")
+    spark.sql(s"INSERT INTO $cat.db.t VALUES (3, 'gold')")
+    val path = s"${spark.conf.get(s"spark.sql.catalog.$cat.warehouse")}/db/t"
+    // the 'basic' slice is rows 1 and 2, whose file has no tier column:
+    // matching must read them with the frozen default, as every read does
+    ManifestTable.replaceWhere(spark,
+      Seq((10L, "basic")).toDF("id", "tier"), path, col("tier") === "basic")
+    val got = ManifestTable.read(spark, path).orderBy("id")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(got == Seq((3L, "gold"), (10L, "basic")), s"got $got")
+  }
+
   test("SET/DROP DEFAULT govern future inserts; frozen EXISTS default survives") {
     val cat = freshCat()
     spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT)")

@@ -197,6 +197,30 @@ class DeletionVectorSpec extends AnyFunSuite with SparkSuite {
       "property-routed delete must rewrite nothing")
     assert(ManifestTable.hasDeletionVectors(spark, t))
     assert(ManifestTable.read(spark, t).count() == 99)
+    // the row-identity surfaces (SQL DELETE/UPDATE with subqueries)
+    // honor the mode properties too: nothing rewritten, and the rows
+    // read exactly as on a copy-on-write twin given the same statements
+    val cow = rangedTable()
+    ManifestTable.delete(spark, cow, col("id") === 11L)
+    def rows(table: String) = ManifestTable.read(spark, table)
+      .orderBy("id").collect().toSeq
+    val files2 = ManifestTable.currentFiles(spark, t)
+    Seq(t, cow).foreach(ManifestTable.deleteWhere(spark, _,
+      _ => col("id") === 12L))
+    assert(ManifestTable.currentFiles(spark, t) == files2,
+      "property-routed deleteWhere must rewrite nothing")
+    assert(ManifestTable.hasDeletionVectors(spark, t))
+    assert(rows(t) == rows(cow))
+    ManifestTable.setProperty(spark, t,
+      ManifestTable.UpdateModeProp, "merge-on-read")
+    val files3 = ManifestTable.currentFiles(spark, t)
+    Seq(t, cow).foreach(ManifestTable.updateWhere(spark, _,
+      _ => col("id") === 13L, Map("tag" -> lit("routed"))))
+    assert(files3.forall(ManifestTable.currentFiles(spark, t).contains),
+      "property-routed updateWhere must rewrite nothing")
+    assert(ManifestTable.hasDeletionVectors(spark, t))
+    assert(rows(t) == rows(cow))
+    assert(rows(t).count(_.getString(1) == "routed") == 1)
   }
 
   test("overlapping deletes stay disjoint; rowCount stays exact") {

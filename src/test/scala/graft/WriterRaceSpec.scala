@@ -100,6 +100,54 @@ class WriterRaceSpec extends AnyFunSuite with SparkSuite {
     assert(ManifestTable.rowCount(spark, t).contains(89L))
   }
 
+  test("every row-level entry point retries past an append in its publish window") {
+    import spark.implicits._
+    import ManifestTable.MatchedClause
+    def row5(tag: String) = Seq((5L, tag, 0)).toDF("id", "tag", "bucket")
+    val id5 = col("id") === 5L
+    val set = Map("tag" -> lit("op"))
+    // (entry point, op, does it delete id 5 (else it retags it "op"))
+    val cases: Seq[(String, String => Unit, Boolean)] = Seq(
+      ("delete", t => ManifestTable.delete(spark, t, id5), true),
+      ("deleteWhere", t => ManifestTable.deleteWhere(spark, t, _ => id5), true),
+      ("deleteVectors", t => ManifestTable.deleteVectors(spark, t, id5), true),
+      ("update", t => ManifestTable.update(spark, t, id5, set), false),
+      ("updateVectors", t => ManifestTable.updateVectors(spark, t, id5, set),
+        false),
+      ("updateWhere", t => ManifestTable.updateWhere(spark, t, _ => id5, set),
+        false),
+      ("merge", t => ManifestTable.merge(spark, row5("op"), t, Seq("id")),
+        false),
+      ("mergeVectors", t => ManifestTable.mergeVectors(spark, row5("op"), t,
+        Seq("id")), false),
+      ("mergeClauses", t => ManifestTable.mergeClauses(spark, row5("op"), t,
+        Seq("id" -> "id"), matched = Seq(MatchedClause(None,
+          Some(Map("tag" -> col("s.tag")))))), false),
+      ("replaceWhere", t => ManifestTable.replaceWhere(spark, row5("op"), t,
+        id5), false))
+    cases.foreach { case (name, op, deletes) =>
+      val t = rangedTable() // v1
+      val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+      withHook { (table, target) =>
+        // one append commits v2 inside the op's compute→publish window
+        if (table.endsWith(t) && target.startsWith("v") &&
+          armed.getAndSet(false)) {
+          ManifestTable.append(spark, Seq((500L, "raced", 7))
+            .toDF("id", "tag", "bucket"), t): Unit
+        }
+      }(op(t))
+      assert(!armed.get(), s"$name: the competing append never ran")
+      assert(ManifestTable.currentVersion(spark, t) == 3L, name)
+      val r = ManifestTable.read(spark, t)
+      assert(r.count() == (if (deletes) 100L else 101L), name)
+      assert(r.filter(col("id") === 500L && col("tag") === "raced")
+        .count() == 1, s"$name: the raced append is lost")
+      val tags = r.filter(id5).select("tag").collect().map(_.getString(0))
+      assert(tags.toSeq == (if (deletes) Seq.empty else Seq("op")),
+        s"$name: the op's own effect is lost: ${tags.toSeq}")
+    }
+  }
+
   test("a persistent conflicter exhausts retries: explicit race error, table consistent") {
     import spark.implicits._
     val t = rangedTable() // v1
