@@ -1148,6 +1148,23 @@ class ManifestTableSpec extends AnyFunSuite with SparkSuite {
     assert(e2.getMessage.contains("latest"))
   }
 
+  test("restore is a replace base: no interval checkpoint at its version") {
+    spark.conf.set("spark.graft.manifest.checkpointInterval", "2")
+    try {
+      val t = freshTable()
+      ManifestTable.write(spark, df(10, "a"), t) // v1
+      ManifestTable.append(spark, df(5, "b"), t) // v2: delta + checkpoint
+      ManifestTable.append(spark, df(5, "c"), t) // v3
+      assert(new java.io.File(s"$t/_manifests/c000000000002.json").exists,
+        "the delta at v2 is checkpointed")
+      assert(ManifestTable.restore(spark, t, 1L) == 4L)
+      assert(!new java.io.File(s"$t/_manifests/c000000000004.json").exists,
+        "a restore's replace manifest is its own base; a checkpoint " +
+          "would copy the whole file list again")
+      assert(ManifestTable.read(spark, t).count() == 10L)
+    } finally spark.conf.unset("spark.graft.manifest.checkpointInterval")
+  }
+
   test("row-level CDF across a restore commit is the net rollback diff") {
     val t = freshTable()
     ManifestTable.write(spark, df(20, "good"), t) // v1
