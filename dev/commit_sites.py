@@ -8,7 +8,10 @@ Prints one line per call of `commitDelta(`, `commitFullList(`,
 the line number, the callee and the innermost `def` around the call.
 A def encloses the lines below it that are indented deeper than the
 def itself. Definitions (`def commitDelta(`) and comment lines are not
-calls. A last line counts the calls per callee.
+calls. The default callees count only as bare calls (`x.commitDelta(`
+is another object's method); given NAMEs also count as method calls,
+so `parquet` lists every `.parquet(` read and write. A last line
+counts the calls per callee.
 """
 import re
 import sys
@@ -17,9 +20,11 @@ NAMES = ("commitDelta", "commitFullList", "commitManifest", "casCreate")
 DEF = re.compile(r"\bdef\s+([A-Za-z_][A-Za-z0-9_]*)")
 
 
-def sites(text, names=NAMES):
-    """[(line number, callee, enclosing def or None)] for every call."""
-    call = re.compile(r"(?<![\w.])(?<!def )(%s)\(" % "|".join(names))
+def sites(text, names=NAMES, methods=False):
+    """[(line number, callee, enclosing def or None)] for every call;
+    with `methods`, `x.name(` counts too."""
+    call = re.compile(r"(?<!%s)(?<!def )(%s)\(" % (
+        r"\w" if methods else r"[\w.]", "|".join(names)))
     out, stack = [], []  # stack of (indent, def name)
     for n, line in enumerate(text.splitlines(), 1):
         s = line.lstrip()
@@ -41,7 +46,8 @@ def main(argv):
         print(__doc__.strip(), file=sys.stderr)
         return 2
     with open(argv[1], encoding="utf-8") as f:
-        found = sites(f.read(), tuple(argv[2:]) or NAMES)
+        found = sites(f.read(), tuple(argv[2:]) or NAMES,
+                      methods=len(argv) > 2)
     for n, callee, owner in found:
         print(f"{n:6d}  {callee:<15} in {owner or '-'}")
     totals = {}

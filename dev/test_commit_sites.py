@@ -47,6 +47,12 @@ class TestCommitSites(unittest.TestCase):
                          [(10, "raceLost", "transact")])
         self.assertEqual(C.sites(""), [])
 
+    def test_method_calls_count_for_given_names(self):
+        self.assertEqual(C.sites(SOURCE, ("commitDelta",), methods=True), [
+            (8, "commitDelta", "once"),
+            (11, "commitDelta", "transact"),
+        ])
+
     def test_main_prints_sites_and_totals(self):
         import io
         import tempfile

@@ -425,25 +425,47 @@ object ManifestTable {
     * (`InMemoryFileIndex`) — against contract-free tables.
     */
   private def pinIfNeeded(spark: SparkSession, df: DataFrame,
-      table: String): DataFrame = {
-    val mustPin =
-      try {
-        val analyzed = df.queryExecution.analyzed
-        !analyzed.deterministic ||
-          analyzed.subqueriesAll.exists(!_.deterministic) ||
-          hasReEvaluatingLeaf(analyzed)
-      }
-      catch { case scala.util.control.NonFatal(_) => true } // pin, fail safe
-    if (mustPin) return df.localCheckpoint()
-    val (fs, p) = fsOf(spark, table)
-    val m = manifestAt(fs, p, currentVersion(spark, table))
-    val hasContract =
-      m.map(_.props).getOrElse(Map.empty)
-        .keys.exists(_.startsWith(ConstraintPropPrefix)) ||
+      table: String): DataFrame =
+    if (planMustPin(df)) df.localCheckpoint()
+    else {
+      val (fs, p) = fsOf(spark, table)
+      if (hasContract(manifestAt(fs, p, currentVersion(spark, table))))
+        df.localCheckpoint()
+      else df
+    }
+
+  /** [[pinIfNeeded]] for a merge source, decided per [[transact]]
+    * attempt from the attempt's own manifest (no log read of its own):
+    * the source is pinned at the first attempt that needs it, and
+    * later attempts reuse that pin.
+    */
+  private def pinOnDemand(df: DataFrame): Txn => DataFrame = {
+    lazy val byPlan = planMustPin(df)
+    var pinned: Option[DataFrame] = None
+    t => pinned.getOrElse {
+      if (!byPlan && !hasContract(t.m)) df
+      else { val d = df.localCheckpoint(); pinned = Some(d); d }
+    }
+  }
+
+  /** Can re-evaluating `df`'s plan yield different rows? */
+  private def planMustPin(df: DataFrame): Boolean =
+    try {
+      val analyzed = df.queryExecution.analyzed
+      !analyzed.deterministic ||
+        analyzed.subqueriesAll.exists(!_.deterministic) ||
+        hasReEvaluatingLeaf(analyzed)
+    }
+    catch { case scala.util.control.NonFatal(_) => true } // pin, fail safe
+
+  /** Does the table declare contracts that must see exactly the written
+    * rows: CHECK constraints, NOT NULL columns or the change feed?
+    */
+  private def hasContract(m: Option[Manifest]): Boolean =
+    m.map(_.props).getOrElse(Map.empty)
+      .keys.exists(_.startsWith(ConstraintPropPrefix)) ||
       changeFeedOn(m) ||
       recordedSchema(m).exists(_.fields.exists(!_.nullable))
-    if (hasContract) df.localCheckpoint() else df
-  }
 
   /** True when any leaf of `plan` — INCLUDING leaves inside subquery
     * expressions (ADVICE r17 medium: `collectLeaves` does not descend
@@ -963,6 +985,15 @@ object ManifestTable {
       StructField("file", StringType, nullable = false),
       StructField("stat", StringType, nullable = true),
       StructField("dv", StringType, nullable = true)))
+  }
+
+  /** The fixed (file, col, bits) schema [[attachBlooms]] writes; its
+    * readers pass it and skip footer inference.
+    */
+  private val BloomSidecarSchema = {
+    import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
+    StructType(Seq(StructField("file", StringType),
+      StructField("col", StringType), StructField("bits", BinaryType)))
   }
 
   /** Load a [[Ref]] sidecar back into (files, stats, dvs) — a columnar
@@ -1595,7 +1626,8 @@ object ManifestTable {
         .write.mode(SaveMode.ErrorIfExists)
         .parquet(new Path(table, dir).toString)
       // read back only the TINY (file, col) pairs to attach references
-      val pairs = spark.read.parquet(new Path(table, dir).toString)
+      val pairs = spark.read.schema(BloomSidecarSchema)
+        .parquet(new Path(table, dir).toString)
         .select("file", "col").collect()
         .map(r => r.getString(0) -> r.getString(1))
       if (pairs.isEmpty) return stats
@@ -1689,7 +1721,7 @@ object ManifestTable {
       * recorded schema (logical names, exists-defaults, widening).
       */
     def read(files: Seq[String], keepIdentity: Boolean = false): DataFrame =
-      readFiles(spark, table, files, snap.dvs, keepIdentity, mapping, recorded)
+      readFiles(spark, table, files, snap.dvs, recorded, props, keepIdentity)
 
     /** The live files whose statistics admit `e`. */
     def prune(e: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -2535,7 +2567,7 @@ object ManifestTable {
           s"staged files carry partition layout [${stagedKeys.mkString(",")}] " +
             s"but $table now records [${t.parts.mkString(",")}] — the table " +
             "was re-partitioned mid-stream; restart the streaming query")
-        Some(streamed(stageAppend(t, readFiles(spark, table, staged, Map.empty),
+        Some(streamed(stageAppend(t, readStaged(spark, table, staged),
           t.txns + (txnAppId -> batchId), staged = Some(staged -> writeSchema))(
           n => t.op("streaming-append", "txnAppId" -> txnAppId,
             "batchId" -> batchId.toString, "files" -> n.toString))))
@@ -2755,10 +2787,6 @@ object ManifestTable {
       : Option[org.apache.spark.sql.types.StructType] =
     recordedSchema(m).filter(columnMapped)
 
-  private def mappingAt(fs: FileSystem, p: Path,
-      version: Long): Option[org.apache.spark.sql.types.StructType] =
-    schemaAt(fs, p, version).filter(columnMapped)
-
   /** The on-file shape of a recorded type: nested field names
     * replaced by their stamped physical names at every depth (types
     * kept — widened leaves read narrow file bytes natively).
@@ -2862,41 +2890,35 @@ object ManifestTable {
     }
   }
 
-  /** Project a physical-named frame onto the logical schema: each
-    * recorded field from its physical column (null when absent from
-    * these files — post-evolution adds), dropped columns simply not
-    * selected. Identity columns survive when present.
+  /** The one physical → logical step of every snapshot read: each
+    * recorded field from its on-file column, renamed, with dropped
+    * columns left out and nested shapes and partition types conformed
+    * ([[conform]]); row-identity and row-id columns ride along. The
+    * served fields carry no metadata: recorded defaults, generation
+    * expressions and physical names describe this table, not a frame
+    * that may be written into another. Unmapped tables whose types
+    * and metadata already agree get no projection at all.
     */
-  private def applyMapping(df: DataFrame,
-      mapping: Option[org.apache.spark.sql.types.StructType],
-      keepIdentity: Boolean = false): DataFrame =
-    mapping.fold(df) { ms =>
-      import org.apache.spark.sql.functions.{col, lit}
-      val have = df.columns.toSet
-      // the hidden row-id rides the projection (it has no logical
-      // field); public reads drop it at their own surface
-      val idCols =
-        (if (keepIdentity)
-          Seq(AbsPathCol, DvFileCol, DvIdxCol).filter(have)
-        else Seq.empty) ++ Seq(RowIdCol).filter(have)
-      df.select((ms.fields.toIndexedSeq.map { f =>
-        val phys = physicalOf(f)
-        if (have(phys))
-          conform(col(phys), df.schema(phys).dataType, f.dataType)
-            .as(f.name)
-        else {
-          // a column absent from every selected file: its recorded
-          // EXISTENCE default (the Spark column-DEFAULT contract),
-          // null otherwise
-          val key = org.apache.spark.sql.catalyst.util
-            .ResolveDefaultColumns.EXISTS_DEFAULT_COLUMN_METADATA_KEY
-          val fill =
-            if (f.metadata.contains(key))
-              org.apache.spark.sql.functions.expr(f.metadata.getString(key))
-            else lit(null)
-          fill.cast(stripNullability(f.dataType)).as(f.name)
-        }
-      } ++ idCols.map(col)): _*)
+  private def toLogical(df: DataFrame,
+      recorded: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+    recorded.fold(df) { rec =>
+      import org.apache.spark.sql.functions.col
+      import org.apache.spark.sql.types.Metadata
+      val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
+      def logical(f: org.apache.spark.sql.types.StructField): Column =
+        conform(col(physicalOf(f)), have(physicalOf(f)), f.dataType)
+          .as(f.name, Metadata.empty)
+      if (columnMapped(rec))
+        df.select(rec.fields.toIndexedSeq.map(logical) ++ df.columns.toSeq
+          .filter(c => c == RowIdCol || RowIdentityCols(c)).map(col): _*)
+      else if (rec.fields.forall(f => f.metadata == Metadata.empty &&
+          have.get(f.name).forall(dt =>
+            stripNullability(dt) == stripNullability(f.dataType)))) df
+      else {
+        val byName = rec.fields.map(f => f.name -> f).toMap
+        df.select(df.columns.toSeq.map(c =>
+          byName.get(c).fold(col(c))(logical)): _*)
+      }
     }
 
   /** The read half of nested-type evolution (VERDICT r17 #2):
@@ -3138,108 +3160,24 @@ object ManifestTable {
   private def absStr(table: String, rel: String): String =
     if (rel.startsWith("/")) rel else s"$table/$rel"
 
-  /** Bounded memo of INFERRED parquet read schemas, keyed by
-    * (basePath, exact path list). Every location the manifest log
-    * references is immutable by construction (snapshot/DV/change dirs
-    * are UUID-fresh per commit and never appended to), so the schema
-    * Spark would infer for a given path set can never change across
-    * reads. Supplying the memoized schema as the reader schema skips
-    * the footer-inference Spark job that every internal RE-read of the
-    * same files otherwise pays — one job + one hadoop-conf broadcast +
-    * one AQE cycle per read, the measured driver-gap tax of the
-    * lifecycle ops (guide §7.3: fewer driver round-trips per step).
-    * First read of a path set infers exactly as before; only repeats
-    * hit the memo, so behavior is byte-identical.
+  /** The Hive partition keys of a table-relative path: its
+    * `key=value` segments after the snapshot base ([[snapBaseOf]]).
     */
-  private val inferredSchemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
+  private def layoutOf(rel: String): Seq[String] =
+    rel.split("/").dropRight(1).dropWhile(_.indexOf('=') <= 0).toSeq
+      .map(_.split("=", 2).head)
 
-  /** `spark.read[.option(basePath)].parquet(paths)` with the inferred
-    * schema memoized per exact (basePath, paths) key — see
-    * [[inferredSchemaMemo]]. Only for log-referenced (immutable)
-    * locations.
+  /** The on-file read schema of a recorded schema: physical names at
+    * every depth, recorded types (the parquet reader widens narrow
+    * file bytes natively) and field metadata (it fills a column's
+    * EXISTS_DEFAULT for files written before the column existed), plus
+    * the hidden row-id column when the table has drawn row ids.
     */
-  private def readParquetMemo(spark: SparkSession, basePath: Option[String],
-      paths: Seq[String]): DataFrame = {
-    if (inferredSchemaMemo.size > 1024) inferredSchemaMemo.clear()
-    val key = basePath.getOrElse("") + "\u0000" + paths.mkString("\u0001")
-    var r = spark.read
-    basePath.foreach(b => r = r.option("basePath", b))
-    val hit = inferredSchemaMemo.get(key)
-    if (hit != null) r.schema(hit).parquet(paths: _*)
-    else {
-      val df = r.parquet(paths: _*)
-      inferredSchemaMemo.put(key, df.schema)
-      df
-    }
-  }
-
-  /** Union `relFiles` grouped per snapshot base, each under its own
-    * `basePath`: Spark's partition-structure parser walks each file's
-    * ancestors only until the first non-`key=value` segment, so a
-    * manifest spanning several snapshot dirs (one write + appends)
-    * discovers several bases that a single table-root basePath cannot
-    * bridge. Per-snapshot reads keep Hive partition columns resolvable
-    * AND partition-prunable in every branch of the union
-    * (`allowMissingColumns` = add-column schema evolution: older
-    * snapshots surface newer columns as null). An empty file list
-    * (e.g. a committed empty partitioned write) reads as an empty
-    * zero-column frame rather than crashing.
-    */
-  private def unionSnapshots(spark: SparkSession, table: String,
-      relFiles: Seq[String],
-      fillDefaults: Seq[(String, String, org.apache.spark.sql.types.DataType)] =
-        Seq.empty): DataFrame =
-    if (relFiles.isEmpty) spark.emptyDataFrame
-    else relFiles.groupBy(snapBaseOf).toSeq
-      .sortBy(_._1)
-      .map { case (snap, fs) =>
-        applyExistsDefaults(readParquetMemo(spark,
-          Some(snapBaseStr(table, snap)),
-          fs.map(f => absStr(table, f))), fillDefaults)
-      }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-
-  /** Fill columns ABSENT from this branch's files with their recorded
-    * existence default ([[existsDefaultFills]]) — applied PER snapshot
-    * branch, before the union's own null-fill erases the distinction
-    * between "column missing from these files" (default applies) and
-    * "value is genuinely null" (it does not).
-    */
-  private def applyExistsDefaults(df: DataFrame,
-      fills: Seq[(String, String, org.apache.spark.sql.types.DataType)])
-      : DataFrame =
-    if (fills.isEmpty) df
-    else {
-      import org.apache.spark.sql.functions.expr
-      val have = df.columns.map(
-        _.toLowerCase(java.util.Locale.ROOT)).toSet
-      fills.filterNot { case (n, _, _) =>
-        have(n.toLowerCase(java.util.Locale.ROOT))
-      }.foldLeft(df) { case (d, (n, sql, dt)) =>
-        d.withColumn(n, expr(sql).cast(stripNullability(dt)))
-      }
-    }
-
-  /** The (on-file column name, default SQL, type) of every recorded
-    * field carrying an EXISTS_DEFAULT — the Spark column-DEFAULT
-    * contract: rows in files written BEFORE the column existed read
-    * the default the DDL froze, not null. Names are physical when a
-    * mapping is active (the branch frames carry on-file names).
-    */
-  private def existsDefaultFills(
-      recorded: Option[org.apache.spark.sql.types.StructType],
-      mapping: Option[org.apache.spark.sql.types.StructType])
-      : Seq[(String, String, org.apache.spark.sql.types.DataType)] = {
-    val key = org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-      .EXISTS_DEFAULT_COLUMN_METADATA_KEY
-    recorded.toSeq.flatMap(_.fields.collect {
-      case f if f.metadata.contains(key) =>
-        val name = mapping.flatMap(_.fields.find(_.name == f.name))
-          .map(physicalOf).getOrElse(f.name)
-        (name, f.metadata.getString(key), f.dataType)
-    })
+  private def physicalSchema(rec: org.apache.spark.sql.types.StructType,
+      rowIds: Boolean): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    StructType(physicalShape(rec).asInstanceOf[StructType].fields ++
+      (if (rowIds) Seq(StructField(RowIdCol, LongType)) else Nil))
   }
 
   // ---------------------------------------------------------------
@@ -3393,118 +3331,89 @@ object ManifestTable {
       eagerExpression(fileCol), eagerExpression(idxCol), bc))
   }
 
-  /** Merge-on-read over a SINGLE file relation (the native scan / a
-    * streaming batch — places where the hidden `_metadata` column is
-    * reachable directly): tag row identity, one anti-join against the
-    * sidecars, identity dropped. No-op without sidecars.
+  /** Merge-on-read over a SINGLE file relation (places where the
+    * hidden `_metadata` column is reachable directly): drop the rows
+    * the sidecars delete. Small vectors (count known from the
+    * manifest) are one codegen'd membership filter with no join node;
+    * larger ones (or an unknown count, `-1`) one anti-join on the
+    * row identity. `keepIdentity` tags every row with its absolute
+    * path, table-relative file and row index in one `select` and
+    * keeps the tags (for [[rewriteRows]]). A no-op without sidecars
+    * unless identity is asked for.
     */
   private def applyDvAntiJoin(spark: SparkSession, table: String,
-      df: DataFrame, dvDirs: Seq[String], dvRows: Long = -1L): DataFrame =
-    if (dvDirs.isEmpty) df
+      df: DataFrame, dvDirs: Seq[String], dvRows: Long = -1L,
+      keepIdentity: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val inline = dvRows > 0 && dvRows <= dvInlineThreshold(spark)
+    if (dvDirs.isEmpty && !keepIdentity) df
+    else if (inline && !keepIdentity)
+      df.filter(dvInlineCondition(spark, table, dvDirs,
+        rowFileRel(table), col("_metadata.row_index")))
     else {
-      import org.apache.spark.sql.functions.col
-      // small vectors (count known from the manifest): one codegen'd
-      // membership filter, no join node in the read plan
-      if (dvRows > 0 && dvRows <= dvInlineThreshold(spark))
-        df.filter(dvInlineCondition(spark, table, dvDirs,
-          rowFileRel(table), col("_metadata.row_index")))
-      else df.withColumn(DvFileCol, rowFileRel(table))
-        .withColumn(DvIdxCol, col("_metadata.row_index"))
-        .join(dvEntries(spark, table, dvDirs),
+      val tagged = df.select(col("*"),
+        col("_metadata.file_path").as(AbsPathCol),
+        rowFileRel(table).as(DvFileCol),
+        col("_metadata.row_index").as(DvIdxCol))
+      val kept =
+        if (dvDirs.isEmpty) tagged
+        else if (inline) tagged.filter(dvInlineCondition(spark, table,
+          dvDirs, col(DvFileCol), col(DvIdxCol)))
+        else tagged.join(dvEntries(spark, table, dvDirs),
           Seq(DvFileCol, DvIdxCol), "left_anti")
-        .drop(DvFileCol, DvIdxCol)
+      if (keepIdentity) kept else kept.drop(AbsPathCol, DvFileCol, DvIdxCol)
     }
-
-  /** Cast any column whose inferred file type is NARROWER than the
-    * recorded schema's up to the recorded type — the reader-side half
-    * of zero-rewrite type widening (VERDICT r14 #4): files written
-    * before a widening commit keep their narrow physical encoding, and
-    * every read funnels through this cast so the served type is the
-    * RECORDED one regardless of which files survive pruning. A no-op
-    * (zero plan overhead) when every type already matches — the
-    * overwhelmingly common case.
-    */
-  private def widenTo(df: DataFrame,
-      recorded: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    recorded.fold(df) { s =>
-      import org.apache.spark.sql.functions.col
-      val want = s.fields.map(f => f.name -> f.dataType).toMap
-      def differs(f: org.apache.spark.sql.types.StructField): Boolean =
-        want.get(f.name).exists(t =>
-          stripNullability(t) != stripNullability(f.dataType))
-      if (!df.schema.fields.exists(differs)) df
-      else df.select(df.schema.fields.toIndexedSeq.map { f =>
-        // conform, not a bare cast: nested ADDs cannot cast (struct
-        // casts demand equal field counts) and nested RENAMEs need
-        // the stamped physical names (VERDICT r17 #2)
-        if (differs(f))
-          conform(col(f.name), f.dataType, want(f.name)).as(f.name)
-        else col(f.name)
-      }: _*)
-    }
+  }
 
   /** Read `relFiles` with the snapshot's DELETION VECTORS applied —
-    * the merge-on-read core every read path funnels through. With no
-    * DV on any requested file this is exactly [[unionSnapshots]]
-    * (identical plan, zero overhead); otherwise each branch tags rows
-    * with their (file, row-index) identity from the hidden `_metadata`
-    * column and one distributed LEFT ANTI join against the sidecar
-    * entries drops the deleted rows — broadcast when the DV is small
-    * (the point-delete case), shuffled when it is not; never a driver
-    * loop. `keepIdentity` retains the identity columns (plus the
-    * absolute path) for callers that need them ([[rewriteRows]]).
+    * the merge-on-read core every read path funnels through. The files
+    * of one partition layout ([[layoutOf]]; a snapshot has one) are ONE
+    * parquet relation ([[org.apache.spark.sql.GraftManifestScan]])
+    * whose data schema is the recorded one in physical names
+    * ([[physicalSchema]]) and whose partition values come from the
+    * manifest paths: no footer inference, no per-directory union.
+    * Callers pick the files, so the relation carries no statistics to
+    * prune them again. DVs drop through [[applyDvAntiJoin]], and
+    * [[toLogical]] serves the logical schema. Tables without a
+    * recorded schema fall back to the relation's footer merge.
     */
   private def readFiles(spark: SparkSession, table: String,
       relFiles: Seq[String], dvs: Map[String, Seq[DvRef]],
-      keepIdentity: Boolean = false,
-      mapping: Option[org.apache.spark.sql.types.StructType] = None,
-      recorded: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    import org.apache.spark.sql.functions.col
-    if (relFiles.isEmpty) return spark.emptyDataFrame
-    val fileSet = relFiles.toSet
-    val live = dvs.filter { case (f, _) => fileSet(f) }
-    val fills = existsDefaultFills(recorded, mapping)
-    if (live.isEmpty && !keepIdentity)
-      return widenTo(
-        applyMapping(unionSnapshots(spark, table, relFiles, fills), mapping),
-        recorded)
-    val branches = relFiles.groupBy(snapBaseOf)
-      .toSeq.sortBy(_._1)
-      .map { case (snap, fs) =>
-        applyExistsDefaults(readParquetMemo(spark,
-          Some(snapBaseStr(table, snap)),
-          fs.map(f => absStr(table, f))), fills)
-          .withColumn(AbsPathCol, col("_metadata.file_path"))
-          .withColumn(DvFileCol, rowFileRel(table))
-          .withColumn(DvIdxCol, col("_metadata.row_index"))
-      }
-    val tagged = branches.reduce(_.unionByName(_, allowMissingColumns = true))
-    val liveRows = live.values.flatten.map(_.rows).sum
-    val liveDirs = live.values.flatten.map(_.path).toSeq.distinct
-    val filtered =
-      if (live.isEmpty) tagged
-      // small vectors: codegen'd membership filter instead of a join
-      // node (VERDICT r19 #3) — counts come straight from the manifest
-      else if (liveRows > 0 && liveRows <= dvInlineThreshold(spark))
-        tagged.filter(dvInlineCondition(spark, table, liveDirs,
-          col(DvFileCol), col(DvIdxCol)))
-      else tagged.join(dvEntries(spark, table, liveDirs),
-        Seq(DvFileCol, DvIdxCol), "left_anti")
-    // the identity columns are never in `recorded`, so widenTo leaves
-    // them untouched on the keepIdentity path
-    if (keepIdentity)
-      widenTo(applyMapping(filtered, mapping, keepIdentity = true), recorded)
-    else widenTo(applyMapping(
-      filtered.drop(AbsPathCol, DvFileCol, DvIdxCol), mapping), recorded)
-  }
+      recorded: Option[org.apache.spark.sql.types.StructType],
+      props: Map[String, String],
+      keepIdentity: Boolean = false): DataFrame =
+    if (relFiles.isEmpty) spark.emptyDataFrame
+    else {
+      val (fs, p) = fsOf(spark, table)
+      // the row-id column exists once the table has drawn row ids
+      val physical = recorded.map(
+        physicalSchema(_, props.contains(identityNextKey(RowIdCol))))
+      relFiles.groupBy(layoutOf).toSeq.sortBy(_._1.mkString("/")).map {
+        case (parts, files) =>
+          val live = files.flatMap(dvs.get).flatten
+          toLogical(applyDvAntiJoin(spark, table,
+            org.apache.spark.sql.GraftManifestScan.relation(spark, p,
+              manifestFilesOf(fs, p, table, files, Map.empty, parts), parts,
+              physical),
+            live.map(_.path).distinct, live.map(_.rows).sum, keepIdentity),
+            recorded)
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
+    }
+
+  /** Files the log does not describe yet (the staged files of a
+    * streaming append or a dynamic overwrite): one plain parquet read
+    * per snapshot base, Hive partitions discovered from the paths.
+    */
+  private def readStaged(spark: SparkSession, table: String,
+      staged: Seq[String]): DataFrame =
+    staged.groupBy(snapBaseOf).toSeq.sortBy(_._1).map { case (base, fs) =>
+      spark.read.option("basePath", snapBaseStr(table, base))
+        .parquet(fs.map(f => absStr(table, f)): _*)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Read a snapshot (default: current) — exactly the manifest's file
-    * list with its deletion vectors applied; see [[unionSnapshots]]
-    * for the partition/evolution mechanics and [[readFiles]] for the
-    * merge-on-read anti-join (a no-op on DV-less tables). Live
-    * snapshot-dir count is small by construction (compaction collapses
-    * it to one).
+    * list with its deletion vectors applied, under that version's own
+    * recorded schema ([[readFiles]]).
     */
   def read(spark: SparkSession, table: String,
       version: Long = -1L): DataFrame = {
@@ -3513,16 +3422,16 @@ object ManifestTable {
     // stay TYPED: downstream column references resolve against the
     // recorded schema instead of failing on a zero-column frame
     if (snap.files.isEmpty) emptyTyped(spark, fs, p, v)
-    else {
-      // each version reads under its OWN recorded schema (time travel
-      // across a widening commit serves the era's types). The hidden
-      // row-id column is internal — the public read never serves it
-      val rec = schemaAt(fs, p, v)
-      readFiles(spark, table, snap.files, snap.dvs,
-        mapping = rec.filter(columnMapped), recorded = rec)
-        .drop(RowIdCol)
-    }
+    else readSnapshot(spark, table, snap, manifestAt(fs, p, v)).drop(RowIdCol)
   }
+
+  /** A resolved snapshot's files under its manifest's recorded schema:
+    * time travel across a widening commit serves the era's types.
+    */
+  private def readSnapshot(spark: SparkSession, table: String,
+      snap: Snapshot, m: Option[Manifest]): DataFrame =
+    readFiles(spark, table, snap.files, snap.dvs, recordedSchema(m),
+      m.map(_.props).getOrElse(Map.empty))
 
   /** [[read]] plus the stable `_row_id` column of a row-tracked table
     * ([[RowTrackingProp]]): unique ids that survive copy-on-write
@@ -3536,9 +3445,7 @@ object ManifestTable {
     if (snap.files.isEmpty)
       return emptyTyped(spark, fs, p, v)
         .withColumn("_row_id", lit(null).cast("long"))
-    val rec = schemaAt(fs, p, v)
-    val df = readFiles(spark, table, snap.files, snap.dvs,
-      mapping = rec.filter(columnMapped), recorded = rec)
+    val df = readSnapshot(spark, table, snap, manifestAt(fs, p, v))
     if (df.columns.contains(RowIdCol))
       df.withColumn("_row_id", col(RowIdCol)).drop(RowIdCol)
     else df.withColumn("_row_id", lit(null).cast("long"))
@@ -3581,25 +3488,23 @@ object ManifestTable {
     val (fs, p, v, snap) = resolveAt(spark, table, version)
     val m = manifestAt(fs, p, v)
     val rec = recordedSchema(m)
-    val mapping = rec.filter(columnMapped)
-    val stats = logicalStats(snap.stats, mapping)
+    val stats = logicalStats(snap.stats, rec.filter(columnMapped))
     val predExpr = DataSkipping.expressionOf(predicate) // normalize once
     // generated-column derivation: a filter on the SOURCE column
     // (`ts >= X` over a table partitioned by `dt = to_date(ts)`)
     // implies bounds on the generated partition column — prune with
     // them, filter rows with the original predicate only
-    val pruneExpr = prunePredicate(spark, recordedSchema(m),
+    val pruneExpr = prunePredicate(spark, rec,
       m.map(_.parts).getOrElse(Seq.empty), predExpr)
     val kept = bloomPrune(spark, p, snap.files.filter(f =>
       DataSkipping.mayMatch(stats.get(f), pruneExpr)), stats, predExpr)
     if (snap.files.isEmpty) emptyTyped(spark, fs, p, v).filter(predicate)
+    // schema-stable empty result: plan over the real files, read none
     else if (kept.isEmpty)
-      // schema-stable empty result: plan over the real files, read none
-      widenTo(applyMapping(unionSnapshots(spark, table, snap.files,
-        existsDefaultFills(rec, mapping)), mapping),
-        rec).drop(RowIdCol).limit(0).filter(predicate)
-    else readFiles(spark, table, kept, snap.dvs, mapping = mapping,
-      recorded = rec).drop(RowIdCol).filter(predicate)
+      readSnapshot(spark, table, snap.copy(dvs = Map.empty), m)
+        .drop(RowIdCol).limit(0).filter(predicate)
+    else readSnapshot(spark, table, snap.copy(files = kept), m)
+      .drop(RowIdCol).filter(predicate)
   }
 
   /** BLOOM-FILTER file pruning, the tier below range pruning
@@ -3641,7 +3546,8 @@ object ManifestTable {
       import org.apache.spark.sql.functions.col
       val bits: Map[(String, String), Array[Byte]] = needed.toSeq
         .flatMap { dir =>
-          spark.read.parquet(new Path(p, dir).toString)
+          spark.read.schema(BloomSidecarSchema)
+            .parquet(new Path(p, dir).toString)
             .filter(col("file").isin(kept: _*))
             .collect().map(r =>
               (r.getString(0), r.getString(1)) -> r.getAs[Array[Byte]](2))
@@ -3781,47 +3687,22 @@ object ManifestTable {
     * Composability is the difference from [[readWhere]]: the
     * pruning rides EVERY query over the returned frame. The scan is
     * pinned to the resolved version (snapshot isolation); partition
-    * columns come from the manifest's recorded layout with inferred
-    * types (int/long/string); the data schema is the parallel footer
-    * merge, so add-column evolution surfaces as nulls. Tables written
-    * before partition-layout metadata existed scan as unpartitioned.
+    * columns come from the manifest's recorded layout. The data
+    * schema is the recorded schema in physical names
+    * ([[physicalSchema]]; pushed filters arrive in physical names, so
+    * stats pruning fires on mapped tables too), the DV filter runs
+    * on the relation (it needs the hidden `_metadata` column), and
+    * [[toLogical]] serves the logical schema. Tables written before
+    * partition-layout metadata existed scan as unpartitioned.
     */
   def scan(spark: SparkSession, table: String,
       version: Long = -1L): DataFrame = {
     val ((p, mfiles, parts, schema, dvDirs, _), dvRows) =
       resolvedScanWithDvRows(spark, table, version)
-    schema.filter(columnMapped) match {
-      case None =>
-        // merge-on-read through the native scan: a codegen'd bitmap
-        // filter for small vectors, one anti-join otherwise (a no-op
-        // without deletion vectors)
-        applyDvAntiJoin(spark, table,
-          org.apache.spark.sql.GraftManifestScan.relation(spark, p,
-            mfiles, parts, schema), dvDirs, dvRows)
-      case Some(ms) =>
-        // column-mapped table: the relation reads the PHYSICAL columns
-        // the files contain (pushed filters arrive in physical names
-        // through the alias, so stats pruning in the FileIndex still
-        // fires); the DV anti-join runs before the projection (it
-        // needs the hidden _metadata column), then one projection
-        // renames physical → logical and drops dropped columns
-        import org.apache.spark.sql.functions.col
-        import org.apache.spark.sql.types.{StructField, StructType}
-        // the physical shape recurses: nested renamed fields read
-        // under their stamped on-file names (widened leaf types stay
-        // — the parquet reader widens narrow file bytes natively),
-        // then ONE projection conforms physical → logical at every
-        // depth (VERDICT r17 #2)
-        val physSchema = StructType(ms.fields.map(f =>
-          StructField(physicalOf(f), physicalShape(f.dataType),
-            f.nullable, f.metadata)))
-        val rel = org.apache.spark.sql.GraftManifestScan.relation(spark, p,
-          mfiles, parts, Some(physSchema))
-        applyDvAntiJoin(spark, table, rel, dvDirs, dvRows)
-          .select(ms.fields.toIndexedSeq.map(f =>
-            conform(col(physicalOf(f)), physicalShape(f.dataType),
-              f.dataType).as(f.name)): _*)
-    }
+    toLogical(applyDvAntiJoin(spark, table,
+      org.apache.spark.sql.GraftManifestScan.relation(spark, p, mfiles,
+        parts, schema.map(physicalSchema(_, rowIds = false))),
+      dvDirs, dvRows), schema)
   }
 
   /** INTERNAL (the scan/catalog plumbing contract): the resolved
@@ -4657,10 +4538,9 @@ object ManifestTable {
       else currentFiles(spark, table, fromVersion).toSet
     val (cfs, cp, _, snap) = resolveAt(spark, table, to)
     val added = snap.files.filterNot(before)
-    val recC = schemaAt(cfs, cp, to)
     if (added.isEmpty) read(spark, table, to).limit(0)
-    else readFiles(spark, table, added, snap.dvs,
-      mapping = recC.filter(columnMapped), recorded = recC)
+    else readSnapshot(spark, table, snap.copy(files = added),
+      manifestAt(cfs, cp, to))
       .drop(RowIdCol) // public surface: the hidden row id stays hidden
   }
 
@@ -4793,17 +4673,9 @@ object ManifestTable {
     val mapping = recorded.filter(columnMapped)
     // column-mapped table: the relation reads PHYSICAL columns; one
     // projection after the DV anti-join restores the logical names
-    val relSchema = mapping match {
-      case Some(ms) =>
-        import org.apache.spark.sql.types.{StructField, StructType}
-        Some(StructType(ms.fields.map(f =>
-          StructField(physicalOf(f), physicalShape(f.dataType),
-            f.nullable, f.metadata))))
-      case None => recorded
-    }
     val rel = org.apache.spark.sql.GraftManifestScan.relation(spark, p,
       manifestFilesOf(fs, p, table, files, stats, parts), parts,
-      relSchema, isStreaming = true)
+      recorded.map(physicalSchema(_, rowIds = false)), isStreaming = true)
     // initial-snapshot batch of a DV-bearing table: apply the vectors
     // (append-range batches cannot carry DVs — a DV commit in the
     // range already failed the walk above)
@@ -4941,25 +4813,23 @@ object ManifestTable {
         if (!mv.dataChange) Seq.empty
         else mv match {
           case d: Delta if d.cdcDir.isDefined =>
-            // recorded change rows: footer-merged schema (the dir is
-            // one commit's worth of rows), already carrying the
-            // _change_type column
+            // recorded change rows, already carrying the _change_type
+            // column, read by name under the schema at `toVersion`
+            // (footer-merged only for tables without a recorded schema)
             val rel = new Path(p, d.cdcDir.get)
             val chFiles = listDataFiles(fs, rel)
               .map(st => relativize(p, st.getPath)).sorted
-            Seq(align(relationOf(chFiles, Seq.empty, None), None, v))
+            val changeSchema = recorded.map(_ =>
+              org.apache.spark.sql.types.StructType(baseFields.map(f =>
+                org.apache.spark.sql.types.StructField(f.name, f.dataType)) :+
+                org.apache.spark.sql.types.StructField(ChangeTypeCol,
+                  org.apache.spark.sql.types.StringType)))
+            Seq(align(relationOf(chFiles, Seq.empty, changeSchema), None, v))
           case d: Delta
               if d.remove.isEmpty && d.dvs.isEmpty && d.add.nonEmpty =>
             val parts = d.parts
-            val relSchema = mapping match {
-              case Some(ms) =>
-                import org.apache.spark.sql.types.{StructField, StructType}
-                Some(StructType(ms.fields.map(f =>
-                  StructField(physicalOf(f), physicalShape(f.dataType),
-                    f.nullable, f.metadata))))
-              case None => recorded
-            }
-            val rel0 = relationOf(d.add, parts, relSchema)
+            val rel0 = relationOf(d.add, parts,
+              recorded.map(physicalSchema(_, rowIds = false)))
             val rel = mapping.fold(rel0)(ms =>
               rel0.select(ms.fields.toIndexedSeq.map(f =>
                 conform(col(physicalOf(f)), physicalShape(f.dataType),
@@ -5040,11 +4910,12 @@ object ManifestTable {
         val dvs =
           if (isSnapshot) resolveAt(spark, table, current)._4.dvs
           else Map.empty[String, Seq[DvRef]]
-        readFiles(spark, table, added, dvs,
-          mapping = mappingAt(fs, p, current),
-          recorded = schemaAt(fs, p, current))
+        val m = manifestAt(fs, p, current)
+        readFiles(spark, table, added, dvs, recordedSchema(m),
+          m.map(_.props).getOrElse(Map.empty))
           .drop(RowIdCol) // public surface: the hidden row id stays hidden
-      } catch { case e: org.apache.spark.sql.AnalysisException =>
+      } catch { case e @ (_: org.apache.spark.sql.AnalysisException |
+          _: java.io.IOException) =>
         // normally unreachable (vacuum reclaims an add-file only
         // together with the manifest naming it, and the walk throws
         // the log-prefix error first) — this is the belt for a vacuum
@@ -5119,14 +4990,18 @@ object ManifestTable {
     val to = if (toVersion > 0) toVersion else vs.foldLeft(0L)(math.max)
     require(fromVersion >= 0 && fromVersion <= to,
       s"bad row-CDF range ($fromVersion, $to]")
-    val recTo = schemaAt(fs, p, to)
-    val mapTo = recTo.filter(columnMapped) // read every commit's files
-    // under the schema at `to` (a rename mid-range reports under the
-    // new name); recTo also freezes EXISTS_DEFAULTs into the served
-    // change rows — pre-default files must report the default, not
-    // null, exactly like the snapshot read path
+    // every commit's files read under the schema at `to` (a rename
+    // mid-range reports under the new name); recTo also freezes
+    // EXISTS_DEFAULTs into the served change rows — pre-default files
+    // must report the default, not null, exactly like the snapshot
+    // read path
+    val mTo = manifestAt(fs, p, to)
+    val recTo = recordedSchema(mTo)
+    val propsTo = mTo.map(_.props).getOrElse(Map.empty)
+    def readTo(files: Seq[String], dvs: Map[String, Seq[DvRef]]): DataFrame =
+      readFiles(spark, table, files, dvs, recTo, propsTo)
     val baseFields: Seq[org.apache.spark.sql.types.StructField] =
-      schemaAt(fs, p, to).map(_.fields.toSeq).getOrElse(
+      recTo.map(_.fields.toSeq).getOrElse(
         read(spark, table, to).schema.fields.toSeq)
     def align(df: DataFrame): DataFrame = {
       val have = df.columns.toSet
@@ -5141,6 +5016,10 @@ object ManifestTable {
         if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)): _*)
     }
+    val changeSchema = org.apache.spark.sql.types.StructType(baseFields.map(f =>
+      org.apache.spark.sql.types.StructField(f.name, f.dataType)) :+
+      org.apache.spark.sql.types.StructField(ChangeTypeCol,
+        org.apache.spark.sql.types.StringType))
     def tag(df: DataFrame, ct: String, v: Long): DataFrame =
       align(df).withColumn(ChangeTypeCol, lit(ct))
         .withColumn(CommitVersionCol, lit(v))
@@ -5159,19 +5038,16 @@ object ManifestTable {
         // precomputed change files (feed enabled at commit time): the
         // exact rows, no diffing needed
         case d: Delta if d.cdcDir.isDefined =>
-          val df = readParquetMemo(spark, None,
-            Seq(new Path(p, d.cdcDir.get).toString))
-          val have = df.columns.toSet
-          Seq(df.select((baseFields.map(f =>
-            if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
-            else lit(null).cast(f.dataType).as(f.name)) :+
-            col(ChangeTypeCol)): _*)
+          // read by name under the schema at `to`: narrow change files
+          // widen natively, columns they lack read null
+          Seq(spark.read.schema(changeSchema)
+            .parquet(new Path(p, d.cdcDir.get).toString)
             .withColumn(CommitVersionCol, lit(v)))
         case d: Delta if d.dvs.nonEmpty =>
           val dvDirs = d.dvs.values.flatten.map(_.path).toSeq.distinct
           val targets = d.dvs.keys.toSeq.sorted
-          val tagged = readFiles(spark, table, targets, Map.empty,
-            keepIdentity = true, mapping = mapTo, recorded = recTo)
+          val tagged = readFiles(spark, table, targets, Map.empty, recTo,
+            propsTo, keepIdentity = true)
           val dels = tag(tagged.join(dvEntries(spark, table, dvDirs),
             Seq(DvFileCol, DvIdxCol), "inner")
             .drop(AbsPathCol, DvFileCol, DvIdxCol), "delete", v)
@@ -5180,33 +5056,27 @@ object ManifestTable {
           // appended rows are born — emitting only the deletes would
           // silently drop the post-images from the feed
           if (d.add.isEmpty) Seq(dels)
-          else Seq(dels, tag(readFiles(spark, table, d.add, Map.empty,
-            mapping = mapTo, recorded = recTo), "insert", v))
+          else Seq(dels, tag(readTo(d.add, Map.empty), "insert", v))
         case d: Delta if d.remove.isEmpty =>
           if (d.add.isEmpty) Seq.empty // pure offset/DDL commit
-          else Seq(tag(readFiles(spark, table, d.add, Map.empty,
-            mapping = mapTo, recorded = recTo), "insert", v))
+          else Seq(tag(readTo(d.add, Map.empty), "insert", v))
         case d: Delta =>
           val prev = resolve(spark, fs, p, v - 1, cs)
-          val old = align(readFiles(spark, table, d.remove, prev.dvs,
-            mapping = mapTo, recorded = recTo))
+          val old = align(readTo(d.remove, prev.dvs))
           if (d.add.isEmpty) // pure delete: every pre-image row died
             Seq(tag(old, "delete", v))
           else {
-            val neu = align(readFiles(spark, table, d.add, Map.empty,
-              mapping = mapTo, recorded = recTo))
+            val neu = align(readTo(d.add, Map.empty))
             Seq(tag(old.exceptAll(neu), "delete", v),
               tag(neu.exceptAll(old), "insert", v))
           }
         case _ => // Replace or Ref base: overwrite/truncate (v=1: create)
           val cur = resolve(spark, fs, p, v, cs)
-          val neu = align(readFiles(spark, table, cur.files, cur.dvs,
-            mapping = mapTo, recorded = recTo))
+          val neu = align(readTo(cur.files, cur.dvs))
           if (v == 1) Seq(tag(neu, "insert", v))
           else {
             val prev = resolve(spark, fs, p, v - 1, cs)
-            val old = align(readFiles(spark, table, prev.files, prev.dvs,
-              mapping = mapTo, recorded = recTo))
+            val old = align(readTo(prev.files, prev.dvs))
             Seq(tag(old.exceptAll(neu), "delete", v),
               tag(neu.exceptAll(old), "insert", v))
           }
@@ -5375,8 +5245,10 @@ object ManifestTable {
             }
           val totalRows = math.max(df0.count(), 1L) // the pre-cluster plan
           val bytesPerRow = math.max(totalBytes / totalRows, 1L)
-          val files = writeSnapshot(fs, p, df, t.next, t.parts,
-            math.max(targetFileBytes / bytesPerRow, 1L))
+          // physical names, as every rewrite writes: a renamed column
+          // written under its logical name would read null afterwards
+          val files = writeSnapshot(fs, p, toPhysical(df, t.mapping), t.next,
+            t.parts, math.max(targetFileBytes / bytesPerRow, 1L))
           result = Sinks.CompactStats(before.size, files.size, totalBytes)
           // incremental consumers skip this commit instead of
           // redelivering the table
@@ -5928,7 +5800,7 @@ object ManifestTable {
           else t.snap.files.filter(f => touched.contains(fragOf(f)))
         // staged files are immutable — the checked rows ARE the
         // committed rows, no pin needed
-        val rows = readFiles(spark, table, staged, Map.empty)
+        val rows = readStaged(spark, table, staged)
         applyExpectations(rows, contracts(t.props, t.recorded,
           rows.columns.toSeq, table), table, pin = false): Unit
         val cdc =
@@ -6380,7 +6252,7 @@ object ManifestTable {
     * rows whose key the source carries, and they leave the table;
     * every source row inserts ([[upsertRows]]); the change feed tags
     * replaced rows as deletes and source rows as inserts. The source
-    * is pinned ONCE when required ([[pinIfNeeded]]): the key-bounds
+    * is pinned ONCE when required ([[pinOnDemand]]): the key-bounds
     * agg, the hit scan, the rewrite union, the constraint check and
     * the CDC tagging all re-evaluate it, and a non-deterministic
     * source could otherwise pass the checks on one evaluation and
@@ -6391,9 +6263,10 @@ object ManifestTable {
       mor: Txn => Boolean): Long = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    val src = pinIfNeeded(spark, source, table)
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
+    val pin = pinOnDemand(source)
     transact(spark, table, maxAttempts, partitionCols) { t =>
+      val src = pin(t)
+      val srcKeys = src.select(keyCols.map(col): _*).distinct()
       val onRead = mor(t)
       rewriteRows(t, onRead, RowChange(
         mergeKeyCandidates(src, keyCols.map(k => k -> k), t),
@@ -6540,8 +6413,7 @@ object ManifestTable {
     // the rewrite and the insert — pin ONE evaluation so a
     // non-deterministic source cannot diverge between them
     // (deterministic + contract-free stays lazy — ADVICE r15 low)
-    val src = pinIfNeeded(spark, source, table)
-    val srcMarked = src.withColumn(HitCol, lit(true)).alias("s")
+    val pin = pinOnDemand(source)
     val keyCond = keyPairs.map { case (t, s) =>
       col(s"t.$t") === col(s"s.$s") }.reduce(_ && _)
     // matched ⟺ a source row key-joined AND the extra ON conjuncts
@@ -6570,21 +6442,8 @@ object ManifestTable {
     val del = changing.collect { case (a, None) => a }
       .reduceOption(_ || _).getOrElse(lit(false))
     val ups = changing.collect { case (a, Some(set)) => (a, set) }
-    def joined(target: DataFrame) =
-      target.alias("t").join(srcMarked, keyCond, "left_outer")
     def targetCols(target: DataFrame) =
       target.columns.toIndexedSeq.filterNot(RowIdentityCols)
-    // the clauses applied to target rows: DELETE-clause rows leave,
-    // UPDATE-clause rows take their SET, the rest pass; generated
-    // dependents of updated inputs regenerate ([[recomputeGenerated]])
-    def applied(target: DataFrame,
-        rec: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-      recomputeGenerated(joined(target).filter(!del)
-        .select(targetCols(target).map { c =>
-          ups.foldRight(col(s"t.$c")) { case ((a, set), acc) =>
-            set.get(c).fold(acc)(v => when(a, v).otherwise(acc))
-          }.as(c)
-        }: _*), rec)
     // strip the t-alias off a by-source condition for stats pruning
     // (fail-open: shapes the skipper cannot prove keep their files)
     def pruneExpr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
@@ -6595,6 +6454,21 @@ object ManifestTable {
             Seq(a.nameParts.last))
       }
     transact(spark, table, maxAttempts, partitionCols) { t =>
+      val src = pin(t)
+      val srcMarked = src.withColumn(HitCol, lit(true)).alias("s")
+      def joined(target: DataFrame) =
+        target.alias("t").join(srcMarked, keyCond, "left_outer")
+      // the clauses applied to target rows: DELETE-clause rows leave,
+      // UPDATE-clause rows take their SET, the rest pass; generated
+      // dependents of updated inputs regenerate ([[recomputeGenerated]])
+      def applied(target: DataFrame,
+          rec: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+        recomputeGenerated(joined(target).filter(!del)
+          .select(targetCols(target).map { c =>
+            ups.foldRight(col(s"t.$c")) { case ((a, set), acc) =>
+              set.get(c).fold(acc)(v => when(a, v).otherwise(acc))
+            }.as(c)
+          }: _*), rec)
       // synthesized columns are not assignment targets: UPDATE-shaped
       // clauses never touch them (generated recompute, identity is
       // immutable), INSERT clauses may assign a BY DEFAULT identity
@@ -6797,8 +6671,8 @@ object ManifestTable {
           // immutable FILE, so they stay valid across later DV churn;
           // the report-time union over live files is an upper-bound
           // estimate
-          val tagged = readFiles(spark, table, todo, Map.empty,
-            keepIdentity = true, mapping = t.mapping, recorded = t.recorded)
+          val tagged = readFiles(spark, table, todo, Map.empty, t.recorded,
+            t.props, keepIdentity = true)
           val aggs = targets.map(c =>
             hll_sketch_agg(col(c).cast("string"), lgK).as(c))
           val rows = tagged.groupBy(col(DvFileCol))

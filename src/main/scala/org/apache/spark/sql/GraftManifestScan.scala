@@ -27,11 +27,16 @@ import graft.sinks.DataSkipping.FileStats
   *
   * The index is pinned to ONE resolved snapshot (files are immutable;
   * `refresh()` is a no-op) — the reader-side half of snapshot
-  * isolation. Partition values come from the manifest file paths
-  * (typed by inference: int → long → string), so Hive layouts work
-  * without a catalog. The data schema is the parallel footer merge
-  * across the snapshot's files — add-column evolution surfaces older
-  * files' missing columns as nulls, same as `ManifestTable.read`.
+  * isolation. Partition values come from the manifest file paths,
+  * typed by the recorded schema (by inference where it has no
+  * codec), so Hive layouts work without a catalog. The data schema is
+  * the schema the manifest records, which `ManifestTable` passes in
+  * physical names: the parquet reader widens narrow file types
+  * natively and fills a column older files lack with its
+  * EXISTS_DEFAULT or null. Only tables written before schema
+  * recording fall back to a parallel footer merge. Every
+  * `ManifestTable` snapshot read, the DSv2 catalog and the streaming
+  * source plan over this relation.
   *
   * Lives in the `org.apache.spark.sql` package for the same reason the
   * lake formats' equivalents do: [[HadoopFsRelation]]/[[FileIndex]]
@@ -180,14 +185,6 @@ object GraftManifestScan {
     override def sizeInBytes: Long = files.map(_.status.getLen).sum
   }
 
-  /** Build the scan DataFrame over a resolved snapshot. `partCols` is
-    * the manifest's recorded partition layout; files carry their
-    * pre-parsed partition values. `recordedSchema` is the manifest's
-    * schema-on-commit record: when present it IS the scan schema —
-    * O(1) instead of the O(files) distributed footer merge, and
-    * authoritative under evolution (the merge stays as the fallback
-    * for tables written before schema recording).
-    */
   /** The (data, partition) schemas of a resolved snapshot — shared by
     * the relation builder and the DSv2 catalog table. Partition types
     * come from the recorded schema when the dir-string codec covers
@@ -229,6 +226,14 @@ object GraftManifestScan {
     (dataSchema, partitionSchema)
   }
 
+  /** Build the scan DataFrame over a resolved snapshot. `partCols` is
+    * the partition layout; files carry their pre-parsed partition
+    * values. `recordedSchema` is the manifest's schema-on-commit
+    * record: when present it IS the scan schema — O(1) instead of the
+    * O(files) distributed footer merge, and authoritative under
+    * evolution (the merge stays as the fallback for tables written
+    * before schema recording).
+    */
   def relation(spark: SparkSession, tableRoot: Path,
       files: Seq[ManifestFile], partCols: Seq[String],
       recordedSchema: Option[StructType] = None,

@@ -77,39 +77,20 @@ class CboHistogramSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("a skewed STRING equality flips SMJ to broadcast once the top-K lands (VERDICT r19 #5)") {
-    import spark.implicits._
     val cat = "cbocat3"
     val wh = java.nio.file.Files.createTempDirectory("graft_cbo3").toString
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    // fact: 40k rows; lang = 'en' for ~99.6%, 'de' 100 rows, 'zz' 40 —
-    // ndv-only selectivity for lang = 'zz' says ~1/3 of the table
-    (0L until 40000L).map { i =>
-      val lang = if (i % 1000 == 0) "zz" else if (i % 400 == 1) "de" else "en"
-      (i, lang, i % 97)
-    }.toDF("id", "lang", "k").createOrReplaceTempView("cbo_slang_seed")
-    spark.sql(s"CREATE TABLE $cat.db.sfact AS SELECT * FROM cbo_slang_seed")
-    spark.range(20000).selectExpr("id % 97 AS k",
-      "md5(cast(id as string)) AS label",
-      "md5(cast(id + 1 as string)) AS label2",
-      "md5(cast(id + 2 as string)) AS label3")
-      .createOrReplaceTempView("cbo_sdim_seed")
-    spark.sql(s"CREATE TABLE $cat.db.sdim AS SELECT * FROM cbo_sdim_seed")
+    // the DevTopKPlan fixture: lang = 'zz' is 40 of 40k fact rows, but
+    // an ndv-only selectivity says ~1/3 of the table
+    DevTopKPlan.createFixture(spark, cat, wh)
 
-    def joinPlan() = spark.sql(
-      s"""SELECT f.id, d.label FROM $cat.db.sfact f
-         |JOIN $cat.db.sdim d ON f.k = d.k
-         |WHERE f.lang = 'zz'""".stripMargin).queryExecution.sparkPlan
+    def joinPlan() =
+      spark.sql(DevTopKPlan.joinSql(cat, "zz")).queryExecution.sparkPlan
     def kinds(p: org.apache.spark.sql.execution.SparkPlan)
         : (Int, Int) = (
       p.collect { case b: BroadcastHashJoinExec => b }.size,
       p.collect { case s: SortMergeJoinExec => s }.size)
 
-    val conf = Seq(
-      "spark.sql.cbo.enabled" -> "true",
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> (256 * 1024).toString)
+    val conf = DevTopKPlan.Conf
     val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
     conf.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
@@ -134,10 +115,8 @@ class CboHistogramSpec extends AnyFunSuite with SparkSuite {
         s"with the top-K the rare-string side must broadcast: " +
           s"bhj=$bhj1 smj=$smj1")
       // the HEAVY value must NOT be force-broadcast
-      val heavy = spark.sql(
-        s"""SELECT f.id, d.label FROM $cat.db.sfact f
-           |JOIN $cat.db.sdim d ON f.k = d.k
-           |WHERE f.lang = 'en'""".stripMargin).queryExecution.sparkPlan
+      val heavy =
+        spark.sql(DevTopKPlan.joinSql(cat, "en")).queryExecution.sparkPlan
       assert(kinds(heavy)._1 == 0,
         "the dominant value must keep the stock (non-broadcast) plan")
       // answers are identical either way
@@ -155,10 +134,8 @@ class CboHistogramSpec extends AnyFunSuite with SparkSuite {
       // re-derives the broadcast (the branch fires on its own)
       import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint}
       import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-      val optimized = spark.sql(
-        s"""SELECT f.id, d.label FROM $cat.db.sfact f
-           |JOIN $cat.db.sdim d ON f.k = d.k
-           |WHERE f.lang = 'zz'""".stripMargin).queryExecution.optimizedPlan
+      val optimized =
+        spark.sql(DevTopKPlan.joinSql(cat, "zz")).queryExecution.optimizedPlan
       val statsScans = optimized.collect {
         case Filter(_, rel: DataSourceV2ScanRelation) => rel.scan
       }.collect { case g: org.apache.spark.sql.GraftTableV2.GraftStatsScan => g }

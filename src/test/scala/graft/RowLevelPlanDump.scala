@@ -7,13 +7,16 @@ import graft.sinks.ManifestTable
 
 /** Dumps the optimized plan of every action the row-level lake ops run:
   * p52 (merge-on-read delete, update and clause merge with the change
-  * feed on) and a copy-on-write delete and update of a 5-file table.
-  * Expression ids, temp paths and uuids are masked, so dumps of two
-  * builds diff cleanly.
+  * feed on), a copy-on-write delete and update of a 5-file table, and
+  * the snapshot reads of a table with three snapshot directories and a
+  * deletion vector (a read, a copy-on-write delete and the
+  * auto-compaction its next append triggers). Expression ids, temp
+  * paths and uuids are masked, so dumps of two builds diff cleanly.
   *
   *   sbt "Test/runMain graft.RowLevelPlanDump <sfDir> <outDir>"
   *
-  * writes `<outDir>/p52_mor_row_ops.txt` and `<outDir>/cow_delete_update.txt`.
+  * writes `<outDir>/p52_mor_row_ops.txt`, `<outDir>/cow_delete_update.txt`
+  * and `<outDir>/snapshot_reads.txt`.
   */
 object RowLevelPlanDump {
   def main(args: Array[String]): Unit = {
@@ -26,11 +29,14 @@ object RowLevelPlanDump {
         seen.add(s"== $f ==\n${qe.optimizedPlan.treeString}"): Unit
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     })
-    def capture(name: String)(body: => Unit): Unit = {
-      body
-      // listener events arrive asynchronously: wait until they stop
+    // listener events arrive asynchronously: wait until they stop
+    def settle(): Unit = {
       var n = -1
       while (n != seen.size) { n = seen.size; Thread.sleep(2000) }
+    }
+    def capture(name: String)(body: => Unit): Unit = {
+      body
+      settle()
       val text = seen.toArray.map(_.toString).mkString("\n")
         .replaceAll("#\\d+L?", "#")
         .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>")
@@ -52,6 +58,25 @@ object RowLevelPlanDump {
         .toDF("id", "tag").repartitionByRange(5, col("id")), t)
       ManifestTable.delete(spark, t, col("id") < 30L)
       ManifestTable.update(spark, t, col("id") >= 90L, Map("tag" -> lit("u")))
+    }
+    import spark.implicits._
+    val rt = java.nio.file.Files.createTempDirectory("graft_plans")
+      .resolve("r").toString
+    def rows(from: Long) = (from until from + 20).map(i => (i, s"t${i % 3}"))
+      .toDF("id", "tag").repartition(2)
+    ManifestTable.write(spark, rows(0), rt)
+    ManifestTable.append(spark, rows(20), rt)
+    ManifestTable.append(spark, rows(40), rt)
+    ManifestTable.deleteVectors(spark, rt, col("id") === 5L)
+    ManifestTable.updateProperties(spark, rt, Map(
+      ManifestTable.AutoCompactProp -> "true",
+      ManifestTable.AutoCompactMinFilesProp -> "8"))
+    settle()
+    seen.clear() // the set-up commits' plans
+    capture("snapshot_reads") {
+      ManifestTable.read(spark, rt).collect(): Unit
+      ManifestTable.delete(spark, rt, col("id") === 25L)
+      ManifestTable.append(spark, rows(60), rt) // 8 small files: compacts
     }
     spark.stop()
   }
