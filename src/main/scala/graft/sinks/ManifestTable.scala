@@ -2897,7 +2897,12 @@ object ManifestTable {
     * served fields carry no metadata: recorded defaults, generation
     * expressions and physical names describe this table, not a frame
     * that may be written into another. Unmapped tables whose types
-    * and metadata already agree get no projection at all.
+    * and metadata already agree get no projection at all. The
+    * scan-shaped reads ([[scan]], the streaming batches) pass only a
+    * mapped schema (`recorded.filter(columnMapped)`), so an unmapped
+    * table scans as the bare relation: the one `format("graft")` hands
+    * to Spark, with the recorded metadata and the relation's partition
+    * types.
     */
   private def toLogical(df: DataFrame,
       recorded: Option[org.apache.spark.sql.types.StructType]): DataFrame =
@@ -3692,8 +3697,10 @@ object ManifestTable {
     * ([[physicalSchema]]; pushed filters arrive in physical names, so
     * stats pruning fires on mapped tables too), the DV filter runs
     * on the relation (it needs the hidden `_metadata` column), and
-    * [[toLogical]] serves the logical schema. Tables written before
-    * partition-layout metadata existed scan as unpartitioned.
+    * [[toLogical]] renames a column-mapped table to its logical
+    * schema. A DV-free unmapped table scans as the bare relation.
+    * Tables written before partition-layout metadata existed scan as
+    * unpartitioned.
     */
   def scan(spark: SparkSession, table: String,
       version: Long = -1L): DataFrame = {
@@ -3702,7 +3709,7 @@ object ManifestTable {
     toLogical(applyDvAntiJoin(spark, table,
       org.apache.spark.sql.GraftManifestScan.relation(spark, p, mfiles,
         parts, schema.map(physicalSchema(_, rowIds = false))),
-      dvDirs, dvRows), schema)
+      dvDirs, dvRows), schema.filter(columnMapped))
   }
 
   /** INTERNAL (the scan/catalog plumbing contract): the resolved
@@ -3752,8 +3759,9 @@ object ManifestTable {
           .map(st => relativize(p, st.getPath) -> st)
       }.toMap
     relFiles.map { rel =>
-      val st = statusByRel.getOrElse(rel, throw new java.io.IOException(
-        s"manifest of $table references missing data file $rel"))
+      val st = statusByRel.getOrElse(rel,
+        throw new java.io.FileNotFoundException(
+          s"manifest of $table references missing data file $rel"))
       val pvals = parts.map { c =>
         rel.split("/").dropRight(1).collectFirst {
           case seg if seg.startsWith(c + "=") =>
@@ -4670,9 +4678,9 @@ object ManifestTable {
     val stats: Map[String, FileStats] =
       snap0.map(_.stats).getOrElse(Map.empty)
     val recorded = recordedSchema(m)
-    val mapping = recorded.filter(columnMapped)
     // column-mapped table: the relation reads PHYSICAL columns; one
     // projection after the DV anti-join restores the logical names
+    // (the same step as [[scan]], which declares the source's schema)
     val rel = org.apache.spark.sql.GraftManifestScan.relation(spark, p,
       manifestFilesOf(fs, p, table, files, stats, parts), parts,
       recorded.map(physicalSchema(_, rowIds = false)), isStreaming = true)
@@ -4683,12 +4691,7 @@ object ManifestTable {
       snap0.map(_.dvs.values.flatten.map(_.path).toSeq.distinct)
         .getOrElse(Seq.empty),
       snap0.map(_.dvs.values.flatten.map(_.rows).sum).getOrElse(-1L))
-    mapping.fold(dv) { ms =>
-      import org.apache.spark.sql.functions.col
-      dv.select(ms.fields.toIndexedSeq.map(f =>
-        conform(col(physicalOf(f)), physicalShape(f.dataType),
-          f.dataType).as(f.name)): _*)
-    }
+    toLogical(dv, recorded.filter(columnMapped))
   }
 
   /** The snapshot at `version` as a DETERMINISTICALLY ORDERED file
@@ -4771,7 +4774,6 @@ object ManifestTable {
         .withColumn(CommitVersionCol, lit(toVersion))
     val mTo = manifestAt(fs, p, toVersion)
     val recorded = recordedSchema(mTo)
-    val mapping = recorded.filter(columnMapped)
     // field ORDER must equal the source's declared schema (the engine
     // binds the batch plan to the source output POSITIONALLY): the
     // native scan serves data-then-partition order on plain tables and
@@ -4779,7 +4781,7 @@ object ManifestTable {
     val partsTo = mTo.map(_.parts).getOrElse(Seq.empty)
     val baseFields: Seq[org.apache.spark.sql.types.StructField] =
       recorded.map { s =>
-        if (mapping.isDefined) s.fields.toSeq
+        if (columnMapped(s)) s.fields.toSeq
         else s.fields.toSeq.filterNot(f => partsTo.contains(f.name)) ++
           s.fields.toSeq.filter(f => partsTo.contains(f.name))
       }.getOrElse(Seq.empty)
@@ -4819,22 +4821,15 @@ object ManifestTable {
             val rel = new Path(p, d.cdcDir.get)
             val chFiles = listDataFiles(fs, rel)
               .map(st => relativize(p, st.getPath)).sorted
-            val changeSchema = recorded.map(_ =>
-              org.apache.spark.sql.types.StructType(baseFields.map(f =>
-                org.apache.spark.sql.types.StructField(f.name, f.dataType)) :+
-                org.apache.spark.sql.types.StructField(ChangeTypeCol,
-                  org.apache.spark.sql.types.StringType)))
-            Seq(align(relationOf(chFiles, Seq.empty, changeSchema), None, v))
+            Seq(align(relationOf(chFiles, Seq.empty,
+              recorded.map(_ => changeFileSchema(baseFields))), None, v))
           case d: Delta
               if d.remove.isEmpty && d.dvs.isEmpty && d.add.nonEmpty =>
             val parts = d.parts
-            val rel0 = relationOf(d.add, parts,
+            val rel = relationOf(d.add, parts,
               recorded.map(physicalSchema(_, rowIds = false)))
-            val rel = mapping.fold(rel0)(ms =>
-              rel0.select(ms.fields.toIndexedSeq.map(f =>
-                conform(col(physicalOf(f)), physicalShape(f.dataType),
-                  f.dataType).as(f.name)): _*))
-            Seq(align(rel, Some("insert"), v))
+            Seq(align(toLogical(rel, recorded.filter(columnMapped)),
+              Some("insert"), v))
           case d: Delta if d.remove.isEmpty && d.dvs.isEmpty =>
             Seq.empty // metadata-only commit
           case _ => throw new IllegalStateException(
@@ -4915,11 +4910,12 @@ object ManifestTable {
           m.map(_.props).getOrElse(Map.empty))
           .drop(RowIdCol) // public surface: the hidden row id stays hidden
       } catch { case e @ (_: org.apache.spark.sql.AnalysisException |
-          _: java.io.IOException) =>
+          _: java.io.FileNotFoundException) =>
         // normally unreachable (vacuum reclaims an add-file only
         // together with the manifest naming it, and the walk throws
         // the log-prefix error first) — this is the belt for a vacuum
-        // RACING this very poll between the walk and the read
+        // RACING this very poll between the walk and the read. Only a
+        // missing file is that race; other I/O failures propagate
         throw new java.io.IOException(
           s"consumer '$consumerId' of $table references data files " +
             "vacuum already reclaimed (a vacuum raced this poll) — " +
@@ -4953,6 +4949,20 @@ object ManifestTable {
   /** Column names of the row-level change feed. */
   val ChangeTypeCol = "_change_type"
   val CommitVersionCol = "_commit_version"
+
+  /** The read schema of a commit's change files: the table's `fields`
+    * by name and type, without metadata, plus [[ChangeTypeCol]]. Both
+    * change readers ([[rowChanges]], the CDC stream) read change dirs
+    * through it, so narrow files widen natively and columns they lack
+    * read null.
+    */
+  private def changeFileSchema(
+      fields: Seq[org.apache.spark.sql.types.StructField])
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    StructType(fields.map(f => StructField(f.name, f.dataType)) :+
+      StructField(ChangeTypeCol, StringType))
+  }
 
   /** ROW-LEVEL change-data feed (the `_change_type` contract, VERDICT
     * r12 next-round #4): every data-changing commit in
@@ -5016,10 +5026,6 @@ object ManifestTable {
         if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)): _*)
     }
-    val changeSchema = org.apache.spark.sql.types.StructType(baseFields.map(f =>
-      org.apache.spark.sql.types.StructField(f.name, f.dataType)) :+
-      org.apache.spark.sql.types.StructField(ChangeTypeCol,
-        org.apache.spark.sql.types.StringType))
     def tag(df: DataFrame, ct: String, v: Long): DataFrame =
       align(df).withColumn(ChangeTypeCol, lit(ct))
         .withColumn(CommitVersionCol, lit(v))
@@ -5038,9 +5044,7 @@ object ManifestTable {
         // precomputed change files (feed enabled at commit time): the
         // exact rows, no diffing needed
         case d: Delta if d.cdcDir.isDefined =>
-          // read by name under the schema at `to`: narrow change files
-          // widen natively, columns they lack read null
-          Seq(spark.read.schema(changeSchema)
+          Seq(spark.read.schema(changeFileSchema(baseFields))
             .parquet(new Path(p, d.cdcDir.get).toString)
             .withColumn(CommitVersionCol, lit(v)))
         case d: Delta if d.dvs.nonEmpty =>

@@ -799,4 +799,27 @@ class ManifestStreamSpec extends AnyFunSuite with SparkSuite {
       .listFiles(s.partitionFilters, s.dataFilters).map(_.files.size).sum
     assert(planned == 1, s"stats pruning must ride the batch format: $planned")
   }
+
+  test("format(\"graft\") reads an unmapped table with a DEFAULT column and a decimal partition") {
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val root = freshRoot()
+    val t = s"$root/t"
+    ManifestTable.write(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "tag")
+      .withColumn("p", lit("1.50").cast("decimal(5,2)")), t,
+      partitionCols = Seq("p"))
+    val defaulted = new MetadataBuilder()
+      .putString("EXISTS_DEFAULT", "'basic'")
+      .putString("CURRENT_DEFAULT", "'basic'").build()
+    ManifestTable.addColumns(spark, t, StructType(Seq(
+      StructField("tier", StringType, nullable = true, defaulted))))
+    ManifestTable.append(spark, Seq((3L, "c", "gold")).toDF("id", "tag", "tier")
+      .withColumn("p", lit("2.25").cast("decimal(5,2)")), t)
+    // no deletion vectors, no column mapping: the bare relation
+    val got = spark.read.format("graft").load(t)
+    assert(got.select("id", "tier").as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "basic"), (2L, "basic"), (3L, "gold")))
+    assert(got.select("p").as[String].collect().sorted.toSeq ==
+      Seq("1.50", "1.50", "2.25"))
+  }
 }

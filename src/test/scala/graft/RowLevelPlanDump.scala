@@ -11,7 +11,8 @@ import graft.sinks.ManifestTable
   * the snapshot reads of a table with three snapshot directories and a
   * deletion vector (a read, a copy-on-write delete and the
   * auto-compaction its next append triggers). Expression ids, temp
-  * paths and uuids are masked, so dumps of two builds diff cleanly.
+  * paths, their lengths, broadcast ids and uuids are masked, so dumps
+  * of two builds differ only where the plans do.
   *
   *   sbt "Test/runMain graft.RowLevelPlanDump <sfDir> <outDir>"
   *
@@ -41,6 +42,9 @@ object RowLevelPlanDump {
         .replaceAll("#\\d+L?", "#")
         .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>")
         .replaceAll("/tmp/[^,\\]\\s)]*", "<tmp>")
+        // the row-file expression strips the table root by its length
+        .replaceAll(", , 1\\), \\d+, length\\(", ", , 1), <len>, length(")
+        .replaceAll("Broadcast\\(\\d+\\)", "Broadcast(<id>)")
         .replaceAll("local-\\d+", "<app>")
       seen.clear()
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
