@@ -298,16 +298,14 @@ object GeneratedPruning {
     * is not implied by the disjunction).
     */
   def derive(spark: org.apache.spark.sql.SparkSession,
-      recorded: Option[StructType], partCols: Seq[String],
+      recorded: StructType, partCols: Seq[String],
       pred: Expression): Seq[Expression] = {
-    val gens: Seq[(String, String, DataType)] = recorded.toSeq.flatMap(
-      _.fields.flatMap(f =>
-        org.apache.spark.sql.catalyst.util.GeneratedColumn
-          .getGenerationExpression(f).map(g => (f.name, g, f.dataType))))
+    val gens: Seq[(String, String, DataType)] = recorded.fields.toSeq
+      .flatMap(f => org.apache.spark.sql.catalyst.util.GeneratedColumn
+        .getGenerationExpression(f).map(g => (f.name, g, f.dataType)))
     if (gens.isEmpty) return Seq.empty
-    val srcTypes: Map[String, DataType] = recorded.toSeq.flatMap(
-      _.fields.map(f => f.name.toLowerCase(java.util.Locale.ROOT) ->
-        f.dataType)).toMap
+    val srcTypes: Map[String, DataType] = recorded.fields.map(f =>
+      f.name.toLowerCase(java.util.Locale.ROOT) -> f.dataType).toMap
     val shapes: Seq[(String, Shape, DataType)] = gens.flatMap {
       case (name, sql, dt) => shapeOf(sql).map(s => (name, s, dt))
     }

@@ -132,11 +132,11 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   * Structured Streaming source whose offsets are log versions.
   *
   * Manifests are Jackson-serialized JSON; file paths and txn app ids
-  * round-trip through real JSON string escaping (format marker
-  * `"fmt":2`). Pre-fmt-2 manifests (full list + percent-escaped
-  * strings, optionally a single `streamBatchId`) are still read: a
-  * legacy manifest is exactly a replace manifest, so an upgraded table
-  * keeps its history and its idempotence watermark.
+  * round-trip through real JSON string escaping. Every manifest carries
+  * the format marker `"fmt":2` and the table's recorded schema;
+  * [[parseManifest]] refuses one without either (and one of a newer
+  * format), so every committed version reads under its own schema.
+  * A read resolves its version ONCE into a [[Snapshot]].
   */
 object ManifestTable {
 
@@ -165,18 +165,18 @@ object ManifestTable {
 
   import DataSkipping.FileStats
 
-  /** Parsed manifest: a self-basing full list (replace/checkpoint/
-    * legacy) or a delta (files added and/or removed). Every manifest
-    * also carries the full (tiny) txn-watermark map, the table's
-    * sticky partition-column metadata, and per-file column statistics
-    * for the files IT introduces (O(files in this commit), the Delta
-    * `stats` recipe — never O(table)).
+  /** Parsed manifest: a self-basing full list (replace/checkpoint)
+    * or a delta (files added and/or removed). Every manifest also
+    * carries the full (tiny) txn-watermark map, the table's recorded
+    * schema and sticky partition-column metadata, and per-file column
+    * statistics for the files IT introduces (O(files in this commit),
+    * the Delta `stats` recipe — never O(table)).
     */
   private sealed trait Manifest {
     def txns: Map[String, Long]
     def stats: Map[String, FileStats]
     def parts: Seq[String]
-    def schemaJson: Option[String]
+    def schemaJson: String
     def quality: Map[String, Long]
 
     /** Sticky TABLE PROPERTIES (the Delta Metadata-action channel):
@@ -190,8 +190,8 @@ object ManifestTable {
       * only for pure reorganizations ([[compact]] — same rows, new
       * files), the Delta-lake `dataChange` flag. Incremental consumers
       * use it to skip reorganization commits instead of redelivering
-      * every surviving row as "new" (ADVICE r11). Legacy manifests
-      * (no flag) read as `true` — the conservative reading.
+      * every surviving row as "new" (ADVICE r11). Written only when
+      * false.
       */
     def dataChange: Boolean
 
@@ -207,20 +207,20 @@ object ManifestTable {
       * OPERATION produced this commit plus its parameters, stamped by
       * every commit path and surfaced by [[history]]/`t$history` —
       * what makes a production log debuggable ("who rewrote these
-      * files?"). Per-commit, never sticky; absent on legacy manifests.
+      * files?"). Per-commit, never sticky.
       */
     def op: Map[String, String]
   }
   private final case class Replace(files: Seq[String],
       stats: Map[String, FileStats], txns: Map[String, Long],
-      parts: Seq[String], schemaJson: Option[String],
+      parts: Seq[String], schemaJson: String,
       quality: Map[String, Long], dataChange: Boolean,
       dvs: Map[String, Seq[DvRef]] = Map.empty,
       props: Map[String, String] = Map.empty,
       op: Map[String, String] = Map.empty) extends Manifest
   private final case class Delta(add: Seq[String], remove: Seq[String],
       stats: Map[String, FileStats], txns: Map[String, Long],
-      parts: Seq[String], schemaJson: Option[String],
+      parts: Seq[String], schemaJson: String,
       quality: Map[String, Long], dataChange: Boolean,
       dvs: Map[String, Seq[DvRef]] = Map.empty,
       props: Map[String, String] = Map.empty,
@@ -242,7 +242,7 @@ object ManifestTable {
     */
   private final case class Ref(ref: String, nFiles: Long,
       refRows: Option[Long], txns: Map[String, Long], parts: Seq[String],
-      schemaJson: Option[String], quality: Map[String, Long],
+      schemaJson: String, quality: Map[String, Long],
       dataChange: Boolean,
       props: Map[String, String] = Map.empty,
       op: Map[String, String] = Map.empty) extends Manifest {
@@ -423,27 +423,16 @@ object ManifestTable {
     * relations, graft scans (version-pinned [[GraftTableV2.SnapshotFileIndex]]),
     * and file scans whose listing resolved eagerly at read time
     * (`InMemoryFileIndex`) — against contract-free tables.
-    */
-  private def pinIfNeeded(spark: SparkSession, df: DataFrame,
-      table: String): DataFrame =
-    if (planMustPin(df)) df.localCheckpoint()
-    else {
-      val (fs, p) = fsOf(spark, table)
-      if (hasContract(manifestAt(fs, p, currentVersion(spark, table))))
-        df.localCheckpoint()
-      else df
-    }
-
-  /** [[pinIfNeeded]] for a merge source, decided per [[transact]]
-    * attempt from the attempt's own manifest (no log read of its own):
-    * the source is pinned at the first attempt that needs it, and
-    * later attempts reuse that pin.
+    *
+    * Decided per [[transact]] attempt from the attempt's own snapshot
+    * (no log read of its own): the frame is pinned at the first
+    * attempt that needs it, and later attempts reuse that pin.
     */
   private def pinOnDemand(df: DataFrame): Txn => DataFrame = {
     lazy val byPlan = planMustPin(df)
     var pinned: Option[DataFrame] = None
     t => pinned.getOrElse {
-      if (!byPlan && !hasContract(t.m)) df
+      if (!byPlan && !hasContract(t)) df
       else { val d = df.localCheckpoint(); pinned = Some(d); d }
     }
   }
@@ -461,11 +450,10 @@ object ManifestTable {
   /** Does the table declare contracts that must see exactly the written
     * rows: CHECK constraints, NOT NULL columns or the change feed?
     */
-  private def hasContract(m: Option[Manifest]): Boolean =
-    m.map(_.props).getOrElse(Map.empty)
-      .keys.exists(_.startsWith(ConstraintPropPrefix)) ||
-      changeFeedOn(m) ||
-      recordedSchema(m).exists(_.fields.exists(!_.nullable))
+  private def hasContract(t: Txn): Boolean =
+    t.props.keys.exists(_.startsWith(ConstraintPropPrefix)) ||
+      changeFeedOn(t.props) ||
+      t.recorded.exists(_.fields.exists(!_.nullable))
 
   /** True when any leaf of `plan` — INCLUDING leaves inside subquery
     * expressions (ADVICE r17 medium: `collectLeaves` does not descend
@@ -509,12 +497,89 @@ object ManifestTable {
     }
   }
 
-  /** A resolved snapshot: the complete file list of a version plus the
-    * per-file statistics and deletion vectors that survived to it.
+  /** One resolved version of a table, shared by every read, the DSv2
+    * catalog, the streaming source and each [[transact]] attempt: the
+    * head manifest parsed once and its recorded schema parsed once. The
+    * version's complete file list, with the per-file statistics and
+    * deletion vectors that survived to it, resolves lazily on first
+    * use, so a reader of the schema, properties or watermarks never
+    * walks the log.
     */
-  private final case class Snapshot(files: Seq[String],
-      stats: Map[String, FileStats],
-      dvs: Map[String, Seq[DvRef]] = Map.empty)
+  final class Snapshot private[ManifestTable] (spark: SparkSession,
+      val table: String, private[ManifestTable] val fs: FileSystem,
+      val root: Path, val version: Long,
+      private[ManifestTable] val manifest: Manifest, checkpoints: Set[Long]) {
+    /** The recorded logical schema. */
+    val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(manifest.schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+    /** The recorded Hive partition layout. */
+    def parts: Seq[String] = manifest.parts
+    /** The sticky table properties. */
+    def props: Map[String, String] = manifest.props
+    /** The streaming and consumer watermarks. */
+    def txns: Map[String, Long] = manifest.txns
+    /** The recorded schema when column mapping is active. */
+    lazy val mapping: Option[org.apache.spark.sql.types.StructType] =
+      Some(schema).filter(columnMapped)
+
+    private lazy val resolved = resolve(spark, fs, root, version, manifest,
+      checkpoints)
+    /** The live data files, table-relative and sorted. */
+    def files: Seq[String] = resolved._1
+    def stats: Map[String, FileStats] = resolved._2
+    def dvs: Map[String, Seq[DvRef]] = resolved._3
+    /** The live deletion-vector sidecar dirs, and the rows they delete. */
+    def dvDirs: Seq[String] = dvs.values.flatten.map(_.path).toSeq.distinct.sorted
+    def dvRows: Long = dvs.values.flatten.map(_.rows).sum
+
+    /** The live files with on-disk statuses, statistics and partition
+      * values: what a Catalyst-native scan plans over.
+      */
+    lazy val manifestFiles
+        : Seq[org.apache.spark.sql.GraftManifestScan.ManifestFile] =
+      manifestFilesOf(fs, root, table, files, stats, parts)
+
+    /** `files` with `vectors` applied (default: this version's), under
+      * this version's schema ([[readFiles]]).
+      */
+    private[ManifestTable] def read(files: Seq[String],
+        vectors: Map[String, Seq[DvRef]] = this.dvs,
+        keepIdentity: Boolean = false): DataFrame =
+      readFiles(spark, table, files, vectors, schema, props, keepIdentity)
+
+    /** Version `v` of the same table, resolved against the same log
+      * listing; `m` is its head manifest when the caller parsed it.
+      */
+    private[ManifestTable] def at(v: Long,
+        m: Option[Manifest] = None): Snapshot =
+      if (v == version) this
+      else new Snapshot(spark, table, fs, root, v,
+        m.getOrElse(readManifest(fs, root, v)), checkpoints)
+  }
+
+  /** The snapshot of `version` (default: current) from ONE log listing
+    * and ONE head-manifest parse; None when the log holds no version.
+    */
+  private def snapshotOpt(spark: SparkSession, table: String,
+      version: Long = -1L): Option[Snapshot] = {
+    val (fs, p) = fsOf(spark, table)
+    val (vs, cs) = listLog(fs, p)
+    val v = if (version > 0) version else vs.lastOption.getOrElse(0L)
+    if (v == 0) None
+    else Some(new Snapshot(spark, table, fs, p, v, readManifest(fs, p, v), cs))
+  }
+
+  /** The snapshot of `version` (default: current): the one value every
+    * read of that version, the DSv2 catalog table and the streaming
+    * source resolve through.
+    */
+  def snapshot(spark: SparkSession, table: String,
+      version: Long = -1L): Snapshot = {
+    val s = snapshotOpt(spark, table, version)
+    require(s.nonEmpty, s"no committed version in $table")
+    s.get
+  }
 
   /** Serializes same-JVM commits PER TABLE — a fast path in front of
     * the filesystem CAS; see the class doc. Keyed on the table path so
@@ -576,20 +641,11 @@ object ManifestTable {
     buf.toSeq
   }
 
-  /** Legacy (pre-fmt-2) manifests percent-escaped the characters that
-    * would have broken their regex parse; decoding stays for reading
-    * old tables. fmt-2 strings are plain (Jackson escapes them).
-    */
-  private def unesc(s: String): String = s
-    .replace("%3A", ":").replace("%7D", "}").replace("%7B", "{")
-    .replace("%2C", ",").replace("%22", "\"").replace("%25", "%")
-
   private def renderNode(version: Long, listField: String,
-      files: Seq[String], txns: Map[String, Long],
+      files: Seq[String], txns: Map[String, Long], schemaJson: String,
       stats: Map[String, FileStats] = Map.empty,
       remove: Seq[String] = Seq.empty,
       parts: Seq[String] = Seq.empty,
-      schemaJson: Option[String] = None,
       quality: Map[String, Long] = Map.empty,
       dataChange: Boolean = true,
       dvs: Map[String, Seq[DvRef]] = Map.empty,
@@ -676,7 +732,7 @@ object ManifestTable {
   }
 
   private def putMeta(root: com.fasterxml.jackson.databind.node.ObjectNode,
-      txns: Map[String, Long], schemaJson: Option[String],
+      txns: Map[String, Long], schemaJson: String,
       quality: Map[String, Long],
       props: Map[String, String] = Map.empty,
       op: Map[String, String] = Map.empty): Unit = {
@@ -692,7 +748,7 @@ object ManifestTable {
       val t = root.putObject("txns")
       txns.toSeq.sortBy(_._1).foreach { case (k, v) => t.put(k, v): Unit }
     }
-    schemaJson.foreach(s => root.put("schema", s): Unit)
+    root.put("schema", schemaJson): Unit
     if (quality.nonEmpty) {
       val qn = root.putObject("quality")
       quality.toSeq.sortBy(_._1).foreach { case (k, v) => qn.put(k, v): Unit }
@@ -704,7 +760,7 @@ object ManifestTable {
     */
   private def renderRefNode(version: Long, ref: String, nFiles: Long,
       refRows: Option[Long], txns: Map[String, Long], parts: Seq[String],
-      schemaJson: Option[String], quality: Map[String, Long],
+      schemaJson: String, quality: Map[String, Long],
       dataChange: Boolean,
       props: Map[String, String] = Map.empty,
       op: Map[String, String] = Map.empty): String = {
@@ -782,38 +838,42 @@ object ManifestTable {
         Option(fn.get("bytes")).map(_.asLong()).getOrElse(0L), ndv, bloom))
   }
 
-  private def parseManifest(json: String): Manifest = {
+  /** Parse the manifest (or checkpoint) of `version`. Refused with an
+    * IOException naming the version: a manifest without the `"fmt"`
+    * marker (written before format 2), one of a NEWER format, and one
+    * without a recorded schema.
+    */
+  private def parseManifest(json: String, version: Long): Manifest = {
     val root =
       try mapper.readTree(json)
       catch { case e: com.fasterxml.jackson.core.JacksonException =>
         throw new java.io.IOException(s"bad manifest: $json", e) }
+    def refuse(why: String): Nothing = throw new java.io.IOException(
+      s"manifest v$version $why")
+    if (!root.has("fmt")) refuse(s"has no format marker: it predates " +
+      s"format $Fmt, which is the only format this library reads")
     // FORWARD-COMPATIBILITY GATE (the Delta protocol-version
     // discipline): a manifest written by a NEWER format must refuse
     // loudly rather than be best-effort parsed with silently missing
     // fields — and because every writer parses the head manifest
     // before committing, this one check also refuses commits ONTO a
     // too-new log (VERDICT r15 next-round #2).
-    val fmt = Option(root.get("fmt")).map(_.asInt()).getOrElse(0)
-    if (fmt > Fmt) throw new java.io.IOException(
-      s"manifest format $fmt is newer than this library supports " +
+    val fmt = root.get("fmt").asInt()
+    if (fmt > Fmt) refuse(
+      s"has format $fmt, which is newer than this library supports " +
         s"(max $Fmt) — upgrade the graft library to read or write " +
         "this table")
-    val legacy = !root.has("fmt")
-    def decode(s: String): String = if (legacy) unesc(s) else s
+    val schemaJson = Option(root.get("schema")).map(_.asText())
+      .getOrElse(refuse("records no schema"))
     def strings(field: String): Option[Seq[String]] = Option(root.get(field))
-      .map(n => (0 until n.size).map(i => decode(n.get(i).asText())))
+      .map(n => (0 until n.size).map(i => n.get(i).asText()))
     val txns: Map[String, Long] = Option(root.get("txns")) match {
       case Some(t) =>
         val it = t.properties().iterator()
         val b = Map.newBuilder[String, Long]
-        while (it.hasNext) { val e = it.next(); b += decode(e.getKey) -> e.getValue.asLong() }
+        while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong() }
         b.result()
-      case None =>
-        // pre-txn-map manifests carried a single "streamBatchId" —
-        // fold it into the default app so an upgrade does not drop
-        // the idempotence watermark
-        Option(root.get("streamBatchId"))
-          .map(n => Map("default" -> n.asLong())).getOrElse(Map.empty)
+      case None => Map.empty
     }
     val parts: Seq[String] = strings("parts").getOrElse(Seq.empty)
     val stats: Map[String, FileStats] = Option(root.get("stats")) match {
@@ -828,7 +888,6 @@ object ManifestTable {
         b.result()
     }
     val remove = strings("remove").getOrElse(Seq.empty)
-    val schemaJson = Option(root.get("schema")).map(_.asText())
     val quality: Map[String, Long] = Option(root.get("quality")) match {
       case None => Map.empty
       case Some(qn) =>
@@ -898,7 +957,7 @@ object ManifestTable {
   }
 
   private def readManifest(fs: FileSystem, table: Path, version: Long): Manifest =
-    parseManifest(readJson(fs, manifestPath(table, version)))
+    parseManifest(readJson(fs, manifestPath(table, version)), version)
 
   /** Full-list bases switch from inline JSON to a parquet sidecar
     * above this many files (`spark.graft.manifest.refThreshold`;
@@ -1071,7 +1130,7 @@ object ManifestTable {
   private[graft] def commitFullList(spark: SparkSession, fs: FileSystem,
       table: Path, version: Long, relFiles: Seq[String],
       txns: Map[String, Long], stats: Map[String, FileStats],
-      parts: Seq[String], schemaJson: Option[String],
+      parts: Seq[String], schemaJson: String,
       quality: Map[String, Long] = Map.empty,
       dataChange: Boolean = true,
       props: Map[String, String] = Map.empty,
@@ -1084,45 +1143,46 @@ object ManifestTable {
       casCreate(fs, table, manifestPath(table, version),
         renderRefNode(version, ref, n, refRows, txns, parts, schemaJson,
           quality, dataChange, props, op))
-    } else commitManifest(fs, table, version, relFiles, txns, stats,
-      parts, schemaJson, quality, dataChange, props, dvs, op)
+    } else commitManifest(fs, table, version, relFiles, schemaJson, txns,
+      stats, parts, quality, dataChange, props, dvs, op)
   }
 
   /** Reconstruct the complete state of `version`: walk BACKWARD from
-    * v(version), stacking deltas, until a base — a checkpoint at the
-    * walk position or a replace manifest — then REPLAY the deltas
-    * forward (remove, then add — ordering matters once deltas can
-    * remove files, e.g. a row-level [[delete]] followed by an append).
+    * v(version) (its `head`, parsed already), stacking deltas, until a
+    * base — a checkpoint at the walk position or a replace manifest —
+    * then REPLAY the deltas forward (remove, then add — ordering
+    * matters once deltas can remove files, e.g. a row-level [[delete]]
+    * followed by an append).
     * Bounded by the checkpoint interval; every file read is immutable,
     * so the result is stable regardless of concurrent commits. Stats
     * ride along: a file's stats enter with its add and leave with its
     * remove.
     */
   private def resolve(spark: SparkSession, fs: FileSystem, table: Path,
-      version: Long, checkpoints: Set[Long]): Snapshot = {
+      version: Long, head: Manifest, checkpoints: Set[Long])
+      : (Seq[String], Map[String, FileStats], Map[String, Seq[DvRef]]) = {
     var deltas = List.empty[Delta] // ascending order (prepend while walking back)
     var base: Option[Manifest] = None
     var v = version
     while (base.isEmpty && v > 0) {
-      if (checkpoints.contains(v))
-        base = Some(parseManifest(readJson(fs, checkpointPath(table, v))))
-      else readManifest(fs, table, v) match {
+      val m =
+        if (checkpoints.contains(v))
+          parseManifest(readJson(fs, checkpointPath(table, v)), v)
+        else if (v == version) head
+        else readManifest(fs, table, v)
+      m match {
         case d: Delta => deltas = d :: deltas; v -= 1
         case other => base = Some(other) // Replace or Ref: self-basing
       }
     }
-    val baseState: (Seq[String], Map[String, FileStats],
-        Map[String, Seq[DvRef]]) = base match {
+    var (files, stats, dvs) = base match {
       case Some(r: Replace) => (r.files, r.stats, r.dvs)
       // pointer base: the file rows live in the parquet sidecar —
       // a columnar load, never a giant JSON tree
       case Some(rf: Ref) => loadRef(spark, table, rf.ref, rf.nFiles)
-      case Some(d: Delta) => (d.add, d.stats, d.dvs) // legacy checkpoint
-      case None => (Seq.empty, Map.empty, Map.empty)
+      case _ => (Seq.empty[String], Map.empty[String, FileStats],
+        Map.empty[String, Seq[DvRef]])
     }
-    var files: Seq[String] = baseState._1
-    var stats: Map[String, FileStats] = baseState._2
-    var dvs: Map[String, Seq[DvRef]] = baseState._3
     // a file's deletion vectors enter with a dv commit and leave with
     // the file's remove (a rewrite of the file materializes or
     // supersedes them); compact's replace resets the map to empty
@@ -1139,51 +1199,15 @@ object ManifestTable {
         dvs = dvs.updated(f, dvs.getOrElse(f, Seq.empty) ++ refs)
       }
     }
-    Snapshot(files.sorted, stats, dvs)
+    (files.sorted, stats, dvs)
   }
 
-  private def resolveFiles(spark: SparkSession, fs: FileSystem,
-      table: Path, version: Long, checkpoints: Set[Long]): Seq[String] =
-    resolve(spark, fs, table, version, checkpoints).files
-
-  /** The txn watermarks at `version` — every manifest carries the full
-    * (tiny) map, so no walk is needed.
-    */
-  private def txnsAt(fs: FileSystem, table: Path, version: Long): Map[String, Long] =
-    if (version == 0) Map.empty else readManifest(fs, table, version).txns
-
-  /** The base manifest read ONCE — the commit paths take their txns,
-    * parts and schema from this single parse instead of three separate
-    * GET+parse round-trips (each manifest read is a remote fetch on an
-    * object store, and commits are the hot path).
-    */
-  private def manifestAt(fs: FileSystem, table: Path,
-      version: Long): Option[Manifest] =
-    if (version == 0) None else Some(readManifest(fs, table, version))
-
-  private def recordedSchema(
-      m: Option[Manifest]): Option[org.apache.spark.sql.types.StructType] =
-    m.flatMap(_.schemaJson).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-
-  /** The table's recorded logical schema at `version` (carried in
-    * every manifest since schema-on-commit; None for legacy tables).
-    */
-  private def schemaAt(fs: FileSystem, table: Path,
-      version: Long): Option[org.apache.spark.sql.types.StructType] =
-    recordedSchema(manifestAt(fs, table, version))
-
-  /** The recorded table schema (public accessor; None = table written
-    * before schema-on-commit).
+  /** The recorded table schema at `version` (default: current); None
+    * when the log holds no version.
     */
   def tableSchema(spark: SparkSession, table: String,
-      version: Long = -1L): Option[org.apache.spark.sql.types.StructType] = {
-    val (fs, p) = fsOf(spark, table)
-    val (vs, _) = listLog(fs, p)
-    val v = if (version > 0) version else vs.foldLeft(0L)(math.max)
-    if (v == 0) None else schemaAt(fs, p, v)
-  }
+      version: Long = -1L): Option[org.apache.spark.sql.types.StructType] =
+    snapshotOpt(spark, table, version).map(_.schema)
 
   private def stripNullability(
       dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
@@ -1317,7 +1341,7 @@ object ManifestTable {
     // it must not read as an evolution-added user column
     val incoming = stripRowId(incoming0)
     recorded match {
-      // legacy table or first commit: adopt the DATA-derived schema —
+      // a table's first commit: adopt the DATA-derived schema —
       // AS NULLABLE (the Delta ImplicitMetadataOperation discipline):
       // a Scala `toDF` marks primitive columns non-nullable as a mere
       // encoding fact, and recording that would turn every later null
@@ -1414,18 +1438,18 @@ object ManifestTable {
     * false if a concurrent writer won the race.
     */
   private[graft] def commitManifest(fs: FileSystem, table: Path, version: Long,
-      relFiles: Seq[String], txns: Map[String, Long] = Map.empty,
+      relFiles: Seq[String], schemaJson: String,
+      txns: Map[String, Long] = Map.empty,
       stats: Map[String, FileStats] = Map.empty,
       parts: Seq[String] = Seq.empty,
-      schemaJson: Option[String] = None,
       quality: Map[String, Long] = Map.empty,
       dataChange: Boolean = true,
       props: Map[String, String] = Map.empty,
       dvs: Map[String, Seq[DvRef]] = Map.empty,
       op: Map[String, String] = Map.empty): Boolean =
     casCreate(fs, table, manifestPath(table, version),
-      renderNode(version, "files", relFiles, txns, stats, parts = parts,
-        schemaJson = schemaJson, quality = quality, dataChange = dataChange,
+      renderNode(version, "files", relFiles, txns, schemaJson, stats,
+        parts = parts, quality = quality, dataChange = dataChange,
         props = props, dvs = dvs, op = op))
 
   /** Commit a DELTA manifest — O(files added + removed), never
@@ -1433,17 +1457,12 @@ object ManifestTable {
     * ([[delete]]/[[merge]]).
     */
   private def commitDelta(fs: FileSystem, table: Path, version: Long,
-      add: Seq[String], txns: Map[String, Long],
-      stats: Map[String, FileStats] = Map.empty,
-      remove: Seq[String] = Seq.empty,
-      parts: Seq[String] = Seq.empty,
-      schemaJson: Option[String] = None,
-      quality: Map[String, Long] = Map.empty,
-      dvs: Map[String, Seq[DvRef]] = Map.empty,
-      props: Map[String, String] = Map.empty,
-      cdcDir: Option[String] = None,
-      op: Map[String, String] = Map.empty,
-      dataChange: Boolean = true): Boolean = {
+      add: Seq[String], txns: Map[String, Long], schemaJson: String,
+      stats: Map[String, FileStats], remove: Seq[String],
+      parts: Seq[String], quality: Map[String, Long],
+      dvs: Map[String, Seq[DvRef]], props: Map[String, String],
+      cdcDir: Option[String], op: Map[String, String],
+      dataChange: Boolean): Boolean = {
     // A row-REWRITING data change (remove or DV attach: update, merge,
     // delete, replaceWhere, dynamic overwrite) can flip a categorical
     // column's values at constant row count, so the analyze-time top-K
@@ -1457,7 +1476,7 @@ object ManifestTable {
         props.filter { case (k, _) => !k.startsWith(TopKPropPrefix) }
       else props
     casCreate(fs, table, manifestPath(table, version),
-      renderNode(version, "add", add, txns, stats, remove, parts, schemaJson,
+      renderNode(version, "add", add, txns, schemaJson, stats, remove, parts,
         quality, dvs = dvs, props = safeProps, cdcDir = cdcDir, op = op,
         dataChange = dataChange))
   }
@@ -1472,9 +1491,9 @@ object ManifestTable {
     try {
       val cp = checkpointPath(table, version)
       if (!fs.exists(cp)) {
-        val (_, cs) = listLog(fs, table)
-        val snap = resolve(spark, fs, table, version, cs)
-        val m = readManifest(fs, table, version) // one read for txns/parts/schema
+        val snap = new Snapshot(spark, table.toString, fs, table, version,
+          readManifest(fs, table, version), listLog(fs, table)._2)
+        val m = snap.manifest
         val th = refThreshold(spark)
         if (th > 0 && snap.files.size > th) {
           // big checkpoint: parquet sidecar + tiny pointer head (the
@@ -1487,9 +1506,8 @@ object ManifestTable {
               m.schemaJson, Map.empty, dataChange = true,
               props = m.props)): Unit
         } else casCreate(fs, table, cp,
-          renderNode(version, "files", snap.files, m.txns,
-            snap.stats, parts = m.parts,
-            schemaJson = m.schemaJson, dvs = snap.dvs,
+          renderNode(version, "files", snap.files, m.txns, m.schemaJson,
+            snap.stats, parts = m.parts, dvs = snap.dvs,
             props = m.props)): Unit
       }
     } catch { // commit already durable; a lost checkpoint only lengthens walks
@@ -1539,10 +1557,15 @@ object ManifestTable {
     * bounded pool — a million-file CONVERT TO GRAFT must not be a
     * driver-serial footer crawl (VERDICT r15 next-round #4); ordinary
     * commits are O(files added) and stay on the cheaper driver pool.
+    * `written` is the schema the files were written with (physical
+    * names, partition columns included): the bloom job reads them
+    * under it instead of inferring it from a footer.
     */
   private def collectStats(spark: SparkSession, table: Path,
       relFiles: Seq[String],
-      props: Map[String, String] = Map.empty): Map[String, FileStats] =
+      props: Map[String, String] = Map.empty,
+      written: org.apache.spark.sql.types.StructType =
+        new org.apache.spark.sql.types.StructType()): Map[String, FileStats] =
     if (!spark.conf.get("spark.graft.manifest.collectStats", "true").toBoolean)
       Map.empty
     else {
@@ -1556,7 +1579,7 @@ object ManifestTable {
           spark.sparkContext.hadoopConfiguration, table, relFiles)
       val cols = bloomColumns(props)
       if (cols.isEmpty || base.isEmpty) base
-      else attachBlooms(spark, table, relFiles, base, cols)
+      else attachBlooms(spark, table, relFiles, written, base, cols)
     }
 
   /** Build per-file bloom filters for `cols` over the freshly written
@@ -1572,13 +1595,19 @@ object ManifestTable {
     * sweeps unreferenced dirs).
     */
   private def attachBlooms(spark: SparkSession, table: Path,
-      relFiles: Seq[String], stats: Map[String, FileStats],
+      relFiles: Seq[String], written: org.apache.spark.sql.types.StructType,
+      stats: Map[String, FileStats],
       cols: Seq[String]): Map[String, FileStats] =
     try {
       import org.apache.spark.sql.functions.{col, concat, element_at, expr, lit, split}
       import org.apache.spark.sql.GraftColumnBridge
-      val df = spark.read.parquet(
-        relFiles.map(f => new Path(table, f).toString): _*)
+      // the files hold the data columns; their partition columns live
+      // in the Hive path segments, which a read of the bare files does
+      // not discover
+      val hive = relFiles.flatMap(layoutOf).toSet
+      val df = spark.read.schema(org.apache.spark.sql.types.StructType(
+          written.fields.filterNot(f => hive(f.name))))
+        .parquet(relFiles.map(f => new Path(table, f).toString): _*)
       val have = df.columns.toSet
       val targets = cols.filter(have)
       if (targets.isEmpty) return stats
@@ -1669,10 +1698,10 @@ object ManifestTable {
     * mtime path stays as the fallback for pre-audit manifests). Tiny
     * by construction — predicates are truncated, never megabyte plans.
     */
-  private def opInfo(prev: Option[Manifest], operation: String,
+  private def opInfo(prevTs: Option[Long], operation: String,
       params: (String, String)*): Map[String, String] = {
     val ts = math.max(System.currentTimeMillis(),
-      prev.flatMap(opTs).getOrElse(Long.MinValue) + 1)
+      prevTs.getOrElse(Long.MinValue) + 1)
     (Seq("operation" -> operation, "engine" -> "graft",
       "ts" -> ts.toString) ++
       params.filter(_._2.nonEmpty).map { case (k, v) =>
@@ -1689,28 +1718,29 @@ object ManifestTable {
         "snapshot dir left for vacuum — re-read and retry")
 
   /** One optimistic attempt's view of the table, for [[transact]]: the
-    * base version from ONE `_manifests` listing, its manifest parsed
-    * once and its recorded schema parsed once. Every commit derives
-    * what it needs from the log through this value; the resolved
-    * snapshot is lazy, so an attempt that needs none (a replayed
-    * append, a property or schema change) never resolves one.
+    * base version from ONE `_manifests` listing and its [[Snapshot]]
+    * (None only for a table's first commit, at base 0). Every commit
+    * derives what it needs from the log through this value; the
+    * snapshot's file list is lazy, so an attempt that needs none (a
+    * replayed append, a property or schema change) never resolves one.
     */
   private final class Txn(val spark: SparkSession, val table: String,
       val fs: FileSystem, val p: Path, val base: Long,
-      val m: Option[Manifest], val checkpoints: Set[Long],
-      partitionCols: Seq[String]) {
-    lazy val snap: Snapshot = resolve(spark, fs, p, base, checkpoints)
-    val recorded: Option[org.apache.spark.sql.types.StructType] =
-      recordedSchema(m)
-    val mapping: Option[org.apache.spark.sql.types.StructType] =
-      recorded.filter(columnMapped)
+      val head: Option[Snapshot], partitionCols: Seq[String]) {
+    /** The base snapshot; a table's first commit has none. */
+    def snap: Snapshot = head.getOrElse(
+      throw new IllegalStateException(s"no committed version in $table"))
+    def recorded: Option[org.apache.spark.sql.types.StructType] =
+      head.map(_.schema)
+    def mapping: Option[org.apache.spark.sql.types.StructType] =
+      head.flatMap(_.mapping)
     lazy val lstats: Map[String, FileStats] = logicalStats(snap.stats, mapping)
-    val props: Map[String, String] = m.map(_.props).getOrElse(Map.empty)
-    val txns: Map[String, Long] = m.map(_.txns).getOrElse(Map.empty)
-    private val recordedParts = m.map(_.parts).getOrElse(Seq.empty)
+    def props: Map[String, String] = head.fold(Map.empty[String, String])(_.props)
+    def txns: Map[String, Long] = head.fold(Map.empty[String, Long])(_.txns)
     /** The caller's layout, else the table's sticky one. */
     val parts: Seq[String] =
-      if (partitionCols.nonEmpty) partitionCols else recordedParts
+      if (partitionCols.nonEmpty) partitionCols
+      else head.fold(Seq.empty[String])(_.parts)
     def next: Long = base + 1
 
     /** Merge-on-read iff the attempt's own manifest sets `modeProp` so. */
@@ -1721,24 +1751,29 @@ object ManifestTable {
       * recorded schema (logical names, exists-defaults, widening).
       */
     def read(files: Seq[String], keepIdentity: Boolean = false): DataFrame =
-      readFiles(spark, table, files, snap.dvs, recorded, props, keepIdentity)
+      snap.read(files, keepIdentity = keepIdentity)
 
     /** The live files whose statistics admit `e`. */
     def prune(e: org.apache.spark.sql.catalyst.expressions.Expression)
         : Seq[String] = {
-      val pe = prunePredicate(spark, recorded, recordedParts, e)
+      val pe = prunePredicate(spark, snap.schema, snap.parts, e)
       snap.files.filter(f => DataSkipping.mayMatch(lstats.get(f), pe))
     }
 
     def op(operation: String, params: (String, String)*): Map[String, String] =
-      opInfo(m, operation, params: _*)
+      opInfo(head.flatMap(s => opTs(s.manifest)), operation, params: _*)
 
-    /** A commit of nothing but the audit stamp: it keeps this attempt's
-      * schema and properties; callers `copy` in what changes.
+    /** A commit of nothing but the audit stamp under `schemaJson`, with
+      * this attempt's properties; callers `copy` in what changes.
       */
-    def commit(operation: String, params: (String, String)*): Commit =
-      Commit(Seq.empty, schemaJson = m.flatMap(_.schemaJson), props = props,
+    def commitAs(schemaJson: String, operation: String,
+        params: (String, String)*): Commit =
+      Commit(Seq.empty, schemaJson = schemaJson, props = props,
         op = op(operation, params: _*))
+
+    /** [[commitAs]] keeping the snapshot's schema. */
+    def commit(operation: String, params: (String, String)*): Commit =
+      commitAs(snap.manifest.schemaJson, operation, params: _*)
   }
 
   /** What a [[transact]] attempt publishes on base + 1: a delta adding
@@ -1751,7 +1786,7 @@ object ManifestTable {
       stats: Map[String, FileStats] = Map.empty,
       remove: Seq[String] = Seq.empty,
       dvs: Map[String, Seq[DvRef]] = Map.empty,
-      schemaJson: Option[String], props: Map[String, String],
+      schemaJson: String, props: Map[String, String],
       cdc: Option[String] = None, op: Map[String, String],
       txns: Option[Map[String, Long]] = None,
       autoCompact: Boolean = false,
@@ -1782,8 +1817,11 @@ object ManifestTable {
       val (vs, cs) = listLog(fs, p)
       val base = vs.lastOption.getOrElse(0L)
       require(emptyOk || base > 0, s"no committed version in $table")
-      val t = new Txn(spark, table, fs, p, base, manifestAt(fs, p, base), cs,
-        partitionCols)
+      val head =
+        if (base == 0) None
+        else Some(new Snapshot(spark, table, fs, p, base,
+          readManifest(fs, p, base), cs))
+      val t = new Txn(spark, table, fs, p, base, head, partitionCols)
       attempt(t) match {
         case None => return base
         case Some(c) =>
@@ -1793,9 +1831,9 @@ object ManifestTable {
             if (c.replace) commitFullList(spark, fs, p, t.next, c.add, txns,
               c.stats, parts, c.schemaJson, c.quality, c.dataChange, c.props,
               c.dvs, c.op)
-            else commitDelta(fs, p, t.next, c.add, txns, c.stats, c.remove,
-              parts, c.schemaJson, c.quality, c.dvs, c.props, c.cdc, c.op,
-              c.dataChange)
+            else commitDelta(fs, p, t.next, c.add, txns, c.schemaJson,
+              c.stats, c.remove, parts, c.quality, c.dvs, c.props, c.cdc,
+              c.op, c.dataChange)
           if (won) {
             // a replace is its own base: only deltas count toward the
             // checkpoint interval
@@ -1867,8 +1905,8 @@ object ManifestTable {
         val files = writeSnapshot(t.fs, t.p,
           applyWriteClustering(toWrite, t.props),
           t.next, partitionCols, maxRecordsPerFile)
-        val stats = collectStats(spark, t.p, files, t.props)
-        Some(Commit(files, stats, schemaJson = Some(evolved.json),
+        val stats = collectStats(spark, t.p, files, t.props, toWrite.schema)
+        Some(Commit(files, stats, schemaJson = evolved.json,
           props = advanceIdentity(spark, t.p, files, stats,
             Some(evolved).filter(columnMapped), t.props, idCols),
           op = t.op("write", "partitionBy" -> partitionCols.mkString(",")),
@@ -1903,11 +1941,10 @@ object ManifestTable {
         "the schema")
     validateConstraints(spark, schema, props)
     transact(spark, table, 1, emptyOk = true) { t =>
-      val c = t.commit("replace-table",
+      val c = t.commitAs(schema.json, "replace-table",
         "partitionBy" -> partitionCols.mkString(","),
-        "asSelect" -> data.nonEmpty.toString).copy(schemaJson =
-        Some(schema.json), props = props, replace = true,
-        parts = Some(partitionCols))
+        "asSelect" -> data.nonEmpty.toString).copy(props = props,
+        replace = true, parts = Some(partitionCols))
       Some(data.fold(c) { df =>
         // CTAS/RTAS: the schema is QUERY-derived, so it records as
         // nullable (see [[enforceSchema]]) — declared NOT NULL comes
@@ -1916,8 +1953,9 @@ object ManifestTable {
           applyExpectations(df, constraintExpectations(props), table)
         val files = writeSnapshot(t.fs, t.p, toWrite, t.next,
           partitionCols, 0L)
-        c.copy(add = files, stats = collectStats(spark, t.p, files, props),
-          quality = quality, schemaJson = Some(nullableize(df.schema).json))
+        c.copy(add = files,
+          stats = collectStats(spark, t.p, files, props, toWrite.schema),
+          quality = quality, schemaJson = nullableize(df.schema).json)
       })
     }
   }
@@ -1999,8 +2037,9 @@ object ManifestTable {
             t.next, t.parts, 0L), q)
         }
     }
-    val stats = collectStats(t.spark, t.p, files, t.props)
-    Commit(files, stats, schemaJson = Some(evolved.json),
+    val stats = collectStats(t.spark, t.p, files, t.props,
+      staged.fold(toPhysical(synth, mapping).schema)(_._2))
+    Commit(files, stats, schemaJson = evolved.json,
       props = advanceIdentity(t.spark, t.p, files, stats, mapping, t.props,
         idCols),
       op = op(files.size), txns = Some(txns), autoCompact = true,
@@ -2022,24 +2061,15 @@ object ManifestTable {
     * TWO txn entries (`copyfile:` = length, `copymtime:` = mtime
     * millis) — a single XOR-folded long could collide when both
     * change in compensating bit patterns and let a modified file be
-    * silently skipped (ADVICE r18). Legacy single-entry manifests
-    * (no `copymtime:`) verify against the old folded value.
-    */
-  private def legacyCopyFingerprint(st: FileStatus): Long =
-    (st.getModificationTime << 20) ^ st.getLen
-
-  /** Does the recorded watermark PROVE `st` unchanged? None = not
+    * silently skipped (ADVICE r18).
+    *
+    * Does the recorded watermark PROVE `st` unchanged? None = not
     * recorded; Some(true) = matches; Some(false) = changed.
     */
   private def copyMatches(txns: Map[String, Long], path: String,
       st: FileStatus): Option[Boolean] =
-    txns.get(copyFileKey(path)).map { len =>
-      txns.get(copyMtimeKey(path)) match {
-        case Some(mt) =>
-          len == st.getLen && mt == st.getModificationTime
-        case None => len == legacyCopyFingerprint(st)
-      }
-    }
+    txns.get(copyFileKey(path)).map(len => len == st.getLen &&
+      txns.get(copyMtimeKey(path)).contains(st.getModificationTime))
 
   /** COPY INTO (the Databricks statement): INCREMENTALLY load a
     * growing external directory into the table, each file EXACTLY
@@ -2310,7 +2340,7 @@ object ManifestTable {
     */
   def syncIdentity(spark: SparkSession, table: String): Long =
     transact(spark, table, 1) { t =>
-      val specs = identityOf(t.recorded)
+      val specs = identityOf(t.snap.schema)
       require(specs.nonEmpty, s"$table has no identity columns to sync")
       val next = advanceIdentity(spark, t.p, t.snap.files, t.snap.stats,
         t.mapping, t.props, specs.map { case (f, s) => f.name -> s.getStep })
@@ -2325,7 +2355,7 @@ object ManifestTable {
     * at DDL time with the dependency named instead.
     */
   private def refuseGenerationInput(
-      rec: Option[org.apache.spark.sql.types.StructType],
+      rec: org.apache.spark.sql.types.StructType,
       column: String, what: String): Unit =
     generatedOf(rec).foreach { case (gen, sql, _) =>
       // parse EAGERLY (Spark 4's functions.expr wraps the text
@@ -2345,21 +2375,19 @@ object ManifestTable {
     }
 
   /** (name, generation SQL, recorded type) of every generated column. */
-  private def generatedOf(
-      rec: Option[org.apache.spark.sql.types.StructType])
+  private def generatedOf(rec: org.apache.spark.sql.types.StructType)
       : Seq[(String, String, org.apache.spark.sql.types.DataType)] =
-    rec.toSeq.flatMap(_.fields.flatMap(f =>
+    rec.fields.toSeq.flatMap(f =>
       org.apache.spark.sql.catalyst.util.GeneratedColumn
-        .getGenerationExpression(f).map(g => (f.name, g, f.dataType))))
+        .getGenerationExpression(f).map(g => (f.name, g, f.dataType)))
 
   /** (field, spec) of every identity column. */
-  private def identityOf(
-      rec: Option[org.apache.spark.sql.types.StructType])
+  private def identityOf(rec: org.apache.spark.sql.types.StructType)
       : Seq[(org.apache.spark.sql.types.StructField,
         org.apache.spark.sql.connector.catalog.IdentityColumnSpec)] =
-    rec.toSeq.flatMap(_.fields.flatMap(f =>
+    rec.fields.toSeq.flatMap(f =>
       org.apache.spark.sql.catalyst.util.IdentityColumn
-        .getIdentityInfo(f).map(f -> _)))
+        .getIdentityInfo(f).map(f -> _))
 
   /** Recompute every generated column over `df` — row-local and
     * deterministic by the generated-column contract, so untouched
@@ -2368,7 +2396,7 @@ object ManifestTable {
     * on a generation INPUT must regenerate its dependents).
     */
   private def recomputeGenerated(df: DataFrame,
-      rec: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+      rec: org.apache.spark.sql.types.StructType): DataFrame = {
     import org.apache.spark.sql.functions.expr
     generatedOf(rec).foldLeft(df) { case (d, (n, g, t)) =>
       d.withColumn(n, expr(g).cast(stripNullability(t)))
@@ -2381,7 +2409,7 @@ object ManifestTable {
     * watermark the commit must advance.
     */
   private def fillIdentity(df: DataFrame,
-      rec: Option[org.apache.spark.sql.types.StructType],
+      rec: org.apache.spark.sql.types.StructType,
       props: Map[String, String]): (DataFrame, Seq[(String, Long)]) = {
     import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id, when}
     val specs = identityOf(rec)
@@ -2405,7 +2433,7 @@ object ManifestTable {
     * or silently overwritten by the recompute.
     */
   private def refuseSynthesizedTargets(assigned: Set[String],
-      rec: Option[org.apache.spark.sql.types.StructType],
+      rec: org.apache.spark.sql.types.StructType,
       table: String, what: String,
       allowByDefaultIdentity: Boolean = false): Unit = {
     val gens = generatedOf(rec).map(_._1).toSet
@@ -2610,22 +2638,15 @@ object ManifestTable {
     * the delta log (checkpoint/replace base + append deltas).
     */
   def currentFiles(spark: SparkSession, table: String,
-      version: Long = -1L): Seq[String] = {
-    val (fs, p) = fsOf(spark, table)
-    val (vs, cs) = listLog(fs, p)
-    val v = if (version > 0) version else vs.foldLeft(0L)(math.max)
-    require(v > 0, s"no committed version in $table")
-    resolveFiles(spark, fs, p, v, cs)
-  }
+      version: Long = -1L): Seq[String] =
+    snapshot(spark, table, version).files
 
   /** The streaming idempotence watermarks of the current snapshot:
     * per-txn-app highest micro-batch id folded in (empty for a
     * batch-only table).
     */
-  def streamTxns(spark: SparkSession, table: String): Map[String, Long] = {
-    val (fs, p) = fsOf(spark, table)
-    txnsAt(fs, p, currentVersion(spark, table))
-  }
+  def streamTxns(spark: SparkSession, table: String): Map[String, Long] =
+    snapshotOpt(spark, table).fold(Map.empty[String, Long])(_.txns)
 
   /** Convenience: the watermark of one txn app (default app). */
   def lastStreamBatchId(spark: SparkSession, table: String,
@@ -2648,11 +2669,8 @@ object ManifestTable {
 
   /** The sticky table properties of a snapshot (default: current). */
   def tableProperties(spark: SparkSession, table: String,
-      version: Long = -1L): Map[String, String] = {
-    val (fs, p) = fsOf(spark, table)
-    val v = if (version > 0) version else currentVersion(spark, table)
-    manifestAt(fs, p, v).map(_.props).getOrElse(Map.empty)
-  }
+      version: Long = -1L): Map[String, String] =
+    snapshotOpt(spark, table, version).fold(Map.empty[String, String])(_.props)
 
   /** Apply a batch of sticky-property changes (`set` wins over `unset`
     * on a shared key being illegal by construction — callers pass
@@ -2710,8 +2728,8 @@ object ManifestTable {
   def enableChangeFeed(spark: SparkSession, table: String): Long =
     setProperty(spark, table, ChangeFeedProp, "true")
 
-  private def changeFeedOn(m: Option[Manifest]): Boolean =
-    m.exists(_.props.get(ChangeFeedProp).contains("true"))
+  private def changeFeedOn(props: Map[String, String]): Boolean =
+    props.get(ChangeFeedProp).contains("true")
 
   /** Persist `changeRows` (logical table columns, any order) as this
     * commit's change-file dir and return its table-relative path. The
@@ -2772,20 +2790,13 @@ object ManifestTable {
     * conjuncts are implied, so adding them to the file walk is sound.
     */
   private def prunePredicate(spark: SparkSession,
-      recorded: Option[org.apache.spark.sql.types.StructType],
+      recorded: org.apache.spark.sql.types.StructType,
       parts: Seq[String],
       predExpr: org.apache.spark.sql.catalyst.expressions.Expression)
       : org.apache.spark.sql.catalyst.expressions.Expression =
     GeneratedPruning.derive(spark, recorded, parts, predExpr)
       .foldLeft(predExpr)(
         org.apache.spark.sql.catalyst.expressions.And(_, _))
-
-  /** The active mapping (None = identity — the overwhelmingly common
-    * case, with zero read-path overhead).
-    */
-  private def mappingOf(m: Option[Manifest])
-      : Option[org.apache.spark.sql.types.StructType] =
-    recordedSchema(m).filter(columnMapped)
 
   /** The on-file shape of a recorded type: nested field names
     * replaced by their stamped physical names at every depth (types
@@ -3037,18 +3048,15 @@ object ManifestTable {
 
   /** The zero-file schema commit of every column DDL op: `evolve`
     * maps the attempt and its recorded schema to the schema to record
-    * (None: already so, no commit). One attempt; tables written before
-    * schema-on-commit refuse.
+    * (None: already so, no commit). One attempt.
     */
   private def alterSchema(spark: SparkSession, table: String,
       operation: String, params: (String, String)*)(
       evolve: (Txn, org.apache.spark.sql.types.StructType)
         => Option[org.apache.spark.sql.types.StructType]): Long =
     transact(spark, table, 1) { t =>
-      val cur = t.recorded.getOrElse(throw new IllegalStateException(
-        s"$table predates schema-on-commit — rewrite it via write() first"))
-      evolve(t, cur).map(e =>
-        t.commit(operation, params: _*).copy(schemaJson = Some(e.json)))
+      evolve(t, t.snap.schema).map(e =>
+        t.commitAs(e.json, operation, params: _*))
     }
 
   /** [[renameColumn]] for a (possibly nested) field path (VERDICT r17
@@ -3072,7 +3080,7 @@ object ManifestTable {
         val oldName = path.head
         require(cur.fieldNames.contains(oldName),
           s"no column '$oldName' in ${cur.fieldNames.mkString(", ")}")
-        refuseGenerationInput(Some(cur), oldName, "rename")
+        refuseGenerationInput(cur, oldName, "rename")
         require(!cur.fieldNames.exists(e =>
           key(e) == key(newName) && e != oldName),
           s"column '$newName' already exists")
@@ -3124,7 +3132,7 @@ object ManifestTable {
       require(cur.fields.length > 1, "cannot drop the last column")
       require(!t.parts.contains(name),
         s"'$name' is a partition column — drop needs a rewrite via write()")
-      refuseGenerationInput(Some(cur), name, "drop")
+      refuseGenerationInput(cur, name, "drop")
       Some(org.apache.spark.sql.types.StructType(cur.fields
         .filterNot(_.name == name)
         .map(f => stamp(f, physicalOf(f)))))
@@ -3379,20 +3387,22 @@ object ManifestTable {
     * manifest paths: no footer inference, no per-directory union.
     * Callers pick the files, so the relation carries no statistics to
     * prune them again. DVs drop through [[applyDvAntiJoin]], and
-    * [[toLogical]] serves the logical schema. Tables without a
-    * recorded schema fall back to the relation's footer merge.
+    * [[toLogical]] serves the logical schema. No files (a fresh
+    * create(), a truncate()) still read TYPED: an empty frame of the
+    * recorded schema, so downstream column references resolve.
     */
   private def readFiles(spark: SparkSession, table: String,
       relFiles: Seq[String], dvs: Map[String, Seq[DvRef]],
-      recorded: Option[org.apache.spark.sql.types.StructType],
+      recorded: org.apache.spark.sql.types.StructType,
       props: Map[String, String],
       keepIdentity: Boolean = false): DataFrame =
-    if (relFiles.isEmpty) spark.emptyDataFrame
+    if (relFiles.isEmpty) spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), recorded)
     else {
       val (fs, p) = fsOf(spark, table)
       // the row-id column exists once the table has drawn row ids
-      val physical = recorded.map(
-        physicalSchema(_, props.contains(identityNextKey(RowIdCol))))
+      val physical = physicalSchema(recorded,
+        props.contains(identityNextKey(RowIdCol)))
       relFiles.groupBy(layoutOf).toSeq.sortBy(_._1.mkString("/")).map {
         case (parts, files) =>
           val live = files.flatMap(dvs.get).flatten
@@ -3401,7 +3411,7 @@ object ManifestTable {
               manifestFilesOf(fs, p, table, files, Map.empty, parts), parts,
               physical),
             live.map(_.path).distinct, live.map(_.rows).sum, keepIdentity),
-            recorded)
+            Some(recorded))
       }.reduce(_.unionByName(_, allowMissingColumns = true))
     }
 
@@ -3418,25 +3428,14 @@ object ManifestTable {
 
   /** Read a snapshot (default: current) — exactly the manifest's file
     * list with its deletion vectors applied, under that version's own
-    * recorded schema ([[readFiles]]).
+    * recorded schema ([[readFiles]]): time travel across a widening
+    * commit serves the era's types.
     */
   def read(spark: SparkSession, table: String,
       version: Long = -1L): DataFrame = {
-    val (fs, p, v, snap) = resolveAt(spark, table, version)
-    // a legitimately-empty snapshot (fresh create(), truncate()) must
-    // stay TYPED: downstream column references resolve against the
-    // recorded schema instead of failing on a zero-column frame
-    if (snap.files.isEmpty) emptyTyped(spark, fs, p, v)
-    else readSnapshot(spark, table, snap, manifestAt(fs, p, v)).drop(RowIdCol)
+    val s = snapshot(spark, table, version)
+    s.read(s.files).drop(RowIdCol)
   }
-
-  /** A resolved snapshot's files under its manifest's recorded schema:
-    * time travel across a widening commit serves the era's types.
-    */
-  private def readSnapshot(spark: SparkSession, table: String,
-      snap: Snapshot, m: Option[Manifest]): DataFrame =
-    readFiles(spark, table, snap.files, snap.dvs, recordedSchema(m),
-      m.map(_.props).getOrElse(Map.empty))
 
   /** [[read]] plus the stable `_row_id` column of a row-tracked table
     * ([[RowTrackingProp]]): unique ids that survive copy-on-write
@@ -3446,34 +3445,11 @@ object ManifestTable {
   def readWithRowIds(spark: SparkSession, table: String,
       version: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val (fs, p, v, snap) = resolveAt(spark, table, version)
-    if (snap.files.isEmpty)
-      return emptyTyped(spark, fs, p, v)
-        .withColumn("_row_id", lit(null).cast("long"))
-    val df = readSnapshot(spark, table, snap, manifestAt(fs, p, v))
+    val s = snapshot(spark, table, version)
+    val df = s.read(s.files)
     if (df.columns.contains(RowIdCol))
       df.withColumn("_row_id", col(RowIdCol)).drop(RowIdCol)
     else df.withColumn("_row_id", lit(null).cast("long"))
-  }
-
-  /** An empty frame carrying the recorded schema of `version` (falls
-    * back to a zero-column frame only for pre-schema-on-commit tables).
-    */
-  private def emptyTyped(spark: SparkSession, fs: FileSystem, p: Path,
-      version: Long): DataFrame =
-    schemaAt(fs, p, version) match {
-      case Some(s) => spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), s)
-      case None => spark.emptyDataFrame
-    }
-
-  private def resolveAt(spark: SparkSession, table: String,
-      version: Long): (FileSystem, Path, Long, Snapshot) = {
-    val (fs, p) = fsOf(spark, table)
-    val (vs, cs) = listLog(fs, p)
-    val v = if (version > 0) version else vs.foldLeft(0L)(math.max)
-    require(v > 0, s"no committed version in $table")
-    (fs, p, v, resolve(spark, fs, p, v, cs))
   }
 
   /** Predicate read with FILE-LEVEL DATA SKIPPING: resolve the
@@ -3484,32 +3460,22 @@ object ManifestTable {
     * is the difference between a metadata walk + a few files and a
     * full-table scan for every selective query; on top of it Spark's
     * own row-group pruning and predicate pushdown still apply inside
-    * each kept file. Files without stats (legacy manifests, disabled
-    * collection, unsupported types) are always scanned — pruning can
-    * only ever remove provably-empty work.
+    * each kept file. Files without stats (disabled collection,
+    * unsupported types) are always scanned — pruning can only ever
+    * remove provably-empty work.
     */
   def readWhere(spark: SparkSession, table: String, predicate: Column,
       version: Long = -1L): DataFrame = {
-    val (fs, p, v, snap) = resolveAt(spark, table, version)
-    val m = manifestAt(fs, p, v)
-    val rec = recordedSchema(m)
-    val stats = logicalStats(snap.stats, rec.filter(columnMapped))
-    val predExpr = DataSkipping.expressionOf(predicate) // normalize once
+    val s = snapshot(spark, table, version)
     // generated-column derivation: a filter on the SOURCE column
     // (`ts >= X` over a table partitioned by `dt = to_date(ts)`)
     // implies bounds on the generated partition column — prune with
     // them, filter rows with the original predicate only
-    val pruneExpr = prunePredicate(spark, rec,
-      m.map(_.parts).getOrElse(Seq.empty), predExpr)
-    val kept = bloomPrune(spark, p, snap.files.filter(f =>
-      DataSkipping.mayMatch(stats.get(f), pruneExpr)), stats, predExpr)
-    if (snap.files.isEmpty) emptyTyped(spark, fs, p, v).filter(predicate)
+    val kept = skipTo(spark, s, DataSkipping.expressionOf(predicate))
     // schema-stable empty result: plan over the real files, read none
-    else if (kept.isEmpty)
-      readSnapshot(spark, table, snap.copy(dvs = Map.empty), m)
-        .drop(RowIdCol).limit(0).filter(predicate)
-    else readSnapshot(spark, table, snap.copy(files = kept), m)
-      .drop(RowIdCol).filter(predicate)
+    if (kept.isEmpty && s.files.nonEmpty)
+      s.read(s.files, Map.empty).drop(RowIdCol).limit(0).filter(predicate)
+    else s.read(kept).drop(RowIdCol).filter(predicate)
   }
 
   /** BLOOM-FILTER file pruning, the tier below range pruning
@@ -3667,21 +3633,27 @@ object ManifestTable {
     */
   def skippingReport(spark: SparkSession, table: String, predicate: Column,
       version: Long = -1L): (Int, Int) = {
-    val (fs, p, v, snap) = resolveAt(spark, table, version)
-    val m = manifestAt(fs, p, v)
-    val stats = logicalStats(snap.stats, mappingOf(m))
-    val predExpr = prunePredicate(spark, recordedSchema(m),
-      m.map(_.parts).getOrElse(Seq.empty),
-      DataSkipping.expressionOf(predicate)) // normalize once
-    val kept = bloomPrune(spark, p, snap.files.filter(f =>
-      DataSkipping.mayMatch(stats.get(f), predExpr)), stats, predExpr)
-    (kept.size, snap.files.size)
+    val s = snapshot(spark, table, version)
+    (skipTo(spark, s, DataSkipping.expressionOf(predicate)).size, s.files.size)
+  }
+
+  /** The files of `s` a [[readWhere]] of the normalized `predExpr`
+    * scans: those whose statistics admit it or a generated-column
+    * bound it implies, less those a bloom filter rules out.
+    */
+  private def skipTo(spark: SparkSession, s: Snapshot,
+      predExpr: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Seq[String] = {
+    val stats = logicalStats(s.stats, s.mapping)
+    val pruneExpr = prunePredicate(spark, s.schema, s.parts, predExpr)
+    bloomPrune(spark, s.root, s.files.filter(f =>
+      DataSkipping.mayMatch(stats.get(f), pruneExpr)), stats, predExpr)
   }
 
   /** The per-file statistics of a snapshot (for tests/introspection). */
   private[graft] def fileStats(spark: SparkSession, table: String,
       version: Long = -1L): Map[String, DataSkipping.FileStats] =
-    resolveAt(spark, table, version)._4.stats
+    snapshot(spark, table, version).stats
 
   /** CATALYST-NATIVE snapshot scan
     * ([[org.apache.spark.sql.GraftManifestScan]]): one ordinary
@@ -3699,51 +3671,18 @@ object ManifestTable {
     * on the relation (it needs the hidden `_metadata` column), and
     * [[toLogical]] renames a column-mapped table to its logical
     * schema. A DV-free unmapped table scans as the bare relation.
-    * Tables written before partition-layout metadata existed scan as
-    * unpartitioned.
+    * The DSv2 catalog table and the streaming source plan over the
+    * same [[Snapshot]].
     */
   def scan(spark: SparkSession, table: String,
-      version: Long = -1L): DataFrame = {
-    val ((p, mfiles, parts, schema, dvDirs, _), dvRows) =
-      resolvedScanWithDvRows(spark, table, version)
-    toLogical(applyDvAntiJoin(spark, table,
-      org.apache.spark.sql.GraftManifestScan.relation(spark, p, mfiles,
-        parts, schema.map(physicalSchema(_, rowIds = false))),
-      dvDirs, dvRows), schema.filter(columnMapped))
-  }
+      version: Long = -1L): DataFrame =
+    scanOf(spark, snapshot(spark, table, version))
 
-  /** INTERNAL (the scan/catalog plumbing contract): the resolved
-    * inputs a Catalyst-native scan of `version` needs — table root,
-    * manifest files with statuses/stats/partition values, the recorded
-    * partition layout, the recorded schema, and the live deletion-
-    * vector sidecar dirs (empty unless [[deleteVectors]] ran since the
-    * last compaction). Shared by [[scan]], the DSv2 catalog table and
-    * the streaming source so all three plan over the identical
-    * snapshot model.
-    */
-  def resolvedScan(spark: SparkSession, table: String,
-      version: Long = -1L): (Path,
-      Seq[org.apache.spark.sql.GraftManifestScan.ManifestFile],
-      Seq[String], Option[org.apache.spark.sql.types.StructType],
-      Seq[String], Long) = resolvedScanWithDvRows(spark, table, version)._1
-
-  /** [[resolvedScan]] plus the manifest-recorded total of deleted
-    * positions — ONE snapshot resolution serves the scan AND the
-    * inline-bitmap threshold decision (no second log walk).
-    */
-  private def resolvedScanWithDvRows(spark: SparkSession, table: String,
-      version: Long): ((Path,
-      Seq[org.apache.spark.sql.GraftManifestScan.ManifestFile],
-      Seq[String], Option[org.apache.spark.sql.types.StructType],
-      Seq[String], Long), Long) = {
-    val (fs, p, v, snap) = resolveAt(spark, table, version)
-    val m = manifestAt(fs, p, v) // ONE read serves parts + schema
-    val parts = m.map(_.parts).getOrElse(Seq.empty)
-    ((p, manifestFilesOf(fs, p, table, snap.files, snap.stats, parts),
-      parts, recordedSchema(m),
-      snap.dvs.values.flatten.map(_.path).toSeq.distinct.sorted, v),
-      snap.dvs.values.flatten.map(_.rows).sum)
-  }
+  private def scanOf(spark: SparkSession, s: Snapshot): DataFrame =
+    toLogical(applyDvAntiJoin(spark, s.table,
+      org.apache.spark.sql.GraftManifestScan.relation(spark, s.root,
+        s.manifestFiles, s.parts, physicalSchema(s.schema, rowIds = false)),
+      s.dvDirs, s.dvRows), s.mapping)
 
   /** Resolve on-disk statuses + partition values for `relFiles` — one
     * recursive listing per snapshot dir, never per file.
@@ -3792,9 +3731,9 @@ object ManifestTable {
     // already validates by checking the existing rows)
     validateConstraints(spark, schema, props)
     createV1(spark, table, "already exists") { t =>
-      t.commit("create", "partitionBy" -> partitionCols.mkString(","))
-        .copy(schemaJson = Some(schema.json), props = props,
-          parts = Some(partitionCols))
+      t.commitAs(schema.json, "create",
+        "partitionBy" -> partitionCols.mkString(","))
+        .copy(props = props, parts = Some(partitionCols))
     }
   }
 
@@ -3877,10 +3816,9 @@ object ManifestTable {
   private def adopted(t: Txn, files: Seq[String], parts: Seq[String],
       schemaJson: String, operation: String,
       params: (String, String)*): Commit =
-    t.commit(operation, ("files" -> files.size.toString) +: params :+
-      ("partitionBy" -> parts.mkString(",")): _*).copy(add = files,
-      stats = collectStats(t.spark, t.p, files), schemaJson = Some(schemaJson),
-      parts = Some(parts))
+    t.commitAs(schemaJson, operation, ("files" -> files.size.toString) +:
+      params :+ ("partitionBy" -> parts.mkString(",")): _*).copy(add = files,
+      stats = collectStats(t.spark, t.p, files), parts = Some(parts))
 
   /** ADOPT a DELTA LAKE table in place (VERDICT r19 #1): resolve its
     * `_delta_log` (JSON commits + optional checkpoint base — the
@@ -4003,8 +3941,8 @@ object ManifestTable {
     */
   def cloneTable(spark: SparkSession, source: String, target: String,
       version: Long = -1L, unprotected: Boolean = false): Long = {
-    val (sfs, sp, v, snap) = resolveAt(spark, source, version)
-    val m = manifestAt(sfs, sp, v)
+    val snap = snapshot(spark, source, version)
+    val (sp, v) = (snap.root, snap.version)
     val tp = fsOf(spark, target)._2
     val sroot = sp.toUri.getPath.stripSuffix("/")
     val troot = tp.toUri.getPath.stripSuffix("/")
@@ -4082,12 +4020,11 @@ object ManifestTable {
                 "accept that caveat", e)
         }
       }
-      t.commit("clone", "source" -> sroot, "sourceVersion" -> v.toString,
-        "files" -> files.size.toString).copy(add = files, stats = stats,
-        dvs = dvs, schemaJson = m.flatMap(_.schemaJson),
-        props = m.map(_.props).getOrElse(Map.empty) +
+      t.commitAs(snap.manifest.schemaJson, "clone", "source" -> sroot,
+        "sourceVersion" -> v.toString, "files" -> files.size.toString)
+        .copy(add = files, stats = stats, dvs = dvs, props = snap.props +
           (CloneSourceProp -> sroot) + (CloneSourceVersionProp -> v.toString),
-        parts = Some(m.map(_.parts).getOrElse(Seq.empty)))
+          parts = Some(snap.parts))
     }
   }
 
@@ -4144,7 +4081,8 @@ object ManifestTable {
     * listing always matches exactly the current snapshot.
     */
   def generateSymlinkManifest(spark: SparkSession, table: String): Int = {
-    val (fs, p, _, snap) = resolveAt(spark, table, -1L)
+    val snap = snapshot(spark, table)
+    val (fs, p) = fsOf(spark, table)
     require(snap.dvs.isEmpty,
       s"$table carries deletion vectors a symlink manifest cannot " +
         "express — run compact(...) to materialize them first")
@@ -4190,21 +4128,22 @@ object ManifestTable {
 
   /** EXACT row count of a snapshot from manifest statistics alone —
     * no data I/O (every commit records per-file parquet row counts,
-    * which are exact). `None` if any live file lacks stats (legacy
-    * manifest, disabled collection): the metadata answer is never
+    * which are exact). `None` if any live file lacks stats (disabled
+    * collection): the metadata answer is never
     * approximate, it is exact or absent. At 100 TB this answers
     * `count(*)` in a metadata walk.
     */
   def rowCount(spark: SparkSession, table: String,
-      version: Long = -1L): Option[Long] = {
-    val snap = resolveAt(spark, table, version)._4
+      version: Long = -1L): Option[Long] =
+    rowsOf(snapshot(spark, table, version))
+
+  private def rowsOf(snap: Snapshot): Option[Long] =
     if (snap.files.forall(snap.stats.contains))
       // deletion vectors subtract exactly: each DV's count was taken
       // through the DV-filtered read, so DVs on one file are disjoint
       Some(snap.files.iterator.map(snap.stats(_).rows).sum -
         snap.dvs.valuesIterator.flatten.map(_.rows).sum)
     else None
-  }
 
   /** EXACT column min/max of a snapshot from manifest statistics
     * alone — no data I/O (footer extremes are exact; the global
@@ -4218,27 +4157,24 @@ object ManifestTable {
   def columnBounds(spark: SparkSession, table: String, column: String,
       version: Long = -1L): Option[(Any, Any)] = {
     import org.apache.spark.sql.types._
-    val (fs, p, v, snap) = resolveAt(spark, table, version)
-    val m = manifestAt(fs, p, v)
+    val snap = snapshot(spark, table, version)
     // PARTITION-column bounds are stored as dir STRINGS; merging them
     // lexicographically would be wrong for numeric partition columns
     // ("9" > "12"). The recorded schema is the authority: coerce the
     // bound to the column's logical type, or answer None — the
-    // contract is exact or absent. A partition column with no
-    // recorded schema is unknowable (string column? numeric?) → None;
-    // data-column footer bounds are already typed and pass through.
+    // contract is exact or absent. Data-column footer bounds are
+    // already typed and pass through.
     // a deletion vector may have removed the extreme row of a file:
     // footer bounds become OUTER bounds, and the contract is exact or
     // absent — compaction materializes DVs and restores exact bounds
     if (snap.dvs.nonEmpty) return None
     // column-mapped tables: footer stats key by the PHYSICAL name
-    val statKey = recordedSchema(m).filter(columnMapped)
+    val statKey = snap.mapping
       .flatMap(_.fields.find(_.name == column).map(physicalOf))
       .getOrElse(column)
-    val isPartCol = m.exists(_.parts.contains(column))
+    val isPartCol = snap.parts.contains(column)
     val expected: Option[DataType] =
-      recordedSchema(m).flatMap(_.fields.find(_.name == column))
-        .map(_.dataType)
+      snap.schema.fields.find(_.name == column).map(_.dataType)
     // string bounds are partition-dir renderings: coerce to the
     // recorded logical type's canonical scalar (the same encodings
     // footer stats use — Long days / Long micros / Boolean), or answer
@@ -4306,17 +4242,16 @@ object ManifestTable {
     * prefix, must never make a later commit appear earlier, or
     * timestamp resolution loses `version order == time order`).
     * Recorded timestamps also survive a table COPY that resets every
-    * mtime — time travel answers from the log itself. `manifestOf`
-    * lets callers that already parsed the manifests (history) avoid a
-    * second read; the default reads each head.
+    * mtime — time travel answers from the log itself. `parsed` holds
+    * the heads a caller parsed already (history, the detail report);
+    * the rest are read here.
     */
-  private def commitTimes(fs: FileSystem, p: Path,
-      vs: Seq[Long],
-      manifestOf: Long => Option[Manifest] = null): Seq[(Long, Long)] = {
-    val lookup: Long => Option[Manifest] =
-      if (manifestOf != null) manifestOf
-      else v => try Some(readManifest(fs, p, v))
-        catch { case _: java.io.IOException => None }
+  private def commitTimes(fs: FileSystem, p: Path, vs: Seq[Long],
+      parsed: Map[Long, Manifest] = Map.empty): Seq[(Long, Long)] = {
+    def lookup(v: Long): Option[Manifest] = parsed.get(v).orElse {
+      try Some(readManifest(fs, p, v))
+      catch { case _: java.io.IOException => None }
+    }
     var prev = Long.MinValue
     vs.sorted.map { v =>
       val t = lookup(v).flatMap(opTs).getOrElse(
@@ -4409,8 +4344,7 @@ object ManifestTable {
     // ONE manifest read per version serves the row AND its commit time
     val parsed: Map[Long, Manifest] =
       vs.map(v => v -> readManifest(fs, p, v)).toMap
-    val timeOf: Map[Long, Long] =
-      commitTimes(fs, p, vs, parsed.get).toMap
+    val timeOf: Map[Long, Long] = commitTimes(fs, p, vs, parsed).toMap
     val rows = vs.sorted.map { v =>
       val m = parsed(v)
       def rowsOf(addList: Seq[String]): Option[Long] =
@@ -4456,12 +4390,12 @@ object ManifestTable {
   /** Metadata-only FILE CENSUS of a snapshot (the `$files` metadata
     * table): one row per live data file — table-relative path, size,
     * exact row count from manifest statistics (null for stats-less
-    * legacy files) and rows removed by live deletion vectors. One
-    * recursive listing per snapshot dir, never a data read.
+    * files) and rows removed by live deletion vectors. One recursive
+    * listing per snapshot dir, never a data read.
     */
   def filesReport(spark: SparkSession, table: String,
       version: Long = -1L): DataFrame = {
-    val (fs, p, v, snap) = resolveAt(spark, table, version)
+    val snap = snapshot(spark, table, version)
     val rows: Seq[(String, Long, Option[Long], Long)] =
       if (snap.files.forall(f => snap.stats.get(f).exists(_.bytes > 0)))
         // manifest-recorded sizes: zero filesystem round-trips — the
@@ -4472,12 +4406,9 @@ object ManifestTable {
             snap.dvs.getOrElse(f, Seq.empty).map(_.rows).sum)
         }
       else {
-        // legacy manifests without size stats: one recursive listing
-        // per snapshot dir, never a per-file status RPC
-        val m = manifestAt(fs, p, v)
-        val parts = m.map(_.parts).getOrElse(Seq.empty)
-        manifestFilesOf(fs, p, table, snap.files, snap.stats, parts)
-          .map { mf =>
+        // files without size stats: one recursive listing per
+        // snapshot dir, never a per-file status RPC
+        snap.manifestFiles.map { mf =>
             (mf.rel, mf.status.getLen, mf.stats.map(_.rows),
               snap.dvs.getOrElse(mf.rel, Seq.empty).map(_.rows).sum)
           }
@@ -4492,32 +4423,32 @@ object ManifestTable {
     * commit wall-clock, partition layout, file/byte/row census,
     * live deletion-vector count, and the user table properties as
     * JSON. Pure metadata: one snapshot resolution plus the commit-
-    * time walk `t$$history` already does; row count is exact-or-null
+    * time walk `t$$history` does; row count is exact-or-null
     * ([[rowCount]]). Served as the `t$$detail` metadata table and
     * `CALL system.describe_detail(table => 'ns.t')`.
     */
   def detailReport(spark: SparkSession, table: String): DataFrame = {
-    val (fs, p, v, snap) = resolveAt(spark, table, -1L)
-    val m = manifestAt(fs, p, v)
-    val parts = m.map(_.parts).getOrElse(Seq.empty)
-    val props = m.map(_.props).getOrElse(Map.empty)
+    val (fs, p) = fsOf(spark, table)
+    val (vs, cs) = listLog(fs, p)
+    require(vs.nonEmpty, s"no committed version in $table")
+    val snap = new Snapshot(spark, table, fs, p, vs.last,
+      readManifest(fs, p, vs.last), cs)
     val bytes: Option[Long] =
       if (snap.files.forall(f => snap.stats.get(f).exists(_.bytes > 0)))
         Some(snap.files.iterator.map(snap.stats(_).bytes).sum)
-      else None // legacy stats-less files: exact or absent, like rows
-    val lastModified = history(spark, table)
-      .orderBy(org.apache.spark.sql.functions.col("version").desc)
-      .select("ts_millis").head().getLong(0)
+      else None // stats-less files: exact or absent, like rows
+    val lastModified =
+      commitTimes(fs, p, vs, Map(snap.version -> snap.manifest)).last._2
     val propsJson = mapper.writeValueAsString {
       val n = mapper.createObjectNode()
-      props.toSeq.sortBy(_._1).foreach { case (k, x) => n.put(k, x): Unit }
+      snap.props.toSeq.sortBy(_._1).foreach { case (k, x) => n.put(k, x): Unit }
       n
     }
     val sq = spark
     import sq.implicits._
     Seq((
-      "graft", p.toString, v, lastModified, parts,
-      snap.files.size.toLong, bytes, rowCount(spark, table),
+      "graft", snap.root.toString, snap.version, lastModified, snap.parts,
+      snap.files.size.toLong, bytes, rowsOf(snap),
       snap.dvs.values.flatten.size.toLong, propsJson))
       .toDF("format", "location", "version", "last_modified_millis",
         "partition_columns", "num_files", "size_bytes", "num_rows",
@@ -4538,18 +4469,16 @@ object ManifestTable {
     */
   def readChanges(spark: SparkSession, table: String, fromVersion: Long,
       toVersion: Long = -1L): DataFrame = {
-    val to = if (toVersion > 0) toVersion else currentVersion(spark, table)
-    require(fromVersion >= 0 && fromVersion <= to,
-      s"bad CDF range ($fromVersion, $to]")
+    val s = snapshot(spark, table, toVersion)
+    require(fromVersion >= 0 && fromVersion <= s.version,
+      s"bad CDF range ($fromVersion, ${s.version}]")
     val before =
       if (fromVersion == 0) Set.empty[String]
-      else currentFiles(spark, table, fromVersion).toSet
-    val (cfs, cp, _, snap) = resolveAt(spark, table, to)
-    val added = snap.files.filterNot(before)
-    if (added.isEmpty) read(spark, table, to).limit(0)
-    else readSnapshot(spark, table, snap.copy(files = added),
-      manifestAt(cfs, cp, to))
-      .drop(RowIdCol) // public surface: the hidden row id stays hidden
+      else s.at(fromVersion).files.toSet
+    val added = s.files.filterNot(before)
+    // public surface: the hidden row id stays hidden
+    if (added.isEmpty) s.read(s.files).drop(RowIdCol).limit(0)
+    else s.read(added).drop(RowIdCol)
   }
 
   /** [[consumeChanges]] `onRewrite` policies: `fail` (default) aborts
@@ -4562,35 +4491,44 @@ object ManifestTable {
   val ConsumeFailOnRewrite = "fail"
   val ConsumeFullResync = "full"
 
-  /** The per-commit classification walk shared by [[consumeChanges]]
-    * and the streaming source: Right(files added by append commits in
-    * `(from, to]`) or Left(version of the first rewrite commit the
-    * file-level feed cannot express). A vacuumed (unreadable) log
-    * prefix throws.
+  /** The head manifests of versions `(from, to]`, oldest first, read
+    * lazily; `last` serves `to` when the caller parsed it already. A
+    * version vacuum pruned throws: the `feed` of `table` is behind the
+    * log prefix, and `remedy` says what to do.
     */
-  private def appendAddsBetween(fs: FileSystem, p: Path, table: String,
-      from: Long, to: Long): Either[Long, Seq[String]] = {
-    val adds = Seq.newBuilder[String]
-    var rewriteAt = -1L
-    var v = from + 1
-    while (v <= to) {
-      val mv =
+  private def commitsBetween(fs: FileSystem, p: Path, table: String,
+      from: Long, to: Long, feed: String, remedy: String,
+      last: Option[Manifest] = None): Iterator[(Long, Manifest)] =
+    ((from + 1) to to).iterator.map { v =>
+      v -> last.filter(_ => v == to).getOrElse {
         try readManifest(fs, p, v)
         catch { case e: java.io.IOException =>
-          throw new java.io.IOException(
-            s"change feed of $table is behind the vacuumed log prefix " +
-              s"(v$v unreadable) — exactly-once delivery cannot be " +
-              "reconstructed; re-sync from a full snapshot or vacuum " +
-              "with a longer retention", e)
+          throw new java.io.IOException(s"$feed of $table is behind the " +
+            s"vacuumed log prefix (v$v unreadable) — $remedy", e)
         }
-      mv match {
-        case d: Delta if d.remove.isEmpty && d.dvs.isEmpty && d.dataChange =>
-          adds ++= d.add // append (or a pure offset commit: empty add)
-        case other if !other.dataChange => () // compaction: same rows
-        case _ => rewriteAt = v // delete/merge/DV rewrite or overwrite
       }
-      v += 1
     }
+
+  /** The per-commit classification walk shared by [[consumeChanges]]
+    * and the streaming source: Right(files added by append commits in
+    * `(from, s.version]`) or Left(version of the last rewrite commit
+    * the file-level feed cannot express). A vacuumed (unreadable) log
+    * prefix throws.
+    */
+  private def appendAddsBetween(s: Snapshot,
+      from: Long): Either[Long, Seq[String]] = {
+    val adds = Seq.newBuilder[String]
+    var rewriteAt = -1L
+    commitsBetween(s.fs, s.root, s.table, from, s.version, "change feed",
+      "exactly-once delivery cannot be reconstructed; re-sync from a " +
+        "full snapshot or vacuum with a longer retention", Some(s.manifest))
+      .foreach {
+        case (_, d: Delta)
+            if d.remove.isEmpty && d.dvs.isEmpty && d.dataChange =>
+          adds ++= d.add // append (or a pure offset commit: empty add)
+        case (_, other) if !other.dataChange => () // compaction: same rows
+        case (v, _) => rewriteAt = v // delete/merge/DV rewrite or overwrite
+      }
     if (rewriteAt < 0) Right(adds.result()) else Left(rewriteAt)
   }
 
@@ -4601,18 +4539,14 @@ object ManifestTable {
     * change) vs an incremental append delivery (empty = nothing
     * happened, no commit needed).
     */
-  private def changedFilesBetween(spark: SparkSession, fs: FileSystem,
-      p: Path, table: String,
-      consumerId: String, from: Long, current: Long,
-      onRewrite: String): (Seq[String], Boolean) = {
-    if (from == 0)
-      return (resolveFiles(spark, fs, p, current, listLog(fs, p)._2), true)
-    appendAddsBetween(fs, p, table, from, current) match {
+  private def changedFilesBetween(s: Snapshot, consumerId: String,
+      from: Long, onRewrite: String): (Seq[String], Boolean) = {
+    if (from == 0) return (s.files, true)
+    appendAddsBetween(s, from) match {
       case Right(adds) => (adds, false)
-      case Left(_) if onRewrite == ConsumeFullResync =>
-        (resolveFiles(spark, fs, p, current, listLog(fs, p)._2), true)
+      case Left(_) if onRewrite == ConsumeFullResync => (s.files, true)
       case Left(rewriteAt) => throw new IllegalStateException(
-        s"consumed range ($from, $current] of $table contains a rewrite " +
+        s"consumed range ($from, ${s.version}] of ${s.table} contains a rewrite " +
           s"commit (v$rewriteAt: delete/merge/overwrite) that a file-level " +
           "change feed cannot express as additions — consumer " +
           s"'$consumerId' would see duplicates or miss removals. Pass " +
@@ -4633,17 +4567,15 @@ object ManifestTable {
     */
   private[graft] def streamBatch(spark: SparkSession, table: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
-    val (fs, p) = fsOf(spark, table)
+    val s = snapshot(spark, table, toVersion)
     val files =
-      if (fromVersion == 0) resolveFiles(spark, fs, p, toVersion,
-        listLog(fs, p)._2)
-      else appendAddsBetween(fs, p, table, fromVersion, toVersion) match {
+      if (fromVersion == 0) s.files
+      else appendAddsBetween(s, fromVersion) match {
         case Right(adds) => adds
         case Left(rewriteAt) => throw streamRewriteError(
           table, fromVersion, toVersion, rewriteAt)
       }
-    streamFilesBatch(spark, table, files, toVersion,
-      snapshot = fromVersion == 0)
+    filesBatch(spark, s, files, whole = fromVersion == 0)
   }
 
   private[graft] def streamRewriteError(table: String, fromVersion: Long,
@@ -4664,34 +4596,33 @@ object ManifestTable {
     * for undelivered files simply never match).
     */
   private[graft] def streamFilesBatch(spark: SparkSession, table: String,
-      files: Seq[String], atVersion: Long, snapshot: Boolean): DataFrame = {
-    val (fs, p) = fsOf(spark, table)
-    val m = manifestAt(fs, p, atVersion)
-    val parts = m.map(_.parts).getOrElse(Seq.empty)
+      files: Seq[String], atVersion: Long, snapshot: Boolean): DataFrame =
+    filesBatch(spark, ManifestTable.snapshot(spark, table, atVersion), files,
+      whole = snapshot)
+
+  /** [[streamFilesBatch]] over a resolved snapshot; `whole` marks a
+    * snapshot delivery, whose stats and vectors apply.
+    */
+  private def filesBatch(spark: SparkSession, s: Snapshot,
+      files: Seq[String], whole: Boolean): DataFrame = {
     // the snapshot's stats map also covers range-scoped files (stats
     // ride adds); files later removed by a compaction in the range
-    // still resolve statuses from their immutable snapshot dirs
-    val snap0 =
-      if (snapshot)
-        Some(resolve(spark, fs, p, atVersion, listLog(fs, p)._2))
-      else None
-    val stats: Map[String, FileStats] =
-      snap0.map(_.stats).getOrElse(Map.empty)
-    val recorded = recordedSchema(m)
+    // still resolve statuses from their immutable snapshot dirs. Only a
+    // snapshot delivery resolves the snapshot's file list
+    val stats: Map[String, FileStats] = if (whole) s.stats else Map.empty
     // column-mapped table: the relation reads PHYSICAL columns; one
     // projection after the DV anti-join restores the logical names
     // (the same step as [[scan]], which declares the source's schema)
-    val rel = org.apache.spark.sql.GraftManifestScan.relation(spark, p,
-      manifestFilesOf(fs, p, table, files, stats, parts), parts,
-      recorded.map(physicalSchema(_, rowIds = false)), isStreaming = true)
+    val rel = org.apache.spark.sql.GraftManifestScan.relation(spark, s.root,
+      manifestFilesOf(s.fs, s.root, s.table, files, stats, s.parts), s.parts,
+      physicalSchema(s.schema, rowIds = false), isStreaming = true)
     // initial-snapshot batch of a DV-bearing table: apply the vectors
     // (append-range batches cannot carry DVs — a DV commit in the
     // range already failed the walk above)
-    val dv = applyDvAntiJoin(spark, table, rel,
-      snap0.map(_.dvs.values.flatten.map(_.path).toSeq.distinct)
-        .getOrElse(Seq.empty),
-      snap0.map(_.dvs.values.flatten.map(_.rows).sum).getOrElse(-1L))
-    toLogical(dv, recorded.filter(columnMapped))
+    val dv =
+      if (whole) applyDvAntiJoin(spark, s.table, rel, s.dvDirs, s.dvRows)
+      else rel
+    toLogical(dv, s.mapping)
   }
 
   /** The snapshot at `version` as a DETERMINISTICALLY ORDERED file
@@ -4703,10 +4634,8 @@ object ManifestTable {
     */
   private[graft] def snapshotFilesWithSizes(spark: SparkSession,
       table: String, version: Long): Seq[(String, Long)] = {
-    val (fs, p) = fsOf(spark, table)
-    val snap = resolve(spark, fs, p, version, listLog(fs, p)._2)
-    snap.files.sorted.map(f =>
-      f -> snap.stats.get(f).map(_.bytes).getOrElse(0L))
+    val snap = snapshot(spark, table, version)
+    snap.files.map(f => f -> snap.stats.get(f).map(_.bytes).getOrElse(0L))
   }
 
   /** Per-version ordered ADDS with manifest-recorded sizes for
@@ -4722,25 +4651,17 @@ object ManifestTable {
       from: Long, to: Long): Either[Long, Seq[(Long, Seq[(String, Long)])]] = {
     val (fs, p) = fsOf(spark, table)
     val out = Seq.newBuilder[(Long, Seq[(String, Long)])]
-    var v = from + 1
-    while (v <= to) {
-      val mv =
-        try readManifest(fs, p, v)
-        catch { case e: java.io.IOException =>
-          throw new java.io.IOException(
-            s"streamed range of $table is behind the vacuumed log " +
-              s"prefix (v$v unreadable) — exactly-once delivery cannot " +
-              "be reconstructed; restart from a fresh checkpoint", e)
-        }
-      mv match {
-        case d: Delta if d.remove.isEmpty && d.dvs.isEmpty && d.dataChange =>
-          out += v -> d.add.map(f =>
-            f -> mv.stats.get(f).map(_.bytes).getOrElse(0L))
-        case other if !other.dataChange =>
-          out += v -> Seq.empty // compaction: same rows, advance only
-        case _ => return Left(v) // delete/merge/DV rewrite or overwrite
-      }
-      v += 1
+    val walk = commitsBetween(fs, p, table, from, to, "streamed range",
+      "exactly-once delivery cannot be reconstructed; restart from a " +
+        "fresh checkpoint")
+    while (walk.hasNext) walk.next() match {
+      case (v, d: Delta)
+          if d.remove.isEmpty && d.dvs.isEmpty && d.dataChange =>
+        out += v -> d.add.map(f =>
+          f -> d.stats.get(f).map(_.bytes).getOrElse(0L))
+      case (v, other) if !other.dataChange =>
+        out += v -> Seq.empty // compaction: same rows, advance only
+      case (v, _) => return Left(v) // delete/merge/DV rewrite or overwrite
     }
     Right(out.result())
   }
@@ -4767,30 +4688,25 @@ object ManifestTable {
   private[graft] def streamChangeBatch(spark: SparkSession, table: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val (fs, p) = fsOf(spark, table)
     if (fromVersion == 0)
       return streamBatch(spark, table, 0, toVersion)
         .withColumn(ChangeTypeCol, lit("insert"))
         .withColumn(CommitVersionCol, lit(toVersion))
-    val mTo = manifestAt(fs, p, toVersion)
-    val recorded = recordedSchema(mTo)
+    val sTo = snapshot(spark, table, toVersion)
+    val (fs, p) = (sTo.fs, sTo.root)
     // field ORDER must equal the source's declared schema (the engine
     // binds the batch plan to the source output POSITIONALLY): the
     // native scan serves data-then-partition order on plain tables and
     // recorded order on mapped ones (its projection)
-    val partsTo = mTo.map(_.parts).getOrElse(Seq.empty)
-    val baseFields: Seq[org.apache.spark.sql.types.StructField] =
-      recorded.map { s =>
-        if (columnMapped(s)) s.fields.toSeq
-        else s.fields.toSeq.filterNot(f => partsTo.contains(f.name)) ++
-          s.fields.toSeq.filter(f => partsTo.contains(f.name))
-      }.getOrElse(Seq.empty)
+    val baseFields: Seq[org.apache.spark.sql.types.StructField] = {
+      val all = sTo.schema.fields.toSeq
+      if (sTo.mapping.nonEmpty) all
+      else all.filterNot(f => sTo.parts.contains(f.name)) ++
+        all.filter(f => sTo.parts.contains(f.name))
+    }
     def align(df: DataFrame, ct: Option[String], v: Long): DataFrame = {
       val have = df.columns.toSet
-      val fields =
-        if (baseFields.nonEmpty) baseFields
-        else df.schema.fields.toSeq.filterNot(_.name == ChangeTypeCol)
-      df.select((fields.map(f =>
+      df.select((baseFields.map(f =>
         // cast normalizes change files written before a widening commit
         if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)) :+
@@ -4798,38 +4714,29 @@ object ManifestTable {
         .withColumn(CommitVersionCol, lit(v))
     }
     def relationOf(files: Seq[String], parts: Seq[String],
-        schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+        schema: org.apache.spark.sql.types.StructType): DataFrame =
       org.apache.spark.sql.GraftManifestScan.relation(spark, p,
         manifestFilesOf(fs, p, table, files, Map.empty, parts), parts,
         schema, isStreaming = true)
     val frames: Seq[DataFrame] =
-      ((fromVersion + 1) to toVersion).flatMap { v =>
-        val mv =
-          try readManifest(fs, p, v)
-          catch { case e: java.io.IOException =>
-            throw new java.io.IOException(
-              s"CDC stream of $table is behind the vacuumed log prefix " +
-                s"(v$v unreadable) — restart from a fresh checkpoint to " +
-                "re-snapshot, or keep a longer vacuum retention", e)
-          }
+      commitsBetween(fs, p, table, fromVersion, toVersion, "CDC stream",
+        "restart from a fresh checkpoint to re-snapshot, or keep a longer " +
+          "vacuum retention", Some(sTo.manifest)).toSeq.flatMap { case (v, mv) =>
         if (!mv.dataChange) Seq.empty
         else mv match {
           case d: Delta if d.cdcDir.isDefined =>
             // recorded change rows, already carrying the _change_type
             // column, read by name under the schema at `toVersion`
-            // (footer-merged only for tables without a recorded schema)
             val rel = new Path(p, d.cdcDir.get)
             val chFiles = listDataFiles(fs, rel)
               .map(st => relativize(p, st.getPath)).sorted
             Seq(align(relationOf(chFiles, Seq.empty,
-              recorded.map(_ => changeFileSchema(baseFields))), None, v))
+              changeFileSchema(baseFields)), None, v))
           case d: Delta
               if d.remove.isEmpty && d.dvs.isEmpty && d.add.nonEmpty =>
-            val parts = d.parts
-            val rel = relationOf(d.add, parts,
-              recorded.map(physicalSchema(_, rowIds = false)))
-            Seq(align(toLogical(rel, recorded.filter(columnMapped)),
-              Some("insert"), v))
+            val rel = relationOf(d.add, d.parts,
+              physicalSchema(sTo.schema, rowIds = false))
+            Seq(align(toLogical(rel, sTo.mapping), Some("insert"), v))
           case d: Delta if d.remove.isEmpty && d.dvs.isEmpty =>
             Seq.empty // metadata-only commit
           case _ => throw new IllegalStateException(
@@ -4842,7 +4749,7 @@ object ManifestTable {
       }
     frames.reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse(
-        streamBatch(spark, table, toVersion, toVersion)
+        filesBatch(spark, sTo, Seq.empty, whole = false)
           .withColumn(ChangeTypeCol, lit("insert"))
           .withColumn(CommitVersionCol, lit(toVersion))
           .limit(0))
@@ -4875,10 +4782,9 @@ object ManifestTable {
     require(onRewrite == ConsumeFailOnRewrite || onRewrite == ConsumeFullResync,
       s"unknown onRewrite policy '$onRewrite'")
     val key = s"consumer:$consumerId"
-    val (fs, p) = fsOf(spark, table)
-    val current = currentVersion(spark, table)
-    require(current > 0, s"no committed version in $table")
-    val from = txnsAt(fs, p, current).getOrElse(key, 0L)
+    val s = snapshot(spark, table)
+    val current = s.version
+    val from = s.txns.getOrElse(key, 0L)
     if (from >= current) return current
     // deliveries are accumulated PER COMMIT, not as a snapshot
     // difference: a compaction landing in the range re-adds every
@@ -4890,8 +4796,8 @@ object ManifestTable {
     // add the exact delivery); compactions (dataChange = false) are
     // skipped; genuine rewrites (delete/merge/overwrite) cannot be
     // expressed as file-level additions → the `onRewrite` policy.
-    val (added, isSnapshot) = changedFilesBetween(spark, fs, p, table,
-      consumerId, from, current, onRewrite)
+    val (added, isSnapshot) =
+      changedFilesBetween(s, consumerId, from, onRewrite)
     // a range of pure metadata commits delivers nothing and must not
     // commit either; a SNAPSHOT delivery always fires (an empty
     // snapshot after a truncate/delete-all IS the change)
@@ -4900,14 +4806,9 @@ object ManifestTable {
     // (a DV landing in an appends-only range is itself a rewrite) —
     // the hot incremental path skips the snapshot resolve entirely
     val frame =
-      if (added.isEmpty) scan(spark, table, current).limit(0)
+      if (added.isEmpty) scanOf(spark, s).limit(0)
       else try {
-        val dvs =
-          if (isSnapshot) resolveAt(spark, table, current)._4.dvs
-          else Map.empty[String, Seq[DvRef]]
-        val m = manifestAt(fs, p, current)
-        readFiles(spark, table, added, dvs, recordedSchema(m),
-          m.map(_.props).getOrElse(Map.empty))
+        s.read(added, if (isSnapshot) s.dvs else Map.empty)
           .drop(RowIdCol) // public surface: the hidden row id stays hidden
       } catch { case e @ (_: org.apache.spark.sql.AnalysisException |
           _: java.io.FileNotFoundException) =>
@@ -4993,98 +4894,86 @@ object ManifestTable {
     * requires comparable column types (no maps).
     */
   def rowChanges(spark: SparkSession, table: String, fromVersion: Long,
-      toVersion: Long = -1L): DataFrame = {
+      toVersion: Long = -1L): DataFrame =
+    rowChangesOf(spark, snapshot(spark, table, toVersion), fromVersion)
+
+  /** [[rowChanges]] of `(fromVersion, sTo.version]`. */
+  private def rowChangesOf(spark: SparkSession, sTo: Snapshot,
+      fromVersion: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val (fs, p) = fsOf(spark, table)
-    val (vs, cs) = listLog(fs, p)
-    val to = if (toVersion > 0) toVersion else vs.foldLeft(0L)(math.max)
+    val to = sTo.version
     require(fromVersion >= 0 && fromVersion <= to,
       s"bad row-CDF range ($fromVersion, $to]")
     // every commit's files read under the schema at `to` (a rename
-    // mid-range reports under the new name); recTo also freezes
+    // mid-range reports under the new name); it also freezes
     // EXISTS_DEFAULTs into the served change rows — pre-default files
     // must report the default, not null, exactly like the snapshot
     // read path
-    val mTo = manifestAt(fs, p, to)
-    val recTo = recordedSchema(mTo)
-    val propsTo = mTo.map(_.props).getOrElse(Map.empty)
+    val baseFields = sTo.schema.fields.toSeq
     def readTo(files: Seq[String], dvs: Map[String, Seq[DvRef]]): DataFrame =
-      readFiles(spark, table, files, dvs, recTo, propsTo)
-    val baseFields: Seq[org.apache.spark.sql.types.StructField] =
-      recTo.map(_.fields.toSeq).getOrElse(
-        read(spark, table, to).schema.fields.toSeq)
+      sTo.read(files, dvs)
+    // cast-to-base normalizes pre-widening narrow files so the multiset
+    // diffs (exceptAll) type-align across a widening commit
     def align(df: DataFrame): DataFrame = {
       val have = df.columns.toSet
-      // an empty snapshot (truncate) reads as a zero-column frame —
-      // type it so the multiset diff stays schema-aligned
-      if (df.columns.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(baseFields))
-      // cast-to-base normalizes pre-widening narrow files so the
-      // multiset diffs (exceptAll) type-align across a widening commit
-      else df.select(baseFields.map(f =>
+      df.select(baseFields.map(f =>
         if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)): _*)
     }
     def tag(df: DataFrame, ct: String, v: Long): DataFrame =
       align(df).withColumn(ChangeTypeCol, lit(ct))
         .withColumn(CommitVersionCol, lit(v))
-    def manifestOrGuidance(v: Long): Manifest =
-      try readManifest(fs, p, v)
-      catch { case e: java.io.IOException =>
-        throw new java.io.IOException(
-          s"row change feed of $table is behind the vacuumed log prefix " +
-            s"(v$v unreadable) — re-sync from a snapshot or keep a longer " +
-            "vacuum retention", e)
-      }
-    val frames: Seq[DataFrame] = ((fromVersion + 1) to to).flatMap { v =>
-      val mv = manifestOrGuidance(v)
-      if (!mv.dataChange) Seq.empty
-      else mv match {
-        // precomputed change files (feed enabled at commit time): the
-        // exact rows, no diffing needed
-        case d: Delta if d.cdcDir.isDefined =>
-          Seq(spark.read.schema(changeFileSchema(baseFields))
-            .parquet(new Path(p, d.cdcDir.get).toString)
-            .withColumn(CommitVersionCol, lit(v)))
-        case d: Delta if d.dvs.nonEmpty =>
-          val dvDirs = d.dvs.values.flatten.map(_.path).toSeq.distinct
-          val targets = d.dvs.keys.toSeq.sorted
-          val tagged = readFiles(spark, table, targets, Map.empty, recTo,
-            propsTo, keepIdentity = true)
-          val dels = tag(tagged.join(dvEntries(spark, table, dvDirs),
-            Seq(DvFileCol, DvIdxCol), "inner")
-            .drop(AbsPathCol, DvFileCol, DvIdxCol), "delete", v)
-          // a MERGE-ON-READ update/merge commit carries DVs AND fresh
-          // post-image files in ONE delta: the hidden rows die, the
-          // appended rows are born — emitting only the deletes would
-          // silently drop the post-images from the feed
-          if (d.add.isEmpty) Seq(dels)
-          else Seq(dels, tag(readTo(d.add, Map.empty), "insert", v))
-        case d: Delta if d.remove.isEmpty =>
-          if (d.add.isEmpty) Seq.empty // pure offset/DDL commit
-          else Seq(tag(readTo(d.add, Map.empty), "insert", v))
-        case d: Delta =>
-          val prev = resolve(spark, fs, p, v - 1, cs)
-          val old = align(readTo(d.remove, prev.dvs))
-          if (d.add.isEmpty) // pure delete: every pre-image row died
-            Seq(tag(old, "delete", v))
-          else {
-            val neu = align(readTo(d.add, Map.empty))
-            Seq(tag(old.exceptAll(neu), "delete", v),
-              tag(neu.exceptAll(old), "insert", v))
-          }
-        case _ => // Replace or Ref base: overwrite/truncate (v=1: create)
-          val cur = resolve(spark, fs, p, v, cs)
-          val neu = align(readTo(cur.files, cur.dvs))
-          if (v == 1) Seq(tag(neu, "insert", v))
-          else {
-            val prev = resolve(spark, fs, p, v - 1, cs)
-            val old = align(readTo(prev.files, prev.dvs))
-            Seq(tag(old.exceptAll(neu), "delete", v),
-              tag(neu.exceptAll(old), "insert", v))
-          }
-      }
+    val walked = commitsBetween(sTo.fs, sTo.root, sTo.table, fromVersion, to,
+      "row change feed", "re-sync from a snapshot or keep a longer vacuum " +
+        "retention", Some(sTo.manifest)).toSeq
+    val frames: Seq[DataFrame] = walked.zipWithIndex.flatMap {
+      case ((v, mv), i) =>
+        // the version before, from the head the walk already parsed
+        def prev = sTo.at(v - 1, walked.lift(i - 1).map(_._2))
+        if (!mv.dataChange) Seq.empty
+        else mv match {
+          // precomputed change files (feed enabled at commit time): the
+          // exact rows, no diffing needed
+          case d: Delta if d.cdcDir.isDefined =>
+            Seq(spark.read.schema(changeFileSchema(baseFields))
+              .parquet(new Path(sTo.root, d.cdcDir.get).toString)
+              .withColumn(CommitVersionCol, lit(v)))
+          case d: Delta if d.dvs.nonEmpty =>
+            val dvDirs = d.dvs.values.flatten.map(_.path).toSeq.distinct
+            val targets = d.dvs.keys.toSeq.sorted
+            val tagged = sTo.read(targets, Map.empty, keepIdentity = true)
+            val dels = tag(tagged.join(dvEntries(spark, sTo.table, dvDirs),
+              Seq(DvFileCol, DvIdxCol), "inner")
+              .drop(AbsPathCol, DvFileCol, DvIdxCol), "delete", v)
+            // a MERGE-ON-READ update/merge commit carries DVs AND fresh
+            // post-image files in ONE delta: the hidden rows die, the
+            // appended rows are born — emitting only the deletes would
+            // silently drop the post-images from the feed
+            if (d.add.isEmpty) Seq(dels)
+            else Seq(dels, tag(readTo(d.add, Map.empty), "insert", v))
+          case d: Delta if d.remove.isEmpty =>
+            if (d.add.isEmpty) Seq.empty // pure offset/DDL commit
+            else Seq(tag(readTo(d.add, Map.empty), "insert", v))
+          case d: Delta =>
+            val old = align(readTo(d.remove, prev.dvs))
+            if (d.add.isEmpty) // pure delete: every pre-image row died
+              Seq(tag(old, "delete", v))
+            else {
+              val neu = align(readTo(d.add, Map.empty))
+              Seq(tag(old.exceptAll(neu), "delete", v),
+                tag(neu.exceptAll(old), "insert", v))
+            }
+          case _ => // Replace or Ref base: overwrite/truncate (v=1: create)
+            val cur = sTo.at(v, Some(mv))
+            val neu = align(readTo(cur.files, cur.dvs))
+            if (v == 1) Seq(tag(neu, "insert", v))
+            else {
+              val before = prev
+              val old = align(readTo(before.files, before.dvs))
+              Seq(tag(old.exceptAll(neu), "delete", v),
+                tag(neu.exceptAll(old), "insert", v))
+            }
+        }
     }
     frames.reduceOption(_.unionByName(_)).getOrElse {
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -5113,28 +5002,27 @@ object ManifestTable {
     import org.apache.spark.sql.functions.lit
     require(consumerId.nonEmpty, "consumerId must be non-empty")
     val key = s"rowconsumer:$consumerId"
-    val (fs, p) = fsOf(spark, table)
-    val current = currentVersion(spark, table)
-    require(current > 0, s"no committed version in $table")
-    val from = txnsAt(fs, p, current).getOrElse(key, 0L)
+    val s = snapshot(spark, table)
+    val current = s.version
+    val from = s.txns.getOrElse(key, 0L)
     if (from >= current) return current
     // a range of pure metadata commits (offset advances, DDL, analyze)
     // delivers nothing and must not commit either — delivering an
     // empty frame and advancing would make every idle poll append an
     // offset commit, and the poll/commit pair would ping-pong forever
-    if (from > 0 && !((from + 1) to current).exists { v =>
-      readManifest(fs, p, v) match {
-        case d: Delta => d.dataChange &&
-          (d.add.nonEmpty || d.remove.nonEmpty || d.dvs.nonEmpty)
-        case other => other.dataChange // replace/ref: content changed
-      }
+    if (from > 0 && !commitsBetween(s.fs, s.root, table, from, current,
+        "row change feed", "re-sync with a fresh consumer id or keep a " +
+          "longer vacuum retention", Some(s.manifest)).exists {
+      case (_, d: Delta) => d.dataChange &&
+        (d.add.nonEmpty || d.remove.nonEmpty || d.dvs.nonEmpty)
+      case (_, other) => other.dataChange // replace/ref: content changed
     }) return current
     val frame =
       if (from == 0)
-        read(spark, table, current)
+        s.read(s.files).drop(RowIdCol)
           .withColumn(ChangeTypeCol, lit("insert"))
           .withColumn(CommitVersionCol, lit(current))
-      else rowChanges(spark, table, from, current)
+      else rowChangesOf(spark, s, from)
     deliver(frame, from, current)
     commitConsumerOffset(spark, table, key, current)
   }
@@ -5216,25 +5104,21 @@ object ManifestTable {
                     snapB.dvs.getOrElse(f, Seq.empty)).map(_.rows).sum
               else sub0.count(), 1L)
             val bpr = math.max(selBytes / subRows, 1L)
-            val fresh = writeSnapshot(fs, p,
-              toPhysical(sub, t.mapping), t.next, t.parts,
+            val phys = toPhysical(sub, t.mapping)
+            val fresh = writeSnapshot(fs, p, phys, t.next, t.parts,
               math.max(targetFileBytes / bpr, 1L))
             result = Sinks.CompactStats(before.size,
               before.size - selected.size + fresh.size, selBytes)
             Some(commit.copy(add = fresh,
-              stats = collectStats(spark, p, fresh, t.props),
+              stats = collectStats(spark, p, fresh, t.props, phys.schema),
               remove = selected))
           }
         case None => // whole-table compaction: a replace
           val totalBytes = snapshotBytes(fs, p, before, snapB.stats)
           // the internal funnel, not read(): a compaction must carry
           // the hidden row-id column through (ids survive
-          // reorganizations). An EMPTY snapshot still reads TYPED
-          // (readFiles([]) is a zero-column frame the write path would
-          // refuse)
-          val df0 =
-            if (snapB.files.isEmpty) emptyTyped(spark, fs, p, t.base)
-            else t.read(snapB.files)
+          // reorganizations). An EMPTY snapshot reads TYPED
+          val df0 = t.read(snapB.files)
           val df =
             if (clusterBy.isEmpty) df0
             else {
@@ -5251,13 +5135,15 @@ object ManifestTable {
           val bytesPerRow = math.max(totalBytes / totalRows, 1L)
           // physical names, as every rewrite writes: a renamed column
           // written under its logical name would read null afterwards
-          val files = writeSnapshot(fs, p, toPhysical(df, t.mapping), t.next,
-            t.parts, math.max(targetFileBytes / bytesPerRow, 1L))
+          val phys = toPhysical(df, t.mapping)
+          val files = writeSnapshot(fs, p, phys, t.next, t.parts,
+            math.max(targetFileBytes / bytesPerRow, 1L))
           result = Sinks.CompactStats(before.size, files.size, totalBytes)
           // incremental consumers skip this commit instead of
           // redelivering the table
           Some(commit.copy(add = files,
-            stats = collectStats(spark, p, files, t.props), replace = true))
+            stats = collectStats(spark, p, files, t.props, phys.schema),
+            replace = true))
       }
     }
     result
@@ -5349,13 +5235,13 @@ object ManifestTable {
                 clusterCols.map(c => col(c).asc): _*)
                 .sortWithinPartitions(clusterCols.map(c => col(c).asc): _*)
             }
-          val fresh = writeSnapshot(t.fs, t.p, toPhysical(sub, t.mapping),
-            t.next, t.parts, 0L)
+          val phys = toPhysical(sub, t.mapping)
+          val fresh = writeSnapshot(t.fs, t.p, phys, t.next, t.parts, 0L)
           Some(t.commit("auto-compact",
             "smallFiles" -> smallSel.size.toString,
             "dvFiles" -> shadowed.size.toString,
             "targetFileBytes" -> target.toString).copy(add = fresh,
-            stats = collectStats(spark, t.p, fresh, t.props),
+            stats = collectStats(spark, t.p, fresh, t.props, phys.schema),
             remove = selected,
             dataChange = false)) // same logical rows, fewer files
         }
@@ -5496,9 +5382,9 @@ object ManifestTable {
     require(unknown.isEmpty,
       s"UPDATE sets unknown column(s) ${unknown.mkString(", ")} — " +
         "add columns by appending data that carries them")
-    refuseSynthesizedTargets(set.keySet, t.recorded, t.table, "UPDATE")
+    refuseSynthesizedTargets(set.keySet, t.snap.schema, t.table, "UPDATE")
     recomputeGenerated(f.select(cols.map(c => set.get(c).fold(col(c))(v =>
-      hit.fold(v)(when(_, v).otherwise(col(c))).as(c))): _*), t.recorded)
+      hit.fold(v)(when(_, v).otherwise(col(c))).as(c))): _*), t.snap.schema)
   }
 
   /** The audit's file count: files rewritten, or files given vectors. */
@@ -5511,7 +5397,7 @@ object ManifestTable {
     * see the SAME ids.
     */
   private def drawIds(df: DataFrame, t: Txn): (DataFrame, Seq[(String, Long)]) = {
-    val (withIds, ids) = fillIdentity(df, t.recorded, t.props)
+    val (withIds, ids) = fillIdentity(df, t.snap.schema, t.props)
     val (filled, rowIds) = fillRowIds(withIds, t.props)
     val drawn = ids ++ rowIds
     (if (drawn.isEmpty) filled else filled.localCheckpoint(), drawn)
@@ -5579,18 +5465,17 @@ object ManifestTable {
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
     // type changes abort BEFORE any commit (the lake contract)
     val checked = if (c.post.isDefined) written else inserts.map(_._1)
-    val schema = checked.fold(t.recorded) { f =>
+    val schema = checked.fold(t.snap.schema) { f =>
       val e = enforceSchema(t.recorded, f.schema, t.table)
-      Some(if (inserts.isEmpty) e
-        else stampNewFields(e, t.recorded.exists(columnMapped)))
+      if (inserts.isEmpty) e else stampNewFields(e, t.mapping.nonEmpty)
     }
     // when the change sets values the checked rows are the written ones,
     // pinned if constraints exist (SET expressions may be rand-bearing);
     // inserts arrive pinned already
     val out = checked.map(f => applyExpectations(f, c.expect ++
-      contracts(t.props, schema, f.columns.toSeq, t.table), t.table,
+      contracts(t.props, Some(schema), f.columns.toSeq, t.table), t.table,
       pin = c.post.isDefined)._1)
-    val mapping = schema.filter(columnMapped)
+    val mapping = Some(schema).filter(columnMapped)
     val dvs: Map[String, Seq[DvRef]] =
       if (byFile.isEmpty) Map.empty
       else {
@@ -5599,10 +5484,11 @@ object ManifestTable {
           .write.parquet(s"${t.table}/$dir")
         byFile.map(r => rel(r) -> Seq(DvRef(dir, r.getLong(1)))).toMap
       }
-    val fresh = (if (c.post.isDefined) out else written).fold(Seq.empty[String])(
-      w => writeSnapshot(t.fs, t.p, toPhysical(w, mapping), t.next, t.parts, 0L))
+    val phys = (if (c.post.isDefined) out else written).map(toPhysical(_, mapping))
+    val fresh = phys.fold(Seq.empty[String])(
+      writeSnapshot(t.fs, t.p, _, t.next, t.parts, 0L))
     val cdc =
-      if (!changeFeedOn(t.m)) None
+      if (!changeFeedOn(t.props)) None
       else {
         // PAIRED update tags (the Delta CDF contract, VERDICT r18 #5):
         // consumers read pre/post images directly instead of
@@ -5616,9 +5502,10 @@ object ManifestTable {
           .reduceOption(_.unionByName(_, allowMissingColumns = true))
           .map(writeChangeDir(t.spark, t.p, t.next, _))
       }
-    val stats = collectStats(t.spark, t.p, fresh, t.props)
+    val stats = collectStats(t.spark, t.p, fresh, t.props,
+      phys.fold(schema)(_.schema))
     Some(Commit(fresh, stats, if (mor) Seq.empty else hits, dvs,
-      if (checked.isEmpty) t.m.flatMap(_.schemaJson) else schema.map(_.json),
+      if (checked.isEmpty) t.snap.manifest.schemaJson else schema.json,
       advanceIdentity(t.spark, t.p, fresh, stats, mapping, t.props,
         inserts.toSeq.flatMap(_._2)),
       cdc, op(if (mor) dvs.size else hits.size), autoCompact = mor))
@@ -5715,17 +5602,24 @@ object ManifestTable {
     // non-deterministic input could pass the checks on one evaluation
     // then write rows outside the declared slice from another
     // (deterministic + contract-free stays lazy — ADVICE r15 low)
-    val pinned = pinIfNeeded(spark, df, table)
-    // the incoming rows must live INSIDE the slice they replace
-    val outRow = pinned.agg(sum(when(coalesce(condition, lit(false)), 0L)
-      .otherwise(1L))).head()
-    val outside = if (outRow.isNullAt(0)) 0L else outRow.getLong(0)
-    if (outside > 0) throw new IllegalArgumentException(
-      s"replaceWhere into $table: $outside incoming row(s) do not " +
-        s"satisfy the replace condition ($condition) — writing them " +
-        "would widen the replacement beyond the declared slice; " +
-        "filter the input or widen the condition")
+    val pin = pinOnDemand(df)
+    var sliceChecked = false
     transact(spark, table, maxAttempts) { t =>
+      val pinned = pin(t)
+      // the incoming rows must live INSIDE the slice they replace —
+      // checked once: a later attempt's pin re-evaluates a frame whose
+      // rows cannot differ (an unpinned first attempt means a stable plan)
+      if (!sliceChecked) {
+        val outRow = pinned.agg(sum(when(coalesce(condition, lit(false)),
+          0L).otherwise(1L))).head()
+        val outside = if (outRow.isNullAt(0)) 0L else outRow.getLong(0)
+        if (outside > 0) throw new IllegalArgumentException(
+          s"replaceWhere into $table: $outside incoming row(s) do not " +
+            s"satisfy the replace condition ($condition) — writing them " +
+            "would widen the replacement beyond the declared slice; " +
+            "filter the input or widen the condition")
+        sliceChecked = true
+      }
       // generated/identity synthesis for the REPLACEMENT rows, pinned
       // when identity is drawn so the write and the CDC image carry
       // the same ids
@@ -5785,17 +5679,14 @@ object ManifestTable {
       // unpublished orphans, vacuum's problem
       if (replayed(t, txn)) None
       else {
-        require(!t.recorded.exists(columnMapped),
+        require(t.mapping.isEmpty,
           s"dynamic partition overwrite on column-mapped $table is not " +
             "supported — the V2 writer stages logical-named files; use " +
             "replaceWhere")
         // staged bytes cannot take synthesized identity/generated
         // values after the fact — refuse rather than publish nulls
-        require(t.recorded.forall(s =>
-          !org.apache.spark.sql.catalyst.util.GeneratedColumn
-            .hasGeneratedColumns(s) &&
-          !org.apache.spark.sql.catalyst.util.IdentityColumn
-            .hasIdentityColumns(s)),
+        require(generatedOf(t.snap.schema).isEmpty &&
+          identityOf(t.snap.schema).isEmpty,
           s"dynamic partition overwrite on $table cannot synthesize its " +
             "GENERATED/IDENTITY columns (the writer staged the files " +
             "already) — use replaceWhere or INSERT OVERWRITE")
@@ -5808,7 +5699,7 @@ object ManifestTable {
         applyExpectations(rows, contracts(t.props, t.recorded,
           rows.columns.toSeq, table), table, pin = false): Unit
         val cdc =
-          if (!changeFeedOn(t.m)) None
+          if (!changeFeedOn(t.props)) None
           else {
             val ins = rows.withColumn(ChangeTypeCol, lit("insert"))
             Some(writeChangeDir(spark, t.p, t.next,
@@ -5816,8 +5707,9 @@ object ManifestTable {
               else t.read(remove).withColumn(ChangeTypeCol, lit("delete"))
                 .unionByName(ins, allowMissingColumns = true)))
           }
-        Some(Commit(staged, collectStats(spark, t.p, staged, t.props), remove,
-          Map.empty, t.m.flatMap(_.schemaJson), t.props, cdc,
+        Some(Commit(staged,
+          collectStats(spark, t.p, staged, t.props, rows.schema), remove,
+          Map.empty, t.snap.manifest.schemaJson, t.props, cdc,
           t.op("dynamic-overwrite", "partitions" -> touched.size.toString,
             "replacedFiles" -> remove.size.toString),
           txns = Some(t.txns ++ txn)))
@@ -6138,7 +6030,7 @@ object ManifestTable {
     // (the parquet read's AnalysisException) is the same refusal as
     // missing data files, with the same guidance
     val snap =
-      try resolve(t.spark, fs, p, version, t.checkpoints)
+      try { val s = t.snap.at(version); s.files; s }
       catch {
         case e @ (_: java.io.FileNotFoundException |
             _: org.apache.spark.sql.AnalysisException) =>
@@ -6167,15 +6059,13 @@ object ManifestTable {
           s"${missing.size} data file(s) and ${missingDvs.size} DV " +
           s"sidecar(s) no longer exist (vacuumed past v$version) — " +
           s"first missing: ${(missing ++ missingDvs).headOption.getOrElse("")}")
-    // schema/layout/props as of n; txn watermarks stay current
-    val mOld = manifestAt(fs, p, version)
+    // schema/layout/props as of n; txn watermarks stay current.
     // identity watermarks NEVER regress (the Delta restore contract):
     // the restored snapshot's rows reclaim old ids, but values already
     // handed out since then must stay burned — restoring the old
     // next-value would re-issue them to post-restore inserts
-    val oldProps = mOld.map(_.props).getOrElse(Map.empty)
-    val restoredProps0 = identityOf(recordedSchema(mOld))
-      .foldLeft(oldProps) { case (ps, (f, spec)) =>
+    val restoredProps0 = identityOf(snap.schema)
+      .foldLeft(snap.props) { case (ps, (f, spec)) =>
         val key = identityNextKey(f.name)
         (ps.get(key).flatMap(_.toLongOption),
             t.props.get(key).flatMap(_.toLongOption)) match {
@@ -6198,9 +6088,9 @@ object ManifestTable {
       }
     }
     Commit(snap.files, snap.stats, dvs = snap.dvs,
-      schemaJson = mOld.flatMap(_.schemaJson), props = restoredProps,
+      schemaJson = snap.manifest.schemaJson, props = restoredProps,
       op = t.op("restore", "toVersion" -> version.toString), replace = true,
-      parts = Some(mOld.map(_.parts).getOrElse(Seq.empty)))
+      parts = Some(snap.parts))
   }
 
   /** Does the current (or given) snapshot carry deletion vectors?
@@ -6209,7 +6099,7 @@ object ManifestTable {
     */
   def hasDeletionVectors(spark: SparkSession, table: String,
       version: Long = -1L): Boolean =
-    resolveAt(spark, table, version)._4.dvs.nonEmpty
+    snapshot(spark, table, version).dvs.nonEmpty
 
   /** Row-level MERGE (upsert), copy-on-write: for each `source` row,
     * replace the table row with the same `keyCols` value (whole-row
@@ -6294,8 +6184,8 @@ object ManifestTable {
   private def upsertRows(t: Txn, src: DataFrame, keyCols: Seq[String],
       olds: Option[DataFrame]): (DataFrame, Seq[(String, Long)]) = {
     import org.apache.spark.sql.functions.{coalesce, col}
-    val gens = recomputeGenerated(src, t.recorded)
-    val names = identityOf(t.recorded).map(_._1.name) ++
+    val gens = recomputeGenerated(src, t.snap.schema)
+    val names = identityOf(t.snap.schema).map(_._1.name) ++
       (if (rowTracking(t.props)) Seq(RowIdCol) else Seq.empty)
     val inherited = olds.filter(_ => names.nonEmpty).fold(gens) { o =>
       val have = names.filter(o.columns.contains)
@@ -6465,24 +6355,23 @@ object ManifestTable {
       // the clauses applied to target rows: DELETE-clause rows leave,
       // UPDATE-clause rows take their SET, the rest pass; generated
       // dependents of updated inputs regenerate ([[recomputeGenerated]])
-      def applied(target: DataFrame,
-          rec: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+      def applied(target: DataFrame): DataFrame =
         recomputeGenerated(joined(target).filter(!del)
           .select(targetCols(target).map { c =>
             ups.foldRight(col(s"t.$c")) { case ((a, set), acc) =>
               set.get(c).fold(acc)(v => when(a, v).otherwise(acc))
             }.as(c)
-          }: _*), rec)
+          }: _*), t.snap.schema)
       // synthesized columns are not assignment targets: UPDATE-shaped
       // clauses never touch them (generated recompute, identity is
       // immutable), INSERT clauses may assign a BY DEFAULT identity
       refuseSynthesizedTargets(
         (matched.flatMap(_.set.toSeq.flatMap(_.keys)) ++
           bySource.flatMap(_.set.toSeq.flatMap(_.keys))).toSet,
-        t.recorded, table, "MERGE UPDATE")
+        t.snap.schema, table, "MERGE UPDATE")
       refuseSynthesizedTargets(
         notMatched.flatMap(_.values.keys).toSet,
-        t.recorded, table, "MERGE INSERT", allowByDefaultIdentity = true)
+        t.snap.schema, table, "MERGE INSERT", allowByDefaultIdentity = true)
       // candidate files: those that could hold a matched key, plus —
       // when by-source clauses exist — those where a by-source
       // condition could hold (an unconditioned clause keeps them all)
@@ -6524,35 +6413,24 @@ object ManifestTable {
           val applies =
             firstMatch(lit(true), notMatched.map(c => c.condition -> c.values))
           // insert rows take the TARGET schema: assigned columns from
-          // the clause, the rest null (cast to the recorded types); on a
-          // legacy table without a recorded schema the insert must
-          // assign every column it wants, typed by the values
-          def value(c: String,
-              typed: Option[org.apache.spark.sql.types.DataType]): Column =
-            applies.foldRight(typed.fold(lit(null))(lit(null).cast(_))) {
-              case ((a, values), acc) => values.get(c).fold(acc)(v =>
-                when(a, typed.fold(v)(v.cast(_))).otherwise(acc))
-            }.as(c)
-          val out = t.recorded match {
-            case Some(rec) => rec.fields.toSeq.map(f =>
-              value(f.name, Some(f.dataType)))
-            case None =>
-              val assigned = applies.flatMap(_._2.keys).distinct
-              require(assigned.nonEmpty, "INSERT clause assigns no columns")
-              assigned.map(value(_, None))
-          }
+          // the clause, the rest null (cast to the recorded types)
+          val out = t.snap.schema.fields.toSeq.map(f =>
+            applies.foldRight(lit(null).cast(f.dataType)) {
+              case ((a, values), acc) => values.get(f.name).fold(acc)(v =>
+                when(a, v.cast(f.dataType)).otherwise(acc))
+            }.as(f.name))
           Some(unmatched.filter(applies.map(_._1).reduce(_ || _))
             .select(out: _*))
         }
       val mor = t.mor(MergeModeProp)
       rewriteRows(t, mor, RowChange((keyCand ++ bySourceCand).distinct.sorted,
         joined(_).filter(anyChange).select("t.*"),
-        applied(_, t.recorded), post = Some(applied(_, t.recorded)),
+        applied, post = Some(applied),
         // inserted rows synthesize their generated values and draw
         // identity and row ids; matched rows keep theirs through the
         // rewrite and post-image projections
         inserts = inserts.map(i => _ =>
-          drawIds(recomputeGenerated(i, t.recorded), t)),
+          drawIds(recomputeGenerated(i, t.snap.schema), t)),
         changes = Some { (hits, pre) =>
           // merge-on-read: the clause join is EXACT — delete-clause
           // rows tag delete, update-clause rows paired pre/post images.
@@ -6563,11 +6441,11 @@ object ManifestTable {
               .otherwise(lit("update_preimage")))
             .select(targetCols(pre).map(c => col(s"t.$c").as(c)) :+
               col(ChangeTypeCol): _*)
-            .unionByName(applied(pre, t.recorded)
+            .unionByName(applied(pre)
               .withColumn(ChangeTypeCol, lit("update_postimage")))
           else {
             val old = t.read(hits)
-            val rw = applied(old, t.recorded)
+            val rw = applied(old)
             old.exceptAll(rw).withColumn(ChangeTypeCol, lit("delete"))
               .unionByName(rw.exceptAll(old)
                 .withColumn(ChangeTypeCol, lit("insert")))
@@ -6644,20 +6522,18 @@ object ManifestTable {
       else {
         val targets: Seq[String] =
           if (columns.nonEmpty) columns
-          else t.recorded.map(_.fields.toSeq).getOrElse(Seq.empty)
-            .filterNot(_.dataType match {
-              case _: StructType | _: ArrayType | _: MapType => true
-              case _ => false
-            }).map(_.name)
+          else snap.schema.fields.toSeq.filterNot(_.dataType match {
+            case _: StructType | _: ArrayType | _: MapType => true
+            case _ => false
+          }).map(_.name)
         require(targets.nonEmpty,
           s"analyze of $table has no sketchable columns (pass them explicitly)")
         // only files that HAVE base stats (the row count anchors the
         // entry) and still miss a target sketch — incremental re-analyze.
         // Sketches key by PHYSICAL name — the namespace the footer
         // stats use, remapped to logical at read time
-        val phys: Map[String, String] = t.recorded
-          .map(_.fields.map(f => f.name -> physicalOf(f)).toMap)
-          .getOrElse(Map.empty)
+        val phys: Map[String, String] =
+          snap.schema.fields.map(f => f.name -> physicalOf(f)).toMap
         val allTodo = snap.files.filter(f => snap.stats.get(f)
           .exists(st => targets.exists(c =>
             !st.ndv.contains(phys.getOrElse(c, c)))))
@@ -6675,8 +6551,7 @@ object ManifestTable {
           // immutable FILE, so they stay valid across later DV churn;
           // the report-time union over live files is an upper-bound
           // estimate
-          val tagged = readFiles(spark, table, todo, Map.empty, t.recorded,
-            t.props, keepIdentity = true)
+          val tagged = snap.read(todo, Map.empty, keepIdentity = true)
           val aggs = targets.map(c =>
             hll_sketch_agg(col(c).cast("string"), lgK).as(c))
           val rows = tagged.groupBy(col(DvFileCol))
@@ -6967,13 +6842,15 @@ object ManifestTable {
     val retained = (math.max(1L, v - keepVersions + 1) to v).filter(vset)
     val floor = retained.min
     val report = Seq.newBuilder[(String, String)]
+    // one snapshot per retained version, resolved against this listing
+    val latest = new Snapshot(spark, table, fs, p, v, readManifest(fs, p, v), cs)
+    val retainedSnaps = retained.map(latest.at(_))
     // the consumer guard: a registered cursor at `ver` needs manifests
     // and add-files of versions > ver — both leave with this retention
-    val lagging = manifestAt(fs, p, v).map(_.txns).getOrElse(Map.empty)
-      .collect {
-        case (k, ver) if k.startsWith("consumer:") && ver + 1 < floor =>
-          k.stripPrefix("consumer:") -> ver
-      }.toSeq.sortBy(_._1)
+    val lagging = latest.txns.collect {
+      case (k, ver) if k.startsWith("consumer:") && ver + 1 < floor =>
+        k.stripPrefix("consumer:") -> ver
+    }.toSeq.sortBy(_._1)
     if (lagging.nonEmpty) {
       if (dryRun) lagging.foreach { case (id, ver) =>
         report += "orphaned-consumer" ->
@@ -7001,7 +6878,7 @@ object ManifestTable {
     // log-prefix deletion below is GATED on the floor actually being
     // self-basing afterward: pruning the prefix under a delta floor
     // with no checkpoint would leave the whole table unresolvable.
-    val floorIsDelta = readManifest(fs, p, floor) match {
+    val floorIsDelta = retainedSnaps.head.manifest match {
       case _: Delta => true
       case _ => false // Replace and Ref bases are self-basing
     }
@@ -7015,8 +6892,7 @@ object ManifestTable {
     // ([[cloneTable]]'s protection markers) are live whatever the
     // retention says — reclaiming them would break the clone's reads
     val (cloneFiles, cloneDvs, cloneBlooms) = cloneMarkerRefs(fs, p)
-    val retainedLive = retained
-      .flatMap(ver => currentFiles(spark, table, ver)).toSet
+    val retainedLive = retainedSnaps.flatMap(_.files).toSet
     if (dryRun) {
       // observability: the dry run names what ONLY clone markers keep
       // alive, so an operator sees why retention isn't reclaiming it
@@ -7065,7 +6941,6 @@ object ManifestTable {
     val delDir = new Path(p, "deletes")
     val bloomDir = new Path(p, "blooms")
     if (fs.exists(delDir) || fs.exists(bloomDir)) {
-      val retainedSnaps = retained.map(ver => resolve(spark, fs, p, ver, cs))
       if (fs.exists(delDir)) {
         val liveDv: Set[String] = retainedSnaps.flatMap(
           _.dvs.values.flatten.map(_.path)).toSet ++ cloneDvs
@@ -7130,7 +7005,9 @@ object ManifestTable {
         .filter(st => st.isFile && st.getPath.getName.endsWith(".json") &&
           !slatedHeads.contains(st.getPath.toString))
         .flatMap { st =>
-          try Some(parseManifest(readJson(fs, st.getPath)))
+          val ver = st.getPath.getName.drop(1).stripSuffix(".json")
+          try Some(parseManifest(readJson(fs, st.getPath),
+            ver.toLongOption.getOrElse(-1L)))
           catch { case _: java.io.IOException => None }
         }
       val liveRefs: Set[String] =

@@ -33,10 +33,8 @@ import graft.sinks.DataSkipping.FileStats
   * the schema the manifest records, which `ManifestTable` passes in
   * physical names: the parquet reader widens narrow file types
   * natively and fills a column older files lack with its
-  * EXISTS_DEFAULT or null. Only tables written before schema
-  * recording fall back to a parallel footer merge. Every
-  * `ManifestTable` snapshot read, the DSv2 catalog and the streaming
-  * source plan over this relation.
+  * EXISTS_DEFAULT or null. Every `ManifestTable` snapshot read, the
+  * DSv2 catalog and the streaming source plan over this relation.
   *
   * Lives in the `org.apache.spark.sql` package for the same reason the
   * lake formats' equivalents do: [[HadoopFsRelation]]/[[FileIndex]]
@@ -45,7 +43,7 @@ import graft.sinks.DataSkipping.FileStats
 object GraftManifestScan {
 
   /** One manifest data file: table-relative path, its on-disk status,
-    * its manifest statistics (None = legacy/unknown → never pruned),
+    * its manifest statistics (None = stats-less → never pruned),
     * and its partition values in `partCols` order (None = null).
     */
   final case class ManifestFile(rel: String, status: FileStatus,
@@ -91,7 +89,7 @@ object GraftManifestScan {
       tableRoot: Path,
       files: Seq[ManifestFile],
       val partitionSchema: StructType,
-      recordedSchema: Option[StructType] = None) extends FileIndex {
+      recordedSchema: StructType) extends FileIndex {
 
     override def rootPaths: Seq[Path] = Seq(tableRoot)
 
@@ -189,18 +187,16 @@ object GraftManifestScan {
     * the relation builder and the DSv2 catalog table. Partition types
     * come from the recorded schema when the dir-string codec covers
     * them, else from value inference; the data schema is the recorded
-    * schema minus partition columns (falling back to the parallel
-    * footer merge for pre-schema-on-commit tables), relaxed to
-    * nullable for add-column evolution.
+    * schema minus partition columns, relaxed to nullable for
+    * add-column evolution.
     */
-  private[sql] def schemasOf(cs: classic.SparkSession,
-      files: Seq[ManifestFile], partCols: Seq[String],
-      recordedSchema: Option[StructType]): (StructType, StructType) = {
+  private[sql] def schemasOf(files: Seq[ManifestFile], partCols: Seq[String],
+      recordedSchema: StructType): (StructType, StructType) = {
     val partitionSchema = StructType(partCols.zipWithIndex.map {
       case (c, i) =>
         // the recorded schema knows the TRUE partition type; fall back
         // to value inference for types the dir-string codec lacks
-        val dt = recordedSchema.flatMap(_.fields.find(_.name == c))
+        val dt = recordedSchema.fields.find(_.name == c)
           .map(_.dataType) match {
           case Some(t @ (ByteType | ShortType | IntegerType | LongType |
               FloatType | DoubleType | BooleanType | DateType |
@@ -212,35 +208,27 @@ object GraftManifestScan {
         }
         StructField(c, dt)
     })
-    val statuses = files.map(_.status)
     // asNullable: a column added by evolution is ABSENT from older
     // files — the scan can only fill nulls if the read schema allows
     // them (the same relaxation Spark's file-source resolution applies)
-    val dataSchema = (recordedSchema match {
-      case Some(s) =>
-        StructType(s.fields.filterNot(f => partCols.contains(f.name)))
-      case None => ParquetFileFormat
-        .mergeSchemasInParallel(Map.empty[String, String], statuses, cs)
-        .getOrElse(StructType(Nil))
-    }).asNullable
+    val dataSchema = StructType(recordedSchema.fields
+      .filterNot(f => partCols.contains(f.name))).asNullable
     (dataSchema, partitionSchema)
   }
 
   /** Build the scan DataFrame over a resolved snapshot. `partCols` is
     * the partition layout; files carry their pre-parsed partition
     * values. `recordedSchema` is the manifest's schema-on-commit
-    * record: when present it IS the scan schema — O(1) instead of the
-    * O(files) distributed footer merge, and authoritative under
-    * evolution (the merge stays as the fallback for tables written
-    * before schema recording).
+    * record, and it IS the scan schema: O(1), never a footer read, and
+    * authoritative under evolution.
     */
   def relation(spark: SparkSession, tableRoot: Path,
       files: Seq[ManifestFile], partCols: Seq[String],
-      recordedSchema: Option[StructType] = None,
+      recordedSchema: StructType,
       isStreaming: Boolean = false): DataFrame = {
     val cs = spark.asInstanceOf[classic.SparkSession]
     val (dataSchema, partitionSchema) =
-      schemasOf(cs, files, partCols, recordedSchema)
+      schemasOf(files, partCols, recordedSchema)
     val index = new ManifestFileIndex(tableRoot, files, partitionSchema,
       recordedSchema)
     val rel = HadoopFsRelation(index, partitionSchema, dataSchema,

@@ -74,7 +74,7 @@ object GraftTableV2 {
       tableRoot: Path,
       files: Seq[ManifestFile],
       partSchema: StructType,
-      recordedSchema: Option[StructType] = None)
+      recordedSchema: StructType)
     extends PartitioningAwareFileIndex(cs, Map.empty, None,
       FileStatusCache.getOrCreate(cs)) {
 
@@ -226,8 +226,7 @@ object GraftTableV2 {
           "read via ManifestTable.read/scan")
       val cs = SparkSession.active.asInstanceOf[classic.SparkSession]
       new GraftStatsScanBuilder(cs,
-        new SnapshotFileIndex(cs, tableRoot, files, partSchema,
-          Some(schema)),
+        new SnapshotFileIndex(cs, tableRoot, files, partSchema, schema),
         schema, dataSchema, options, files, tblProps)
     }
 
@@ -1014,14 +1013,11 @@ object GraftTableV2 {
     */
   def load(spark: SparkSession, ident: String, tablePath: String,
       version: Long = -1L): Table = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    val (root, files, parts, recorded, dvDirs, v) =
-      ManifestTable.resolvedScan(spark, tablePath, version)
+    val s = ManifestTable.snapshot(spark, tablePath, version)
     val (dataSchema, partSchema) =
-      GraftManifestScan.schemasOf(cs, files, parts, recorded)
-    new GraftV2Table(ident, tablePath, root, files, parts, dataSchema,
-      partSchema, dvDirs, v,
-      recorded.exists(ManifestTable.columnMapped),
-      ManifestTable.tableProperties(spark, tablePath, v))
+      GraftManifestScan.schemasOf(s.manifestFiles, s.parts, s.schema)
+    new GraftV2Table(ident, tablePath, s.root, s.manifestFiles, s.parts,
+      dataSchema, partSchema, s.dvDirs, s.version, s.mapping.nonEmpty,
+      s.props)
   }
 }

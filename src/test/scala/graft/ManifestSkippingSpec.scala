@@ -187,7 +187,8 @@ class ManifestSkippingSpec extends AnyFunSuite with SparkSuite {
     // commit v2 re-listing the same files WITHOUT stats (the legacy/
     // foreign-writer shape): pruning must keep everything
     val files = ManifestTable.currentFiles(spark, t)
-    assert(ManifestTable.commitManifest(fsP, p, 2L, files))
+    assert(ManifestTable.commitManifest(fsP, p, 2L, files,
+      ManifestTable.tableSchema(spark, t).get.json))
     val (kept, total) = ManifestTable.skippingReport(spark, t, col("id") === 57L)
     assert(kept == total && total == 5)
     assert(ManifestTable.readWhere(spark, t, col("id") === 57L).count() == 1)
@@ -424,7 +425,8 @@ class ManifestSkippingSpec extends AnyFunSuite with SparkSuite {
     val p = new Path(t)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(ManifestTable.commitManifest(fs, p, 2L,
-      ManifestTable.currentFiles(spark, t)))
+      ManifestTable.currentFiles(spark, t),
+      ManifestTable.tableSchema(spark, t).get.json))
     assert(ManifestTable.columnBounds(spark, t, "id").isEmpty)
   }
 

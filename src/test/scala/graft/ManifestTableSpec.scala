@@ -286,7 +286,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSuite {
     assert(ManifestTable.read(spark, t).count() == 4)
   }
 
-  test("URI-shaped txn app ids (colons) round-trip; legacy streamBatchId manifests still honored") {
+  test("URI-shaped txn app ids (colons) round-trip; pre-format-2 manifests are refused") {
     val t = freshTable()
     // colons in the app id — streamInto's default is a checkpoint URI
     val app = "file:/tmp/ckpt:q1"
@@ -300,23 +300,43 @@ class ManifestTableSpec extends AnyFunSuite with SparkSuite {
       batchId = 1L, txnAppId = app) == v) // replay no-op
     assert(ManifestTable.read(spark, t).count() == 9)
 
-    // a pre-txn-map manifest (single streamBatchId) maps to the
-    // default app, so an upgrade does not drop the watermark
+    // a pre-format-2 manifest (no "fmt" marker, a single streamBatchId)
+    // is refused with the version named, by readers and writers alike
     val t2 = freshTable()
     ManifestTable.write(spark, df(5, "a"), t2)
-    val p2 = new org.apache.hadoop.fs.Path(t2)
-    val fs = p2.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new org.apache.hadoop.fs.Path(t2)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = ManifestTable.currentFiles(spark, t2)
       .map("\"" + _ + "\"").mkString(",")
     val legacy = new org.apache.hadoop.fs.Path(t2, "_manifests/v000000000002.json")
     val out = fs.create(legacy, false)
     out.write(s"""{"version":2,"files":[$files],"streamBatchId":7}"""
       .getBytes("UTF-8")); out.close()
-    assert(ManifestTable.lastStreamBatchId(spark, t2).contains(7L))
-    val v2 = ManifestTable.currentVersion(spark, t2)
-    assert(ManifestTable.appendStreamBatch(spark, df(2, "x"), t2,
-      batchId = 7L) == v2) // already folded in per the legacy watermark
-    assert(ManifestTable.read(spark, t2).count() == 5)
+    Seq[() => Any](() => ManifestTable.read(spark, t2),
+      () => ManifestTable.lastStreamBatchId(spark, t2),
+      () => ManifestTable.appendStreamBatch(spark, df(2, "x"), t2,
+        batchId = 7L)).foreach { op =>
+      val e = intercept[java.io.IOException](op())
+      assert(e.getMessage.contains("manifest v2 has no format marker"),
+        e.getMessage)
+    }
+  }
+
+  test("a format-2 manifest without a recorded schema is refused") {
+    val t = freshTable()
+    ManifestTable.write(spark, df(5, "a"), t)
+    val fs = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = ManifestTable.currentFiles(spark, t)
+      .map("\"" + _ + "\"").mkString(",")
+    val out = fs.create(
+      new org.apache.hadoop.fs.Path(t, "_manifests/v000000000002.json"), false)
+    out.write(s"""{"fmt":2,"version":2,"files":[$files]}""".getBytes("UTF-8"))
+    out.close()
+    val e = intercept[java.io.IOException](ManifestTable.read(spark, t))
+    assert(e.getMessage.contains("manifest v2 records no schema"), e.getMessage)
+    // the versions before it still read
+    assert(ManifestTable.read(spark, t, version = 1).count() == 5)
   }
 
   test("stream watermark survives batch commits: replay after compact is a no-op") {
@@ -445,8 +465,13 @@ class ManifestTableSpec extends AnyFunSuite with SparkSuite {
         1000L)
     }.toMap
     spark.conf.set("spark.graft.manifest.refThreshold", "1000")
+    val schemaJson = {
+      import org.apache.spark.sql.types._
+      StructType(Seq(StructField("id", LongType), StructField("tag", StringType),
+        StructField("bucket", IntegerType))).json
+    }
     assert(ManifestTable.commitFullList(spark, fs, p, 1L, files,
-      Map("app" -> 7L), stats, Seq.empty, None),
+      Map("app" -> 7L), stats, Seq.empty, schemaJson),
       "the >threshold full-list commit must succeed")
     // the committed head is a TINY pointer, not a 12k-entry tree
     val head = scala.io.Source.fromFile(
@@ -494,7 +519,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSuite {
     spark.conf.set("spark.graft.manifest.refThreshold", "100000")
     try {
       assert(ManifestTable.commitFullList(spark, fs, p2, 1L, files,
-        Map.empty, stats, Seq.empty, None))
+        Map.empty, stats, Seq.empty, schemaJson))
       val t1 = System.nanoTime()
       assert(ManifestTable.currentFiles(spark, t2dir).size == 12000)
       val inlineMs = (System.nanoTime() - t1) / 1000000
@@ -589,8 +614,9 @@ class ManifestTableSpec extends AnyFunSuite with SparkSuite {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // two writers race the SAME next version: exactly one commit wins,
     // the loser's rename fails and its staged file is cleaned up
-    assert(ManifestTable.commitManifest(fs, p, 2L, v1files))
-    assert(!ManifestTable.commitManifest(fs, p, 2L, Seq.empty))
+    val schemaJson = ManifestTable.tableSchema(spark, t).get.json
+    assert(ManifestTable.commitManifest(fs, p, 2L, v1files, schemaJson))
+    assert(!ManifestTable.commitManifest(fs, p, 2L, Seq.empty, schemaJson))
     assert(ManifestTable.currentFiles(spark, t, version = 2) == v1files)
     assert(fs.listStatus(new org.apache.hadoop.fs.Path(p, "_manifests"))
       .forall(!_.getPath.getName.contains(".tmp-")), "staged file leaked")

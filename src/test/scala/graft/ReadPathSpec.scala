@@ -201,4 +201,28 @@ class ReadPathSpec extends AnyFunSuite with SparkSuite {
     check(ManifestTable.read(spark, t), afterDelete, "read after compact")
     assert(rowIds() == ids0 - 4L, "row ids after compaction")
   }
+
+  test("an append to a bloom-indexed table reads its new files without footer inference") {
+    import spark.implicits._
+    val t = fresh()
+    val rows = (0 until 40).map(i => (i.toLong, s"k$i", i % 2))
+    // bloom filters declared on a data column AND on the partition
+    // column; the partition column lives in the paths, so it gets none.
+    // All columns nullable: no NOT NULL check adds jobs of its own
+    ManifestTable.create(spark, t, StructType(Seq(StructField("id", LongType),
+      StructField("key", StringType), StructField("part", IntegerType))),
+      Seq("part"), Map(ManifestTable.BloomColumnsProp -> "key,part"))
+    val jobs = jobsDuring {
+      ManifestTable.append(spark, rows.toDF("id", "key", "part"), t): Unit
+    }
+    // the write, the bloom aggregation's two stages and the read-back of
+    // the sidecar's (file, column) pairs; a footer-inference read of the
+    // new files would add one more
+    assert(jobs == 4, s"jobs of one bloom-indexed append: $jobs")
+    val stats = ManifestTable.fileStats(spark, t)
+    assert(stats.nonEmpty && stats.values.forall(_.bloom.keySet == Set("key")),
+      stats.values.map(_.bloom))
+    assert(ManifestTable.readWhere(spark, t, col("key") === "k7")
+      .collect().map(_.getLong(0)).toSeq == Seq(7L))
+  }
 }
