@@ -6,9 +6,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** Event-time analytics over the `events` fixture (SURVEY.md §2.2
-  * streaming row — batch windowing surface; the Structured Streaming
-  * twin of e01 lives in graft.streaming and is spec-tested against
-  * this batch result).
+  * streaming row — batch windowing surface).
+  *
+  * The analytics a stream shares are kernels over any events frame:
+  * [[e01TumblingOf]] and [[e06SessionWindowOf]]. The batch query
+  * applies a kernel to `Tables.events` and adds its presentation sort;
+  * `graft.streaming.StreamingOps` applies the same kernel to a
+  * watermarked `eventsStream` and drains it with `drain`.
   *
   * All three patterns are single-shuffle plans: tumbling/sliding
   * windows shuffle on (window, type) for the aggregate; sessionization
@@ -26,11 +30,15 @@ object EventOps {
     * divides a day, so the grids coincide.
     */
   def e01Tumbling(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.events(spark, sfDir)
+    e01TumblingOf(Tables.events(spark, sfDir))
+      .orderBy(col("ws").asc_nulls_last, col("event_type").asc_nulls_last)
+
+  /** e01's aggregate over any events frame, batch or watermarked stream. */
+  def e01TumblingOf(events: DataFrame): DataFrame =
+    events
       .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
       .select(col("w.start").as("ws"), col("event_type"), col("n"), col("total"))
-      .orderBy(col("ws").asc_nulls_last, col("event_type").asc_nulls_last)
 
   val e01Sql: String =
     """SELECT time_bucket(INTERVAL '6 hours', ts) AS ws, event_type,
@@ -115,12 +123,16 @@ object EventOps {
     * via the gap pattern and reconstructs the end bound.
     */
   def e06SessionWindow(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.events(spark, sfDir)
+    e06SessionWindowOf(Tables.events(spark, sfDir))
+      .orderBy(col("user_id").asc_nulls_last, col("session_start").asc_nulls_last)
+
+  /** e06's aggregate over any events frame, batch or watermarked stream. */
+  def e06SessionWindowOf(events: DataFrame): DataFrame =
+    events
       .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end_bound"), col("n_events"), col("total_value"))
-      .orderBy(col("user_id").asc_nulls_last, col("session_start").asc_nulls_last)
 
   val e06Sql: String =
     """WITH flagged AS (

@@ -31,8 +31,10 @@ object Tables {
     * the arriving type and normalize both to microsecond TIMESTAMP_NTZ
     * so every downstream operator sees identical values either way
     * (DuckDB reads the same file at micros precision, so oracle
-    * comparisons line up). The streaming twin of this guard is
-    * `StreamingOps.eventsStream`.
+    * comparisons line up). The batch event queries apply their kernels
+    * (`EventOps.e01TumblingOf`, `EventOps.e06SessionWindowOf`) to this
+    * frame; their streams apply the same kernels to
+    * `StreamingOps.eventsStream`, the same guard for streams.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     val raw = table(s, d, "events")

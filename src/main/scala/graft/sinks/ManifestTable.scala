@@ -4509,27 +4509,33 @@ object ManifestTable {
       }
     }
 
-  /** The per-commit classification walk shared by [[consumeChanges]]
-    * and the streaming source: Right(files added by append commits in
-    * `(from, s.version]`) or Left(version of the last rewrite commit
-    * the file-level feed cannot express). A vacuumed (unreadable) log
-    * prefix throws.
+  /** The per-commit classification walk of `(from, s.version]`, oldest
+    * first, shared by [[consumeChanges]], [[streamBatch]] and the
+    * file-granular streaming source. Each append commit comes with its
+    * added files and their manifest-recorded sizes, in the manifest's
+    * own (restart-stable) add order; a pure offset commit, compaction
+    * or metadata commit comes with none (same rows; an offset still
+    * advances past it). The walk stops at the first rewrite commit
+    * (delete/merge/DV rewrite or overwrite), which a file-level feed
+    * cannot express, and returns its version beside the commits before
+    * it. A vacuumed (unreadable) log prefix throws.
     */
-  private def appendAddsBetween(s: Snapshot,
-      from: Long): Either[Long, Seq[String]] = {
-    val adds = Seq.newBuilder[String]
-    var rewriteAt = -1L
-    commitsBetween(s.fs, s.root, s.table, from, s.version, "change feed",
-      "exactly-once delivery cannot be reconstructed; re-sync from a " +
-        "full snapshot or vacuum with a longer retention", Some(s.manifest))
-      .foreach {
-        case (_, d: Delta)
-            if d.remove.isEmpty && d.dvs.isEmpty && d.dataChange =>
-          adds ++= d.add // append (or a pure offset commit: empty add)
-        case (_, other) if !other.dataChange => () // compaction: same rows
-        case (v, _) => rewriteAt = v // delete/merge/DV rewrite or overwrite
-      }
-    if (rewriteAt < 0) Right(adds.result()) else Left(rewriteAt)
+  private[graft] def appendsBetween(s: Snapshot, from: Long)
+      : (Seq[(Long, Seq[(String, Long)])], Option[Long]) = {
+    val out = Seq.newBuilder[(Long, Seq[(String, Long)])]
+    val walk = commitsBetween(s.fs, s.root, s.table, from, s.version,
+      "change feed", "exactly-once delivery cannot be reconstructed; " +
+        "re-sync a consumer from a full snapshot, restart a stream from a " +
+        "fresh checkpoint, or vacuum with a longer retention", Some(s.manifest))
+    while (walk.hasNext) walk.next() match {
+      case (v, d: Delta)
+          if d.remove.isEmpty && d.dvs.isEmpty && d.dataChange =>
+        out += v -> d.add.map(f =>
+          f -> d.stats.get(f).map(_.bytes).getOrElse(0L))
+      case (v, other) if !other.dataChange => out += v -> Seq.empty
+      case (v, _) => return (out.result(), Some(v))
+    }
+    (out.result(), None)
   }
 
   /** The delivery plan for the consumed range: the files to read and
@@ -4542,10 +4548,10 @@ object ManifestTable {
   private def changedFilesBetween(s: Snapshot, consumerId: String,
       from: Long, onRewrite: String): (Seq[String], Boolean) = {
     if (from == 0) return (s.files, true)
-    appendAddsBetween(s, from) match {
-      case Right(adds) => (adds, false)
-      case Left(_) if onRewrite == ConsumeFullResync => (s.files, true)
-      case Left(rewriteAt) => throw new IllegalStateException(
+    appendsBetween(s, from) match {
+      case (adds, None) => (adds.flatMap(_._2.map(_._1)), false)
+      case _ if onRewrite == ConsumeFullResync => (s.files, true)
+      case (_, Some(rewriteAt)) => throw new IllegalStateException(
         s"consumed range ($from, ${s.version}] of ${s.table} contains a rewrite " +
           s"commit (v$rewriteAt: delete/merge/overwrite) that a file-level " +
           "change feed cannot express as additions — consumer " +
@@ -4570,12 +4576,12 @@ object ManifestTable {
     val s = snapshot(spark, table, toVersion)
     val files =
       if (fromVersion == 0) s.files
-      else appendAddsBetween(s, fromVersion) match {
-        case Right(adds) => adds
-        case Left(rewriteAt) => throw streamRewriteError(
+      else appendsBetween(s, fromVersion) match {
+        case (adds, None) => adds.flatMap(_._2.map(_._1))
+        case (_, Some(rewriteAt)) => throw streamRewriteError(
           table, fromVersion, toVersion, rewriteAt)
       }
-    filesBatch(spark, s, files, whole = fromVersion == 0)
+    streamFilesBatch(spark, s, files, whole = fromVersion == 0)
   }
 
   private[graft] def streamRewriteError(table: String, fromVersion: Long,
@@ -4589,21 +4595,13 @@ object ManifestTable {
 
   /** Plan one streaming micro-batch over an EXPLICIT file subset —
     * the delivery half [[streamBatch]] and the file/byte-granular
-    * admission path ([[addsWithSizes]] / [[snapshotFilesWithSizes]])
-    * share: schema pinned to `atVersion`'s manifest, column-mapping
-    * projection, and — for snapshot deliveries — the DV anti-join
-    * (applying the FULL snapshot DV set to a subset is exact: DV rows
-    * for undelivered files simply never match).
+    * admission path ([[appendsBetween]] / [[snapshotFilesWithSizes]])
+    * share: schema pinned to `s`, column-mapping projection, and — for
+    * a snapshot delivery (`whole`) — the snapshot's stats and the DV
+    * anti-join (applying the FULL snapshot DV set to a subset is exact:
+    * DV rows for undelivered files simply never match).
     */
-  private[graft] def streamFilesBatch(spark: SparkSession, table: String,
-      files: Seq[String], atVersion: Long, snapshot: Boolean): DataFrame =
-    filesBatch(spark, ManifestTable.snapshot(spark, table, atVersion), files,
-      whole = snapshot)
-
-  /** [[streamFilesBatch]] over a resolved snapshot; `whole` marks a
-    * snapshot delivery, whose stats and vectors apply.
-    */
-  private def filesBatch(spark: SparkSession, s: Snapshot,
+  private[graft] def streamFilesBatch(spark: SparkSession, s: Snapshot,
       files: Seq[String], whole: Boolean): DataFrame = {
     // the snapshot's stats map also covers range-scoped files (stats
     // ride adds); files later removed by a compaction in the range
@@ -4636,34 +4634,6 @@ object ManifestTable {
       table: String, version: Long): Seq[(String, Long)] = {
     val snap = snapshot(spark, table, version)
     snap.files.map(f => f -> snap.stats.get(f).map(_.bytes).getOrElse(0L))
-  }
-
-  /** Per-version ordered ADDS with manifest-recorded sizes for
-    * `(from, to]` — the incremental unit of file/byte-granular
-    * admission. Intra-version order is the manifest's own add-list
-    * order (persisted, hence restart-stable). Compactions and
-    * metadata commits contribute an EMPTY list (they must still
-    * advance the offset); a rewrite commit returns `Left(version)` —
-    * the walk admits everything before it and the delivery of the
-    * rewrite itself fails with [[streamRewriteError]].
-    */
-  private[graft] def addsWithSizes(spark: SparkSession, table: String,
-      from: Long, to: Long): Either[Long, Seq[(Long, Seq[(String, Long)])]] = {
-    val (fs, p) = fsOf(spark, table)
-    val out = Seq.newBuilder[(Long, Seq[(String, Long)])]
-    val walk = commitsBetween(fs, p, table, from, to, "streamed range",
-      "exactly-once delivery cannot be reconstructed; restart from a " +
-        "fresh checkpoint")
-    while (walk.hasNext) walk.next() match {
-      case (v, d: Delta)
-          if d.remove.isEmpty && d.dvs.isEmpty && d.dataChange =>
-        out += v -> d.add.map(f =>
-          f -> d.stats.get(f).map(_.bytes).getOrElse(0L))
-      case (v, other) if !other.dataChange =>
-        out += v -> Seq.empty // compaction: same rows, advance only
-      case (v, _) => return Left(v) // delete/merge/DV rewrite or overwrite
-    }
-    Right(out.result())
   }
 
   /** One CDC STREAMING micro-batch: the row-level changes of
@@ -4749,7 +4719,7 @@ object ManifestTable {
       }
     frames.reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse(
-        filesBatch(spark, sTo, Seq.empty, whole = false)
+        streamFilesBatch(spark, sTo, Seq.empty, whole = false)
           .withColumn(ChangeTypeCol, lit("insert"))
           .withColumn(CommitVersionCol, lit(toVersion))
           .limit(0))

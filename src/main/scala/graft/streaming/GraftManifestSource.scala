@@ -411,17 +411,12 @@ final class GraftManifestSource(spark: SparkSession, table: String,
       .map(n => math.min(head, floor.version + math.max(1, n)))
       .getOrElse(head)
     if (capped <= walkFrom) return None
-    val per = ManifestTable.addsWithSizes(spark, table, walkFrom,
-      capped) match {
-      case Right(s) => s
-      case Left(rw) =>
-        ManifestTable.addsWithSizes(spark, table, walkFrom, rw - 1) match {
-          case Right(s) if s.nonEmpty => s
-          // nothing deliverable before the rewrite: offer it as a
-          // boundary — getBatch throws the documented failure
-          case _ => return Some(GraftVersionOffset(rw))
-        }
-    }
+    // the walk stops at a rewrite: admit what precedes it, or, when
+    // nothing does, offer the rewrite as a boundary — getBatch throws
+    // the documented failure
+    val (per, rewrite) = ManifestTable.appendsBetween(
+      ManifestTable.snapshot(spark, table, capped), walkFrom)
+    if (per.isEmpty) return rewrite.map(GraftVersionOffset(_))
     var nf = 0L
     var nb = 0L
     var pos = floor
@@ -472,18 +467,17 @@ final class GraftManifestSource(spark: SparkSession, table: String,
         val list = snapshotList(snapV)
         val i0 = if (from.snap) from.index else 0L
         val i1 = if (endO.snap) endO.index else list.size.toLong
-        return ManifestTable.streamFilesBatch(spark, table,
-          list.slice(i0.toInt, i1.toInt).map(_._1), snapV, snapshot = true)
+        return ManifestTable.streamFilesBatch(spark,
+          ManifestTable.snapshot(spark, table, snapV),
+          list.slice(i0.toInt, i1.toInt).map(_._1), whole = true)
       }
       // incremental slice: rest of a mid-adds start version, whole
       // versions between, head of a mid-adds end version
       val walkFrom = if (from.index >= 0) from.version - 1 else from.version
-      val per = ManifestTable.addsWithSizes(spark, table, walkFrom,
-        endO.version) match {
-        case Right(s) => s
-        case Left(rw) => throw ManifestTable.streamRewriteError(
-          table, walkFrom, endO.version, rw)
-      }
+      val s = ManifestTable.snapshot(spark, table, endO.version)
+      val (per, rewrite) = ManifestTable.appendsBetween(s, walkFrom)
+      rewrite.foreach(rw => throw ManifestTable.streamRewriteError(
+        table, walkFrom, endO.version, rw))
       val files = per.flatMap { case (v, fs) =>
         val afterStart =
           if (from.index >= 0 && v == from.version) fs.drop(from.index.toInt)
@@ -494,8 +488,7 @@ final class GraftManifestSource(spark: SparkSession, table: String,
           afterStart.take((endO.index - already).toInt)
         } else afterStart
       }.map(_._1)
-      ManifestTable.streamFilesBatch(spark, table, files, endO.version,
-        snapshot = false)
+      ManifestTable.streamFilesBatch(spark, s, files, whole = false)
     }
 
   override def commit(end: Offset): Unit = synchronized {

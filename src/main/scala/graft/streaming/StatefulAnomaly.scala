@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -78,12 +78,13 @@ object StatefulAnomaly {
   }
 
   /** Streaming query: events → per-type trailing-window state machine
-    * → final anomaly verdicts, append mode.
+    * → final anomaly verdicts, append mode. Drained over a finite
+    * input, the post-data no-data batch fires the event-time timeouts,
+    * flushing every bucket the final watermark completes.
     */
   def anomalyStream(spark: SparkSession, sfDir: String): Dataset[AnomOut] = {
     import spark.implicits._
-    StreamingOps.eventsStream(spark, sfDir,
-      globFilter = Some("events.parquet"))
+    StreamingOps.eventStream(spark, sfDir)
       .withWatermark("ts", "1 hour")
       .select(col("event_type"), col("ts"))
       .as[Ev]
@@ -113,21 +114,5 @@ object StatefulAnomaly {
           // timeout invocations (no events to read it from)
           emitted.iterator.map(_.copy(event_type = etype))
         })
-  }
-
-  /** Drive the finite fixture through the stream (the post-data
-    * no-data batch fires the event-time timeouts, flushing every
-    * bucket the final watermark completes).
-    */
-  def runToCompletion(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_stateful_anomaly"): DataFrame = {
-    val q = anomalyStream(spark, sfDir).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
   }
 }

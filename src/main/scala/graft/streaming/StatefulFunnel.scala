@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming funnel progression (VERDICT r7 #9) — the streaming twin
   * of batch e19: per user, the earliest view, the earliest click
@@ -77,8 +77,7 @@ object StatefulFunnel {
 
   def funnelStream(spark: SparkSession, sfDir: String,
       dormantTtlMs: Long = DefaultDormantTtlMs): Dataset[FunnelOut] =
-    funnelOf(StreamingOps.eventsStream(spark, sfDir,
-      globFilter = Some("events.parquet")), dormantTtlMs)
+    funnelOf(StreamingOps.eventStream(spark, sfDir), dormantTtlMs)
 
   /** The funnel state machine over any events-shaped stream (needs
     * `user_id`, `ts`, `event_type`); see the object doc for the TTL
@@ -116,21 +115,5 @@ object StatefulFunnel {
             FunnelOut(user, ns.tv, ns.tc, ns.tp)
           }
         })
-  }
-
-  /** Drive the finite fixture through the stream; the memory sink in
-    * Update mode holds one row per (user, micro-batch that touched
-    * it) — the latest per user is the funnel state.
-    */
-  def runToCompletion(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_stateful_funnel"): DataFrame = {
-    val q = funnelStream(spark, sfDir).writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
   }
 }

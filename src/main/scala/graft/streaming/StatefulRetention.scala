@@ -81,8 +81,7 @@ object StatefulRetention {
     */
   def incrementStream(spark: SparkSession, sfDir: String,
       dormantTtlMs: Long = DefaultDormantTtlMs): Dataset[RetInc] =
-    incrementsOf(StreamingOps.eventsStream(spark, sfDir,
-      globFilter = Some("events.parquet")), dormantTtlMs)
+    incrementsOf(StreamingOps.eventStream(spark, sfDir), dormantTtlMs)
 
   /** The increment machine over any events-shaped stream (needs
     * `user_id`, `ts`); see the object doc for the TTL contract.
@@ -126,7 +125,9 @@ object StatefulRetention {
 
   /** The streaming retention matrix: count of increments per
     * (cohort_week, week_offset) = users from that cohort active at
-    * that offset.
+    * that offset. Drained in complete mode (inside
+    * [[withLateRowCheckDisabled]]), the memory sink holds the whole
+    * calendar-bounded matrix.
     */
   def retentionStream(spark: SparkSession, sfDir: String): DataFrame =
     incrementStream(spark, sfDir)
@@ -159,10 +160,10 @@ object StatefulRetention {
     * emits NOTHING (eviction only) and its normal emissions carry no
     * event-time column at all (the downstream matrix aggregation is
     * unwatermarked and calendar-bounded), so the hazard is vacuously
-    * absent — the drive helpers scope-disable the check for exactly
-    * the query start, restoring the prior session value.
+    * absent — callers scope-disable the check for exactly the query
+    * start, restoring the prior session value.
     */
-  private def withLateRowCheckDisabled[T](spark: SparkSession)(f: => T): T = {
+  private[graft] def withLateRowCheckDisabled[T](spark: SparkSession)(f: => T): T = {
     val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
@@ -173,49 +174,17 @@ object StatefulRetention {
     }
   }
 
-  /** Drive the finite fixture through the stream; complete mode holds
-    * the whole (calendar-bounded) matrix in the memory sink.
-    */
-  def runToCompletion(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_stateful_retention"): DataFrame = {
-    withLateRowCheckDisabled(spark) {
-      val q = retentionStream(spark, sfDir).writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    withRetention(spark.table(queryName))
-  }
-
   /** Production sink shape: update mode emits only the
     * (cohort_week, week_offset) rows a micro-batch changed, and the
-    * foreachBatch body overwrites exactly those dynamic partitions —
-    * the same idempotent per-aggregate-key upsert contract as
-    * `StreamingOps.upsertBatch`, keyed on the full matrix key so a
+    * foreachBatch body (`StreamingOps.upsertBatch`) overwrites exactly
+    * those dynamic partitions, keyed on the full matrix key so a
     * batch can never clobber another cohort-week's offsets. The
     * partition count is calendar-bounded (cohorts × offsets), the
     * cardinality the streaming state itself holds.
     */
-  def runUpsertToCompletion(spark: SparkSession, sfDir: String,
-      targetDir: String, checkpointDir: String): DataFrame = {
-    withLateRowCheckDisabled(spark) {
-      val q = retentionStream(spark, sfDir).writeStream
-        .outputMode("update")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cohort_week", "week_offset")
-            .parquet(targetDir)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    withRetention(spark.read.parquet(targetDir))
-  }
+  def runForeachBatchUpsert(spark: SparkSession, sfDir: String,
+      targetDir: String, checkpointDir: String): DataFrame =
+    withRetention(withLateRowCheckDisabled(spark)(StreamingOps.drainUpserts(
+      retentionStream(spark, sfDir), Seq("cohort_week", "week_offset"),
+      targetDir, checkpointDir)))
 }

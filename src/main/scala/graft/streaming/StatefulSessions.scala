@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -48,13 +48,14 @@ object StatefulSessions {
   }
 
   /** Streaming query: events → typed per-user state machine → closed
-    * sessions. Timeout closes a session when no events arrive within
-    * the gap (plus watermark slack).
+    * sessions, append mode. Timeout closes a session when no events
+    * arrive within the gap (plus watermark slack); sessions still open
+    * when a finite input is exhausted stay in state, so a drained run
+    * holds the CLOSED prefix per user.
     */
   def sessionStream(spark: SparkSession, sfDir: String): Dataset[SessionOut] = {
     import spark.implicits._
-    StreamingOps.eventsStream(spark, sfDir,
-      globFilter = Some("events.parquet"))
+    StreamingOps.eventStream(spark, sfDir)
       .withWatermark("ts", "1 hour")
       // keep the watermarked ts column through the typed Dataset —
       // event-time timeout requires the watermark to survive the select
@@ -80,22 +81,5 @@ object StatefulSessions {
             closed.iterator
           }
         })
-  }
-
-  /** Drive the (finite) fixture through the stream; closed sessions
-    * land in the memory sink. Sessions still open when the input is
-    * exhausted remain in state — the batch comparison accounts for
-    * that (it compares the CLOSED prefix per user).
-    */
-  def runToCompletion(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_stateful_sessions"): DataFrame = {
-    val q = sessionStream(spark, sfDir).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
   }
 }

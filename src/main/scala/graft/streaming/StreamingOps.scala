@@ -1,18 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.ops.EventOps
 
-/** Structured Streaming surface (SURVEY.md §2.2 streaming row): the
-  * streaming twin of the batch event analytics — readStream over the
-  * events parquet, watermark, windowed aggregation, writeStream.
+/** Structured Streaming surface (SURVEY.md §2.2 streaming row), a thin
+  * layer over the batch event analytics: readStream over the events
+  * parquet, a watermark, then the batch query's own kernel —
+  * [[EventOps.e01TumblingOf]] for [[tumblingStream]] and the
+  * foreachBatch upserts, [[EventOps.e06SessionWindowOf]] for
+  * [[sessionWindowStream]]. The stream-only analytics are kernels here:
+  * the view→click interval join ([[streamStreamJoin]],
+  * [[streamStreamLeftJoin]], e22) and within-watermark key dedup
+  * ([[dedupStream]], e23).
   *
-  * The batch fixture drives it synchronously in tests
-  * (`processAllAvailable`), which is also the correct cluster shape:
-  * swap the source for Kafka/files-on-arrival and the sink for a real
-  * table and the query is production Structured Streaming with
-  * watermark-bounded state.
+  * [[drain]] runs a finite stream to completion into a memory sink
+  * (`processAllAvailable`); tests and the e-block queries drive the
+  * fixture through it. Swap the source for Kafka/files-on-arrival and
+  * the sink for a real table and the query is production Structured
+  * Streaming with watermark-bounded state.
   */
 object StreamingOps {
 
@@ -81,20 +88,41 @@ object StreamingOps {
     }
   }
 
-  /** Streaming tumbling 6-hour windows with a 1-hour watermark:
-    * counts + sums per window × event type — mirrors
-    * EventOps.e01Tumbling. Late data beyond the watermark is dropped;
-    * state is bounded by (windows in watermark horizon) × |types|.
+  /** The fixture's events as a stream: the file-stream source monitors
+    * directories and the fixture is a single file, so this monitors the
+    * sf dir filtered to the events file.
+    */
+  private[streaming] def eventStream(spark: SparkSession, sfDir: String): DataFrame =
+    eventsStream(spark, sfDir, globFilter = Some("events.parquet"))
+
+  /** Runs a finite stream to completion into the memory sink `name`
+    * under output `mode` and returns the sink's table. The query is
+    * stopped whether or not a batch fails; a failure is rethrown.
+    */
+  def drain(stream: Dataset[_], mode: String, name: String): DataFrame = {
+    val q = stream.writeStream
+      .outputMode(mode)
+      .format("memory")
+      .queryName(name)
+      .start()
+    try q.processAllAvailable()
+    finally q.stop()
+    stream.sparkSession.table(name)
+  }
+
+  /** Streaming tumbling 6-hour windows with a 1-hour watermark: e01's
+    * kernel over the fixture stream. Late data beyond the watermark is
+    * dropped; state is bounded by (windows in watermark horizon) ×
+    * |types|.
     */
   def tumblingStream(spark: SparkSession, sfDir: String): DataFrame =
-    // the file-stream source monitors directories; the fixture is a
-    // single file, so monitor the sf dir filtered to the events file
-    eventsStream(spark, sfDir, globFilter = Some("events.parquet"))
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 4))).cast("double").as("total"))
-      .select(col("w.start").as("ws"), col("event_type"), col("n"), col("total"))
+    tumblingOf(eventStream(spark, sfDir))
+
+  /** [[EventOps.e01TumblingOf]] over an events stream under the 1-hour
+    * watermark.
+    */
+  private[graft] def tumblingOf(events: DataFrame): DataFrame =
+    EventOps.e01TumblingOf(events.withWatermark("ts", "1 hour"))
 
   /** Streaming deduplication on a business key — the streaming twin of
     * exact dedup (d01). `dropDuplicatesWithinWatermark`, NOT plain
@@ -108,9 +136,11 @@ object StreamingOps {
     * semantics a streaming ingest dedup actually wants.
     */
   def dedupStream(spark: SparkSession, sfDir: String): DataFrame =
-    eventsStream(spark, sfDir, globFilter = Some("events.parquet"))
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
+    dedupKeys(eventStream(spark, sfDir).withWatermark("ts", "1 hour"))
+
+  /** The within-watermark dedup kernel on (user_id, event_type). */
+  private def dedupKeys(events: DataFrame): DataFrame =
+    events.dropDuplicatesWithinWatermark("user_id", "event_type")
 
   /** Stream-static join: the event stream enriched against the static
     * customer dimension (user_id = c_custkey). The static side is
@@ -121,7 +151,7 @@ object StreamingOps {
   def enrichedStream(spark: SparkSession, sfDir: String): DataFrame = {
     val customers = spark.read.parquet(s"$sfDir/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
-    eventsStream(spark, sfDir, globFilter = Some("events.parquet"))
+    eventStream(spark, sfDir)
       .join(customers, col("user_id") === col("c_custkey"), "left")
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"),
@@ -129,38 +159,15 @@ object StreamingOps {
   }
 
   /** Streaming native session windows (`session_window`, 30-minute
-    * gap) — the third sessionization variant alongside the batch gap
-    * pattern (e03/e06) and the flatMapGroupsWithState machine
-    * (StatefulSessions). Append mode + watermark: a session is emitted
-    * once the watermark passes its close, so state is bounded by the
-    * watermark horizon — the form that survives an unbounded stream.
+    * gap): e06's kernel over the fixture stream — the third
+    * sessionization variant alongside the batch gap pattern (e03) and
+    * the flatMapGroupsWithState machine (StatefulSessions). Append mode
+    * + watermark: a session is emitted once the watermark passes its
+    * close, so state is bounded by the watermark horizon — the form
+    * that survives an unbounded stream.
     */
   def sessionWindowStream(spark: SparkSession, sfDir: String): DataFrame =
-    eventsStream(spark, sfDir, globFilter = Some("events.parquet"))
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 4))).cast("double").as("total_value"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end_bound"), col("n_events"), col("total_value"))
-
-  /** Drive the session-window stream over the finite fixture; append
-    * mode means only watermark-closed sessions appear in the sink.
-    */
-  def runSessionWindowToCompletion(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_stream_session"): DataFrame = {
-    val q = sessionWindowStream(spark, sfDir).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
-
-  private def eventStream(spark: SparkSession, sfDir: String): DataFrame =
-    eventsStream(spark, sfDir, globFilter = Some("events.parquet"))
+    EventOps.e06SessionWindowOf(eventStream(spark, sfDir).withWatermark("ts", "1 hour"))
 
   /** Stream-stream interval join: views joined to the same user's
     * clicks within the following 30 minutes. Both sides carry
@@ -170,22 +177,8 @@ object StreamingOps {
     * forever on unbounded streams. The shuffle key is user_id; the
     * time band is evaluated within the partition.
     */
-  def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val views = eventStream(spark, sfDir)
-      .filter(col("event_type") === "view")
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-        col("event_id").as("v_event"))
-    val clicks = eventStream(spark, sfDir)
-      .filter(col("event_type") === "click")
-      .withWatermark("ts", "2 hours")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("c_event"))
-    views.join(clicks, expr(
-      "v_user = c_user AND c_ts >= v_ts AND c_ts <= v_ts + interval 30 minutes"))
-      .select(col("v_user").as("user_id"), col("v_ts"), col("c_ts"),
-        col("v_event"), col("c_event"))
-  }
+  def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame =
+    viewClickJoin(spark, sfDir, "inner")
 
   /** Stream-stream LEFT OUTER interval join — the attribution shape
     * that must also emit (view, NO-click): an unmatched view row is
@@ -197,35 +190,25 @@ object StreamingOps {
     * windows the final watermark never passes are legitimately
     * withheld (StatefulSpec asserts exactly that boundary behavior).
     */
-  def streamStreamLeftJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val views = eventStream(spark, sfDir)
-      .filter(col("event_type") === "view")
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-        col("event_id").as("v_event"))
-    val clicks = eventStream(spark, sfDir)
-      .filter(col("event_type") === "click")
-      .withWatermark("ts", "2 hours")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("c_event"))
-    views.join(clicks, expr(
+  def streamStreamLeftJoin(spark: SparkSession, sfDir: String): DataFrame =
+    viewClickJoin(spark, sfDir, "leftOuter")
+
+  /** The view→click interval join kernel of [[streamStreamJoin]] and
+    * [[streamStreamLeftJoin]]: views under a 1-hour watermark, clicks
+    * under a 2-hour one, joined as `joinType`.
+    */
+  private def viewClickJoin(spark: SparkSession, sfDir: String,
+      joinType: String): DataFrame = {
+    def side(eventType: String, delay: String, p: String) = eventStream(spark, sfDir)
+      .filter(col("event_type") === eventType)
+      .withWatermark("ts", delay)
+      .select(col("user_id").as(s"${p}_user"), col("ts").as(s"${p}_ts"),
+        col("event_id").as(s"${p}_event"))
+    side("view", "1 hour", "v").join(side("click", "2 hours", "c"), expr(
       "v_user = c_user AND c_ts >= v_ts AND c_ts <= v_ts + interval 30 minutes"),
-      "leftOuter")
+      joinType)
       .select(col("v_user").as("user_id"), col("v_ts"), col("c_ts"),
         col("v_event"), col("c_event"))
-  }
-
-  /** Drive the left-outer stream-stream join over the finite fixture. */
-  def runStreamStreamLeftJoinToCompletion(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_stream_ssljoin"): DataFrame = {
-    val q = streamStreamLeftJoin(spark, sfDir).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
   }
 
   /** Batch twin of [[streamStreamJoin]] over the same fixture. */
@@ -243,20 +226,13 @@ object StreamingOps {
         col("v_event"), col("c_event"))
   }
 
-  /** Drive the stream-stream join over the finite fixture. */
-  def runStreamStreamJoinToCompletion(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_stream_ssjoin"): DataFrame = {
-    val q = streamStreamJoin(spark, sfDir).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
+  private val invocations = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private val e22Invocation = new java.util.concurrent.atomic.AtomicLong(0)
+  /** `prefix` made unique per invocation: the e-block queries' sink
+    * names and scratch dirs must not collide across bench reps.
+    */
+  private def unique(prefix: String): String =
+    s"${prefix}_${invocations.incrementAndGet()}"
 
   /** e22: the watermarked STREAM-STREAM INTERVAL JOIN run as a
     * first-class (oracle-gated) query — views joined to the same
@@ -266,12 +242,9 @@ object StreamingOps {
     * DuckDB twin is a plain self-join with the same time band — a hash
     * match proves the streaming state machine (two watermarks, both
     * time bounds, append-mode emission) loses and invents nothing.
-    * Memory-sink names are per-invocation (bench reps must not
-    * collide).
     */
   def e22StreamStreamJoin(spark: SparkSession, sfDir: String): DataFrame =
-    runStreamStreamJoinToCompletion(spark, sfDir,
-      s"graft_e22_ssjoin_${e22Invocation.incrementAndGet()}")
+    drain(streamStreamJoin(spark, sfDir), "append", unique("graft_e22_ssjoin"))
       .orderBy(col("user_id").asc_nulls_last, col("v_ts").asc_nulls_last,
         col("c_ts").asc_nulls_last, col("v_event").asc_nulls_last,
         col("c_event").asc_nulls_last)
@@ -285,8 +258,6 @@ object StreamingOps {
       |WHERE v.event_type = 'view' AND c.event_type = 'click'
       |ORDER BY 1 ASC NULLS LAST, 2 ASC NULLS LAST, 3 ASC NULLS LAST,
       |  4 ASC NULLS LAST, 5 ASC NULLS LAST""".stripMargin
-
-  private val e23Invocation = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** e23: STREAMING DEDUPLICATION as a first-class query — the
     * key-projected twin of [[dedupStream]]: watermark +
@@ -308,28 +279,18 @@ object StreamingOps {
     * the emitted set equal SELECT DISTINCT under ANY batching).
     * [[dedupStream]] keeps the production-shaped 1 h horizon.
     */
-  def e23StreamingDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_e23_dedup_${e23Invocation.incrementAndGet()}"
-    val deduped = eventStream(spark, sfDir)
-      .withWatermark("ts", "365 days")
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .select(col("user_id"), col("event_type"))
-    val q = deduped.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
+  def e23StreamingDedup(spark: SparkSession, sfDir: String): DataFrame =
+    drain(e23Stream(spark, sfDir), "append", unique("graft_e23_dedup"))
       .orderBy(col("user_id").asc_nulls_last, col("event_type").asc_nulls_last)
-  }
+
+  /** e23's stream, unstarted. */
+  private[graft] def e23Stream(spark: SparkSession, sfDir: String): DataFrame =
+    dedupKeys(eventStream(spark, sfDir).withWatermark("ts", "365 days"))
+      .select(col("user_id"), col("event_type"))
 
   val e23Sql: String =
     """SELECT DISTINCT user_id, event_type FROM events
       |ORDER BY 1 ASC NULLS LAST, 2 ASC NULLS LAST""".stripMargin
-
-  private val e24Invocation = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** e24: TAILING A MANIFEST TABLE AS A STREAM — the corpus committed
     * as an initial snapshot plus two appends (three log versions),
@@ -349,8 +310,7 @@ object StreamingOps {
     import graft.sinks.{ManifestTable, Sinks}
     val docs = graft.ops.Tables.documents(spark, sfDir)
     val root = Sinks.sessionScratchPath(spark,
-      "e24_tail_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_") +
-        "_" + e24Invocation.incrementAndGet())
+      unique("e24_tail_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_")))
     val table = s"$root/table"
     ManifestTable.write(spark,
       docs.filter(pmod(col("doc_id"), lit(3)) === 0), table)
@@ -358,24 +318,10 @@ object StreamingOps {
       docs.filter(pmod(col("doc_id"), lit(3)) === 1), table)
     ManifestTable.append(spark,
       docs.filter(pmod(col("doc_id"), lit(3)) === 2), table)
-    val batches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val q = spark.readStream.format("graft")
+    collectBatches(spark.readStream.format("graft")
       .option("path", table)
       .option("maxVersionsPerTrigger", "1")
-      .load()
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        // pin each batch's rows (the accumulated union is consumed
-        // after the stream stops; the files are immutable but the
-        // localCheckpoint keeps the final census one job)
-        batches.synchronized { batches += b.localCheckpoint() }: Unit
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    batches.reduce(_.unionByName(_))
+      .load(), s"$root/ckpt")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
@@ -391,8 +337,6 @@ object StreamingOps {
       |  min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
       |FROM documents GROUP BY lang
       |ORDER BY lang ASC NULLS LAST""".stripMargin
-
-  private val e25Invocation = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** e25: the ROW-LEVEL CDC STREAM — the change feed enabled on a
     * manifest table, the table driven through a rewrite-heavy life
@@ -412,8 +356,7 @@ object StreamingOps {
     val docs = graft.ops.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
     val root = Sinks.sessionScratchPath(spark,
-      "e25_cdc_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_") +
-        "_" + e25Invocation.incrementAndGet())
+      unique("e25_cdc_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_")))
     val table = s"$root/table"
     ManifestTable.write(spark, // v1: bulk load (not streamed)
       docs.filter(pmod(col("doc_id"), lit(2)) === 0)
@@ -429,23 +372,12 @@ object StreamingOps {
     ManifestTable.append(spark, // v6: append
       docs.filter(pmod(col("doc_id"), lit(2)) === 1 &&
         pmod(col("doc_id"), lit(5)) === 0), table)
-    val batches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val q = spark.readStream.format("graft")
+    collectBatches(spark.readStream.format("graft")
       .option("path", table)
       .option("readChangeFeed", "true")
       .option("startingVersion", "2") // tail the churn, skip the load
       .option("maxVersionsPerTrigger", "1")
-      .load()
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        batches.synchronized { batches += b.localCheckpoint() }: Unit
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    batches.reduce(_.unionByName(_))
+      .load(), s"$root/ckpt")
       .groupBy(col("_change_type"), col("lang"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("n_chars")).cast("bigint").as("total_chars"))
@@ -478,7 +410,24 @@ object StreamingOps {
       |FROM feed GROUP BY 1, 2
       |ORDER BY _change_type ASC, lang ASC NULLS LAST""".stripMargin
 
-  private val e26Invocation = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Drains a finite stream through `foreachBatch` and returns the
+    * union of its batches. Each batch is pinned with `localCheckpoint`:
+    * the union is read after the stream stops, and the pins keep that
+    * read one job.
+    */
+  private def collectBatches(stream: DataFrame, checkpointDir: String): DataFrame = {
+    val batches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val q = stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        batches.synchronized { batches += b.localCheckpoint() }: Unit
+      }
+      .start()
+    try q.processAllAvailable()
+    finally q.stop()
+    batches.reduce(_.unionByName(_))
+  }
 
   /** e26: the NAME-BASED streaming pipeline (VERDICT r14 #3) — a
     * production pipeline addresses tables by CATALOG NAME, not
@@ -499,7 +448,7 @@ object StreamingOps {
     import graft.sinks.Sinks
     val docs = graft.ops.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val inv = e26Invocation.incrementAndGet()
+    val inv = invocations.incrementAndGet()
     val cat = s"e26lake$inv"
     val root = Sinks.sessionScratchPath(spark,
       "e26_named_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + inv)
@@ -546,9 +495,10 @@ object StreamingOps {
       |ORDER BY lang ASC NULLS LAST, bkt ASC""".stripMargin
 
   /** foreachBatch upsert body: DYNAMIC partition overwrite keyed by
-    * the FULL aggregate key (event_type, ws). The overwrite unit must
-    * equal the update key: update output mode emits only the rows a
-    * micro-batch changed, so a coarser partitioning (event_type alone)
+    * the FULL aggregate key, by default the tumbling aggregate's
+    * (event_type, ws). The overwrite unit must equal the update key:
+    * update output mode emits only the rows a micro-batch changed, so
+    * a coarser partitioning (event_type alone)
     * would replace a whole type's directory with just that batch's
     * changed windows, silently deleting every previously-committed
     * window of the type. With one directory per (type, window) a
@@ -558,38 +508,41 @@ object StreamingOps {
     * Partition count stays bounded: |types| × (windows per retention
     * horizon), the same cardinality the streaming state itself holds.
     */
-  def upsertBatch(batch: DataFrame, targetDir: String): Unit =
+  def upsertBatch(batch: DataFrame, targetDir: String,
+      keys: Seq[String] = Seq("event_type", "ws")): Unit =
     batch.write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("event_type", "ws")
+      .partitionBy(keys: _*)
       .parquet(targetDir)
 
-  /** Streaming aggregate → foreachBatch idempotent upsert into a
-    * partitioned table: update output mode emits only the (window ×
-    * type) rows each micro-batch changed; [[upsertBatch]] merges them
-    * by overwriting the touched event_type partitions. The composition
-    * is the standard exactly-once sink pattern: source offsets +
-    * checkpoint give at-least-once batch delivery, and the idempotent
-    * write collapses replays.
+  /** Drains an update-mode aggregate stream through [[upsertBatch]] on
+    * its aggregate `keys` and reads the target back.
     */
-  def runForeachBatchUpsert(spark: SparkSession, sfDir: String,
+  private[streaming] def drainUpserts(agg: DataFrame, keys: Seq[String],
       targetDir: String, checkpointDir: String): DataFrame = {
-    val agg = eventStream(spark, sfDir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(col("event_type"), window(col("ts"), "6 hours").as("w"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 4))).cast("double").as("total"))
-      .select(col("event_type"), col("w.start").as("ws"), col("n"), col("total"))
     val q = agg.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, _: Long) => upsertBatch(b, targetDir) }
+      .foreachBatch { (b: DataFrame, _: Long) => upsertBatch(b, targetDir, keys) }
       .start()
     try q.processAllAvailable()
     finally q.stop()
-    spark.read.parquet(targetDir)
+    agg.sparkSession.read.parquet(targetDir)
   }
+
+  /** [[tumblingStream]] → foreachBatch idempotent upsert into a
+    * partitioned table: update output mode emits only the (window ×
+    * type) rows each micro-batch changed; [[upsertBatch]] merges them
+    * by overwriting the touched (event_type, ws) partitions. The
+    * composition is the standard exactly-once sink pattern: source
+    * offsets + checkpoint give at-least-once batch delivery, and the
+    * idempotent write collapses replays.
+    */
+  def runForeachBatchUpsert(spark: SparkSession, sfDir: String,
+      targetDir: String, checkpointDir: String): DataFrame =
+    drainUpserts(tumblingStream(spark, sfDir), Seq("event_type", "ws"),
+      targetDir, checkpointDir)
 
   /** Multi-micro-batch drive of the same aggregate→upsert pipeline over
     * a MONITORED directory (one file per trigger). This is the shape a
@@ -602,22 +555,9 @@ object StreamingOps {
     * N-1's windows of the same type).
     */
   def runForeachBatchUpsertFromDir(spark: SparkSession, watchDir: String,
-      targetDir: String, checkpointDir: String): DataFrame = {
-    val agg = eventsStream(spark, watchDir, maxFilesPerTrigger = Some(1))
-      .withWatermark("ts", "1 hour")
-      .groupBy(col("event_type"), window(col("ts"), "6 hours").as("w"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 4))).cast("double").as("total"))
-      .select(col("event_type"), col("w.start").as("ws"), col("n"), col("total"))
-    val q = agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, _: Long) => upsertBatch(b, targetDir) }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.read.parquet(targetDir)
-  }
+      targetDir: String, checkpointDir: String): DataFrame =
+    drainUpserts(tumblingOf(eventsStream(spark, watchDir, maxFilesPerTrigger = Some(1))),
+      Seq("event_type", "ws"), targetDir, checkpointDir)
 
   /** Watermark-semantics probe stream: 10-minute tumbling counts with
     * a 5-minute watermark over a MONITORED DIRECTORY (any parquet file
@@ -637,19 +577,4 @@ object StreamingOps {
       .groupBy(window(col("ts"), "10 minutes").as("w"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("ws"), col("n"))
-
-  /** Run the stream to completion against the (finite) fixture and
-    * return the materialized result from the in-memory sink.
-    */
-  def runTumblingToCompletion(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_stream_tumbling"): DataFrame = {
-    val q = tumblingStream(spark, sfDir).writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
 }

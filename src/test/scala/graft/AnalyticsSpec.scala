@@ -13,12 +13,53 @@ class AnalyticsSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("streaming tumbling windows agree with the batch formulation") {
-    val streamed = StreamingOps.runTumblingToCompletion(spark, sf)
+    val streamed = StreamingOps.drain(StreamingOps.tumblingStream(spark, sf),
+      "complete", "graft_stream_tumbling")
       .withColumn("ws", col("ws").cast("timestamp_ntz"))
       .orderBy("ws", "event_type").collect().toSeq
     val batch = EventOps.e01Tumbling(spark, sf).collect().toSeq
     assert(streamed.nonEmpty)
     assert(streamed.map(_.toSeq) == batch.map(_.toSeq))
+  }
+
+  private def fixtureEvents = StreamingOps.eventsStream(spark, sf,
+    globFilter = Some("events.parquet"))
+
+  test("drain rethrows a failed batch and leaves no active query") {
+    val boom = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("drain-boom") else id }
+    val e = intercept[Exception] {
+      StreamingOps.drain(fixtureEvents.select(boom(col("event_id"))),
+        "append", "graft_drain_failed")
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).flatMap(x => Option(x.getMessage)).mkString("\n")
+    assert(messages.contains("drain-boom"), messages)
+    assert(spark.streams.active.isEmpty)
+  }
+
+  /** A failed batch ends its query by itself; a caller interrupted while
+    * it waits does not, so this is the case where `drain` must stop it.
+    */
+  test("drain stops its query when the waiting caller is interrupted") {
+    val slow = udf { (id: Long) => Thread.sleep(20); id }
+    val thrown = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val caller = new Thread(() =>
+      try StreamingOps.drain(fixtureEvents.select(slow(col("event_id"))),
+        "append", "graft_drain_interrupted")
+      catch { case e: Throwable => thrown.set(e) })
+    try {
+      caller.start()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (spark.streams.active.isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(spark.streams.active.nonEmpty, "the stream never started")
+      Thread.sleep(500) // into processAllAvailable
+      caller.interrupt()
+      caller.join(60000)
+      assert(!caller.isAlive && thrown.get != null, "drain did not rethrow")
+      assert(spark.streams.active.isEmpty, "the interrupted query is still running")
+    } finally spark.streams.active.foreach(_.stop())
   }
 
   test("streaming dedup equals batch distinct on the same key") {

@@ -72,7 +72,8 @@ class EventTimeUnitsSpec extends AnyFunSuite with SparkSuite {
   }
 
   private def streamedWindows(dir: Path, queryName: String): Map[(Long, String), (Long, Double)] =
-    StreamingOps.runTumblingToCompletion(spark, dir.toString, queryName)
+    StreamingOps.drain(StreamingOps.tumblingStream(spark, dir.toString),
+      "complete", queryName)
       .select(unix_micros(col("ws").cast("timestamp")).as("wus"),
         col("event_type"), col("n"), col("total"))
       .collect()

@@ -10,14 +10,20 @@ import graft.sinks.ManifestTable
   * feed on), a copy-on-write delete and update of a 5-file table, and
   * the snapshot reads of a table with three snapshot directories and a
   * deletion vector (a read, a copy-on-write delete and the
-  * auto-compaction its next append triggers). Expression ids, temp
-  * paths, their lengths, broadcast ids and uuids are masked, so dumps
-  * of two builds differ only where the plans do.
+  * auto-compaction its next append triggers). It also dumps the event
+  * analytics that share a kernel with a stream: the optimized plans of
+  * e01 and e06 and the analyzed plans of the unstarted streams
+  * (tumbling, session window, the foreachBatch upsert aggregate over a
+  * watched directory, the inner and left-outer view→click joins and
+  * e23's dedup).
+  * Expression ids, temp and fixture paths, the temp paths' lengths,
+  * broadcast ids, session hashes and uuids are masked, so dumps of two
+  * builds differ only where the plans do.
   *
   *   sbt "Test/runMain graft.RowLevelPlanDump <sfDir> <outDir>"
   *
-  * writes `<outDir>/p52_mor_row_ops.txt`, `<outDir>/cow_delete_update.txt`
-  * and `<outDir>/snapshot_reads.txt`.
+  * writes `<outDir>/p52_mor_row_ops.txt`, `<outDir>/cow_delete_update.txt`,
+  * `<outDir>/snapshot_reads.txt` and `<outDir>/streaming.txt`.
   */
 object RowLevelPlanDump {
   def main(args: Array[String]): Unit = {
@@ -35,10 +41,9 @@ object RowLevelPlanDump {
       var n = -1
       while (n != seen.size) { n = seen.size; Thread.sleep(2000) }
     }
-    def capture(name: String)(body: => Unit): Unit = {
-      body
-      settle()
-      val text = seen.toArray.map(_.toString).mkString("\n")
+    def write(name: String, plans: String): Unit = {
+      val text = plans
+        .replace(sfDir, "<sf>")
         .replaceAll("#\\d+L?", "#")
         .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>")
         .replaceAll("/tmp/[^,\\]\\s)]*", "<tmp>")
@@ -46,10 +51,16 @@ object RowLevelPlanDump {
         .replaceAll(", , 1\\), \\d+, length\\(", ", , 1), <len>, length(")
         .replaceAll("Broadcast\\(\\d+\\)", "Broadcast(<id>)")
         .replaceAll("local-\\d+", "<app>")
-      seen.clear()
+        .replaceAll("SparkSession@[0-9a-f]+", "SparkSession@<hash>")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
       java.nio.file.Files.write(java.nio.file.Paths.get(outDir, s"$name.txt"),
         text.getBytes("UTF-8")): Unit
+    }
+    def capture(name: String)(body: => Unit): Unit = {
+      body
+      settle()
+      write(name, seen.toArray.map(_.toString).mkString("\n"))
+      seen.clear()
     }
     capture("p52_mor_row_ops") {
       ops.PipelineOps.p52MorRowOps(spark, sfDir).collect(): Unit
@@ -82,6 +93,25 @@ object RowLevelPlanDump {
       ManifestTable.delete(spark, rt, col("id") === 25L)
       ManifestTable.append(spark, rows(60), rt) // 8 small files: compacts
     }
+    import graft.streaming.StreamingOps
+    val watch = java.nio.file.Files.createTempDirectory("graft_plans")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, "events.parquet"),
+      watch.resolve("events.parquet"))
+    write("streaming", Seq(
+      "e01_tumbling_window" -> ops.EventOps.e01Tumbling(spark, sfDir),
+      "e06_session_window" -> ops.EventOps.e06SessionWindow(spark, sfDir),
+      "tumblingStream" -> StreamingOps.tumblingStream(spark, sfDir),
+      "sessionWindowStream" -> StreamingOps.sessionWindowStream(spark, sfDir),
+      "runForeachBatchUpsertFromDir aggregate" -> StreamingOps.tumblingOf(
+        StreamingOps.eventsStream(spark, watch.toString, maxFilesPerTrigger = Some(1))),
+      "streamStreamJoin" -> StreamingOps.streamStreamJoin(spark, sfDir),
+      "streamStreamLeftJoin" -> StreamingOps.streamStreamLeftJoin(spark, sfDir),
+      "e23_streaming_dedup stream" -> StreamingOps.e23Stream(spark, sfDir)
+    ).map { case (n, df) =>
+      // a stream refuses to optimize before it starts: dump its analyzed plan
+      val qe = df.queryExecution
+      s"== $n ==\n${(if (df.isStreaming) qe.analyzed else qe.optimizedPlan).treeString}"
+    }.mkString("\n"))
     spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.EventOps
-import graft.streaming.StatefulRetention
+import graft.streaming.{StatefulRetention, StreamingOps}
 import graft.streaming.StatefulRetention.RetState
 
 /** Streaming retention cohorts: pure-transition edges plus
@@ -54,7 +54,7 @@ class StatefulRetentionSpec extends AnyFunSuite with SparkSuite {
 
   test("foreachBatch dynamic-partition upsert sink matches batch e20") {
     val base = java.nio.file.Files.createTempDirectory("graft_ret_upsert")
-    val streamed = StatefulRetention.runUpsertToCompletion(
+    val streamed = StatefulRetention.runForeachBatchUpsert(
       spark, sf, s"$base/target", s"$base/ckpt")
       .collect()
       .map(r => (r.getDate(0).toString, r.getInt(1)) ->
@@ -69,7 +69,9 @@ class StatefulRetentionSpec extends AnyFunSuite with SparkSuite {
   }
 
   private def checkMatchesBatch(queryName: String): Unit = {
-    val streamed = StatefulRetention.runToCompletion(spark, sf, queryName)
+    val streamed = StatefulRetention.withRetention(
+      StatefulRetention.withLateRowCheckDisabled(spark)(StreamingOps.drain(
+        StatefulRetention.retentionStream(spark, sf), "complete", queryName)))
       .collect()
       .map(r => (r.getDate(0).toString, r.getInt(1)) ->
         (r.getLong(2), r.getLong(3), r.getDouble(4))).toMap

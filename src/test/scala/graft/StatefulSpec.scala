@@ -34,7 +34,8 @@ class StatefulSpec extends AnyFunSuite with SparkSuite {
   }
 
   private def checkSessionsMatchBatch(): Unit = {
-    val streamed = StatefulSessions.runToCompletion(spark, sf)
+    val streamed = graft.streaming.StreamingOps.drain(
+      StatefulSessions.sessionStream(spark, sf), "append", "graft_stateful_sessions")
       .select(col("user_id"), col("session_start_us"), col("n_events"), col("total_value"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3))).toMap
@@ -54,8 +55,9 @@ class StatefulSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("streaming session_window agrees with the batch session_window (e06)") {
-    val streamed = graft.streaming.StreamingOps
-      .runSessionWindowToCompletion(spark, sf)
+    val streamed = graft.streaming.StreamingOps.drain(
+      graft.streaming.StreamingOps.sessionWindowStream(spark, sf),
+      "append", "graft_stream_session")
       .select(col("user_id"), unix_micros(col("session_start")).as("sus"),
         unix_micros(col("session_end_bound")).as("eus"),
         col("n_events"), col("total_value"))
@@ -91,8 +93,9 @@ class StatefulSpec extends AnyFunSuite with SparkSuite {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet
-    val streamed = micros(graft.streaming.StreamingOps
-      .runStreamStreamJoinToCompletion(spark, sf))
+    val streamed = micros(graft.streaming.StreamingOps.drain(
+      graft.streaming.StreamingOps.streamStreamJoin(spark, sf),
+      "append", "graft_stream_ssjoin"))
     val batch = micros(graft.streaming.StreamingOps.viewClickJoinBatch(spark, sf))
     assert(streamed.nonEmpty, "stream-stream join emitted nothing")
     // inner interval join with both watermarks: everything emitted must
@@ -104,8 +107,9 @@ class StatefulSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("stream-stream LEFT OUTER join: matched = batch inner; null-emission bounded by the final watermark") {
-    val out = graft.streaming.StreamingOps
-      .runStreamStreamLeftJoinToCompletion(spark, sf)
+    val out = graft.streaming.StreamingOps.drain(
+      graft.streaming.StreamingOps.streamStreamLeftJoin(spark, sf),
+      "append", "graft_stream_ssljoin")
       .select(col("user_id"), unix_micros(col("v_ts").cast("timestamp")).as("v_us"),
         unix_micros(col("c_ts").cast("timestamp")).as("c_us"),
         col("v_event"), col("c_event"))
@@ -186,7 +190,8 @@ class StatefulSpec extends AnyFunSuite with SparkSuite {
 
   private def checkAnomalyMatchesBatch(): Unit = {
     import graft.streaming.StatefulAnomaly
-    val streamed = StatefulAnomaly.runToCompletion(spark, sf)
+    val streamed = graft.streaming.StreamingOps.drain(
+      StatefulAnomaly.anomalyStream(spark, sf), "append", "graft_stateful_anomaly")
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4)))
       .toSet
@@ -337,7 +342,8 @@ class StatefulSpec extends AnyFunSuite with SparkSuite {
 
   test("streaming funnel == batch e19 on the complete prefix") {
     import graft.streaming.StatefulFunnel
-    val latest = StatefulFunnel.runToCompletion(spark, sf)
+    val latest = graft.streaming.StreamingOps.drain(
+      StatefulFunnel.funnelStream(spark, sf), "update", "graft_stateful_funnel")
       .groupBy(col("user_id"))
       .agg(max(col("t_view_us")).as("tv"), max(col("t_click_us")).as("tc"),
         max(col("t_purchase_us")).as("tp"))
