@@ -3264,16 +3264,22 @@ object ManifestTable {
       .otherwise(adopted)
   }
 
-  /** Every DV sidecar is written as exactly (file STRING, idx BIGINT)
-    * — see the one writer in [[rewriteRows]]. Passing the schema
-    * explicitly skips footer inference (and its Spark job) on every
-    * sidecar read.
+  /** Every DV sidecar is written as exactly (file STRING, idx BIGINT):
+    * by Spark from the pinned rows ([[rewriteRows]]), or, for a small
+    * vector, by the driver ([[writeDvSidecar]]) with the same parquet
+    * schema. Passing the schema explicitly skips footer inference (and
+    * its Spark job) on every sidecar read.
     */
   private val DvSidecarSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("file",
       org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("idx",
       org.apache.spark.sql.types.LongType)))
+
+  /** [[DvSidecarSchema]] as parquet writes it. */
+  private lazy val DvParquetSchema = org.apache.parquet.schema.MessageTypeParser
+    .parseMessageType(
+      "message spark_schema { optional binary file (STRING); optional int64 idx; }")
 
   /** The (file, idx) pairs of the given sidecar dirs as one frame. */
   private def dvEntries(spark: SparkSession, table: String,
@@ -3284,12 +3290,15 @@ object ManifestTable {
       .select(col("file").as(DvFileCol), col("idx").as(DvIdxCol))
   }
 
-  /** Positions at or under this count apply as a SCAN-LEVEL broadcast
-    * bitmap filter ([[graft.functions.DvPositionHit]] — VERDICT r19
-    * #3) instead of the distributed anti-join: the read stays one
-    * whole-stage-codegen span with no join node. Above it (or at `0`,
-    * which disables inlining) the anti-join remains — an oversized
-    * vector must not be collected to the driver. 4M positions ≈
+  /** Vectors of at most this many positions are SMALL. A read applies
+    * them as a SCAN-LEVEL broadcast bitmap filter
+    * ([[graft.functions.DvPositionHit]] — VERDICT r19 #3) instead of
+    * the distributed anti-join: the read stays one whole-stage-codegen
+    * span with no join node. A commit whose vector is small learns its
+    * positions in its [[filePass]] and the driver writes the sidecar
+    * ([[writeDvSidecar]]); a larger one is written by Spark. At `0`
+    * nothing is small: no inlining, every sidecar written by Spark. An
+    * oversized vector must never reach the driver. 4M positions ≈
     * 32 MB of sorted longs, comfortably broadcast-sized.
     */
   private def dvInlineThreshold(spark: SparkSession): Long =
@@ -3297,18 +3306,99 @@ object ManifestTable {
 
   /** Memoized inline DV broadcasts, keyed by the ABSOLUTE sidecar-dir
     * set: sidecar content is immutable (new deletes create new dirs),
-    * so ONE collect + ONE broadcast serves every read of the same
-    * vectors instead of a plan-time job per read. Bounded: past 64
-    * entries the cache clears and the evicted broadcasts unpersist
-    * (executor copies released; an in-flight plan refetches from the
-    * driver copy).
+    * so ONE broadcast serves every read of the same vectors instead of
+    * a plan-time read per read. Bounded: past 64 entries the cache
+    * clears and the evicted broadcasts unpersist (executor copies
+    * released; an in-flight plan refetches from the driver copy).
     */
   private val dvInlineMemo = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.broadcast.Broadcast[
       java.util.HashMap[org.apache.spark.unsafe.types.UTF8String,
         Array[Long]]]]()
 
-  /** The sidecar positions as a broadcast file → sorted-array map. */
+  /** The positions of recently written or read sidecar dirs, keyed by
+    * ABSOLUTE dir: file → sorted row indexes. A small vector's commit
+    * registers what it wrote, so the next read builds its broadcast
+    * without touching the file. Bounded to [[DvPositionsMemoCap]]
+    * positions in all; the oldest dirs drop first.
+    */
+  private val dvPositionsMemo =
+    new java.util.LinkedHashMap[String, Map[String, Array[Long]]]()
+  private var dvPositionsHeld = 0L
+  private val DvPositionsMemoCap = 1L << 20
+
+  private def positionCount(pos: Map[String, Array[Long]]): Long =
+    pos.valuesIterator.map(_.length.toLong).sum
+
+  private def rememberDvPositions(absDir: String,
+      pos: Map[String, Array[Long]]): Unit = dvPositionsMemo.synchronized {
+    val n = positionCount(pos)
+    if (n <= DvPositionsMemoCap && !dvPositionsMemo.containsKey(absDir)) {
+      dvPositionsMemo.put(absDir, pos)
+      dvPositionsHeld += n
+      val it = dvPositionsMemo.values.iterator
+      while (dvPositionsHeld > DvPositionsMemoCap) {
+        dvPositionsHeld -= positionCount(it.next())
+        it.remove()
+      }
+    }
+  }
+
+  /** One sidecar dir's positions: from the memo, else read on the
+    * driver with the parquet reader (and memoized).
+    */
+  private def dvPositions(spark: SparkSession,
+      absDir: String): Map[String, Array[Long]] =
+    dvPositionsMemo.synchronized(Option(dvPositionsMemo.get(absDir)))
+      .getOrElse {
+        val conf = spark.sparkContext.hadoopConfiguration
+        val dir = new Path(absDir)
+        val acc = scala.collection.mutable.HashMap.empty[String,
+          scala.collection.mutable.ArrayBuilder.ofLong]
+        listDataFiles(dir.getFileSystem(conf), dir).foreach { s =>
+          val r = org.apache.parquet.hadoop.ParquetReader.builder(
+            new org.apache.parquet.hadoop.example.GroupReadSupport(),
+            s.getPath).withConf(conf).build()
+          try Iterator.continually(r.read()).takeWhile(_ != null).foreach { g =>
+            acc.getOrElseUpdate(g.getString("file", 0),
+              new scala.collection.mutable.ArrayBuilder.ofLong) += g.getLong("idx", 0)
+          } finally r.close()
+        }
+        val pos = acc.iterator.map { case (f, b) =>
+          val a = b.result(); java.util.Arrays.sort(a); f -> a }.toMap
+        rememberDvPositions(absDir, pos)
+        pos
+      }
+
+  /** Write a small vector from the driver: one parquet file of
+    * [[DvSidecarSchema]] into the new sidecar dir `dir`, through
+    * parquet-hadoop, with no Spark job. The positions are memoized for
+    * the reads that follow.
+    */
+  private def writeDvSidecar(t: Txn, dir: String,
+      pos: Map[String, Array[Long]]): Unit = {
+    val conf = t.spark.sparkContext.hadoopConfiguration
+    val file = new Path(new Path(t.p, dir),
+      s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(
+        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, conf))
+      .withConf(conf).withType(DvParquetSchema)
+      .withCompressionCodec(
+        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    val rows = new org.apache.parquet.example.data.simple.SimpleGroupFactory(
+      DvParquetSchema)
+    try pos.toSeq.sortBy(_._1).foreach { case (f, idx) =>
+      idx.foreach(i => w.write(rows.newGroup().append("file", f).append("idx", i)))
+    } finally w.close()
+    rememberDvPositions(absStr(t.table, dir), pos)
+  }
+
+  /** The sidecar positions as a broadcast file → sorted-array map,
+    * built on the driver from [[dvPositions]]: no Spark job. Only small
+    * vectors come here (the manifest's recorded rows are within
+    * [[dvInlineThreshold]]), so the driver holds them.
+    */
   private def dvInlineCondition(spark: SparkSession, table: String,
       dvDirs: Seq[String], fileCol: Column, idxCol: Column): Column = {
     val absDirs = dvDirs.sorted.map(d => absStr(table, d))
@@ -3320,21 +3410,14 @@ object ManifestTable {
         catch { case scala.util.control.NonFatal(_) => () })
     }
     val bc = dvInlineMemo.computeIfAbsent(absDirs.mkString(" "), _ => {
-      val rows = spark.read.schema(DvSidecarSchema).parquet(absDirs: _*)
-        .select("file", "idx").collect() // bounded by dvInlineThreshold
-      val acc = new java.util.HashMap[String,
-        scala.collection.mutable.ArrayBuffer[Long]]()
-      rows.foreach { r =>
-        acc.computeIfAbsent(r.getString(0),
-          _ => scala.collection.mutable.ArrayBuffer.empty[Long]) +=
-          r.getLong(1)
-      }
+      val byFile = absDirs.flatMap(dvPositions(spark, _)).groupMap(_._1)(_._2)
       val map = new java.util.HashMap[
         org.apache.spark.unsafe.types.UTF8String, Array[Long]](
-        math.max(8, acc.size * 2))
-      acc.forEach { (k, v) =>
-        val a = v.toArray
-        java.util.Arrays.sort(a)
+        math.max(8, byFile.size * 2))
+      byFile.foreach { case (k, as) =>
+        // memoized arrays are shared: merge into a fresh one
+        val a = if (as.size == 1) as.head else {
+          val c = Array.concat(as: _*); java.util.Arrays.sort(c); c }
         map.put(org.apache.spark.unsafe.types.UTF8String.fromString(k), a): Unit
       }
       spark.sparkContext.broadcast(map)
@@ -5239,22 +5322,88 @@ object ManifestTable {
     }
   }
 
-  /** Map `input_file_name()` absolutes back to table-relative paths.
-    * Suffix match against the candidate list (the path may or may not
-    * arrive URL-encoded depending on the source); a miss is a hard
-    * error — silently dropping a hit file would corrupt a rewrite.
+  /** Maps `input_file_name()` absolutes back to the table-relative
+    * paths among `candidates`. The candidates are indexed once by file
+    * name, so each lookup suffix-matches only the candidates that share
+    * the absolute path's last segment (the path may or may not arrive
+    * URL-encoded depending on the source, so both forms are tried). A
+    * miss is a hard error: silently dropping a hit file would corrupt a
+    * rewrite.
     */
-  private def matchRel(abs: String, candidates: Seq[String]): String = {
-    val decoded =
-      try Option(new java.net.URI(abs).getPath)
-      catch { case _: java.net.URISyntaxException => None }
-    candidates.find { rel =>
-      // absolute candidates (shallow-clone references) already carry
-      // their leading '/' — the path-segment guard must not double it
-      val needle = if (rel.startsWith("/")) rel else "/" + rel
-      abs.endsWith(needle) || decoded.exists(_.endsWith(needle))
-    }.getOrElse(throw new IllegalStateException(
-      s"input file $abs not among candidate files"))
+  private[graft] def matchRel(candidates: Seq[String]): String => String = {
+    def name(path: String) = path.substring(path.lastIndexOf('/') + 1)
+    val byName = candidates.groupBy(name)
+    abs => {
+      val decoded =
+        try Option(new java.net.URI(abs).getPath)
+        catch { case _: java.net.URISyntaxException => None }
+      (abs +: decoded.toSeq).iterator.flatMap { a =>
+        byName.getOrElse(name(a), Nil).find { rel =>
+          // absolute candidates (shallow-clone references) already carry
+          // their leading '/' — the path-segment guard must not double it
+          a.endsWith(if (rel.startsWith("/")) rel else "/" + rel)
+        }
+      }.nextOption().getOrElse(throw new IllegalStateException(
+        s"input file $abs not among candidate files"))
+    }
+  }
+
+  /** What one narrow pass over identity-tagged rows learns
+    * ([[filePass]]): the row count of each input file, keyed by its
+    * absolute path, and — when the vector is small — every (file, idx)
+    * position: table-relative file → sorted row indexes.
+    */
+  private final case class FilePass(counts: Map[String, Long],
+      positions: Option[Map[String, Array[Long]]])
+
+  /** ONE `mapPartitions` pass with no shuffle over `frame`'s
+    * [[AbsPathCol]], [[DvFileCol]] and [[DvIdxCol]]: the row count of
+    * each file, plus the positions of each partition that holds at most
+    * ⌈`threshold` / partitions⌉ rows, so the driver never holds more
+    * than about `threshold` of them. The positions come back only when
+    * every partition returned its own and they total at most
+    * `threshold`; `threshold <= 0` reads the paths alone.
+    */
+  private def filePass(frame: DataFrame, threshold: Long): FilePass = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.unsafe.types.UTF8String
+    val withPos = threshold > 0
+    val cols = if (withPos) Seq(AbsPathCol, DvFileCol, DvIdxCol) else Seq(AbsPathCol)
+    val parts = org.apache.spark.sql.GraftColumnBridge.collectPartitions(
+        frame.select(cols.map(col): _*), "filePass") { (n, rows) =>
+      val cap = if (withPos) (threshold + n - 1) / n else -1L
+      val counts = scala.collection.mutable.HashMap.empty[String, Long]
+      val pos = scala.collection.mutable.HashMap.empty[String,
+        scala.collection.mutable.ArrayBuilder.ofLong]
+      // a file's rows arrive together: convert each path once per run
+      var absRaw, fileRaw: UTF8String = null
+      var abs, file: String = null
+      var seen = 0L
+      rows.foreach { r =>
+        if (!r.getUTF8String(0).equals(absRaw)) {
+          absRaw = r.getUTF8String(0).clone(); abs = absRaw.toString }
+        counts(abs) = counts.getOrElse(abs, 0L) + 1L
+        seen += 1
+        if (seen <= cap) {
+          if (!r.getUTF8String(1).equals(fileRaw)) {
+            fileRaw = r.getUTF8String(1).clone(); file = fileRaw.toString }
+          pos.getOrElseUpdate(file,
+            new scala.collection.mutable.ArrayBuilder.ofLong) += r.getLong(2)
+        } else if (seen == cap + 1) pos.clear()
+      }
+      (counts.toArray,
+        if (seen > cap) null else pos.iterator.map { case (f, b) => f -> b.result() }.toArray)
+    }
+    val counts = parts.iterator.flatMap(_._1).toSeq.groupMapReduce(_._1)(_._2)(_ + _)
+    val positions =
+      if (parts.exists(_._2 == null)) None
+      else {
+        val byFile = parts.iterator.flatMap(_._2).toSeq
+          .groupMapReduce(_._1)(_._2)(Array.concat(_, _))
+        if (positionCount(byFile) > threshold) None
+        else Some(byFile.map { case (f, a) => java.util.Arrays.sort(a); f -> a })
+      }
+    FilePass(counts, positions)
   }
 
   /** One row-level change for [[rewriteRows]], built per attempt:
@@ -5271,8 +5420,9 @@ object ManifestTable {
     *    inherits their ids) and names the identity columns they draw.
     *
     * `pinned`: the touched rows' (file, row-index) ids, evaluated and
-    * pinned already; the candidates are then exactly the files holding
-    * them, and reads carry the row-identity columns. `always` commits
+    * pinned already, with their [[filePass]]; the candidates are then
+    * exactly the files holding them, and reads carry the row-identity
+    * columns. `always` commits
     * even when nothing is touched (an upsert of an empty source).
     * `changes` replaces the default change rows of the touched rows,
     * given the hit files and those rows; `expect` adds checks on the
@@ -5285,9 +5435,14 @@ object ManifestTable {
       inserts: Option[Option[DataFrame] => (DataFrame, Seq[(String, Long)])] =
         None,
       expect: Seq[Expectation] = Seq.empty,
-      pinned: Option[DataFrame] = None,
+      pinned: Option[Pinned] = None,
       always: Boolean = false,
       changes: Option[(Seq[String], DataFrame) => DataFrame] = None)
+
+  /** A condition builder's matched rows ([[byRowIds]]): their pinned
+    * (file, row-index) ids and the one [[filePass]] over them.
+    */
+  private final case class Pinned(ids: DataFrame, pass: FilePass)
 
   /** How a delete or update finds its rows: `flag` adds what `hit`
     * reads (nothing for a predicate, the `pinned` row ids for a
@@ -5296,7 +5451,7 @@ object ManifestTable {
     */
   private final case class Find(candidates: Seq[String],
       flag: DataFrame => DataFrame, hit: Column,
-      pinned: Option[DataFrame] = None) {
+      pinned: Option[Pinned] = None) {
     private def live: Column =
       org.apache.spark.sql.functions.coalesce(hit,
         org.apache.spark.sql.functions.lit(false))
@@ -5317,8 +5472,10 @@ object ManifestTable {
     * recipe: subqueries and other external state are consulted one
     * time, and every later read flags its touched rows by joining
     * those exact ids, so duplicates and map-typed columns need no
-    * whole-row value equality. The ids are narrow and stay
-    * distributed; only the hit file names reach the driver.
+    * whole-row value equality. The ids are narrow, pinned and stay
+    * distributed; ONE [[filePass]] over them gives the hit files, each
+    * file's count and, for a small vector, the positions, which
+    * [[rewriteRows]] then takes as they are instead of scanning again.
     */
   private def byRowIds(t: Txn, condFor: DataFrame => Column,
       prune: Option[org.apache.spark.sql.catalyst.expressions.Expression])
@@ -5331,10 +5488,10 @@ object ManifestTable {
       .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol),
         lit(true).as(HitCol))
       .localCheckpoint()
-    val hits = ids.select(AbsPathCol).distinct().collect()
-      .map(r => matchRel(r.getString(0), candidates)).toSeq.distinct.sorted
+    val pass = filePass(ids, dvInlineThreshold(t.spark))
+    val hits = pass.counts.keys.map(matchRel(candidates)).toSeq.distinct.sorted
     Find(hits, _.join(ids.drop(AbsPathCol), Seq(DvFileCol, DvIdxCol),
-      "left_outer"), col(HitCol), Some(ids))
+      "left_outer"), col(HitCol), Some(Pinned(ids, pass)))
   }
 
   /** UPDATE's SET over a target frame: assigned columns take their new
@@ -5374,16 +5531,19 @@ object ManifestTable {
   }
 
   /** The row-level core every delete, update, merge and replaceWhere
-    * attempt runs. Copy-on-write finds the touched files with one scan
-    * of the candidates (collecting file NAMES only — statistics already
-    * pruned the candidates), rewrites them through `rewrite` and
-    * removes them: an O(touched files) delta. Merge-on-read pins the
-    * touched rows ONCE (just their row ids when nothing reads them
-    * again), so the sidecar, the post-images, inherited ids and the
-    * change feed are provably the same rows; it writes ONE deletion-
-    * vector sidecar of their (file, row-index) ids and appends their
-    * post-images, rewriting nothing — reads through the DV-filtered
-    * scan keep repeated vectors disjoint, so counts add. Either way the
+    * attempt runs. Copy-on-write finds the touched files with one
+    * [[filePass]] over the candidates (file NAMES only reach the driver
+    * — statistics already pruned the candidates), rewrites them through
+    * `rewrite` and removes them: an O(touched files) delta. Merge-on-
+    * read pins the touched rows ONCE (just their row ids when nothing
+    * reads them again), so the sidecar, the post-images, inherited ids
+    * and the change feed are provably the same rows; one [[filePass]]
+    * over the pinned rows (or the pinned ids' own, `c.pinned`) counts
+    * them per file. It writes ONE deletion-vector sidecar of their
+    * (file, row-index) ids — from the driver when the pass returned the
+    * positions, else by Spark from the pinned rows — and appends their
+    * post-images, rewriting nothing; reads through the DV-filtered scan
+    * keep repeated vectors disjoint, so counts add. Either way the
     * inserts append in the same commit. The new content is schema-
     * checked and evolves the recorded schema (all written rows when the
     * change sets values, else the inserts), CHECK and NOT NULL
@@ -5394,29 +5554,32 @@ object ManifestTable {
     */
   private def rewriteRows(t: Txn, mor: Boolean, c: RowChange)(
       op: Int => Map[String, String]): Option[Commit] = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     def strip(df: DataFrame): DataFrame = {
       val tags = df.columns.filter(RowIdentityCols)
       if (tags.isEmpty) df else df.drop(tags.toIndexedSeq: _*)
     }
     def touchedIn(files: Seq[String], ids: Boolean): DataFrame =
       c.touched(t.read(files, keepIdentity = ids || c.pinned.isDefined))
-    def rel(r: org.apache.spark.sql.Row) = matchRel(r.getString(0), c.candidates)
+    val rel = matchRel(c.candidates)
     val keepRows = c.post.isDefined || c.inserts.isDefined
     val matched =
       if (!mor || c.candidates.isEmpty) None
       else if (keepRows) Some(touchedIn(c.candidates, ids = true)
         .localCheckpoint())
-      else c.pinned.orElse(Some(touchedIn(c.candidates, ids = true)
+      else c.pinned.map(_.ids).orElse(Some(touchedIn(c.candidates, ids = true)
         .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol))
         .localCheckpoint()))
-    val byFile = matched.toSeq.flatMap(_.groupBy(col(AbsPathCol))
-      .agg(count(lit(1))).collect()) // file-NAME-sized
+    // the pinned ids' pass covers the same rows: no second scan
+    val pass = matched.map(m => c.pinned.fold(
+      filePass(m, dvInlineThreshold(t.spark)))(_.pass))
+    val byFile: Seq[(String, Long)] = pass.toSeq.flatMap(_.counts)
+      .groupMapReduce(e => rel(e._1))(_._2)(_ + _).toSeq.sortBy(_._1)
     val hits: Seq[String] =
-      if (mor) byFile.map(rel).sorted
+      if (mor) byFile.map(_._1)
       else if (c.pinned.isDefined || c.candidates.isEmpty) c.candidates
-      else touchedIn(c.candidates, ids = true).select(AbsPathCol).distinct()
-        .collect().map(rel).toSeq.distinct.sorted
+      else filePass(touchedIn(c.candidates, ids = true), 0L).counts.keys
+        .map(rel).toSeq.distinct.sorted
     // the touched rows in target columns — lazy: only merge-on-read,
     // inserts and the change feed read them
     lazy val pre = if (hits.isEmpty) None else Some(strip(
@@ -5450,9 +5613,13 @@ object ManifestTable {
       if (byFile.isEmpty) Map.empty
       else {
         val dir = s"deletes/d${t.next}-${java.util.UUID.randomUUID()}"
-        matched.get.select(col(DvFileCol).as("file"), col(DvIdxCol).as("idx"))
-          .write.parquet(s"${t.table}/$dir")
-        byFile.map(r => rel(r) -> Seq(DvRef(dir, r.getLong(1)))).toMap
+        pass.flatMap(_.positions) match {
+          case Some(pos) => writeDvSidecar(t, dir, pos)
+          case None =>
+            matched.get.select(col(DvFileCol).as("file"), col(DvIdxCol).as("idx"))
+              .write.parquet(s"${t.table}/$dir")
+        }
+        byFile.map { case (f, n) => f -> Seq(DvRef(dir, n)) }.toMap
       }
     val phys = (if (c.post.isDefined) out else written).map(toPhysical(_, mapping))
     val fresh = phys.fold(Seq.empty[String])(
@@ -6130,7 +6297,8 @@ object ManifestTable {
     val pin = pinOnDemand(source)
     transact(spark, table, maxAttempts, partitionCols) { t =>
       val src = pin(t)
-      val srcKeys = src.select(keyCols.map(col): _*).distinct()
+      // semi- and anti-joins ignore duplicates on their right side
+      val srcKeys = src.select(keyCols.map(col): _*)
       val onRead = mor(t)
       rewriteRows(t, onRead, RowChange(
         mergeKeyCandidates(src, keyCols.map(k => k -> k), t),

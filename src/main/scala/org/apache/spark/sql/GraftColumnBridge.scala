@@ -45,6 +45,24 @@ object GraftColumnBridge {
     () => ser.value
   }
 
+  /** ONE action over `df`: `f` runs on each partition's rows and its
+    * results come back one per partition — `df.rdd.mapPartitions(...)
+    * .collect()` without the row deserializer, tracked as a SQL
+    * execution named `name` (the private[sql] `Dataset.withAction`
+    * recipe), so listeners and plan dumps see it like a collect. `f`
+    * gets the partition count; rows may be reused buffers, so it must
+    * copy what it keeps.
+    */
+  def collectPartitions[T: scala.reflect.ClassTag](df: DataFrame,
+      name: String)(f: (Int, Iterator[catalyst.InternalRow]) => T): Array[T] = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some(name)) {
+      val rdd = qe.executedPlan.execute()
+      val n = rdd.getNumPartitions
+      rdd.mapPartitions(rows => Iterator.single(f(n, rows))).collect()
+    }
+  }
+
   /** Build a DataFrame from a custom logical plan (the private[sql]
     * Dataset.ofRows) — how extension libraries surface custom
     * LogicalPlan operators behind a plain DataFrame API.

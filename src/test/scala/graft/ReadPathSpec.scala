@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
@@ -17,36 +16,6 @@ import java.nio.file.Files
 class ReadPathSpec extends AnyFunSuite with SparkSuite {
   private def fresh(): String =
     Files.createTempDirectory("graft_readpath").resolve("t").toString
-
-  /** Spark jobs submitted from this thread while `body` runs. A marker
-    * job in its own group runs after `body`; the listener has seen every
-    * earlier job once it has seen the marker.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"readpath-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "read-path probe")
-      body
-      sc.setJobGroup(group + "-marker", "listener marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains(group + "-marker") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(seen.contains(group + "-marker"), "listener never saw the marker")
-      seen.toArray.count(_ == group)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("building read, time travel, readWhere and readChanges runs no Spark job") {
     import spark.implicits._

@@ -7,7 +7,9 @@ import graft.sinks.ManifestTable
 
 /** Dumps the optimized plan of every action the row-level lake ops run:
   * p52 (merge-on-read delete, update and clause merge with the change
-  * feed on), a copy-on-write delete and update of a 5-file table, and
+  * feed on), a copy-on-write delete and update of a 5-file table, a
+  * copy-on-write and a merge-on-read upsert ([[ManifestTable.merge]])
+  * into such a table, and
   * the snapshot reads of a table with three snapshot directories and a
   * deletion vector (a read, a copy-on-write delete and the
   * auto-compaction its next append triggers). It also dumps the event
@@ -23,7 +25,8 @@ import graft.sinks.ManifestTable
   *   sbt "Test/runMain graft.RowLevelPlanDump <sfDir> <outDir>"
   *
   * writes `<outDir>/p52_mor_row_ops.txt`, `<outDir>/cow_delete_update.txt`,
-  * `<outDir>/snapshot_reads.txt` and `<outDir>/streaming.txt`.
+  * `<outDir>/merge_upsert.txt`, `<outDir>/snapshot_reads.txt` and
+  * `<outDir>/streaming.txt`.
   */
 object RowLevelPlanDump {
   def main(args: Array[String]): Unit = {
@@ -73,6 +76,19 @@ object RowLevelPlanDump {
         .toDF("id", "tag").repartitionByRange(5, col("id")), t)
       ManifestTable.delete(spark, t, col("id") < 30L)
       ManifestTable.update(spark, t, col("id") >= 90L, Map("tag" -> lit("u")))
+    }
+    capture("merge_upsert") {
+      import spark.implicits._
+      val source = Seq((15L, "m"), (55L, "m"), (200L, "n")).toDF("id", "tag")
+      Seq("copy-on-write", "merge-on-read").foreach { mode =>
+        val t = java.nio.file.Files.createTempDirectory("graft_plans")
+          .resolve("t").toString
+        ManifestTable.write(spark, (0 until 100).map(i => (i.toLong, s"t${i % 7}"))
+          .toDF("id", "tag").repartitionByRange(5, col("id")), t)
+        ManifestTable.updateProperties(spark, t,
+          Map(ManifestTable.MergeModeProp -> mode))
+        ManifestTable.merge(spark, source, t, Seq("id"))
+      }
     }
     import spark.implicits._
     val rt = java.nio.file.Files.createTempDirectory("graft_plans")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{classic, SparkSession, SparkSessionExtensions}
 import org.scalatest.{BeforeAndAfterAll, TestSuite}
 import org.scalatest.concurrent.{Signaler, TimeLimitedTests}
@@ -35,6 +36,36 @@ trait SparkSuite extends TimeLimitedTests with BeforeAndAfterAll {
       .newInstance(shared.sparkContext, Some(shared.sharedState), None,
         new SparkSessionExtensions, Map.empty, Map.empty)
       .asInstanceOf[SparkSession]
+  }
+
+  /** Spark jobs submitted from this thread while `body` runs. A marker
+    * job in its own group runs after `body`; the listener has seen every
+    * earlier job once it has seen the marker.
+    */
+  protected def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job-count probe")
+      body
+      sc.setJobGroup(group + "-marker", "listener marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(group + "-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(group + "-marker"), "listener never saw the marker")
+      seen.toArray.count(_ == group)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   private var confAtStart = Map.empty[String, String]
