@@ -5409,15 +5409,16 @@ object ManifestTable {
   /** One row-level change for [[rewriteRows]], built per attempt:
     *
     *  - `touched` keeps the rows of a target read that the change
-    *    touches: a predicate, a semi-join on source keys, a join on
-    *    pinned row ids, or the clause join;
+    *    touches: a predicate, the source's key set or a semi-join on
+    *    its keys, a join on pinned row ids, or the clause join;
     *  - `rewrite` maps the rows of the touched files to what they
     *    become under copy-on-write: touched rows dropped or projected,
     *    the rest kept;
     *  - `post` is a touched row's new image (None: touched rows leave
     *    the table), which merge-on-read appends;
     *  - `inserts` builds the new rows from the touched ones (an upsert
-    *    inherits their ids) and names the identity columns they draw.
+    *    inherits their ids, and says so with `inherit`) and names the
+    *    identity columns they draw.
     *
     * `pinned`: the touched rows' (file, row-index) ids, evaluated and
     * pinned already, with their [[filePass]]; the candidates are then
@@ -5436,6 +5437,7 @@ object ManifestTable {
         None,
       expect: Seq[Expectation] = Seq.empty,
       pinned: Option[Pinned] = None,
+      inherit: Boolean = false,
       always: Boolean = false,
       changes: Option[(Seq[String], DataFrame) => DataFrame] = None)
 
@@ -5535,15 +5537,18 @@ object ManifestTable {
     * [[filePass]] over the candidates (file NAMES only reach the driver
     * — statistics already pruned the candidates), rewrites them through
     * `rewrite` and removes them: an O(touched files) delta. Merge-on-
-    * read pins the touched rows ONCE (just their row ids when nothing
-    * reads them again), so the sidecar, the post-images, inherited ids
-    * and the change feed are provably the same rows; one [[filePass]]
-    * over the pinned rows (or the pinned ids' own, `c.pinned`) counts
-    * them per file. It writes ONE deletion-vector sidecar of their
-    * (file, row-index) ids — from the driver when the pass returned the
-    * positions, else by Spark from the pinned rows — and appends their
-    * post-images, rewriting nothing; reads through the DV-filtered scan
-    * keep repeated vectors disjoint, so counts add. Either way the
+    * read pins the touched rows ONCE when a later step reads them again
+    * (post-images, inherited ids, the change feed), so the sidecar and
+    * those steps are provably the same rows, unless the condition
+    * builder's pinned ids (`c.pinned`) fix them already; otherwise it
+    * keeps just their row ids, pinned only when a second read could
+    * find other rows ([[planMustPin]]). One [[filePass]] over the
+    * touched rows (or the pinned ids' own) counts them per file. It
+    * writes ONE deletion-vector sidecar of their (file, row-index) ids —
+    * from the driver when the pass returned the positions, else by Spark
+    * from the touched rows — and appends their post-images, rewriting
+    * nothing; reads through the DV-filtered scan keep repeated vectors
+    * disjoint, so counts add. Either way the
     * inserts append in the same commit. The new content is schema-
     * checked and evolves the recorded schema (all written rows when the
     * change sets values, else the inserts), CHECK and NOT NULL
@@ -5562,14 +5567,20 @@ object ManifestTable {
     def touchedIn(files: Seq[String], ids: Boolean): DataFrame =
       c.touched(t.read(files, keepIdentity = ids || c.pinned.isDefined))
     val rel = matchRel(c.candidates)
-    val keepRows = c.post.isDefined || c.inserts.isDefined
+    // the touched rows are pinned in full when a later step reads them
+    // again and no pinned ids fix them already; else only their ids are
+    // kept, pinned when a large vector's write could read other rows
+    val pinRows = c.pinned.isEmpty &&
+      (c.post.isDefined || c.inherit || changeFeedOn(t.props))
     val matched =
       if (!mor || c.candidates.isEmpty) None
-      else if (keepRows) Some(touchedIn(c.candidates, ids = true)
+      else if (pinRows) Some(touchedIn(c.candidates, ids = true)
         .localCheckpoint())
-      else c.pinned.map(_.ids).orElse(Some(touchedIn(c.candidates, ids = true)
-        .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol))
-        .localCheckpoint()))
+      else c.pinned.map(_.ids).orElse {
+        val ids = touchedIn(c.candidates, ids = true)
+          .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol))
+        Some(if (planMustPin(ids)) ids.localCheckpoint() else ids)
+      }
     // the pinned ids' pass covers the same rows: no second scan
     val pass = matched.map(m => c.pinned.fold(
       filePass(m, dvInlineThreshold(t.spark)))(_.pass))
@@ -5583,7 +5594,7 @@ object ManifestTable {
     // the touched rows in target columns — lazy: only merge-on-read,
     // inserts and the change feed read them
     lazy val pre = if (hits.isEmpty) None else Some(strip(
-      if (mor && keepRows) matched.get
+      if (mor && pinRows) matched.get
       else touchedIn(if (mor) c.candidates else hits, ids = false)))
     val inserts = c.inserts.map(_(pre))
     if (hits.isEmpty && inserts.forall(i => !c.always && i._1.isEmpty))
@@ -6242,8 +6253,10 @@ object ManifestTable {
     * replace the table row with the same `keyCols` value (whole-row
     * update) or insert it if the key is new. The rewrite unit is the
     * FILE: manifest key-range statistics prune to candidate files
-    * (per-column source bounds — composite keys prune too), a semi-join pass
-    * finds the files actually holding matched keys, only those are
+    * (per-column source bounds — composite keys prune too), one pass
+    * over the rows whose key is in the source's key set (or a
+    * semi-join, [[mergeKeys]]) finds the files actually holding
+    * matched keys, only those are
     * rewritten (their matched rows dropped), and the source lands as
     * fresh files alongside — one O(touched files) delta commit. This
     * is the CDC-apply / dimension-refresh primitive at lake scale: a
@@ -6282,33 +6295,49 @@ object ManifestTable {
   /** [[merge]] and [[mergeVectors]]: the touched rows are the target
     * rows whose key the source carries, and they leave the table;
     * every source row inserts ([[upsertRows]]); the change feed tags
-    * replaced rows as deletes and source rows as inserts. The source
-    * is pinned ONCE when required ([[pinOnDemand]]): the key-bounds
-    * agg, the hit scan, the rewrite union, the constraint check and
-    * the CDC tagging all re-evaluate it, and a non-deterministic
-    * source could otherwise pass the checks on one evaluation and
-    * commit different rows.
+    * replaced rows as deletes and source rows as inserts. When the
+    * source's keys come back to the driver ([[mergeKeys]]) a target
+    * row is touched by its key's membership in that set; otherwise
+    * semi- and anti-joins ask the source. The source is pinned ONCE
+    * when required ([[pinOnDemand]]): the key pass, the hit scan, the
+    * rewrite union, the constraint check and the CDC tagging all
+    * re-evaluate it, and a non-deterministic source could otherwise
+    * pass the checks on one evaluation and commit different rows.
     */
   private def upsert(spark: SparkSession, source: DataFrame, table: String,
       keyCols: Seq[String], partitionCols: Seq[String], maxAttempts: Int,
       mor: Txn => Boolean): Long = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val pin = pinOnDemand(source)
     transact(spark, table, maxAttempts, partitionCols) { t =>
       val src = pin(t)
-      // semi- and anti-joins ignore duplicates on their right side
-      val srcKeys = src.select(keyCols.map(col): _*)
+      val keys = mergeKeys(src, keyCols.map(k => k -> k), t)
+      val (touched, kept): (DataFrame => DataFrame, DataFrame => DataFrame) =
+        keys.in match {
+          // a NULL key is in no set: its row stays
+          case Some(in) => (_.filter(in), _.filter(!coalesce(in, lit(false))))
+          case None =>
+            // semi- and anti-joins ignore duplicates on their right side
+            val srcKeys = src.select(keyCols.map(col): _*)
+            (_.join(srcKeys, keyCols, "left_semi"),
+              _.join(srcKeys, keyCols, "left_anti"))
+        }
       val onRead = mor(t)
-      rewriteRows(t, onRead, RowChange(
-        mergeKeyCandidates(src, keyCols.map(k => k -> k), t),
-        _.join(srcKeys, keyCols, "left_semi"),
-        _.join(srcKeys, keyCols, "left_anti"),
-        inserts = Some(upsertRows(t, src, keyCols, _)), always = true)) { n =>
+      rewriteRows(t, onRead, RowChange(keys.candidates, touched, kept,
+        inserts = Some(upsertRows(t, src, keyCols, _)),
+        inherit = inheritedCols(t).nonEmpty, always = true)) { n =>
         t.op("merge", ("keys" -> keyCols.mkString(",")) +: counts(onRead, n): _*)
       }
     }
   }
+
+  /** The columns an upsert's source rows inherit from the rows they
+    * replace: identity columns, and the row id under row tracking.
+    */
+  private def inheritedCols(t: Txn): Seq[String] =
+    identityOf(t.snap.schema).map(_._1.name) ++
+      (if (rowTracking(t.props)) Seq(RowIdCol) else Seq.empty)
 
   /** The upsert's source rows, ready to write: generated columns
     * recompute from the source's values, and an identity column — or,
@@ -6323,8 +6352,7 @@ object ManifestTable {
       olds: Option[DataFrame]): (DataFrame, Seq[(String, Long)]) = {
     import org.apache.spark.sql.functions.{coalesce, col}
     val gens = recomputeGenerated(src, t.snap.schema)
-    val names = identityOf(t.snap.schema).map(_._1.name) ++
-      (if (rowTracking(t.props)) Seq(RowIdCol) else Seq.empty)
+    val names = inheritedCols(t)
     val inherited = olds.filter(_ => names.nonEmpty).fold(gens) { o =>
       val have = names.filter(o.columns.contains)
       def old(n: String) = s"_graft_old_$n"
@@ -6337,47 +6365,146 @@ object ManifestTable {
     drawIds(inherited, t)
   }
 
-  /** ONE multi-agg over the merge source serving two purposes: (1) the
-    * duplicate-key guard — SQL MERGE errors when several source rows
-    * match one target row; silently landing both copies would corrupt
-    * key uniqueness (ADVICE r11): rows whose key is fully non-null
-    * (the only rows that can match) vs distinct such keys (when()
-    * nulls out partially-null keys so count_distinct skips them — a
-    * struct with null FIELDS is itself non-null and would mask
-    * duplicates; NULL-keyed rows never match and may repeat); (2)
-    * PER-COLUMN key bounds for stats pruning: a file can only hold a
-    * matched key if every key column's file range overlaps that
-    * column's source range (min/max ignore nulls; an all-null column
-    * proves no source row can match at all). `keyPairs` maps target
-    * key column → source key column (they differ when the SQL ON
-    * clause equates differently-named columns).
+  /** Most fully-non-null source keys a merge checks on the driver
+    * ([[sourceKeys]]); a source with more keeps the aggregate guard.
     */
-  private def mergeKeyCandidates(source: DataFrame,
-      keyPairs: Seq[(String, String)], t: Txn): Seq[String] = {
+  private[graft] val DriverKeyBound: Int = 1 << 16
+
+  /** Key types whose SQL equality is equality of their catalyst values,
+    * so a hash set of those values holds exactly the distinct keys the
+    * aggregate guard counts. Float and double fold −0.0 and NaN, and
+    * collated strings and complex types compare otherwise.
+    */
+  private def valueEqual(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      // `StringType` matches only the default (binary) collation
+      case BooleanType | ByteType | ShortType | IntegerType | LongType |
+          DateType | TimestampType | TimestampNTZType | StringType => true
+      case _ => false
+    }
+  }
+
+  /** The fully-non-null rows of a merge source's key columns `keys`,
+    * as catalyst values, when every key column is [[valueEqual]] and
+    * there are at most [[DriverKeyBound]] of them. A source the driver
+    * holds (a `LocalRelation`) is read with no job; any other runs ONE
+    * narrow pass with no shuffle, in which a partition gives up past
+    * its share of the bound. None: the source takes the aggregate
+    * guard.
+    */
+  private[graft] def sourceKeys(keys: DataFrame): Option[Seq[IndexedSeq[Any]]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val types = keys.schema.fields.map(_.dataType).toIndexedSeq
+    if (!types.forall(valueEqual)) return None
+    val bound = DriverKeyBound
+    // the keys of `rows` with no null field, or null past `cap` keys
+    def take(rows: Iterator[InternalRow], cap: Long): Array[IndexedSeq[Any]] = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[IndexedSeq[Any]]
+      while (rows.hasNext) {
+        val r = rows.next()
+        if (types.indices.forall(i => !r.isNullAt(i))) {
+          if (out.size >= cap) return null
+          out += types.indices.map(i => r.get(i, types(i)) match {
+            case s: org.apache.spark.unsafe.types.UTF8String => s.clone()
+            case v => v
+          })
+        }
+      }
+      out.toArray
+    }
+    val parts = keys.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        Array(take(l.data.iterator, bound))
+      case _ => org.apache.spark.sql.GraftColumnBridge.collectPartitions(
+          keys, "mergeKeys") { (n, rows) => take(rows, (bound + n - 1) / n) }
+    }
+    if (parts.contains(null)) None else Some(parts.toSeq.flatten)
+  }
+
+  /** What a merge learns from its source's keys ([[mergeKeys]]): the
+    * files that may hold a matched key, and — when the keys came back
+    * to the driver — whether a target row's key is among them.
+    */
+  private final case class MergeKeys(candidates: Seq[String], in: Option[Column])
+
+  /** The merge source's duplicate-key guard and candidate files. SQL
+    * MERGE errors when several source rows match one target row;
+    * silently landing both copies would corrupt key uniqueness (ADVICE
+    * r11). Only rows whose key is fully non-null can match, so only
+    * they count: NULL-keyed rows never match and may repeat. A file can
+    * hold a matched key only if every key column's file range overlaps
+    * that column's source range, so per-column bounds prune by
+    * statistics (composite keys prune too). `keyPairs` maps target key
+    * column → source key column (they differ when the SQL ON clause
+    * equates differently-named columns).
+    *
+    * The keys come to the driver when they can ([[sourceKeys]]): the
+    * driver counts them, takes their bounds and, when each key column
+    * has the same type in source and target, tests membership with one
+    * typed `InSet` (over a struct for a composite key). Otherwise ONE
+    * aggregate — fully-non-null rows vs distinct such keys (`when`
+    * nulls out partially-null keys, since a struct with null FIELDS is
+    * itself non-null and would mask duplicates), plus per-column
+    * min/max, which ignore nulls (an all-null column proves no source
+    * row can match) — gives the same answers, and no membership test.
+    */
+  private def mergeKeys(source: DataFrame,
+      keyPairs: Seq[(String, String)], t: Txn): MergeKeys = {
+    import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, InSet, Literal}
     import org.apache.spark.sql.functions.{col, count_distinct, lit, struct, sum, when, max => fmax, min => fmin}
+    import org.apache.spark.sql.GraftColumnBridge.{column, eagerExpression}
     val sCols = keyPairs.map(_._2)
-    val nonNull = sCols.map(col(_).isNotNull).reduce(_ && _)
-    val aggs = sCols.zipWithIndex.flatMap { case (k, i) =>
-      Seq(fmin(col(k)).as(s"mn_$i"), fmax(col(k)).as(s"mx_$i")) } ++ Seq(
-      sum(when(nonNull, 1L).otherwise(0L)).as("_graft_n"),
-      count_distinct(when(nonNull, struct(sCols.map(col): _*)))
-        .as("_graft_d"))
-    val r = source.agg(aggs.head, aggs.tail: _*).head()
-    val nIdx = 2 * keyPairs.size
-    val n = if (r.isNullAt(nIdx)) 0L else r.getLong(nIdx)
-    val d = r.getLong(nIdx + 1)
-    if (n > d) throw new IllegalArgumentException(
-      s"merge source has duplicate values of key (${sCols.mkString(", ")}): " +
-        s"$n keyed rows but only $d distinct keys — a target row would " +
-        "be replaced by multiple source rows. De-duplicate the source " +
-        "first.")
-    if (keyPairs.indices.exists(i => r.isNullAt(2 * i))) Seq.empty
-    else {
-      val pred = keyPairs.zipWithIndex.map { case ((t, _), i) =>
-        col(t) >= lit(r.get(2 * i)) && col(t) <= lit(r.get(2 * i + 1))
-      }.reduce(_ && _)
-      val predExpr = DataSkipping.expressionOf(pred)
-      t.snap.files.filter(f => DataSkipping.mayMatch(t.lstats.get(f), predExpr))
+    def guard(n: Long, d: Long): Unit =
+      if (n > d) throw new IllegalArgumentException(
+        s"merge source has duplicate values of key (${sCols.mkString(", ")}): " +
+          s"$n keyed rows but only $d distinct keys — a target row would " +
+          "be replaced by multiple source rows. De-duplicate the source " +
+          "first.")
+    // the files whose statistics admit every column's [lo, hi]; none
+    // when no source key can match
+    def within(bounds: Option[Seq[(Column, Column)]]): Seq[String] =
+      bounds.fold(Seq.empty[String]) { b =>
+        val pred = keyPairs.zip(b).map { case ((tk, _), (lo, hi)) =>
+          col(tk) >= lo && col(tk) <= hi }.reduce(_ && _)
+        val predExpr = DataSkipping.expressionOf(pred)
+        t.snap.files.filter(f => DataSkipping.mayMatch(t.lstats.get(f), predExpr))
+      }
+    val keyFrame = source.select(sCols.map(col): _*)
+    sourceKeys(keyFrame) match {
+      case Some(keys) =>
+        val distinct = keys.toSet
+        guard(keys.size, distinct.size)
+        val types = keyFrame.schema.fields.map(_.dataType).toIndexedSeq
+        val bounds = if (keys.isEmpty) None else Some(types.indices.map { i =>
+          val ord = org.apache.spark.sql.catalyst.util.TypeUtils
+            .getInterpretedOrdering(types(i))
+          val vs = keys.map(_(i))
+          (column(Literal(vs.min(ord), types(i))), column(Literal(vs.max(ord), types(i))))
+        })
+        val sameTypes = keyPairs.map(kp => t.snap.schema.fields
+          .find(_.name.equalsIgnoreCase(kp._1)).map(_.dataType)) == types.map(Some(_))
+        val in = if (!sameTypes) None else Some(column(
+          if (keyPairs.size == 1)
+            InSet(eagerExpression(col(keyPairs.head._1)), distinct.map(_.head))
+          else InSet(CreateNamedStruct(keyPairs.zipWithIndex.flatMap {
+              case ((tk, _), i) => Seq(Literal(s"_$i"), eagerExpression(col(tk)))
+            }), distinct.map(k => org.apache.spark.sql.catalyst.InternalRow.fromSeq(k): Any))))
+        MergeKeys(within(bounds), in)
+      case None =>
+        val nonNull = sCols.map(col(_).isNotNull).reduce(_ && _)
+        val aggs = sCols.zipWithIndex.flatMap { case (k, i) =>
+          Seq(fmin(col(k)).as(s"mn_$i"), fmax(col(k)).as(s"mx_$i")) } ++ Seq(
+          sum(when(nonNull, 1L).otherwise(0L)).as("_graft_n"),
+          count_distinct(when(nonNull, struct(sCols.map(col): _*)))
+            .as("_graft_d"))
+        val r = source.agg(aggs.head, aggs.tail: _*).head()
+        val nIdx = 2 * keyPairs.size
+        guard(if (r.isNullAt(nIdx)) 0L else r.getLong(nIdx), r.getLong(nIdx + 1))
+        MergeKeys(within(
+          if (keyPairs.indices.exists(i => r.isNullAt(2 * i))) None
+          else Some(keyPairs.indices.map(i =>
+            (lit(r.get(2 * i)), lit(r.get(2 * i + 1)))))), None)
     }
   }
 
@@ -6441,7 +6568,7 @@ object ManifestTable {
     // on the equality columns — stricter than SQL's runtime
     // cardinality error, but deterministic and checked before any
     // write.
-    // the source is re-evaluated across the guard agg, the hit scan,
+    // the source is re-evaluated across the key guard, the hit scan,
     // the rewrite and the insert — pin ONE evaluation so a
     // non-deterministic source cannot diverge between them
     // (deterministic + contract-free stays lazy — ADVICE r15 low)
@@ -6513,7 +6640,7 @@ object ManifestTable {
       // candidate files: those that could hold a matched key, plus —
       // when by-source clauses exist — those where a by-source
       // condition could hold (an unconditioned clause keeps them all)
-      val keyCand = mergeKeyCandidates(src, keyPairs, t)
+      val keyCand = mergeKeys(src, keyPairs, t).candidates
       val bySourceCand: Seq[String] =
         if (bySource.isEmpty) Seq.empty
         else if (bySource.exists(_.condition.isEmpty)) t.snap.files

@@ -764,7 +764,7 @@ object GraftTableV2 {
           fp.files.groupBy(f =>
             f.partitionValues.toSeq(ps).toIndexedSeq)
             .toSeq
-            .sortBy(_._1.map(String.valueOf).mkString(" "))
+            .sortBy(_._1.map(String.valueOf).mkString("\u0000"))
             .map { case (_, fs) =>
               i += 1
               new KeyedFilePartition(i, fs.toArray, fs.head.partitionValues)

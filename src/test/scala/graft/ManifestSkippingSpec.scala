@@ -898,6 +898,79 @@ class ManifestSkippingSpec extends AnyFunSuite with SparkSuite {
     assert(ManifestTable.read(spark, t).count() == 5)
   }
 
+  test("merge key guard: driver key set, key pass and aggregate agree") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.StringType
+    // rows the key set and the key pass see: a local source, a parquet one
+    def viaParquet(df: DataFrame): DataFrame = {
+      val f = Files.createTempDirectory("graft_guard").resolve("s").toString
+      df.write.parquet(f)
+      spark.read.parquet(f)
+    }
+    // more non-null keys than the driver holds, none of them in a target
+    def filler(like: DataFrame, keys: Seq[String]): DataFrame =
+      spark.range(ManifestTable.DriverKeyBound + 1L).select(like.schema.fields.map(f =>
+        (if (!keys.contains(f.name)) lit(null)
+          else if (f.dataType == StringType) concat(lit("~"), col("id"))
+          else col("id") + 1000000L).cast(f.dataType).as(f.name)): _*)
+    // the table's rows after the merge, or the merge's error
+    def merged(target: DataFrame, source: DataFrame,
+        keys: Seq[String]): Either[String, Seq[String]] = {
+      val t = freshTable()
+      ManifestTable.write(spark, target, t)
+      try {
+        ManifestTable.merge(spark, source, t, keys)
+        Right(ManifestTable.read(spark, t).collect().map(_.toString).sorted.toSeq)
+      } catch {
+        case e: IllegalArgumentException =>
+          assert(ManifestTable.read(spark, t).count() == target.count(), "table untouched")
+          Left(e.getMessage)
+      }
+    }
+    val cases: Seq[(String, DataFrame, DataFrame, Seq[String], Boolean)] = Seq(
+      ("duplicate keys", Seq((1L, "a"), (2L, "b")).toDF("id", "tag"),
+        Seq((5L, "x"), (5L, "y"), (1L, "z")).toDF("id", "tag"), Seq("id"), true),
+      ("repeated partially-null composite keys",
+        Seq((Option(1L), Option("x"), "t1"), (Option(2L), None, "t2"))
+          .toDF("a", "b", "v"),
+        Seq((Option(1L), Option("x"), "s1"), (None, Option("y"), "s2"),
+          (None, Option("y"), "s3"), (Option(2L), None, "s4"),
+          (Option(2L), None, "s5")).toDF("a", "b", "v"), Seq("a", "b"), true),
+      ("an all-null key column", Seq((1L, Option("x"), "t1")).toDF("a", "b", "v"),
+        Seq((1L, Option.empty[String], "s1"), (1L, None, "s2"))
+          .toDF("a", "b", "v"), Seq("a", "b"), true),
+      ("string keys", Seq(("a", 1), ("b", 2)).toDF("k", "v"),
+        Seq(("b", 20), ("c", 30)).toDF("k", "v"), Seq("k"), true),
+      ("double keys -0.0 and 0.0", Seq((1.0, "t")).toDF("k", "v"),
+        Seq((0.0, "p"), (-0.0, "n")).toDF("k", "v"), Seq("k"), false))
+    val expected = Map(
+      "repeated partially-null composite keys" -> 6L,
+      "an all-null key column" -> 3L,
+      "string keys" -> 3L)
+    cases.foreach { case (name, target, source, keys, driver) =>
+      val over = source.unionByName(filler(source, keys))
+      def keysOf(df: DataFrame) = ManifestTable.sourceKeys(df.select(keys.map(col): _*))
+      assert(keysOf(source).isDefined == driver, name)
+      assert(keysOf(over).isEmpty, s"$name: over the bound")
+      val local = merged(target, source, keys)
+      val pass = merged(target, viaParquet(source), keys)
+      val agg = merged(target, over, keys)
+      assert(local == pass, s"$name: key set and key pass differ")
+      (local, agg) match {
+        case (Left(a), Left(b)) =>
+          Seq(a, b).foreach(m => assert(m.contains(
+            s"merge source has duplicate values of key (${keys.mkString(", ")})"), m))
+          assert(expected.get(name).isEmpty, s"$name: rejected")
+        case (Right(a), Right(b)) =>
+          val fill = filler(source, keys).collect().map(_.toString).toSet
+          assert(a == b.filterNot(fill), s"$name: key set and aggregate rows differ")
+          assert(expected.get(name).contains(a.size.toLong), s"$name: ${a.mkString(" ")}")
+        case _ => fail(s"$name: key set $local, aggregate $agg")
+      }
+    }
+  }
+
   test("composite-key merge prunes files from per-column source bounds") {
     import spark.implicits._
     val t = rangedTable() // 5 files, file k holds ids [20k, 20k+20)

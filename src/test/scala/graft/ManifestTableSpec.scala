@@ -1021,7 +1021,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSuite {
     assert(got == (1L to 20L),
       s"replaceWhere must commit the SAME draw its slice check admitted: $got")
 
-    // merge with VOLATILE KEYS: the key-bounds/hit narrowing and the
+    // merge with VOLATILE KEYS: the key-set/hit narrowing and the
     // actual upsert join must consume one draw — otherwise the scan
     // narrows on draw #1's keys while the join matches draw #2's
     val t2 = freshTable()

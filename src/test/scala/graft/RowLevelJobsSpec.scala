@@ -8,8 +8,12 @@ import java.nio.file.Files
 /** The Spark jobs one row-level commit runs, op by op, on a small
   * table. Each row-level commit finds its hit files with one narrow
   * pass; a small deletion vector's sidecar is written by the driver, so
-  * a merge-on-read delete costs its pin and its pass and nothing else.
-  * A count that grows means an action came back.
+  * a merge-on-read delete by a deterministic predicate costs its pass
+  * and nothing else. A merge checks a local source's keys on the driver
+  * and a file source's in one narrow pass, and finds the touched rows
+  * by the key set: its pass and its write, plus the key pass and the
+  * read's own schema job for a parquet source. A count that grows
+  * means an action came back.
   */
 class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
   /** 100 rows in 5 range-localized files: file k holds ids [20k, 20k+20). */
@@ -29,11 +33,21 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
     Seq((15L, "m"), (55L, "m"), (200L, "n")).toDF("id", "tag")
   }
 
+  /** The same source as a parquet file: the benchmark's merge source. */
+  private lazy val sourceFile: String = {
+    val f = Files.createTempDirectory("graft_jobs").resolve("src").toString
+    source.write.parquet(f)
+    f
+  }
+
   private val ops: Seq[(String, String => Unit)] = Seq(
     "delete" -> (t => ManifestTable.delete(spark, t, col("id") < 30L): Unit),
     "update" -> (t => ManifestTable.update(spark, t, col("id") >= 90L,
       Map("tag" -> lit("u"))): Unit),
-    "merge" -> (t => ManifestTable.merge(spark, source, t, Seq("id")): Unit))
+    "merge" -> (t => ManifestTable.merge(spark, source, t, Seq("id")): Unit),
+    // the read's own schema job is counted, as the benchmark counts it
+    "mergeParquet" -> (t => ManifestTable.merge(spark,
+      spark.read.parquet(sourceFile), t, Seq("id")): Unit))
 
   /** Jobs of each op on a fresh table in `mode`, and the rows after it. */
   private def run(mode: Option[String],
@@ -45,6 +59,7 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("jobs per row-level commit: API delete, update and merge in both modes, deleteWhere on read") {
+    assert(new java.io.File(sourceFile).isDirectory) // written before any count
     val cow = ops.map { case (n, op) => n -> run(None, op) }
     val mor = ops.map { case (n, op) => n -> run(Some("merge-on-read"), op) }
     // both modes commit the same rows
@@ -58,8 +73,10 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
       mor.map { case (n, (j, _)) => s"$n/mor" -> j } :+
       ("deleteWhere/mor" -> whereJobs)).toMap
     assert(counts == Map(
-      "delete/cow" -> 2, "update/cow" -> 2, "merge/cow" -> 7,
-      "delete/mor" -> 2, "update/mor" -> 3, "merge/mor" -> 7,
+      "delete/cow" -> 2, "update/cow" -> 2, "merge/cow" -> 2,
+      "mergeParquet/cow" -> 4,
+      "delete/mor" -> 1, "update/mor" -> 3, "merge/mor" -> 2,
+      "mergeParquet/mor" -> 4,
       "deleteWhere/mor" -> 2), counts)
   }
 }
