@@ -6367,8 +6367,12 @@ object ManifestTable {
 
   /** Most fully-non-null source keys a merge checks on the driver
     * ([[sourceKeys]]); a source with more keeps the aggregate guard.
+    * Measured with a 4-column key against 2^16 target rows: the key
+    * set's merge beats the aggregate's up to 2^12 keys in both modes,
+    * ties at 2^13 and is slower from 2^14 on, where every scanned row's
+    * struct probes an ordered set of that many keys.
     */
-  private[graft] val DriverKeyBound: Int = 1 << 16
+  private[graft] val DriverKeyBound: Int = 1 << 12
 
   /** Key types whose SQL equality is equality of their catalyst values,
     * so a hash set of those values holds exactly the distinct keys the
@@ -6385,19 +6389,39 @@ object ManifestTable {
     }
   }
 
+  /** The type a target key column of type `target` and its source
+    * column of type `source` compare in, when a key set can test it
+    * exactly: their shared type, or the wider of two integral types.
+    * None: the source's keys stay with Spark ([[mergeKeys]]).
+    */
+  private def keySetType(target: org.apache.spark.sql.types.DataType,
+      source: org.apache.spark.sql.types.DataType): Option[org.apache.spark.sql.types.DataType] = {
+    import org.apache.spark.sql.types._
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType)
+    if (target == source) Some(target)
+    else if (integral.contains(target) && integral.contains(source))
+      Some(integral(integral.indexOf(target) max integral.indexOf(source)))
+    else None
+  }
+
   /** The fully-non-null rows of a merge source's key columns `keys`,
     * as catalyst values, when every key column is [[valueEqual]] and
     * there are at most [[DriverKeyBound]] of them. A source the driver
-    * holds (a `LocalRelation`) is read with no job; any other runs ONE
+    * holds (a `LocalRelation`) is read with no job. Any other runs ONE
     * narrow pass with no shuffle, in which a partition gives up past
-    * its share of the bound. None: the source takes the aggregate
-    * guard.
+    * its share of the bound, unless the plan's own estimate — its row
+    * count, else its size over the key row's size — is over the bound
+    * already. None: the source takes the aggregate guard.
     */
   private[graft] def sourceKeys(keys: DataFrame): Option[Seq[IndexedSeq[Any]]] = {
     import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
     val types = keys.schema.fields.map(_.dataType).toIndexedSeq
     if (!types.forall(valueEqual)) return None
     val bound = DriverKeyBound
+    val plan = keys.queryExecution.optimizedPlan
+    def estimated: BigInt = plan.stats.rowCount.getOrElse(
+      plan.stats.sizeInBytes / EstimationUtils.getSizePerRow(plan.output))
     // the keys of `rows` with no null field, or null past `cap` keys
     def take(rows: Iterator[InternalRow], cap: Long): Array[IndexedSeq[Any]] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[IndexedSeq[Any]]
@@ -6413,9 +6437,10 @@ object ManifestTable {
       }
       out.toArray
     }
-    val parts = keys.queryExecution.optimizedPlan match {
+    val parts = plan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         Array(take(l.data.iterator, bound))
+      case _ if estimated > bound => return None
       case _ => org.apache.spark.sql.GraftColumnBridge.collectPartitions(
           keys, "mergeKeys") { (n, rows) => take(rows, (bound + n - 1) / n) }
     }
@@ -6439,10 +6464,11 @@ object ManifestTable {
     * column → source key column (they differ when the SQL ON clause
     * equates differently-named columns).
     *
-    * The keys come to the driver when they can ([[sourceKeys]]): the
-    * driver counts them, takes their bounds and, when each key column
-    * has the same type in source and target, tests membership with one
-    * typed `InSet` (over a struct for a composite key). Otherwise ONE
+    * The keys come to the driver when they can ([[sourceKeys]]) and
+    * each key column compares with its target column in one type
+    * ([[keySetType]]): the driver counts them, takes their bounds and
+    * tests membership with one typed `InSet` (over a struct for a
+    * composite key), widening whichever side is narrower. Otherwise ONE
     * aggregate — fully-non-null rows vs distinct such keys (`when`
     * nulls out partially-null keys, since a struct with null FIELDS is
     * itself non-null and would mask duplicates), plus per-column
@@ -6451,7 +6477,7 @@ object ManifestTable {
     */
   private def mergeKeys(source: DataFrame,
       keyPairs: Seq[(String, String)], t: Txn): MergeKeys = {
-    import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, InSet, Literal}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, CreateNamedStruct, InSet, Literal}
     import org.apache.spark.sql.functions.{col, count_distinct, lit, struct, sum, when, max => fmax, min => fmin}
     import org.apache.spark.sql.GraftColumnBridge.{column, eagerExpression}
     val sCols = keyPairs.map(_._2)
@@ -6471,26 +6497,39 @@ object ManifestTable {
         t.snap.files.filter(f => DataSkipping.mayMatch(t.lstats.get(f), predExpr))
       }
     val keyFrame = source.select(sCols.map(col): _*)
-    sourceKeys(keyFrame) match {
+    val types = keyFrame.schema.fields.map(_.dataType).toIndexedSeq
+    // per key column: (target type, the type the two sides compare in)
+    val setTypes = keyPairs.zip(types).map { case ((tk, _), st) =>
+      t.snap.schema.fields.find(_.name.equalsIgnoreCase(tk))
+        .flatMap(f => keySetType(f.dataType, st).map(f.dataType -> _)) }
+    val driverKeys =
+      if (setTypes.contains(None)) None else sourceKeys(keyFrame)
+    driverKeys match {
       case Some(keys) =>
-        val distinct = keys.toSet
-        guard(keys.size, distinct.size)
-        val types = keyFrame.schema.fields.map(_.dataType).toIndexedSeq
+        // each side in the type it compares in: a widening cast, which
+        // keeps distinct keys distinct
+        val tTypes = setTypes.flatten
+        val set = keys.map(k => types.indices.map { i =>
+          val ct = tTypes(i)._2
+          if (types(i) == ct) k(i) else Cast(Literal(k(i), types(i)), ct).eval()
+        }).toSet
+        guard(keys.size, set.size)
         val bounds = if (keys.isEmpty) None else Some(types.indices.map { i =>
           val ord = org.apache.spark.sql.catalyst.util.TypeUtils
             .getInterpretedOrdering(types(i))
           val vs = keys.map(_(i))
           (column(Literal(vs.min(ord), types(i))), column(Literal(vs.max(ord), types(i))))
         })
-        val sameTypes = keyPairs.map(kp => t.snap.schema.fields
-          .find(_.name.equalsIgnoreCase(kp._1)).map(_.dataType)) == types.map(Some(_))
-        val in = if (!sameTypes) None else Some(column(
-          if (keyPairs.size == 1)
-            InSet(eagerExpression(col(keyPairs.head._1)), distinct.map(_.head))
-          else InSet(CreateNamedStruct(keyPairs.zipWithIndex.flatMap {
-              case ((tk, _), i) => Seq(Literal(s"_$i"), eagerExpression(col(tk)))
-            }), distinct.map(k => org.apache.spark.sql.catalyst.InternalRow.fromSeq(k): Any))))
-        MergeKeys(within(bounds), in)
+        val targetKeys = keyPairs.zip(tTypes).map { case ((tk, _), (tt, ct)) =>
+          val e = eagerExpression(col(tk))
+          if (tt == ct) e else Cast(e, ct)
+        }
+        val in = column(
+          if (keyPairs.size == 1) InSet(targetKeys.head, set.map(_.head))
+          else InSet(CreateNamedStruct(targetKeys.zipWithIndex.flatMap {
+              case (e, i) => Seq(Literal(s"_$i"), e)
+            }), set.map(k => org.apache.spark.sql.catalyst.InternalRow.fromSeq(k): Any)))
+        MergeKeys(within(bounds), Some(in))
       case None =>
         val nonNull = sCols.map(col(_).isNotNull).reduce(_ && _)
         val aggs = sCols.zipWithIndex.flatMap { case (k, i) =>

@@ -943,11 +943,15 @@ class ManifestSkippingSpec extends AnyFunSuite with SparkSuite {
       ("string keys", Seq(("a", 1), ("b", 2)).toDF("k", "v"),
         Seq(("b", 20), ("c", 30)).toDF("k", "v"), Seq("k"), true),
       ("double keys -0.0 and 0.0", Seq((1.0, "t")).toDF("k", "v"),
-        Seq((0.0, "p"), (-0.0, "n")).toDF("k", "v"), Seq("k"), false))
+        Seq((0.0, "p"), (-0.0, "n")).toDF("k", "v"), Seq("k"), false),
+      // the key set widens the source's int keys to the table's longs
+      ("int keys into long keys", Seq((1L, 2L, "t1"), (2L, 2L, "t2")).toDF("a", "b", "v"),
+        Seq((2, 2L, "s2"), (3, 2L, "s3")).toDF("a", "b", "v"), Seq("a", "b"), true))
     val expected = Map(
       "repeated partially-null composite keys" -> 6L,
       "an all-null key column" -> 3L,
-      "string keys" -> 3L)
+      "string keys" -> 3L,
+      "int keys into long keys" -> 3L)
     cases.foreach { case (name, target, source, keys, driver) =>
       val over = source.unionByName(filler(source, keys))
       def keysOf(df: DataFrame) = ManifestTable.sourceKeys(df.select(keys.map(col): _*))

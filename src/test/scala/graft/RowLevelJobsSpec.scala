@@ -12,8 +12,11 @@ import java.nio.file.Files
   * and nothing else. A merge checks a local source's keys on the driver
   * and a file source's in one narrow pass, and finds the touched rows
   * by the key set: its pass and its write, plus the key pass and the
-  * read's own schema job for a parquet source. A count that grows
-  * means an action came back.
+  * read's own schema job for a parquet source. A source with more keys
+  * than the driver holds takes the aggregate guard and the semi- and
+  * anti-joins, after a key pass that gives up unless the plan's row
+  * count shows it over the bound first. A count that grows means an
+  * action came back.
   */
 class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
   /** 100 rows in 5 range-localized files: file k holds ids [20k, 20k+20). */
@@ -33,12 +36,19 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
     Seq((15L, "m"), (55L, "m"), (200L, "n")).toDF("id", "tag")
   }
 
-  /** The same source as a parquet file: the benchmark's merge source. */
-  private lazy val sourceFile: String = {
+  /** A source as a parquet file: the benchmark's merge source. */
+  private def parquet(df: org.apache.spark.sql.DataFrame): String = {
     val f = Files.createTempDirectory("graft_jobs").resolve("src").toString
-    source.write.parquet(f)
+    df.write.parquet(f)
     f
   }
+
+  private lazy val sourceFile: String = parquet(source)
+
+  /** One more key than the driver holds, 20 of them in the table: the
+    * key pass gives up and the aggregate guard runs. */
+  private lazy val overFile: String = parquet(spark.range(
+    80L, 81L + ManifestTable.DriverKeyBound).select(col("id"), lit("o").as("tag")))
 
   private val ops: Seq[(String, String => Unit)] = Seq(
     "delete" -> (t => ManifestTable.delete(spark, t, col("id") < 30L): Unit),
@@ -47,7 +57,16 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
     "merge" -> (t => ManifestTable.merge(spark, source, t, Seq("id")): Unit),
     // the read's own schema job is counted, as the benchmark counts it
     "mergeParquet" -> (t => ManifestTable.merge(spark,
-      spark.read.parquet(sourceFile), t, Seq("id")): Unit))
+      spark.read.parquet(sourceFile), t, Seq("id")): Unit),
+    // int source keys against the table's long keys: the same key set
+    "mergeWidened" -> (t => ManifestTable.merge(spark,
+      source.select(col("id").cast("int").as("id"), col("tag")), t, Seq("id")): Unit),
+    "mergeOverBound" -> (t => ManifestTable.merge(spark,
+      spark.read.parquet(overFile), t, Seq("id")): Unit),
+    // a range's row count puts it over the bound before any pass
+    "mergeOverRange" -> (t => ManifestTable.merge(spark, spark.range(
+      80L, 81L + ManifestTable.DriverKeyBound).select(col("id"), lit("o").as("tag")),
+      t, Seq("id")): Unit))
 
   /** Jobs of each op on a fresh table in `mode`, and the rows after it. */
   private def run(mode: Option[String],
@@ -59,7 +78,8 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("jobs per row-level commit: API delete, update and merge in both modes, deleteWhere on read") {
-    assert(new java.io.File(sourceFile).isDirectory) // written before any count
+    // written before any count
+    assert(Seq(sourceFile, overFile).forall(new java.io.File(_).isDirectory))
     val cow = ops.map { case (n, op) => n -> run(None, op) }
     val mor = ops.map { case (n, op) => n -> run(Some("merge-on-read"), op) }
     // both modes commit the same rows
@@ -74,9 +94,11 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
       ("deleteWhere/mor" -> whereJobs)).toMap
     assert(counts == Map(
       "delete/cow" -> 2, "update/cow" -> 2, "merge/cow" -> 2,
-      "mergeParquet/cow" -> 4,
+      "mergeParquet/cow" -> 4, "mergeWidened/cow" -> 2,
+      "mergeOverBound/cow" -> 9, "mergeOverRange/cow" -> 7,
       "delete/mor" -> 1, "update/mor" -> 3, "merge/mor" -> 2,
-      "mergeParquet/mor" -> 4,
+      "mergeParquet/mor" -> 4, "mergeWidened/mor" -> 2,
+      "mergeOverBound/mor" -> 8, "mergeOverRange/mor" -> 6,
       "deleteWhere/mor" -> 2), counts)
   }
 }
