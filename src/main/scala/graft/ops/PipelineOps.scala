@@ -2037,10 +2037,12 @@ object PipelineOps {
     * row-level statement a user types past the canonical upsert
     * (VERDICT r17 #1). The IN-subquery exceeds the V2 filter-pushdown
     * surface, so the resolution rule routes it through the
-    * row-identity rewrite ([[graft.sinks.ManifestTable.deleteWhere]]):
-    * the subquery is materialized ONCE as pinned (file, row-index)
-    * ids and only files CONTAINING matches rewrite. The oracle is the
-    * same census with the delete phrased as NOT IN.
+    * condition-builder delete ([[graft.sinks.ManifestTable.deleteWhere]]):
+    * the subquery reads a plain parquet file, so a re-read finds the
+    * same rows and each read re-evaluates the condition instead of
+    * pinning the matched row ids; only files CONTAINING matches
+    * rewrite. The oracle is the same census with the delete phrased
+    * as NOT IN.
     */
   def p42SqlDeleteSubquery(spark: SparkSession, sfDir: String): DataFrame = {
     val cat = rowLevelLake(spark, sfDir, "p42")
@@ -2062,7 +2064,8 @@ object PipelineOps {
     * <plain conjunct>` — the correlated half of VERDICT r17 #1. The
     * EXISTS re-roots onto the identity-tagged scan (outer references
     * re-bound by name), the subquery-free conjunct still stats-prunes
-    * candidates, and matched rows rewrite by exact row identity
+    * candidates, and each read re-evaluates the condition: every leaf
+    * is a plain parquet file, so no row ids are pinned
     * ([[graft.sinks.ManifestTable.updateWhere]]).
     */
   def p43SqlUpdateExists(spark: SparkSession, sfDir: String): DataFrame = {

@@ -5417,8 +5417,7 @@ object ManifestTable {
     *  - `post` is a touched row's new image (None: touched rows leave
     *    the table), which merge-on-read appends;
     *  - `inserts` builds the new rows from the touched ones (an upsert
-    *    inherits their ids, and says so with `inherit`) and names the
-    *    identity columns they draw.
+    *    inherits their ids) and names the identity columns they draw.
     *
     * `pinned`: the touched rows' (file, row-index) ids, evaluated and
     * pinned already, with their [[filePass]]; the candidates are then
@@ -5437,63 +5436,71 @@ object ManifestTable {
         None,
       expect: Seq[Expectation] = Seq.empty,
       pinned: Option[Pinned] = None,
-      inherit: Boolean = false,
       always: Boolean = false,
       changes: Option[(Seq[String], DataFrame) => DataFrame] = None)
 
-  /** A condition builder's matched rows ([[byRowIds]]): their pinned
-    * (file, row-index) ids and the one [[filePass]] over them.
+  /** Touched rows' pinned (file, row-index) ids and the one
+    * [[filePass]] over them ([[pinIds]]).
     */
   private final case class Pinned(ids: DataFrame, pass: FilePass)
 
-  /** How a delete or update finds its rows: `flag` adds what `hit`
-    * reads (nothing for a predicate, the `pinned` row ids for a
-    * condition builder). A row where `hit` is NULL stays untouched (SQL
-    * DELETE and UPDATE semantics).
+  /** Pin `ids` once and count them with one [[filePass]]: every later
+    * read of the touched rows joins these ids, so each step sees the
+    * same rows, and [[rewriteRows]] takes the pass as it is instead of
+    * scanning again.
     */
-  private final case class Find(candidates: Seq[String],
-      flag: DataFrame => DataFrame, hit: Column,
-      pinned: Option[Pinned] = None) {
-    private def live: Column =
-      org.apache.spark.sql.functions.coalesce(hit,
-        org.apache.spark.sql.functions.lit(false))
-    def deleting: RowChange = RowChange(candidates, flag(_).filter(hit),
-      flag(_).filter(!live), pinned = pinned)
-    def setting(t: Txn, set: Map[String, Column]): RowChange =
-      deleting.copy(rewrite = d => assign(t, set, Some(live))(flag(d)),
-        post = Some(assign(t, set, None)))
+  private def pinIds(t: Txn, ids: DataFrame): Pinned = {
+    val pinned = ids.localCheckpoint()
+    Pinned(pinned, filePass(pinned, dvInlineThreshold(t.spark)))
   }
 
-  /** Rows where `predicate` holds, re-evaluated on every read. */
-  private def byPredicate(t: Txn, predicate: Column): Find =
-    Find(t.prune(DataSkipping.expressionOf(predicate)), identity, predicate)
-
-  /** The [[deleteWhere]]/[[updateWhere]] find: `condFor` runs ONCE on
-    * the identity-tagged candidate frame and the matched (file,
-    * row-index) ids are pinned — the Delta source-materialization
-    * recipe: subqueries and other external state are consulted one
-    * time, and every later read flags its touched rows by joining
-    * those exact ids, so duplicates and map-typed columns need no
-    * whole-row value equality. The ids are narrow, pinned and stay
-    * distributed; ONE [[filePass]] over them gives the hit files, each
-    * file's count and, for a small vector, the positions, which
-    * [[rewriteRows]] then takes as they are instead of scanning again.
+  /** How a delete or update finds its rows: `mark` takes a read of the
+    * candidates and gives the frame to filter with its hit column (the
+    * condition, or a join on the `pinned` row ids). A row where the hit
+    * is NULL stays untouched (SQL DELETE and UPDATE semantics).
     */
-  private def byRowIds(t: Txn, condFor: DataFrame => Column,
+  private final case class Find(candidates: Seq[String],
+      mark: DataFrame => (DataFrame, Column),
+      pinned: Option[Pinned] = None) {
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    private def on(g: (DataFrame, Column) => DataFrame)(d: DataFrame) =
+      g.tupled(mark(d))
+    def deleting: RowChange = RowChange(candidates, on(_.filter(_)),
+      on((f, hit) => f.filter(!coalesce(hit, lit(false)))), pinned = pinned)
+    def setting(t: Txn, set: Map[String, Column]): RowChange = deleting.copy(
+      rewrite = on((f, hit) => assign(t, set, Some(coalesce(hit, lit(false))))(f)),
+      post = Some(assign(t, set, None)))
+  }
+
+  /** Rows where `predicate` holds. */
+  private def find(t: Txn, predicate: Column): Find =
+    find(t, _ => predicate, Some(DataSkipping.expressionOf(predicate)))
+
+  /** Rows where `condFor`, built on a read of the candidates, holds.
+    * `prune` stats-prunes the candidates. When a second read of the
+    * matched rows could find other ones ([[planMustPin]]: a
+    * non-deterministic condition, a subquery over external state), the
+    * condition runs ONCE on the identity-tagged candidates and the
+    * matched (file, row-index) ids are pinned ([[pinIds]]) — Delta's
+    * source-materialization recipe: every later read flags its touched
+    * rows by joining those exact ids, and the candidates narrow to the
+    * files holding them. Otherwise each read re-evaluates the condition.
+    */
+  private def find(t: Txn, condFor: DataFrame => Column,
       prune: Option[org.apache.spark.sql.catalyst.expressions.Expression])
       : Find = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val candidates = prune.fold(t.snap.files)(t.prune)
-    if (candidates.isEmpty) return Find(Seq.empty, identity, lit(false))
+    if (candidates.isEmpty) return Find(Seq.empty, d => (d, lit(false)))
     val frame = t.read(candidates, keepIdentity = true)
     val ids = frame.filter(coalesce(condFor(frame), lit(false)))
       .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol),
         lit(true).as(HitCol))
-      .localCheckpoint()
-    val pass = filePass(ids, dvInlineThreshold(t.spark))
-    val hits = pass.counts.keys.map(matchRel(candidates)).toSeq.distinct.sorted
-    Find(hits, _.join(ids.drop(AbsPathCol), Seq(DvFileCol, DvIdxCol),
-      "left_outer"), col(HitCol), Some(Pinned(ids, pass)))
+    if (!planMustPin(ids)) return Find(candidates, d => (d, condFor(d)))
+    val p = pinIds(t, ids)
+    val hits = p.pass.counts.keys.map(matchRel(candidates)).toSeq.distinct.sorted
+    Find(hits, d => (d.join(p.ids.drop(AbsPathCol), Seq(DvFileCol, DvIdxCol),
+      "left_outer"), col(HitCol)), Some(p))
   }
 
   /** UPDATE's SET over a target frame: assigned columns take their new
@@ -5537,18 +5544,17 @@ object ManifestTable {
     * [[filePass]] over the candidates (file NAMES only reach the driver
     * — statistics already pruned the candidates), rewrites them through
     * `rewrite` and removes them: an O(touched files) delta. Merge-on-
-    * read pins the touched rows ONCE when a later step reads them again
-    * (post-images, inherited ids, the change feed), so the sidecar and
-    * those steps are provably the same rows, unless the condition
-    * builder's pinned ids (`c.pinned`) fix them already; otherwise it
-    * keeps just their row ids, pinned only when a second read could
-    * find other rows ([[planMustPin]]). One [[filePass]] over the
-    * touched rows (or the pinned ids' own) counts them per file. It
-    * writes ONE deletion-vector sidecar of their (file, row-index) ids —
-    * from the driver when the pass returned the positions, else by Spark
-    * from the touched rows — and appends their post-images, rewriting
-    * nothing; reads through the DV-filtered scan keep repeated vectors
-    * disjoint, so counts add. Either way the
+    * read keeps the touched rows' (file, row-index) ids: the find's
+    * pinned ones (`c.pinned`), else pinned here only when a second read
+    * could find other rows ([[planMustPin]]). Where ids are pinned,
+    * every later read of the touched rows (post-images, inherited ids,
+    * the change feed) joins them, so each step sees the same rows;
+    * otherwise it re-reads them. One [[filePass]] over the ids (or the
+    * pinned ids' own) counts them per file. It writes ONE deletion-
+    * vector sidecar of those ids — from the driver when the pass
+    * returned the positions, else by Spark — and appends the post-
+    * images, rewriting nothing; reads through the DV-filtered scan keep
+    * repeated vectors disjoint, so counts add. Either way the
     * inserts append in the same commit. The new content is schema-
     * checked and evolves the recorded schema (all written rows when the
     * change sets values, else the inserts), CHECK and NOT NULL
@@ -5564,38 +5570,30 @@ object ManifestTable {
       val tags = df.columns.filter(RowIdentityCols)
       if (tags.isEmpty) df else df.drop(tags.toIndexedSeq: _*)
     }
-    def touchedIn(files: Seq[String], ids: Boolean): DataFrame =
-      c.touched(t.read(files, keepIdentity = ids || c.pinned.isDefined))
+    lazy val touchedIds = c.touched(t.read(c.candidates, keepIdentity = true))
+      .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol))
+    val onRead = mor && c.candidates.nonEmpty
+    val pinned = c.pinned.orElse(
+      Option.when(onRead && planMustPin(touchedIds))(pinIds(t, touchedIds)))
+    def touchedIn(files: Seq[String], tagged: Boolean): DataFrame =
+      pinned.fold(c.touched(t.read(files, keepIdentity = tagged)))(p =>
+        t.read(files, keepIdentity = true)
+          .join(p.ids, Seq(DvFileCol, DvIdxCol), "left_semi"))
     val rel = matchRel(c.candidates)
-    // the touched rows are pinned in full when a later step reads them
-    // again and no pinned ids fix them already; else only their ids are
-    // kept, pinned when a large vector's write could read other rows
-    val pinRows = c.pinned.isEmpty &&
-      (c.post.isDefined || c.inherit || changeFeedOn(t.props))
-    val matched =
-      if (!mor || c.candidates.isEmpty) None
-      else if (pinRows) Some(touchedIn(c.candidates, ids = true)
-        .localCheckpoint())
-      else c.pinned.map(_.ids).orElse {
-        val ids = touchedIn(c.candidates, ids = true)
-          .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol))
-        Some(if (planMustPin(ids)) ids.localCheckpoint() else ids)
-      }
     // the pinned ids' pass covers the same rows: no second scan
-    val pass = matched.map(m => c.pinned.fold(
-      filePass(m, dvInlineThreshold(t.spark)))(_.pass))
+    val pass = Option.when(onRead)(pinned.fold(
+      filePass(touchedIds, dvInlineThreshold(t.spark)))(_.pass))
     val byFile: Seq[(String, Long)] = pass.toSeq.flatMap(_.counts)
       .groupMapReduce(e => rel(e._1))(_._2)(_ + _).toSeq.sortBy(_._1)
     val hits: Seq[String] =
       if (mor) byFile.map(_._1)
       else if (c.pinned.isDefined || c.candidates.isEmpty) c.candidates
-      else filePass(touchedIn(c.candidates, ids = true), 0L).counts.keys
+      else filePass(touchedIn(c.candidates, tagged = true), 0L).counts.keys
         .map(rel).toSeq.distinct.sorted
     // the touched rows in target columns — lazy: only merge-on-read,
     // inserts and the change feed read them
     lazy val pre = if (hits.isEmpty) None else Some(strip(
-      if (mor && pinRows) matched.get
-      else touchedIn(if (mor) c.candidates else hits, ids = false)))
+      touchedIn(if (mor) c.candidates else hits, tagged = false)))
     val inserts = c.inserts.map(_(pre))
     if (hits.isEmpty && inserts.forall(i => !c.always && i._1.isEmpty))
       return None
@@ -5627,7 +5625,8 @@ object ManifestTable {
         pass.flatMap(_.positions) match {
           case Some(pos) => writeDvSidecar(t, dir, pos)
           case None =>
-            matched.get.select(col(DvFileCol).as("file"), col(DvIdxCol).as("idx"))
+            pinned.fold(touchedIds)(_.ids)
+              .select(col(DvFileCol).as("file"), col(DvIdxCol).as("idx"))
               .write.parquet(s"${t.table}/$dir")
         }
         byFile.map { case (f, n) => f -> Seq(DvRef(dir, n)) }.toMap
@@ -5681,7 +5680,7 @@ object ManifestTable {
       partitionCols: Seq[String] = Seq.empty,
       maxAttempts: Int = 5): Long =
     transact(spark, table, maxAttempts, partitionCols) { t =>
-      deleteRows(t, t.mor(DeleteModeProp), byPredicate(t, predicate),
+      deleteRows(t, t.mor(DeleteModeProp), find(t, predicate),
         predicate.toString)
     }
 
@@ -5695,26 +5694,26 @@ object ManifestTable {
     }
 
   /** Row-level DELETE for conditions a plain [[Column]] predicate
-    * cannot carry through [[delete]]'s per-frame re-evaluation —
-    * IN/EXISTS/scalar subqueries (correlated or not) and arbitrary
-    * analyzed expressions: the SQL `DELETE FROM t WHERE k IN
-    * (SELECT ...)` shape (VERDICT r17 #1). The caller supplies a
-    * CONDITION BUILDER invoked on the identity-tagged scan frame, so
-    * resolved subquery plans can be re-rooted onto the frame's
-    * attributes; the matched rows are pinned once as (file, row-index)
-    * ids ([[byRowIds]]). `prune` (the subquery-free conjuncts of the
-    * condition) stats-prunes candidates exactly like [[delete]] —
-    * subquery conjuncts fail open in the skipper. [[DeleteModeProp]]
-    * routes it like [[delete]]: the pinned ids become the deletion
-    * vector.
+    * cannot carry — IN/EXISTS/scalar subqueries (correlated or not)
+    * and arbitrary analyzed expressions: the SQL `DELETE FROM t WHERE
+    * k IN (SELECT ...)` shape (VERDICT r17 #1) and SQL conditions the
+    * filter pushdown cannot translate. The caller supplies a CONDITION
+    * BUILDER invoked on each read of the candidates, so resolved
+    * subquery plans can be re-rooted onto the frame's attributes. The
+    * matched rows' (file, row-index) ids are pinned only when a second
+    * read could find other rows ([[find]]); otherwise every read
+    * re-evaluates the condition, exactly like [[delete]]. `prune` (the
+    * subquery-free conjuncts of the condition) stats-prunes candidates
+    * like [[delete]] — subquery conjuncts fail open in the skipper.
+    * [[DeleteModeProp]] routes it like [[delete]].
     */
   def deleteWhere(spark: SparkSession, table: String,
       condFor: DataFrame => Column,
       prune: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None,
       maxAttempts: Int = 5): Long =
     transact(spark, table, maxAttempts) { t =>
-      deleteRows(t, t.mor(DeleteModeProp), byRowIds(t, condFor, prune),
-        "<row-identity join>")
+      deleteRows(t, t.mor(DeleteModeProp), find(t, condFor, prune),
+        "<condition builder>")
     }
 
   /** ATOMIC predicate-scoped overwrite (the Delta `replaceWhere`
@@ -5774,7 +5773,7 @@ object ManifestTable {
       val (prepped, genExps, ids) =
         synthesizeColumns(spark, pinned, t.recorded, t.props, table)
       val rows = if (ids.isEmpty) prepped else prepped.localCheckpoint()
-      rewriteRows(t, mor = false, byPredicate(t, condition).deleting.copy(
+      rewriteRows(t, mor = false, find(t, condition).deleting.copy(
         inserts = Some(_ => (rows, ids)), expect = genExps)) { n =>
         t.op("replace-where", "condition" -> condition.toString,
           "rewrittenFiles" -> n.toString)
@@ -5890,7 +5889,7 @@ object ManifestTable {
   def deleteVectors(spark: SparkSession, table: String, predicate: Column,
       maxAttempts: Int = 5): Long =
     transact(spark, table, maxAttempts) { t =>
-      deleteRows(t, mor = true, byPredicate(t, predicate), predicate.toString)
+      deleteRows(t, mor = true, find(t, predicate), predicate.toString)
     }
 
   /** Row-level UPDATE, copy-on-write: set `set`'s columns to their
@@ -5911,7 +5910,7 @@ object ManifestTable {
       maxAttempts: Int = 5): Long = {
     require(set.nonEmpty, "update needs at least one SET column")
     transact(spark, table, maxAttempts, partitionCols) { t =>
-      updateRows(t, t.mor(UpdateModeProp), byPredicate(t, predicate),
+      updateRows(t, t.mor(UpdateModeProp), find(t, predicate),
         predicate.toString, set)
     }
   }
@@ -5944,10 +5943,10 @@ object ManifestTable {
     * holding those rows' post-images. A one-column update of a wide
     * 1 GB file commits O(matched rows), not a gigabyte of rewrite —
     * the Delta DV-update recipe; [[compact]] later materializes the
-    * vectors exactly as for DV deletes. The matched frame is pinned
-    * once (localCheckpoint), so the hidden rows and the appended
-    * post-images are provably the SAME rows even under a
-    * non-deterministic predicate. Same narrowing, NULL-predicate,
+    * vectors exactly as for DV deletes. The hidden rows and the
+    * appended post-images are the SAME rows: a predicate whose second
+    * read could find other rows has its matched ids pinned once
+    * ([[find]]), which every read joins. Same narrowing, NULL-predicate,
     * schema enforcement, constraint, generated-regeneration and CDC
     * contracts as [[update]]. Reachable from [[update]] via the
     * [[UpdateModeProp]] table property.
@@ -5956,18 +5955,18 @@ object ManifestTable {
       set: Map[String, Column], maxAttempts: Int = 5): Long = {
     require(set.nonEmpty, "update needs at least one SET column")
     transact(spark, table, maxAttempts) { t =>
-      updateRows(t, mor = true, byPredicate(t, predicate),
+      updateRows(t, mor = true, find(t, predicate),
         predicate.toString, set)
     }
   }
 
   /** Row-level UPDATE for conditions with subqueries — the
-    * [[deleteWhere]] recipe applied to [[update]]: the condition
-    * builder runs once on the identity-tagged candidate frame, the
-    * matched (file, row-index) ids pin that single evaluation, and
-    * the rewrite flags matched rows by EXACT row identity instead of
-    * re-evaluating the predicate per frame (`UPDATE t SET ... WHERE
-    * EXISTS (SELECT ...)`, VERDICT r17 #1). SET expressions stay
+    * [[deleteWhere]] recipe applied to [[update]] (`UPDATE t SET ...
+    * WHERE EXISTS (SELECT ...)`, VERDICT r17 #1): the condition
+    * builder runs on each read of the candidates, unless a second read
+    * could find other rows; then it runs once, the matched (file,
+    * row-index) ids are pinned, and the rewrite flags matched rows by
+    * EXACT row identity ([[find]]). SET expressions stay
     * row-local Columns resolved on the rewrite frame. Same narrowing,
     * schema enforcement, constraints, CDC, commit shape and
     * [[UpdateModeProp]] routing as [[update]].
@@ -5978,8 +5977,8 @@ object ManifestTable {
       maxAttempts: Int = 5): Long = {
     require(set.nonEmpty, "update needs at least one SET column")
     transact(spark, table, maxAttempts) { t =>
-      updateRows(t, t.mor(UpdateModeProp), byRowIds(t, condFor, prune),
-        "<row-identity join>", set)
+      updateRows(t, t.mor(UpdateModeProp), find(t, condFor, prune),
+        "<condition builder>", set)
     }
   }
 
@@ -6325,8 +6324,7 @@ object ManifestTable {
         }
       val onRead = mor(t)
       rewriteRows(t, onRead, RowChange(keys.candidates, touched, kept,
-        inserts = Some(upsertRows(t, src, keyCols, _)),
-        inherit = inheritedCols(t).nonEmpty, always = true)) { n =>
+        inserts = Some(upsertRows(t, src, keyCols, _)), always = true)) { n =>
         t.op("merge", ("keys" -> keyCols.mkString(",")) +: counts(onRead, n): _*)
       }
     }

@@ -25,10 +25,14 @@ import graft.sinks.ManifestTable
   *  - `UPDATE t SET c = expr, ... [WHERE cond]` — subquery-free SET
   *    expressions over the row; the condition may carry IN / EXISTS /
   *    scalar subqueries (correlated or not) — those route through the
-  *    row-identity rewrite ([[ManifestTable.updateWhere]]);
+  *    condition-builder update ([[ManifestTable.updateWhere]]);
   *  - `DELETE FROM t WHERE cond` with subqueries or conjuncts the V2
   *    filter pushdown cannot translate ([[ManifestTable.deleteWhere]];
   *    translatable deletes stay on the `SupportsDelete` path);
+  *  - the condition builder re-roots the condition onto each read of
+  *    the target; the matched rows' (file, row-index) ids are pinned
+  *    only when a second read could find other rows (a
+  *    non-deterministic condition, a subquery over external state);
   *  - every route honors the table's mode properties
   *    ([[ManifestTable.DeleteModeProp]], [[ManifestTable.UpdateModeProp]],
   *    [[ManifestTable.MergeModeProp]]): copy-on-write by default,
@@ -109,7 +113,7 @@ object GraftRowLevelSql {
   /** True when the V2 filter-pushdown surface cannot carry `cond` —
     * a subquery anywhere, or a conjunct with no [[sources.Filter]]
     * translation. These are exactly the DELETEs `SupportsDelete`
-    * refuses; the row-identity rewrite takes them instead.
+    * refuses; the condition-builder delete takes them instead.
     */
   private[sql] def needsRowLevel(cond: Expression): Boolean =
     hasSubquery(cond) || splitConjuncts(cond).exists(c =>
@@ -142,8 +146,9 @@ object GraftRowLevelSql {
 
   /** `DELETE FROM t WHERE <cond>` for conditions the filter-pushdown
     * surface cannot carry (subqueries, untranslatable conjuncts):
-    * runs [[ManifestTable.deleteWhere]] — matched row ids
-    * materialized once, exact-identity rewrite (VERDICT r17 #1).
+    * runs [[ManifestTable.deleteWhere]], which pins the matched row
+    * ids only when a second read could find other rows (VERDICT r17
+    * #1).
     */
   final case class GraftDeleteWhereCommand(tablePath: String,
       cond: Cond, targetCols: Seq[(ExprId, String)],
@@ -158,7 +163,7 @@ object GraftRowLevelSql {
   }
 
   /** `UPDATE t SET ... WHERE <cond-with-subquery>` — the same
-    * row-identity recipe through [[ManifestTable.updateWhere]]; SET
+    * condition-builder recipe through [[ManifestTable.updateWhere]]; SET
     * expressions stay row-local (subquery-free, enforced at convert
     * time).
     */
@@ -211,7 +216,7 @@ object GraftRowLevelSql {
     }
     u.condition match {
       // subquery-bearing WHERE (IN/EXISTS/scalar, correlated or not):
-      // the row-identity rewrite (VERDICT r17 #1)
+      // the condition-builder update (VERDICT r17 #1)
       case Some(c) if hasSubquery(c) =>
         GraftUpdateWhereCommand(t.tablePath, Cond(c),
           targetIdsOf(u.table), sets, pruneOf(c).map(Cond))

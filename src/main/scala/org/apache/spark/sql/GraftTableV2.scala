@@ -231,10 +231,11 @@ object GraftTableV2 {
     }
 
     /** `DELETE FROM cat.ns.t WHERE ...` — Spark translates the
-      * condition to source filters; the copy-on-write delete applies
-      * it through stats pruning + narrow rewrite. A condition Spark
-      * cannot translate fails at analysis (use
-      * `ManifestTable.delete` for arbitrary predicates).
+      * condition to source filters; [[ManifestTable.delete]] applies
+      * it through stats pruning + narrow rewrite (or deletion vectors
+      * under merge-on-read). A condition Spark cannot translate never
+      * gets here under `graft.GraftExtensions`: [[GraftRowLevelRule]]
+      * sends it to [[ManifestTable.deleteWhere]] at analysis.
       */
     override def canDeleteWhere(filters: Array[sources.Filter]): Boolean =
       filters.forall(f => GraftTableV2.filterToColumn(f).isDefined)

@@ -950,6 +950,47 @@ class ManifestTableSpec extends AnyFunSuite with SparkSuite {
       "merge must upsert the SAME source evaluation its checks saw")
   }
 
+  test("non-deterministic row-level predicates: the change feed records the rows that changed") {
+    import spark.implicits._
+    // each evaluation of a row flips its pick, so a second read of the
+    // table matches the other half: only one evaluation may decide
+    val flip = udf((id: Long) => ManifestTableSpec.flip(id)).asNondeterministic()
+    def table(mode: Option[String]): String = {
+      val t = freshTable()
+      ManifestTable.write(spark, (0L until 1000L).map(i => (i, "a"))
+        .toDF("id", "tag").repartitionByRange(5, col("id")), t)
+      mode.foreach(m => ManifestTable.updateProperties(spark, t, Map(
+        ManifestTable.DeleteModeProp -> m, ManifestTable.UpdateModeProp -> m)))
+      ManifestTable.enableChangeFeed(spark, t)
+      t
+    }
+    def ids(rows: org.apache.spark.sql.DataFrame): Set[Long] =
+      rows.select("id").as[Long].collect().toSet
+    def changed(t: String, v: Long, kind: String): Set[Long] =
+      ids(ManifestTable.rowChanges(spark, t, v - 1, v)
+        .filter(col(ManifestTable.ChangeTypeCol) === kind))
+    for (mode <- Seq(None, Some("merge-on-read"))) {
+      val name = mode.getOrElse("copy-on-write")
+      val d = table(mode)
+      ManifestTableSpec.resetFlips()
+      val vd = ManifestTable.delete(spark, d, flip(col("id")))
+      val left = (0L until 1000L).toSet -- ids(ManifestTable.read(spark, d))
+      assert(left.size == 500, s"$name delete removed ${left.size} rows")
+      assert(changed(d, vd, "delete") == left,
+        s"$name delete: the feed's deletes are not the rows that left")
+
+      val u = table(mode)
+      ManifestTableSpec.resetFlips()
+      val vu = ManifestTable.update(spark, u, flip(col("id")),
+        Map("tag" -> lit("u")))
+      val set = ids(ManifestTable.read(spark, u).filter(col("tag") === "u"))
+      assert(set.size == 500, s"$name update changed ${set.size} rows")
+      Seq("update_preimage", "update_postimage").foreach(kind =>
+        assert(changed(u, vu, kind) == set,
+          s"$name update: the feed's $kind rows are not the rows that changed"))
+    }
+  }
+
   test("batch txnAppId/txnVersion: retried appends and overwrites fold in once") {
     import spark.implicits._
     val t = freshTable()
@@ -1238,6 +1279,18 @@ class ManifestTableSpec extends AnyFunSuite with SparkSuite {
   */
 object ManifestTableSpec {
   val evalCounter = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  private val flips = scala.collection.mutable.HashMap.empty[Long, Int]
+
+  /** Counts the evaluations of each id: an even id is picked on its odd
+    * evaluations, an odd id on its even ones. */
+  def flip(id: Long): Boolean = flips.synchronized {
+    val n = flips.getOrElse(id, 0) + 1
+    flips(id) = n
+    (n + id) % 2 == 1
+  }
+
+  def resetFlips(): Unit = flips.synchronized(flips.clear())
 
   /** Backs an embedded-Derby SQL FUNCTION (same JVM): ticks once per
     * ROW the server evaluates, so every re-execution of a JDBC query

@@ -15,14 +15,19 @@ import java.nio.file.Files
   * read's own schema job for a parquet source. A source with more keys
   * than the driver holds takes the aggregate guard and the semi- and
   * anti-joins, after a key pass that gives up unless the plan's row
-  * count shows it over the bound first. A count that grows means an
-  * action came back.
+  * count shows it over the bound first. A condition builder
+  * (`deleteWhere`, and SQL DELETE with a condition filter pushdown cannot
+  * translate) costs what a predicate does when a second read finds the
+  * same rows, and a merge-on-read update re-reads its touched rows
+  * instead of pinning them. A count that grows means an action came
+  * back.
   */
 class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
-  /** 100 rows in 5 range-localized files: file k holds ids [20k, 20k+20). */
+  /** 100 rows in 5 range-localized files: file k holds ids [20k, 20k+20).
+    * The table sits at `<dir>/db/t`, so a catalog over `<dir>` names it. */
   private def table(mode: Option[String]): String = {
     import spark.implicits._
-    val t = Files.createTempDirectory("graft_jobs").resolve("t").toString
+    val t = Files.createTempDirectory("graft_jobs").resolve("db/t").toString
     ManifestTable.write(spark, (0 until 100).map(i => (i.toLong, s"t${i % 7}"))
       .toDF("id", "tag").repartitionByRange(5, col("id")), t)
     mode.foreach(m => ManifestTable.updateProperties(spark, t, Map(
@@ -45,6 +50,17 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val sourceFile: String = parquet(source)
 
+  private val catalogs = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** `t` by its SQL name, through a fresh graft catalog over `<dir>`. */
+  private def sqlName(t: String): String = {
+    val cat = s"jobs${catalogs.incrementAndGet()}"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse",
+      new java.io.File(t).getParentFile.getParent)
+    s"$cat.db.t"
+  }
+
   /** One more key than the driver holds, 20 of them in the table: the
     * key pass gives up and the aggregate guard runs. */
   private lazy val overFile: String = parquet(spark.range(
@@ -52,6 +68,11 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
 
   private val ops: Seq[(String, String => Unit)] = Seq(
     "delete" -> (t => ManifestTable.delete(spark, t, col("id") < 30L): Unit),
+    "deleteWhere" -> (t => ManifestTable.deleteWhere(spark, t,
+      f => f("id") < 30L): Unit),
+    // filter pushdown cannot translate `%`: the rule sends it to deleteWhere
+    "sqlDelete" -> (t => spark.sql(
+      s"DELETE FROM ${sqlName(t)} WHERE id % 16 = 3"): Unit),
     "update" -> (t => ManifestTable.update(spark, t, col("id") >= 90L,
       Map("tag" -> lit("u"))): Unit),
     "merge" -> (t => ManifestTable.merge(spark, source, t, Seq("id")): Unit),
@@ -77,7 +98,7 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
     (jobs, ManifestTable.read(spark, t).as[(Long, String)].collect().sorted.toSeq)
   }
 
-  test("jobs per row-level commit: API delete, update and merge in both modes, deleteWhere on read") {
+  test("jobs per row-level commit in both modes: API ops, deleteWhere, SQL DELETE") {
     // written before any count
     assert(Seq(sourceFile, overFile).forall(new java.io.File(_).isDirectory))
     val cow = ops.map { case (n, op) => n -> run(None, op) }
@@ -86,19 +107,21 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
     cow.zip(mor).foreach { case ((n, (_, a)), (_, (_, b))) =>
       assert(a == b, s"$n: copy-on-write and merge-on-read rows differ")
     }
-    val (whereJobs, whereRows) = run(Some("merge-on-read"), t =>
-      ManifestTable.deleteWhere(spark, t, f => f("id") < 30L): Unit)
-    assert(whereRows == cow.head._2._2, "deleteWhere and delete rows differ")
+    val rows = cow.toMap
+    assert(rows("deleteWhere")._2 == rows("delete")._2,
+      "deleteWhere and delete rows differ")
+    assert(rows("sqlDelete")._2.map(_._1) == (0L until 100L).filter(_ % 16 != 3),
+      "SQL DELETE rows differ")
     val counts = (cow.map { case (n, (j, _)) => s"$n/cow" -> j } ++
-      mor.map { case (n, (j, _)) => s"$n/mor" -> j } :+
-      ("deleteWhere/mor" -> whereJobs)).toMap
+      mor.map { case (n, (j, _)) => s"$n/mor" -> j }).toMap
     assert(counts == Map(
-      "delete/cow" -> 2, "update/cow" -> 2, "merge/cow" -> 2,
+      "delete/cow" -> 2, "deleteWhere/cow" -> 2, "sqlDelete/cow" -> 2,
+      "update/cow" -> 2, "merge/cow" -> 2,
       "mergeParquet/cow" -> 4, "mergeWidened/cow" -> 2,
       "mergeOverBound/cow" -> 9, "mergeOverRange/cow" -> 7,
-      "delete/mor" -> 1, "update/mor" -> 3, "merge/mor" -> 2,
+      "delete/mor" -> 1, "deleteWhere/mor" -> 1, "sqlDelete/mor" -> 1,
+      "update/mor" -> 2, "merge/mor" -> 2,
       "mergeParquet/mor" -> 4, "mergeWidened/mor" -> 2,
-      "mergeOverBound/mor" -> 8, "mergeOverRange/mor" -> 6,
-      "deleteWhere/mor" -> 2), counts)
+      "mergeOverBound/mor" -> 8, "mergeOverRange/mor" -> 6), counts)
   }
 }
