@@ -437,13 +437,22 @@ object ManifestTable {
     }
   }
 
-  /** Can re-evaluating `df`'s plan yield different rows? */
+  /** Can re-evaluating `df`'s plan yield different rows? Yes when the
+    * plan or any subquery plan (`subqueriesAll`: leaves inside
+    * IN/EXISTS/scalar subqueries re-execute per evaluation exactly like
+    * top-level ones, ADVICE r17 medium) holds a non-deterministic
+    * expression; a current-time expression (`current_timestamp()`,
+    * `now()`, `current_date()`, ...), which Spark calls deterministic
+    * yet fixes once per query it plans, so `ts < current_timestamp()`
+    * matches other rows on each read; or a leaf that consults external
+    * state per execution ([[leafReEvaluates]]).
+    */
   private def planMustPin(df: DataFrame): Boolean =
     try {
+      import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
       val analyzed = df.queryExecution.analyzed
-      !analyzed.deterministic ||
-        analyzed.subqueriesAll.exists(!_.deterministic) ||
-        hasReEvaluatingLeaf(analyzed)
+      (analyzed +: analyzed.subqueriesAll).exists(p => !p.deterministic ||
+        p.containsPattern(CURRENT_LIKE) || p.collectLeaves().exists(leafReEvaluates))
     }
     catch { case scala.util.control.NonFatal(_) => true } // pin, fail safe
 
@@ -455,21 +464,10 @@ object ManifestTable {
       changeFeedOn(t.props) ||
       t.recorded.exists(_.fields.exists(!_.nullable))
 
-  /** True when any leaf of `plan` — INCLUDING leaves inside subquery
-    * expressions (ADVICE r17 medium: `collectLeaves` does not descend
-    * into IN/EXISTS/scalar-subquery plans, yet a frame filtered by
-    * `WHERE k IN (SELECT ... FROM jdbc)` re-executes that inner query
-    * per evaluation exactly like a top-level JDBC leaf) — can return
-    * DIFFERENT rows on re-evaluation because it consults external
-    * state per execution. The stable set is a whitelist — an
-    * unrecognized leaf pins.
+  /** Can `leaf` return DIFFERENT rows on re-evaluation because it
+    * consults external state per execution? The stable set is a
+    * whitelist — an unrecognized leaf pins.
     */
-  private def hasReEvaluatingLeaf(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : Boolean =
-    (plan +: plan.subqueriesAll).exists(p =>
-      p.collectLeaves().exists(leafReEvaluates))
-
   private def leafReEvaluates(
       leaf: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : Boolean = {
@@ -5422,7 +5420,9 @@ object ManifestTable {
     * `pinned`: the touched rows' (file, row-index) ids, evaluated and
     * pinned already, with their [[filePass]]; the candidates are then
     * exactly the files holding them, and reads carry the row-identity
-    * columns. `always` commits
+    * columns. `pinAsked`: the builder asked [[planMustPin]] already (a
+    * [[find]]), so `pinned` is the whole answer and [[rewriteRows]]
+    * does not ask again. `always` commits
     * even when nothing is touched (an upsert of an empty source).
     * `changes` replaces the default change rows of the touched rows,
     * given the hit files and those rows; `expect` adds checks on the
@@ -5436,6 +5436,7 @@ object ManifestTable {
         None,
       expect: Seq[Expectation] = Seq.empty,
       pinned: Option[Pinned] = None,
+      pinAsked: Boolean = false,
       always: Boolean = false,
       changes: Option[(Seq[String], DataFrame) => DataFrame] = None)
 
@@ -5466,7 +5467,8 @@ object ManifestTable {
     private def on(g: (DataFrame, Column) => DataFrame)(d: DataFrame) =
       g.tupled(mark(d))
     def deleting: RowChange = RowChange(candidates, on(_.filter(_)),
-      on((f, hit) => f.filter(!coalesce(hit, lit(false)))), pinned = pinned)
+      on((f, hit) => f.filter(!coalesce(hit, lit(false)))), pinned = pinned,
+      pinAsked = true)
     def setting(t: Txn, set: Map[String, Column]): RowChange = deleting.copy(
       rewrite = on((f, hit) => assign(t, set, Some(coalesce(hit, lit(false))))(f)),
       post = Some(assign(t, set, None)))
@@ -5479,7 +5481,8 @@ object ManifestTable {
   /** Rows where `condFor`, built on a read of the candidates, holds.
     * `prune` stats-prunes the candidates. When a second read of the
     * matched rows could find other ones ([[planMustPin]]: a
-    * non-deterministic condition, a subquery over external state), the
+    * non-deterministic condition, a current-time expression, a subquery
+    * over external state), the
     * condition runs ONCE on the identity-tagged candidates and the
     * matched (file, row-index) ids are pinned ([[pinIds]]) — Delta's
     * source-materialization recipe: every later read flags its touched
@@ -5545,8 +5548,9 @@ object ManifestTable {
     * — statistics already pruned the candidates), rewrites them through
     * `rewrite` and removes them: an O(touched files) delta. Merge-on-
     * read keeps the touched rows' (file, row-index) ids: the find's
-    * pinned ones (`c.pinned`), else pinned here only when a second read
-    * could find other rows ([[planMustPin]]). Where ids are pinned,
+    * pinned ones (`c.pinned`); for a change no find built (a merge),
+    * pinned here only when a second read could find other rows
+    * ([[planMustPin]]), so each commit asks once. Where ids are pinned,
     * every later read of the touched rows (post-images, inherited ids,
     * the change feed) joins them, so each step sees the same rows;
     * otherwise it re-reads them. One [[filePass]] over the ids (or the
@@ -5573,8 +5577,8 @@ object ManifestTable {
     lazy val touchedIds = c.touched(t.read(c.candidates, keepIdentity = true))
       .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol))
     val onRead = mor && c.candidates.nonEmpty
-    val pinned = c.pinned.orElse(
-      Option.when(onRead && planMustPin(touchedIds))(pinIds(t, touchedIds)))
+    val pinned = c.pinned.orElse(Option.when(
+      onRead && !c.pinAsked && planMustPin(touchedIds))(pinIds(t, touchedIds)))
     def touchedIn(files: Seq[String], tagged: Boolean): DataFrame =
       pinned.fold(c.touched(t.read(files, keepIdentity = tagged)))(p =>
         t.read(files, keepIdentity = true)

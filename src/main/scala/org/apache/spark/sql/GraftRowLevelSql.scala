@@ -32,7 +32,8 @@ import graft.sinks.ManifestTable
   *  - the condition builder re-roots the condition onto each read of
   *    the target; the matched rows' (file, row-index) ids are pinned
   *    only when a second read could find other rows (a
-  *    non-deterministic condition, a subquery over external state);
+  *    non-deterministic condition, a current-time expression, a
+  *    subquery over external state);
   *  - every route honors the table's mode properties
   *    ([[ManifestTable.DeleteModeProp]], [[ManifestTable.UpdateModeProp]],
   *    [[ManifestTable.MergeModeProp]]): copy-on-write by default,

@@ -991,6 +991,51 @@ class ManifestTableSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("current-time row-level predicates: every read sees the rows of one instant") {
+    import spark.implicits._
+    // a retention condition: Spark fixes current_timestamp() once per
+    // query, and the rows sit one per millisecond from a day ago on, so
+    // rows cross the boundary between any two reads of the table
+    val n = 120000L
+    val old = col("ts") < current_timestamp() - expr("INTERVAL 1 DAY")
+    def table(mode: Option[String]): String = {
+      val t = freshTable()
+      val base = (System.currentTimeMillis() - 86400000L) * 1000L
+      ManifestTable.write(spark, spark.range(n).select(col("id"),
+        timestamp_micros(lit(base) + col("id") * 1000L).as("ts"),
+        lit("a").as("tag")).repartitionByRange(5, col("id")), t)
+      mode.foreach(m => ManifestTable.updateProperties(spark, t, Map(
+        ManifestTable.DeleteModeProp -> m, ManifestTable.UpdateModeProp -> m)))
+      ManifestTable.enableChangeFeed(spark, t)
+      t
+    }
+    def ids(rows: org.apache.spark.sql.DataFrame): Seq[Long] =
+      rows.select("id").as[Long].collect().toSeq
+    def changed(t: String, v: Long, kind: String): Set[Long] =
+      ids(ManifestTable.rowChanges(spark, t, v - 1, v)
+        .filter(col(ManifestTable.ChangeTypeCol) === kind)).toSet
+    for (mode <- Seq(None, Some("merge-on-read"))) {
+      val name = mode.getOrElse("copy-on-write")
+      val d = table(mode)
+      val vd = ManifestTable.delete(spark, d, old)
+      val left = (0L until n).toSet -- ids(ManifestTable.read(spark, d))
+      assert(left.nonEmpty && left.size < n, s"$name delete removed ${left.size} rows")
+      assert(changed(d, vd, "delete") == left,
+        s"$name delete: the feed's deletes are not the rows that left")
+
+      val u = table(mode)
+      val vu = ManifestTable.update(spark, u, old, Map("tag" -> lit("u")))
+      val after = ids(ManifestTable.read(spark, u))
+      assert(after.size == n && after.distinct.size == n,
+        s"$name update: ${after.size - after.distinct.size} rows appear twice")
+      val set = ids(ManifestTable.read(spark, u).filter(col("tag") === "u")).toSet
+      assert(set.nonEmpty && set.size < n, s"$name update changed ${set.size} rows")
+      Seq("update_preimage", "update_postimage").foreach(kind =>
+        assert(changed(u, vu, kind) == set,
+          s"$name update: the feed's $kind rows are not the rows that changed"))
+    }
+  }
+
   test("batch txnAppId/txnVersion: retried appends and overwrites fold in once") {
     import spark.implicits._
     val t = freshTable()

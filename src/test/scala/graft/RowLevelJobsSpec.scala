@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, current_date, lit}
 import graft.sinks.ManifestTable
 import java.nio.file.Files
 
@@ -19,8 +19,11 @@ import java.nio.file.Files
   * (`deleteWhere`, and SQL DELETE with a condition filter pushdown cannot
   * translate) costs what a predicate does when a second read finds the
   * same rows, and a merge-on-read update re-reads its touched rows
-  * instead of pinning them. A count that grows means an action came
-  * back.
+  * instead of pinning them. A current-time condition finds other rows
+  * on each read, so its matched ids are pinned: the pin, and the
+  * broadcast of the ids to every read that joins them. A count that
+  * grows means an action came back; one that shrinks for a current-time
+  * condition means a pin went missing.
   */
 class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
   /** 100 rows in 5 range-localized files: file k holds ids [20k, 20k+20).
@@ -75,6 +78,12 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
       s"DELETE FROM ${sqlName(t)} WHERE id % 16 = 3"): Unit),
     "update" -> (t => ManifestTable.update(spark, t, col("id") >= 90L,
       Map("tag" -> lit("u"))): Unit),
+    // a current-time condition matches other rows on each read: pinned
+    "deleteNow" -> (t => ManifestTable.delete(spark, t, col("id") < 30L &&
+      current_date() > lit("2000-01-01").cast("date")): Unit),
+    "updateNow" -> (t => ManifestTable.update(spark, t, col("id") >= 90L &&
+      current_date() > lit("2000-01-01").cast("date"),
+      Map("tag" -> lit("u"))): Unit),
     "merge" -> (t => ManifestTable.merge(spark, source, t, Seq("id")): Unit),
     // the read's own schema job is counted, as the benchmark counts it
     "mergeParquet" -> (t => ManifestTable.merge(spark,
@@ -110,17 +119,21 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
     val rows = cow.toMap
     assert(rows("deleteWhere")._2 == rows("delete")._2,
       "deleteWhere and delete rows differ")
+    assert(rows("deleteNow")._2 == rows("delete")._2, "deleteNow and delete rows differ")
+    assert(rows("updateNow")._2 == rows("update")._2, "updateNow and update rows differ")
     assert(rows("sqlDelete")._2.map(_._1) == (0L until 100L).filter(_ % 16 != 3),
       "SQL DELETE rows differ")
     val counts = (cow.map { case (n, (j, _)) => s"$n/cow" -> j } ++
       mor.map { case (n, (j, _)) => s"$n/mor" -> j }).toMap
     assert(counts == Map(
       "delete/cow" -> 2, "deleteWhere/cow" -> 2, "sqlDelete/cow" -> 2,
-      "update/cow" -> 2, "merge/cow" -> 2,
+      "update/cow" -> 2, "deleteNow/cow" -> 4, "updateNow/cow" -> 4,
+      "merge/cow" -> 2,
       "mergeParquet/cow" -> 4, "mergeWidened/cow" -> 2,
       "mergeOverBound/cow" -> 9, "mergeOverRange/cow" -> 7,
       "delete/mor" -> 1, "deleteWhere/mor" -> 1, "sqlDelete/mor" -> 1,
-      "update/mor" -> 2, "merge/mor" -> 2,
+      "update/mor" -> 2, "deleteNow/mor" -> 2, "updateNow/mor" -> 4,
+      "merge/mor" -> 2,
       "mergeParquet/mor" -> 4, "mergeWidened/mor" -> 2,
       "mergeOverBound/mor" -> 8, "mergeOverRange/mor" -> 6), counts)
   }
