@@ -58,7 +58,7 @@ class TestSummary(unittest.TestCase):
     def test_summary_lines_and_slowest_order(self):
         reports = [T.parse_report(self.write("g.xml", GREEN)),
                    T.parse_report(self.write("r.xml", RED))]
-        lines, green = T.summarize(reports, n_specs=2)
+        lines, green = T.summarize(reports, {"graft.GreenSpec", "graft.RedSpec"})
         self.assertFalse(green)
         self.assertEqual(lines[0], "graft.RedSpec › asserts: 3 did not equal 4")
         self.assertEqual(lines[2], "slowest 2 suites:")
@@ -78,8 +78,39 @@ class TestSummary(unittest.TestCase):
         self.assertEqual(T.main(["", reports, specs]), 1)   # a suite missing
         os.remove(specs + "/graft/OtherSpec.scala")
         self.assertEqual(T.main(["", reports, specs]), 0)
+        self.write("specs/graft/RedSpec.scala", "")
         self.write("reports/TEST-graft.RedSpec.xml", RED)
         self.assertEqual(T.main(["", reports, specs]), 1)   # a test failed
+
+    def test_stale_report_counts_for_no_suite(self):
+        reports = self.dir.name + "/reports"
+        specs = self.dir.name + "/specs"
+        os.makedirs(reports)
+        os.makedirs(specs + "/graft")
+        self.write("specs/graft/OtherSpec.scala", "")
+        self.write("reports/TEST-graft.GreenSpec.xml", GREEN)
+        # a report with no spec file neither fills the missing suite's
+        # place nor turns the run red; both are named
+        lines, green = T.summarize(
+            [T.parse_report(reports + "/TEST-graft.GreenSpec.xml")],
+            T.spec_suites(specs))
+        self.assertFalse(green)
+        self.assertIn("ignored, no spec file: graft.GreenSpec", lines)
+        self.assertIn("did not report: graft.OtherSpec", lines)
+        self.assertEqual(lines[-1], "0/1 suites reported, 0 tests, "
+                         "0 failed or errored, 0.0 s in suites")
+        self.assertEqual(T.main(["", reports, specs]), 1)
+        self.write("reports/TEST-graft.OtherSpec.xml",
+                   GREEN.replace("GreenSpec", "OtherSpec"))
+        self.assertEqual(T.main(["", reports, specs]), 0)
+
+    def test_spec_suites_are_dotted_paths(self):
+        os.makedirs(self.dir.name + "/specs/graft/sub")
+        for name in ("graft/ASpec.scala", "graft/sub/BSpec.scala",
+                     "graft/Helper.scala"):
+            self.write("specs/" + name, "")
+        self.assertEqual(T.spec_suites(self.dir.name + "/specs"),
+                         {"graft.ASpec", "graft.sub.BSpec"})
 
 
 if __name__ == "__main__":

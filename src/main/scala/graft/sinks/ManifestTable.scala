@@ -1597,17 +1597,17 @@ object ManifestTable {
       stats: Map[String, FileStats],
       cols: Seq[String]): Map[String, FileStats] =
     try {
-      import org.apache.spark.sql.functions.{col, concat, element_at, expr, lit, split}
+      import org.apache.spark.sql.functions.{col, expr}
       import org.apache.spark.sql.GraftColumnBridge
-      // the files hold the data columns; their partition columns live
-      // in the Hive path segments, which a read of the bare files does
-      // not discover
-      val hive = relFiles.flatMap(layoutOf).toSet
-      val df = spark.read.schema(org.apache.spark.sql.types.StructType(
-          written.fields.filterNot(f => hive(f.name))))
-        .parquet(relFiles.map(f => new Path(table, f).toString): _*)
-      val have = df.columns.toSet
-      val targets = cols.filter(have)
+      // the new files through the manifest relation, whose rows name
+      // their file as the manifest will ([[rowFile]]). The files hold
+      // the data columns; partition columns live in the Hive path
+      // segments and get no filter
+      val hive = relFiles.flatMap(layoutOf).distinct
+      val df = org.apache.spark.sql.GraftManifestScan.relation(spark, table,
+        manifestFilesOf(table.getFileSystem(spark.sparkContext.hadoopConfiguration),
+          table, table.toString, relFiles, Map.empty, hive), hive, written)
+      val targets = cols.filter(c => !hive.contains(c) && df.columns.contains(c))
       if (targets.isEmpty) return stats
       val items = spark.conf.get("spark.graft.bloom.expectedItems",
         "200000").toLong
@@ -1630,18 +1630,14 @@ object ManifestTable {
         graft.functions.BloomAgg(
           GraftColumnBridge.eagerExpression(rendered(c)),
           items, fpp).toAggregateExpression()).as(c))
-      // table-relative path derived IN the job (the relocation-stable
-      // split-on-/data/s recipe the DV identity uses) — the serialized
-      // filter bits flow straight from the aggregation into the
-      // sidecar parquet and NEVER through the driver: a useful filter
-      // is ~100 KB, and collecting files × columns of them would be
-      // the exact driver bottleneck this feature must not have at
-      // a thousand-file commit
-      val relCol = concat(lit("data/s"),
-        element_at(split(col("_metadata.file_path"), "/data/s"), -1))
+      // grouped by file IN the job — the serialized filter bits flow
+      // straight from the aggregation into the sidecar parquet and
+      // NEVER through the driver: a useful filter is ~100 KB, and
+      // collecting files × columns of them would be the exact driver
+      // bottleneck this feature must not have at a thousand-file commit
       val dir = s"blooms/u${java.util.UUID.randomUUID()}"
       def q(s: String) = s.replace("'", "\\'")
-      df.select(relCol.as("file") +: targets.map(c => col(c)): _*)
+      df.select(rowFile.as("file") +: targets.map(c => col(c)): _*)
         .groupBy(col("file"))
         .agg(aggs.head, aggs.tail: _*)
         // long layout (file, col, bits): one row per filter
@@ -3195,78 +3191,34 @@ object ManifestTable {
   // deletion-vector read plumbing
   // ---------------------------------------------------------------
 
-  /** Row-identity helper columns for the DV anti-join. Prefixed so no
-    * user column can collide with the lake internals.
+  /** Row-identity helper columns: a row's file as the manifest writes
+    * it and its row index in that file. Prefixed so no user column can
+    * collide with the lake internals.
     */
   private val DvFileCol = "_graft_dv_file"
   private val DvIdxCol = "_graft_dv_idx"
-  private val AbsPathCol = "_graft_abs_path"
   /** Marks the rows a row-level join flagged as touched. */
   private val HitCol = "_graft_hit"
-  private val RowIdentityCols = Set(AbsPathCol, DvFileCol, DvIdxCol, HitCol)
+  private val RowIdentityCols = Set(DvFileCol, DvIdxCol, HitCol)
 
-  /** A row's source file as a table-relative path, derived from the
-    * hidden parquet `_metadata` column — relocation-stable (no table
-    * root baked in) and computed by the SAME expression at DV-write
-    * and DV-read time, so the anti-join key always agrees with the
-    * sidecar regardless of URI encoding quirks. Native files: `data/s`
-    * occurs exactly once as a path-segment boundary (partition values
-    * escape slashes), and `element_at(-1)` keeps the LAST occurrence
-    * should a table root ever contain the marker. Files ADOPTED by
-    * [[convertToGraft]] carry no `data/s` marker; their rel path is
-    * reconstructed as the trailing run of `key=value` segments plus
-    * the filename — exactly the flat-or-Hive layout the convert
-    * contract requires. Defensive root-prefix strip (VERDICT r19 #8):
-    * when the file path sits under the table root, the rel IS the
-    * path minus the root — computed directly, so a table-root segment
-    * that itself contains `=` (a Hive-layout PARENT dir) can never
-    * over-capture into the reconstruction; the marker/walk branches
-    * remain only for absolute out-of-root references (shallow-clone
-    * adoptions).
+  /** A scanned row's file: the manifest rel path, which the scan
+    * serves as a per-file constant
+    * ([[org.apache.spark.sql.GraftManifestScan.FileField]]). It holds
+    * no table root, so it survives a move of the table.
     */
-  private def rowFileRel(table: String): Column = {
-    import org.apache.spark.sql.functions.{col, concat, element_at, expr, length, lit, regexp_replace, split, when}
-    val fp = col("_metadata.file_path")
-    // scheme-free prefix: `_metadata.file_path` is a URI string while
-    // `table` may be a bare path — match on the path component, which
-    // both forms contain verbatim. The match is ANCHORED to the path
-    // start (scheme/authority stripped, then a prefix test), never an
-    // any-position `instr`: an out-of-root adopted file whose absolute
-    // path merely CONTAINS the root as an interior substring (e.g.
-    // root `/data` with a clone source `/backup/data/x/k=v/f.parquet`)
-    // must fall through to the k=v-walk branch, not get a mis-stripped
-    // rel that breaks the DV anti-join key.
-    val pre = new Path(table).toUri.getPath.stripSuffix("/") + "/"
-    val pathOnly = regexp_replace(fp,
-      lit("^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?"), lit(""))
-    val underRoot = pathOnly.startsWith(pre)
-    val stripped = pathOnly.substr(lit(pre.length + 1), length(pathOnly))
-    val native = concat(lit("data/s"),
-      element_at(split(fp, "/data/s"), -1))
-    // walk the path segments from the right: filename, then as many
-    // consecutive k=v segments as the layout has (codegen'd
-    // higher-order functions over a short array — no UDF)
-    val adopted = expr(
-      """array_join(reverse(aggregate(
-        reverse(split(_metadata.file_path, '/')),
-        named_struct('acc', cast(array() as array<string>), 'stop', false),
-        (s, x) -> CASE
-          WHEN s.stop THEN s
-          WHEN size(s.acc) = 0
-            THEN named_struct('acc', array(x), 'stop', false)
-          WHEN instr(x, '=') > 1
-            THEN named_struct('acc', concat(s.acc, array(x)), 'stop', false)
-          ELSE named_struct('acc', s.acc, 'stop', true) END).acc), '/')""")
-    when(underRoot, stripped)
-      .when(fp.contains("/data/s"), native)
-      .otherwise(adopted)
-  }
+  private def rowFile: Column = org.apache.spark.sql.functions.col(
+    "_metadata." + org.apache.spark.sql.GraftManifestScan.FileField)
 
   /** Every DV sidecar is written as exactly (file STRING, idx BIGINT):
-    * by Spark from the pinned rows ([[rewriteRows]]), or, for a small
-    * vector, by the driver ([[writeDvSidecar]]) with the same parquet
-    * schema. Passing the schema explicitly skips footer inference (and
-    * its Spark job) on every sidecar read.
+    * `file` is the deleted row's file as the writing table's manifest
+    * names it (a rel path, or the absolute path of a shallow clone's
+    * out-of-root file) and `idx` its row index: the scan's row identity
+    * ([[rowFile]]). A clone reads the sidecars it inherits under their
+    * owner's root ([[dvOwner]]). Spark writes a sidecar from the
+    * touched rows ([[rewriteRows]]), or, for a small vector, the driver
+    * does ([[writeDvSidecar]]) with the same parquet schema. Passing
+    * the schema explicitly skips footer inference (and its Spark job)
+    * on every sidecar read.
     */
   private val DvSidecarSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("file",
@@ -3279,13 +3231,30 @@ object ManifestTable {
     .parseMessageType(
       "message spark_schema { optional binary file (STRING); optional int64 idx; }")
 
-  /** The (file, idx) pairs of the given sidecar dirs as one frame. */
+  /** The root, with its trailing '/', that a sidecar dir's relative
+    * file names resolve under: empty for the table's own dirs, `<root>/`
+    * for one a shallow clone inherited and records by its absolute dir
+    * `<root>/deletes/d…` ([[cloneTable]] names the inherited files
+    * `<root>/<rel>` the same way).
+    */
+  private def dvOwner(dir: String): String =
+    if (dir.startsWith("/")) dir.substring(0, dir.lastIndexOf("/deletes/") + 1)
+    else ""
+
+  /** The (file, idx) pairs of the given sidecar dirs as one frame, the
+    * files named as this table's manifest names them.
+    */
   private def dvEntries(spark: SparkSession, table: String,
       dvDirs: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    spark.read.schema(DvSidecarSchema)
-      .parquet(dvDirs.sorted.map(d => absStr(table, d)): _*)
-      .select(col("file").as(DvFileCol), col("idx").as(DvIdxCol))
+    import org.apache.spark.sql.functions.{col, concat, lit, when}
+    dvDirs.groupBy(dvOwner).toSeq.sortBy(_._1).map { case (owner, dirs) =>
+      val file = if (owner.isEmpty) col("file")
+        else when(col("file").startsWith("/"), col("file"))
+          .otherwise(concat(lit(owner), col("file")))
+      spark.read.schema(DvSidecarSchema)
+        .parquet(dirs.sorted.map(d => absStr(table, d)): _*)
+        .select(file.as(DvFileCol), col("idx").as(DvIdxCol))
+    }.reduce(_.union(_))
   }
 
   /** Vectors of at most this many positions are SMALL. A read applies
@@ -3303,9 +3272,9 @@ object ManifestTable {
     spark.conf.get("spark.graft.dv.inlineThreshold", "4000000").toLong
 
   /** Memoized inline DV broadcasts, keyed by the ABSOLUTE sidecar-dir
-    * set: sidecar content is immutable (new deletes create new dirs),
-    * so ONE broadcast serves every read of the same vectors instead of
-    * a plan-time read per read. Bounded: past 64 entries the cache
+    * set and each dir's [[dvOwner]]: sidecar content is immutable (new
+    * deletes create new dirs), so ONE broadcast serves every read of
+    * the same vectors instead of a plan-time read per read. Bounded: past 64 entries the cache
     * clears and the evicted broadcasts unpersist (executor copies
     * released; an in-flight plan refetches from the driver copy).
     */
@@ -3399,7 +3368,6 @@ object ManifestTable {
     */
   private def dvInlineCondition(spark: SparkSession, table: String,
       dvDirs: Seq[String], fileCol: Column, idxCol: Column): Column = {
-    val absDirs = dvDirs.sorted.map(d => absStr(table, d))
     if (dvInlineMemo.size > 64) {
       val old = new java.util.ArrayList(dvInlineMemo.values())
       dvInlineMemo.clear()
@@ -3407,8 +3375,13 @@ object ManifestTable {
         try b.unpersist(blocking = false)
         catch { case scala.util.control.NonFatal(_) => () })
     }
-    val bc = dvInlineMemo.computeIfAbsent(absDirs.mkString(" "), _ => {
-      val byFile = absDirs.flatMap(dvPositions(spark, _)).groupMap(_._1)(_._2)
+    // a source and its clone read one sidecar under different names
+    val dirs = dvDirs.sorted.map(d => (dvOwner(d), absStr(table, d)))
+    val bc = dvInlineMemo.computeIfAbsent(dirs.mkString(" "), _ => {
+      val byFile = dirs.flatMap { case (owner, abs) =>
+        dvPositions(spark, abs).map { case (f, a) =>
+          (if (f.startsWith("/")) f else owner + f) -> a }
+      }.groupMap(_._1)(_._2)
       val map = new java.util.HashMap[
         org.apache.spark.unsafe.types.UTF8String, Array[Long]](
         math.max(8, byFile.size * 2))
@@ -3425,15 +3398,15 @@ object ManifestTable {
       eagerExpression(fileCol), eagerExpression(idxCol), bc))
   }
 
-  /** Merge-on-read over a SINGLE file relation (places where the
-    * hidden `_metadata` column is reachable directly): drop the rows
-    * the sidecars delete. Small vectors (count known from the
-    * manifest) are one codegen'd membership filter with no join node;
-    * larger ones (or an unknown count, `-1`) one anti-join on the
-    * row identity. `keepIdentity` tags every row with its absolute
-    * path, table-relative file and row index in one `select` and
-    * keeps the tags (for [[rewriteRows]]). A no-op without sidecars
-    * unless identity is asked for.
+  /** Merge-on-read over ONE manifest relation: drop the rows the
+    * sidecars delete, matching each row by its identity ([[rowFile]],
+    * `_metadata.row_index`), which is what the sidecars store. Small
+    * vectors (count known from the manifest) are one codegen'd
+    * membership filter with no join node; larger ones (or an unknown
+    * count, `-1`) one anti-join on the identity. `keepIdentity` tags
+    * every row with its identity ([[DvFileCol]], [[DvIdxCol]]) in one
+    * `select` and keeps the tags (for [[rewriteRows]]). A no-op without
+    * sidecars unless identity is asked for.
     */
   private def applyDvAntiJoin(spark: SparkSession, table: String,
       df: DataFrame, dvDirs: Seq[String], dvRows: Long = -1L,
@@ -3443,11 +3416,9 @@ object ManifestTable {
     if (dvDirs.isEmpty && !keepIdentity) df
     else if (inline && !keepIdentity)
       df.filter(dvInlineCondition(spark, table, dvDirs,
-        rowFileRel(table), col("_metadata.row_index")))
+        rowFile, col("_metadata.row_index")))
     else {
-      val tagged = df.select(col("*"),
-        col("_metadata.file_path").as(AbsPathCol),
-        rowFileRel(table).as(DvFileCol),
+      val tagged = df.select(col("*"), rowFile.as(DvFileCol),
         col("_metadata.row_index").as(DvIdxCol))
       val kept =
         if (dvDirs.isEmpty) tagged
@@ -3455,7 +3426,7 @@ object ManifestTable {
           dvDirs, col(DvFileCol), col(DvIdxCol)))
         else tagged.join(dvEntries(spark, table, dvDirs),
           Seq(DvFileCol, DvIdxCol), "left_anti")
-      if (keepIdentity) kept else kept.drop(AbsPathCol, DvFileCol, DvIdxCol)
+      if (keepIdentity) kept else kept.drop(DvFileCol, DvIdxCol)
     }
   }
 
@@ -3866,10 +3837,11 @@ object ManifestTable {
         s"$table holds no parquet files to convert")
       // the convert contract is FLAT OR HIVE: every directory segment
       // between the root and a data file must be a `key=value`
-      // fragment. Free-form subdirectories would break the layout-
-      // agnostic rel reconstruction every later read/DV/overwrite
-      // relies on ([[snapBaseOf]], [[rowFileRel]]) — refuse up front
-      // with the offending path rather than corrupt later.
+      // fragment. Every later read and overwrite takes a file's
+      // snapshot base ([[snapBaseOf]]) and partition layout
+      // ([[layoutOf]]) from those segments, which a free-form
+      // subdirectory would break — refuse up front with the offending
+      // path rather than corrupt later.
       rels.find(_.split("/").dropRight(1).exists(_.indexOf('=') <= 0))
         .foreach(bad => throw new IllegalArgumentException(
           s"CONVERT TO GRAFT supports flat or Hive-partitioned layouts " +
@@ -4995,7 +4967,7 @@ object ManifestTable {
             val tagged = sTo.read(targets, Map.empty, keepIdentity = true)
             val dels = tag(tagged.join(dvEntries(spark, sTo.table, dvDirs),
               Seq(DvFileCol, DvIdxCol), "inner")
-              .drop(AbsPathCol, DvFileCol, DvIdxCol), "delete", v)
+              .drop(DvFileCol, DvIdxCol), "delete", v)
             // a MERGE-ON-READ update/merge commit carries DVs AND fresh
             // post-image files in ONE delta: the hidden rows die, the
             // appended rows are born — emitting only the deletes would
@@ -5320,74 +5292,45 @@ object ManifestTable {
     }
   }
 
-  /** Maps `input_file_name()` absolutes back to the table-relative
-    * paths among `candidates`. The candidates are indexed once by file
-    * name, so each lookup suffix-matches only the candidates that share
-    * the absolute path's last segment (the path may or may not arrive
-    * URL-encoded depending on the source, so both forms are tried). A
-    * miss is a hard error: silently dropping a hit file would corrupt a
-    * rewrite.
-    */
-  private[graft] def matchRel(candidates: Seq[String]): String => String = {
-    def name(path: String) = path.substring(path.lastIndexOf('/') + 1)
-    val byName = candidates.groupBy(name)
-    abs => {
-      val decoded =
-        try Option(new java.net.URI(abs).getPath)
-        catch { case _: java.net.URISyntaxException => None }
-      (abs +: decoded.toSeq).iterator.flatMap { a =>
-        byName.getOrElse(name(a), Nil).find { rel =>
-          // absolute candidates (shallow-clone references) already carry
-          // their leading '/' — the path-segment guard must not double it
-          a.endsWith(if (rel.startsWith("/")) rel else "/" + rel)
-        }
-      }.nextOption().getOrElse(throw new IllegalStateException(
-        s"input file $abs not among candidate files"))
-    }
-  }
-
   /** What one narrow pass over identity-tagged rows learns
-    * ([[filePass]]): the row count of each input file, keyed by its
-    * absolute path, and — when the vector is small — every (file, idx)
-    * position: table-relative file → sorted row indexes.
+    * ([[filePass]]): the row count of each file, and — when the vector
+    * is small — every (file, idx) position: file → sorted row indexes.
+    * Files are keyed as the manifest writes them ([[rowFile]]).
     */
   private final case class FilePass(counts: Map[String, Long],
       positions: Option[Map[String, Array[Long]]])
 
-  /** ONE `mapPartitions` pass with no shuffle over `frame`'s
-    * [[AbsPathCol]], [[DvFileCol]] and [[DvIdxCol]]: the row count of
-    * each file, plus the positions of each partition that holds at most
+  /** ONE `mapPartitions` pass with no shuffle over `frame`'s row
+    * identity ([[DvFileCol]], [[DvIdxCol]]): the row count of each
+    * file, plus the positions of each partition that holds at most
     * ⌈`threshold` / partitions⌉ rows, so the driver never holds more
     * than about `threshold` of them. The positions come back only when
     * every partition returned its own and they total at most
-    * `threshold`; `threshold <= 0` reads the paths alone.
+    * `threshold`; `threshold <= 0` reads the files alone.
     */
   private def filePass(frame: DataFrame, threshold: Long): FilePass = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.unsafe.types.UTF8String
     val withPos = threshold > 0
-    val cols = if (withPos) Seq(AbsPathCol, DvFileCol, DvIdxCol) else Seq(AbsPathCol)
+    val cols = if (withPos) Seq(DvFileCol, DvIdxCol) else Seq(DvFileCol)
     val parts = org.apache.spark.sql.GraftColumnBridge.collectPartitions(
         frame.select(cols.map(col): _*), "filePass") { (n, rows) =>
       val cap = if (withPos) (threshold + n - 1) / n else -1L
       val counts = scala.collection.mutable.HashMap.empty[String, Long]
       val pos = scala.collection.mutable.HashMap.empty[String,
         scala.collection.mutable.ArrayBuilder.ofLong]
-      // a file's rows arrive together: convert each path once per run
-      var absRaw, fileRaw: UTF8String = null
-      var abs, file: String = null
+      // a file's rows arrive together: convert each name once per run
+      var fileRaw: UTF8String = null
+      var file: String = null
       var seen = 0L
       rows.foreach { r =>
-        if (!r.getUTF8String(0).equals(absRaw)) {
-          absRaw = r.getUTF8String(0).clone(); abs = absRaw.toString }
-        counts(abs) = counts.getOrElse(abs, 0L) + 1L
+        if (!r.getUTF8String(0).equals(fileRaw)) {
+          fileRaw = r.getUTF8String(0).clone(); file = fileRaw.toString }
+        counts(file) = counts.getOrElse(file, 0L) + 1L
         seen += 1
-        if (seen <= cap) {
-          if (!r.getUTF8String(1).equals(fileRaw)) {
-            fileRaw = r.getUTF8String(1).clone(); file = fileRaw.toString }
-          pos.getOrElseUpdate(file,
-            new scala.collection.mutable.ArrayBuilder.ofLong) += r.getLong(2)
-        } else if (seen == cap + 1) pos.clear()
+        if (seen <= cap) pos.getOrElseUpdate(file,
+          new scala.collection.mutable.ArrayBuilder.ofLong) += r.getLong(1)
+        else if (seen == cap + 1) pos.clear()
       }
       (counts.toArray,
         if (seen > cap) null else pos.iterator.map { case (f, b) => f -> b.result() }.toArray)
@@ -5497,13 +5440,11 @@ object ManifestTable {
     if (candidates.isEmpty) return Find(Seq.empty, d => (d, lit(false)))
     val frame = t.read(candidates, keepIdentity = true)
     val ids = frame.filter(coalesce(condFor(frame), lit(false)))
-      .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol),
-        lit(true).as(HitCol))
+      .select(col(DvFileCol), col(DvIdxCol), lit(true).as(HitCol))
     if (!planMustPin(ids)) return Find(candidates, d => (d, condFor(d)))
     val p = pinIds(t, ids)
-    val hits = p.pass.counts.keys.map(matchRel(candidates)).toSeq.distinct.sorted
-    Find(hits, d => (d.join(p.ids.drop(AbsPathCol), Seq(DvFileCol, DvIdxCol),
-      "left_outer"), col(HitCol)), Some(p))
+    Find(p.pass.counts.keys.toSeq.sorted, d => (d.join(p.ids,
+      Seq(DvFileCol, DvIdxCol), "left_outer"), col(HitCol)), Some(p))
   }
 
   /** UPDATE's SET over a target frame: assigned columns take their new
@@ -5575,7 +5516,7 @@ object ManifestTable {
       if (tags.isEmpty) df else df.drop(tags.toIndexedSeq: _*)
     }
     lazy val touchedIds = c.touched(t.read(c.candidates, keepIdentity = true))
-      .select(col(AbsPathCol), col(DvFileCol), col(DvIdxCol))
+      .select(col(DvFileCol), col(DvIdxCol))
     val onRead = mor && c.candidates.nonEmpty
     val pinned = c.pinned.orElse(Option.when(
       onRead && !c.pinAsked && planMustPin(touchedIds))(pinIds(t, touchedIds)))
@@ -5583,17 +5524,16 @@ object ManifestTable {
       pinned.fold(c.touched(t.read(files, keepIdentity = tagged)))(p =>
         t.read(files, keepIdentity = true)
           .join(p.ids, Seq(DvFileCol, DvIdxCol), "left_semi"))
-    val rel = matchRel(c.candidates)
     // the pinned ids' pass covers the same rows: no second scan
     val pass = Option.when(onRead)(pinned.fold(
       filePass(touchedIds, dvInlineThreshold(t.spark)))(_.pass))
-    val byFile: Seq[(String, Long)] = pass.toSeq.flatMap(_.counts)
-      .groupMapReduce(e => rel(e._1))(_._2)(_ + _).toSeq.sortBy(_._1)
+    val byFile: Seq[(String, Long)] =
+      pass.toSeq.flatMap(_.counts).sortBy(_._1)
     val hits: Seq[String] =
       if (mor) byFile.map(_._1)
       else if (c.pinned.isDefined || c.candidates.isEmpty) c.candidates
       else filePass(touchedIn(c.candidates, tagged = true), 0L).counts.keys
-        .map(rel).toSeq.distinct.sorted
+        .toSeq.sorted
     // the touched rows in target columns — lazy: only merge-on-read,
     // inserts and the change feed read them
     lazy val pre = if (hits.isEmpty) None else Some(strip(

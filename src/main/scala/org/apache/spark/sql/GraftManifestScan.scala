@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, FileSourceConstantMetadataStructField, FileSourceMetadataAttribute}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
@@ -36,6 +36,13 @@ import graft.sinks.DataSkipping.FileStats
   * EXISTS_DEFAULT or null. Every `ManifestTable` snapshot read, the
   * DSv2 catalog and the streaming source plan over this relation.
   *
+  * Each row names its file as the manifest writes it: the scan serves
+  * the file's rel path as the per-file constant `_metadata.graft_file`
+  * ([[FileField]]), beside parquet's own `_metadata.row_index`. That
+  * pair is the lake's one row identity: deletion vectors, row-level
+  * commits, the change feed and `analyze` key by it, and it survives a
+  * move of the table root because no root is in it.
+  *
   * Lives in the `org.apache.spark.sql` package for the same reason the
   * lake formats' equivalents do: [[HadoopFsRelation]]/[[FileIndex]]
   * are `private[sql]` extension points.
@@ -48,6 +55,18 @@ object GraftManifestScan {
     */
   final case class ManifestFile(rel: String, status: FileStatus,
       stats: Option[FileStats], partValues: Seq[Option[String]])
+
+  /** The `_metadata` field that carries each row's manifest rel path. */
+  val FileField = "graft_file"
+
+  /** Parquet whose `_metadata` also holds [[FileField]], a per-file
+    * constant the index attaches to each listed file.
+    */
+  final class ManifestParquetFormat extends ParquetFileFormat {
+    override def metadataSchemaFields: Seq[StructField] =
+      super.metadataSchemaFields :+
+        FileSourceConstantMetadataStructField(FileField, StringType, nullable = false)
+  }
 
   /** Infer a partition column's type from its distinct string values —
     * Spark's own ladder truncated to the cases partition dirs actually
@@ -139,7 +158,11 @@ object GraftManifestScan {
       // on the partition value (`WHERE ts >= X` prunes `dt =
       // to_date(ts)` dirs) — prune-only conjuncts, the row filter
       // stays the original
-      val normConjuncts = dataFilters.map(DataSkipping.normalize)
+      // a conjunct over `_metadata` (a file's own name or path) names
+      // no stats column: it stays in the post-scan Filter, never pruned
+      val normConjuncts = dataFilters.filterNot(_.references.exists(a =>
+        FileSourceMetadataAttribute.isValid(a.metadata)))
+        .map(DataSkipping.normalize)
       val statConjuncts = normConjuncts ++ normConjuncts.flatMap(c =>
         graft.sinks.GeneratedPruning.derive(SparkSession.active,
           recordedSchema, partitionSchema.fieldNames.toSeq, c))
@@ -169,7 +192,8 @@ object GraftManifestScan {
         .sortBy(_._2.head.rel)
         .map { case (values, fs) =>
           PartitionDirectory(InternalRow.fromSeq(values),
-            fs.map(f => FileStatusWithMetadata(f.status)))
+            fs.map(f => FileStatusWithMetadata(f.status,
+              Map(FileField -> UTF8String.fromString(f.rel)))))
         }
       lastCall = Some((memoKey, res))
       res
@@ -232,7 +256,7 @@ object GraftManifestScan {
     val index = new ManifestFileIndex(tableRoot, files, partitionSchema,
       recordedSchema)
     val rel = HadoopFsRelation(index, partitionSchema, dataSchema,
-      None, new ParquetFileFormat, Map.empty[String, String])(cs)
+      None, new ManifestParquetFormat, Map.empty[String, String])(cs)
     classic.Dataset.ofRows(cs, LogicalRelation(rel, isStreaming = isStreaming))
   }
 }

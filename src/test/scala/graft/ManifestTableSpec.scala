@@ -1297,25 +1297,6 @@ class ManifestTableSpec extends AnyFunSuite with SparkSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(net == Map("good" -> 20L, "bad" -> 0L))
   }
-
-  test("matchRel maps hit paths to relative and absolute (shallow-clone) candidates by file name") {
-    val candidates = Seq("data/s1/part-0.parquet", "data/s2/part-0.parquet",
-      "data/s2/p=a%20b/part-1.parquet", "/src/tbl/k=1/part-0.parquet",
-      "/src/tbl/k=1/my file.parquet")
-    val rel = ManifestTable.matchRel(candidates)
-    assert(rel("file:/t/data/s1/part-0.parquet") == "data/s1/part-0.parquet")
-    assert(rel("file:///t/data/s2/part-0.parquet") == "data/s2/part-0.parquet")
-    // the escaped partition value arrives encoded once more in the URI
-    assert(rel("file:/t/data/s2/p=a%2520b/part-1.parquet") ==
-      "data/s2/p=a%20b/part-1.parquet")
-    assert(rel("file:/src/tbl/k=1/part-0.parquet") == "/src/tbl/k=1/part-0.parquet")
-    assert(rel("file:/src/tbl/k=1/my%20file.parquet") == "/src/tbl/k=1/my file.parquet")
-    // the path-segment guard: a longer last segment or parent never matches
-    Seq("file:/t/xdata/s1/part-0.parquet", "file:/t/data/s1/xpart-0.parquet",
-        "file:/t/data/s3/part-0.parquet").foreach { miss =>
-      intercept[IllegalStateException](rel(miss))
-    }
-  }
 }
 
 /** Shared mutable state for the non-determinism pin spec: a counter the

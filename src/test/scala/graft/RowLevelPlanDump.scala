@@ -18,9 +18,9 @@ import graft.sinks.ManifestTable
   * (tumbling, session window, the foreachBatch upsert aggregate over a
   * watched directory, the inner and left-outer view→click joins and
   * e23's dedup).
-  * Expression ids, temp and fixture paths, the temp paths' lengths,
-  * broadcast ids, session hashes and uuids are masked, so dumps of two
-  * builds differ only where the plans do.
+  * Expression ids, temp and fixture paths, broadcast ids, session
+  * hashes and uuids are masked, so dumps of two builds differ only
+  * where the plans do.
   *
   *   sbt "Test/runMain graft.RowLevelPlanDump <sfDir> <outDir>"
   *
@@ -50,8 +50,6 @@ object RowLevelPlanDump {
         .replaceAll("#\\d+L?", "#")
         .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>")
         .replaceAll("/tmp/[^,\\]\\s)]*", "<tmp>")
-        // the row-file expression strips the table root by its length
-        .replaceAll(", , 1\\), \\d+, length\\(", ", , 1), <len>, length(")
         .replaceAll("Broadcast\\(\\d+\\)", "Broadcast(<id>)")
         .replaceAll("local-\\d+", "<app>")
         .replaceAll("SparkSession@[0-9a-f]+", "SparkSession@<hash>")
