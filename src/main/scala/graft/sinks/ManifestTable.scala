@@ -241,7 +241,7 @@ object ManifestTable {
     * rewrite-classification walk) stays zero-sidecar-I/O.
     */
   private final case class Ref(ref: String, nFiles: Long,
-      refRows: Option[Long], txns: Map[String, Long], parts: Seq[String],
+      refRows: Long, txns: Map[String, Long], parts: Seq[String],
       schemaJson: String, quality: Map[String, Long],
       dataChange: Boolean,
       props: Map[String, String] = Map.empty,
@@ -531,20 +531,27 @@ object ManifestTable {
     def dvDirs: Seq[String] = dvs.values.flatten.map(_.path).toSeq.distinct.sorted
     def dvRows: Long = dvs.values.flatten.map(_.rows).sum
 
-    /** The live files with on-disk statuses, statistics and partition
-      * values: what a Catalyst-native scan plans over.
+    /** The root a shallow clone's inherited absolute entries sit under. */
+    private[ManifestTable] def cloneRoot: Option[String] =
+      props.get(CloneSourceProp)
+
+    /** The live files with statuses, statistics and partition values:
+      * what a Catalyst-native scan plans over.
       */
     lazy val manifestFiles
         : Seq[org.apache.spark.sql.GraftManifestScan.ManifestFile] =
-      manifestFilesOf(fs, root, table, files, stats, parts)
+      manifestFilesOf(fs, root, files, stats, parts, cloneRoot)
 
     /** `files` with `vectors` applied (default: this version's), under
-      * this version's schema ([[readFiles]]).
+      * this version's schema ([[readFiles]]). `fileStats` holds the
+      * files' stats (default: this version's; a change feed passes the
+      * stats of the commit that named them).
       */
     private[ManifestTable] def read(files: Seq[String],
         vectors: Map[String, Seq[DvRef]] = this.dvs,
-        keepIdentity: Boolean = false): DataFrame =
-      readFiles(spark, table, files, vectors, schema, props, keepIdentity)
+        keepIdentity: Boolean = false,
+        fileStats: Map[String, FileStats] = this.stats): DataFrame =
+      readFiles(spark, this, files, fileStats, vectors, keepIdentity)
 
     /** Version `v` of the same table, resolved against the same log
       * listing; `m` is its head manifest when the caller parsed it.
@@ -650,6 +657,9 @@ object ManifestTable {
       props: Map[String, String] = Map.empty,
       cdcDir: Option[String] = None,
       op: Map[String, String] = Map.empty): String = {
+    // the reader refuses a listed file without rows and bytes
+    files.find(f => !stats.contains(f)).foreach(f => throw
+      new IllegalArgumentException(s"manifest v$version: no stats for $f"))
     val root = mapper.createObjectNode()
     root.put("fmt", Fmt): Unit
     root.put("version", version): Unit
@@ -692,7 +702,7 @@ object ManifestTable {
   private def fillStatNode(fn: com.fasterxml.jackson.databind.node.ObjectNode,
       fst: FileStats): Unit = {
     fn.put("rows", fst.rows): Unit
-    if (fst.bytes > 0) fn.put("bytes", fst.bytes): Unit
+    fn.put("bytes", fst.bytes): Unit
     if (fst.ndv.nonEmpty) {
       val nn = fn.putObject("ndv")
       fst.ndv.toSeq.sortBy(_._1).foreach { case (c, b64) =>
@@ -757,7 +767,7 @@ object ManifestTable {
     * metadata consumer needs inline; the file rows live at `ref`.
     */
   private def renderRefNode(version: Long, ref: String, nFiles: Long,
-      refRows: Option[Long], txns: Map[String, Long], parts: Seq[String],
+      refRows: Long, txns: Map[String, Long], parts: Seq[String],
       schemaJson: String, quality: Map[String, Long],
       dataChange: Boolean,
       props: Map[String, String] = Map.empty,
@@ -768,7 +778,7 @@ object ManifestTable {
     if (!dataChange) root.put("dataChange", false): Unit
     root.put("filesRef", ref): Unit
     root.put("nFiles", nFiles): Unit
-    refRows.foreach(r => root.put("refRows", r): Unit)
+    root.put("refRows", refRows): Unit
     if (parts.nonEmpty) {
       val pn = root.putArray("parts")
       parts.foreach(c => pn.add(c): Unit)
@@ -787,8 +797,8 @@ object ManifestTable {
 
   /** One file's stats from its JSON object node (inline manifest entry
     * or a sidecar row's `stat` string) — inverse of [[fillStatNode]].
-    * None when the row count is missing: a stats entry without it is
-    * unusable (rows = 0 would claim provable emptiness) — fail open.
+    * None when the row count or the byte size is missing: the caller
+    * refuses such an entry, naming where it came from.
     */
   private def statOfNode(
       fn: com.fasterxml.jackson.databind.JsonNode): Option[FileStats] = {
@@ -831,15 +841,15 @@ object ManifestTable {
         }
         bb.result()
     }
-    Option(fn.get("rows")).map(_.asLong()).map(rows =>
-      FileStats(rows, cols,
-        Option(fn.get("bytes")).map(_.asLong()).getOrElse(0L), ndv, bloom))
+    for (rows <- Option(fn.get("rows")); bytes <- Option(fn.get("bytes")))
+      yield FileStats(rows.asLong(), cols, bytes.asLong(), ndv, bloom)
   }
 
   /** Parse the manifest (or checkpoint) of `version`. Refused with an
     * IOException naming the version: a manifest without the `"fmt"`
-    * marker (written before format 2), one of a NEWER format, and one
-    * without a recorded schema.
+    * marker (written before format 2), one of a NEWER format, one
+    * without a recorded schema, and one with a data file (or a pointer
+    * head) that records no rows and bytes.
     */
   private def parseManifest(json: String, version: Long): Manifest = {
     val root =
@@ -933,17 +943,24 @@ object ManifestTable {
         }
         b.result()
     }
+    // every listed data file records its rows and bytes: reads build
+    // file statuses from them and never list a data dir
+    def counted(files: Seq[String]): Seq[String] = {
+      files.find(f => !stats.contains(f)).foreach(f =>
+        refuse(s"records no rows and bytes for data file $f"))
+      files
+    }
+    def long(field: String): Long = Option(root.get(field))
+      .map(_.asLong()).getOrElse(refuse(s"has a files ref without $field"))
     if (root.has("filesRef"))
-      Ref(root.get("filesRef").asText(),
-        Option(root.get("nFiles")).map(_.asLong()).getOrElse(0L),
-        Option(root.get("refRows")).map(_.asLong()),
+      Ref(root.get("filesRef").asText(), long("nFiles"), long("refRows"),
         txns, parts, schemaJson, quality, dataChange, props, op)
     else strings("add") match {
       case Some(a) =>
-        Delta(a, remove, stats, txns, parts, schemaJson, quality, dataChange,
-          dvs, props, cdcDir, op)
-      case None => Replace(strings("files").getOrElse(
-        throw new java.io.IOException(s"bad manifest: $json")),
+        Delta(counted(a), remove, stats, txns, parts, schemaJson, quality,
+          dataChange, dvs, props, cdcDir, op)
+      case None => Replace(counted(strings("files").getOrElse(
+        throw new java.io.IOException(s"bad manifest: $json"))),
         stats, txns, parts, schemaJson, quality, dataChange, dvs, props, op)
     }
   }
@@ -975,23 +992,22 @@ object ManifestTable {
 
   /** Write the per-file rows of a full-list base as a parquet sidecar
     * under `_manifests/cpdata/` and return (table-relative dir, file
-    * count, total rows if every file has stats). Row layout: `file`
-    * (relative path), `stat` (the same JSON object an inline manifest
-    * holds per file, null when stats-less), `dv` (JSON array of
-    * deletion-vector refs, null when none) — columnar, splittable,
+    * count, total rows). Row layout: `file` (relative path), `stat`
+    * (the same JSON object an inline manifest holds per file), `dv`
+    * (JSON array of deletion-vector refs, null when none) — columnar, splittable,
     * parsed per row instead of as one tree. Written BEFORE the pointer
     * manifest CAS-publishes; a lost race or crash leaves an orphan dir
     * for [[vacuum]].
     */
   private def writeRefData(spark: SparkSession, table: Path, version: Long,
       files: Seq[String], stats: Map[String, FileStats],
-      dvs: Map[String, Seq[DvRef]]): (String, Long, Option[Long]) = {
+      dvs: Map[String, Seq[DvRef]]): (String, Long, Long) = {
     val ref = s"$ManifestDir/cpdata/r$version-${java.util.UUID.randomUUID()}"
     val rows = new java.util.ArrayList[org.apache.spark.sql.Row](files.size)
     files.foreach { f =>
-      val statJson = stats.get(f).map { fst =>
+      val statJson = {
         val n = mapper.createObjectNode()
-        fillStatNode(n, fst)
+        fillStatNode(n, stats(f))
         mapper.writeValueAsString(n)
       }
       val dvJson = dvs.get(f).filter(_.nonEmpty).map { refs =>
@@ -1003,7 +1019,7 @@ object ManifestTable {
         }
         mapper.writeValueAsString(arr)
       }
-      rows.add(org.apache.spark.sql.Row(f, statJson.orNull, dvJson.orNull)): Unit
+      rows.add(org.apache.spark.sql.Row(f, statJson, dvJson.orNull)): Unit
     }
     // ~200k rows per output file: a million-file base becomes a few
     // parquet parts a later resolution scans in parallel
@@ -1012,11 +1028,7 @@ object ManifestTable {
       .repartition(parts)
       .write.mode(SaveMode.ErrorIfExists)
       .parquet(new Path(table, ref).toString)
-    val refRows =
-      if (files.forall(stats.contains))
-        Some(files.iterator.map(stats(_).rows).sum)
-      else None
-    (ref, files.size.toLong, refRows)
+    (ref, files.size.toLong, files.iterator.map(stats(_).rows).sum)
   }
 
   /** Above this many sidecar rows, [[loadRef]] parses the per-row
@@ -1040,7 +1052,7 @@ object ManifestTable {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     StructType(Seq(
       StructField("file", StringType, nullable = false),
-      StructField("stat", StringType, nullable = true),
+      StructField("stat", StringType, nullable = false),
       StructField("dv", StringType, nullable = true)))
   }
 
@@ -1071,24 +1083,23 @@ object ManifestTable {
       "spark.graft.manifest.distributedParseThreshold",
       DefaultDistributedParseThreshold.toString).toLong
     // the pointer head already records the row count — the choice
-    // costs zero I/O (nFiles = 0: legacy head, size unknown → driver)
+    // costs zero I/O
     val distribute = threshold == 0 || nFiles > threshold
     val files = Seq.newBuilder[String]
     val stats = Map.newBuilder[String, FileStats]
     val dvs = Map.newBuilder[String, Seq[DvRef]]
+    // a row without rows and bytes is refused like an inline entry
+    val where = s"files ref $ref"
     if (distribute) {
       implicit val enc: org.apache.spark.sql.Encoder[
-        (String, Option[FileStats], Seq[DvRef])] =
-        org.apache.spark.sql.Encoders.kryo[
-          (String, Option[FileStats], Seq[DvRef])]
+        (String, FileStats, Seq[DvRef])] =
+        org.apache.spark.sql.Encoders.kryo[(String, FileStats, Seq[DvRef])]
       df.mapPartitions { it =>
         // executor-local mapper (kept off the closure on purpose)
         val pm = new ObjectMapper()
         it.map { r =>
           val f = r.getString(0)
-          val fst =
-            if (r.isNullAt(1)) None
-            else statOfNode(pm.readTree(r.getString(1)))
+          val fst = refStat(pm, r, where)
           val dv: Seq[DvRef] =
             if (r.isNullAt(2)) Seq.empty
             else {
@@ -1102,14 +1113,13 @@ object ManifestTable {
         }
       }.collect().foreach { case (f, fst, dv) =>
         files += f
-        fst.foreach(stats += f -> _)
+        stats += f -> fst
         if (dv.nonEmpty) dvs += f -> dv
       }
     } else df.collect().foreach { r =>
       val f = r.getString(0)
       files += f
-      if (!r.isNullAt(1))
-        statOfNode(mapper.readTree(r.getString(1))).foreach(stats += f -> _)
+      stats += f -> refStat(mapper, r, where)
       if (!r.isNullAt(2)) {
         val arr = mapper.readTree(r.getString(2))
         dvs += f -> (0 until arr.size).map { i =>
@@ -1120,6 +1130,16 @@ object ManifestTable {
     }
     (files.result(), stats.result(), dvs.result())
   }
+
+  /** The stats of one sidecar row of [[loadRef]]; a row whose `stat`
+    * is null or lacks rows and bytes is refused with an IOException
+    * naming the file and `where` it was read from.
+    */
+  private def refStat(m: ObjectMapper, r: org.apache.spark.sql.Row,
+      where: String): FileStats =
+    Option(r.getString(1)).flatMap(j => statOfNode(m.readTree(j)))
+      .getOrElse(throw new java.io.IOException(
+        s"$where records no rows and bytes for data file ${r.getString(0)}"))
 
   /** Commit a full-list REPLACE base, choosing the inline or sidecar
     * form by [[refThreshold]] — the production write/truncate/compact
@@ -1541,10 +1561,10 @@ object ManifestTable {
     props.get(BloomColumnsProp).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 
-  /** Per-file column statistics for freshly committed files (footer +
-    * partition-value ranges — see [[DataSkipping.collect]]). Disable
-    * per session with `spark.graft.manifest.collectStats=false`; a
-    * stats-less commit is only unprunable, never wrong. When the
+  /** Per-file statistics for freshly committed files (rows, bytes,
+    * footer and partition-value ranges — see [[DataSkipping.collect]]);
+    * every commit records them, and a footer that cannot be read fails
+    * the commit naming the file. When the
     * table's properties declare [[BloomColumnsProp]], one Spark job
     * additionally builds per-file bloom filters for the NEW files
     * (O(files in this commit), like every other stat) and attaches
@@ -1563,22 +1583,19 @@ object ManifestTable {
       relFiles: Seq[String],
       props: Map[String, String] = Map.empty,
       written: org.apache.spark.sql.types.StructType =
-        new org.apache.spark.sql.types.StructType()): Map[String, FileStats] =
-    if (!spark.conf.get("spark.graft.manifest.collectStats", "true").toBoolean)
-      Map.empty
-    else {
-      val th = spark.conf.get(
-        "spark.graft.manifest.distributedParseThreshold",
-        DefaultDistributedParseThreshold.toString).toLong
-      val base =
-        if (th == 0 || relFiles.size > th)
-          DataSkipping.collectDistributed(spark, table, relFiles)
-        else DataSkipping.collect(
-          spark.sparkContext.hadoopConfiguration, table, relFiles)
-      val cols = bloomColumns(props)
-      if (cols.isEmpty || base.isEmpty) base
-      else attachBlooms(spark, table, relFiles, written, base, cols)
-    }
+        new org.apache.spark.sql.types.StructType()): Map[String, FileStats] = {
+    val th = spark.conf.get(
+      "spark.graft.manifest.distributedParseThreshold",
+      DefaultDistributedParseThreshold.toString).toLong
+    val base =
+      if (th == 0 || relFiles.size > th)
+        DataSkipping.collectDistributed(spark, table, relFiles)
+      else DataSkipping.collect(
+        spark.sparkContext.hadoopConfiguration, table, relFiles)
+    val cols = bloomColumns(props)
+    if (cols.isEmpty || relFiles.isEmpty) base
+    else attachBlooms(spark, table, relFiles, written, base, cols)
+  }
 
   /** Build per-file bloom filters for `cols` over the freshly written
     * `relFiles` in ONE Spark aggregation (values inserted as their
@@ -1603,10 +1620,10 @@ object ManifestTable {
       // their file as the manifest will ([[rowFile]]). The files hold
       // the data columns; partition columns live in the Hive path
       // segments and get no filter
-      val hive = relFiles.flatMap(layoutOf).distinct
+      val hive = relFiles.flatMap(layoutOf(_)).distinct
       val df = org.apache.spark.sql.GraftManifestScan.relation(spark, table,
         manifestFilesOf(table.getFileSystem(spark.sparkContext.hadoopConfiguration),
-          table, table.toString, relFiles, Map.empty, hive), hive, written)
+          table, relFiles, stats, hive), hive, written)
       val targets = cols.filter(c => !hive.contains(c) && df.columns.contains(c))
       if (targets.isEmpty) return stats
       val items = spark.conf.get("spark.graft.bloom.expectedItems",
@@ -1751,7 +1768,7 @@ object ManifestTable {
     def prune(e: org.apache.spark.sql.catalyst.expressions.Expression)
         : Seq[String] = {
       val pe = prunePredicate(spark, snap.schema, snap.parts, e)
-      snap.files.filter(f => DataSkipping.mayMatch(lstats.get(f), pe))
+      snap.files.filter(f => DataSkipping.mayMatch(lstats(f), pe))
     }
 
     def op(operation: String, params: (String, String)*): Map[String, String] =
@@ -2465,17 +2482,13 @@ object ManifestTable {
         .flatMap(c => if (step >= 0) c.max else c.min)
         .collect { case l: Long => l
                    case i: Int => i.toLong }
-      val nonEmpty = fresh.filter(f => stats.get(f).forall(_.rows > 0))
-      val extremes: Option[Seq[Long]] =
-        if (nonEmpty.forall(f => stats.get(f).exists(st =>
-          st.rows == 0 || boundOf(st).isDefined)))
-          Some(nonEmpty.flatMap(f => stats.get(f).flatMap(boundOf)))
-        else None
-      val observed: Option[Long] = extremes match {
-        case Some(es) if es.nonEmpty =>
-          Some(if (step >= 0) es.max else es.min)
-        case Some(_) => None // all-empty commit
-        case None => // stats disabled/unusable: one bounded agg
+      val nonEmpty = fresh.filter(f => stats(f).rows > 0)
+      val bounds = nonEmpty.map(f => boundOf(stats(f)))
+      val observed: Option[Long] =
+        if (bounds.forall(_.isDefined)) bounds.flatten match {
+          case Seq() => None // all-empty commit
+          case es => Some(if (step >= 0) es.max else es.min)
+        } else { // a file's range is unknown: one bounded agg
           import org.apache.spark.sql.functions.{max, min, col}
           val d = spark.read.parquet(
             nonEmpty.map(f => absStr(p.toString, f)): _*)
@@ -2483,7 +2496,7 @@ object ManifestTable {
             (if (step >= 0) max(col(phys)) else min(col(phys)))
               .cast(org.apache.spark.sql.types.LongType)).head()
           if (r.isNullAt(0)) None else Some(r.getLong(0))
-      }
+        }
       observed match {
         case None => ps
         case Some(v) =>
@@ -3167,12 +3180,26 @@ object ManifestTable {
   private def absStr(table: String, rel: String): String =
     if (rel.startsWith("/")) rel else s"$table/$rel"
 
-  /** The Hive partition keys of a table-relative path: its
-    * `key=value` segments after the snapshot base ([[snapBaseOf]]).
+  /** The Hive `key=value` directory segments of a manifest entry, split
+    * into (key, raw value): the run of them directly above the file
+    * name, below the entry's owner root. A native entry's run stops at
+    * its snapshot dir (`data/s…`), wherever the root is; an absolute
+    * entry a shallow clone inherited from `cloneRoot` is cut below that
+    * root first, so a `key=value` segment of a source root is never a
+    * partition.
     */
-  private def layoutOf(rel: String): Seq[String] =
-    rel.split("/").dropRight(1).dropWhile(_.indexOf('=') <= 0).toSeq
-      .map(_.split("=", 2).head)
+  private def partSegments(rel: String,
+      cloneRoot: Option[String]): Seq[Array[String]] = {
+    val below = cloneRoot.map(_ + "/").filter(rel.startsWith)
+      .fold(rel)(r => rel.substring(r.length))
+    below.split("/").dropRight(1).reverseIterator
+      .takeWhile(_.indexOf('=') > 0).toSeq.reverse.map(_.split("=", 2))
+  }
+
+  /** The Hive partition keys of a manifest entry ([[partSegments]]). */
+  private def layoutOf(rel: String,
+      cloneRoot: Option[String] = None): Seq[String] =
+    partSegments(rel, cloneRoot).map(_.head)
 
   /** The on-file read schema of a recorded schema: physical names at
     * every depth, recorded types (the parquet reader widens narrow
@@ -3443,28 +3470,31 @@ object ManifestTable {
     * create(), a truncate()) still read TYPED: an empty frame of the
     * recorded schema, so downstream column references resolve.
     */
-  private def readFiles(spark: SparkSession, table: String,
-      relFiles: Seq[String], dvs: Map[String, Seq[DvRef]],
-      recorded: org.apache.spark.sql.types.StructType,
-      props: Map[String, String],
-      keepIdentity: Boolean = false): DataFrame =
+  private def readFiles(spark: SparkSession, s: Snapshot,
+      relFiles: Seq[String], stats: Map[String, FileStats],
+      dvs: Map[String, Seq[DvRef]], keepIdentity: Boolean): DataFrame =
     if (relFiles.isEmpty) spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), recorded)
+      new java.util.ArrayList[org.apache.spark.sql.Row](), s.schema)
     else {
-      val (fs, p) = fsOf(spark, table)
       // the row-id column exists once the table has drawn row ids
-      val physical = physicalSchema(recorded,
-        props.contains(identityNextKey(RowIdCol)))
-      relFiles.groupBy(layoutOf).toSeq.sortBy(_._1.mkString("/")).map {
-        case (parts, files) =>
+      val physical = physicalSchema(s.schema,
+        s.props.contains(identityNextKey(RowIdCol)))
+      // rows and bytes only: the relation must not prune the picked
+      // files again (a second bloom pass would re-read sidecars)
+      val sized = relFiles.map { f =>
+        val st = stats(f)
+        f -> FileStats(st.rows, Map.empty, st.bytes)
+      }.toMap
+      relFiles.groupBy(layoutOf(_, s.cloneRoot)).toSeq
+        .sortBy(_._1.mkString("/")).map { case (parts, files) =>
           val live = files.flatMap(dvs.get).flatten
-          toLogical(applyDvAntiJoin(spark, table,
-            org.apache.spark.sql.GraftManifestScan.relation(spark, p,
-              manifestFilesOf(fs, p, table, files, Map.empty, parts), parts,
-              physical),
+          toLogical(applyDvAntiJoin(spark, s.table,
+            org.apache.spark.sql.GraftManifestScan.relation(spark, s.root,
+              manifestFilesOf(s.fs, s.root, files, sized, parts, s.cloneRoot),
+              parts, physical),
             live.map(_.path).distinct, live.map(_.rows).sum, keepIdentity),
-            Some(recorded))
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
+            Some(s.schema))
+        }.reduce(_.unionByName(_, allowMissingColumns = true))
     }
 
   /** Files the log does not describe yet (the staged files of a
@@ -3512,9 +3542,9 @@ object ManifestTable {
     * is the difference between a metadata walk + a few files and a
     * full-table scan for every selective query; on top of it Spark's
     * own row-group pruning and predicate pushdown still apply inside
-    * each kept file. Files without stats (disabled collection,
-    * unsupported types) are always scanned — pruning can only ever
-    * remove provably-empty work.
+    * each kept file. A column whose range is unknown (an unsupported
+    * type) never prunes — pruning can only ever remove provably-empty
+    * work.
     */
   def readWhere(spark: SparkSession, table: String, predicate: Column,
       version: Long = -1L): DataFrame = {
@@ -3561,9 +3591,8 @@ object ManifestTable {
     def usable(c: String, utc: Boolean, dir: String): Boolean =
       !utc || dir.startsWith("blooms/u")
     val needed: Set[String] = kept.flatMap(f =>
-      stats.get(f).toSeq.flatMap(fst =>
-        targets.flatMap { case (c, _, utc) =>
-          fst.bloom.get(c).filter(usable(c, utc, _)) })).toSet
+      targets.flatMap { case (c, _, utc) =>
+        stats(f).bloom.get(c).filter(usable(c, utc, _)) }).toSet
     if (needed.isEmpty) return kept
     try {
       import org.apache.spark.sql.functions.col
@@ -3579,8 +3608,7 @@ object ManifestTable {
         .empty[(String, String), org.apache.spark.util.sketch.BloomFilter]
       kept.filter { f =>
         targets.forall { case (c, vals, utc) =>
-          val refOk = stats.get(f)
-            .flatMap(_.bloom.get(c)).exists(usable(c, utc, _))
+          val refOk = stats(f).bloom.get(c).exists(usable(c, utc, _))
           if (!refOk) true // no usable filter for this file/col: keep
           else bits.get((f, c)) match {
             case None => true
@@ -3699,7 +3727,7 @@ object ManifestTable {
     val stats = logicalStats(s.stats, s.mapping)
     val pruneExpr = prunePredicate(spark, s.schema, s.parts, predExpr)
     bloomPrune(spark, s.root, s.files.filter(f =>
-      DataSkipping.mayMatch(stats.get(f), pruneExpr)), stats, predExpr)
+      DataSkipping.mayMatch(stats(f), pruneExpr)), stats, predExpr)
   }
 
   /** The per-file statistics of a snapshot (for tests/introspection). */
@@ -3736,32 +3764,25 @@ object ManifestTable {
         s.manifestFiles, s.parts, physicalSchema(s.schema, rowIds = false)),
       s.dvDirs, s.dvRows), s.mapping)
 
-  /** Resolve on-disk statuses + partition values for `relFiles` — one
-    * recursive listing per snapshot dir, never per file.
+  /** The scan view of `relFiles` under `root`: each file's path, its
+    * stats (every entry records rows and bytes, so the status needs no
+    * listing) and its partition values in `parts` order, from the
+    * entry's own `key=value` segments ([[partSegments]]). A file that
+    * is gone fails the scan that opens it, naming the file.
     */
-  private def manifestFilesOf(fs: FileSystem, p: Path, table: String,
+  private def manifestFilesOf(fs: FileSystem, root: Path,
       relFiles: Seq[String], stats: Map[String, FileStats],
-      parts: Seq[String]): Seq[org.apache.spark.sql.GraftManifestScan.ManifestFile] = {
-    import org.apache.spark.sql.GraftManifestScan
-    val statusByRel: Map[String, FileStatus] = relFiles
-      .map(snapBaseOf).distinct
-      .flatMap { snapDir =>
-        listDataFiles(fs, snapBasePath(p, snapDir))
-          .map(st => relativize(p, st.getPath) -> st)
-      }.toMap
+      parts: Seq[String], cloneRoot: Option[String] = None)
+      : Seq[org.apache.spark.sql.GraftManifestScan.ManifestFile] = {
+    val qualified = fs.makeQualified(root)
     relFiles.map { rel =>
-      val st = statusByRel.getOrElse(rel,
-        throw new java.io.FileNotFoundException(
-          s"manifest of $table references missing data file $rel"))
-      val pvals = parts.map { c =>
-        rel.split("/").dropRight(1).collectFirst {
-          case seg if seg.startsWith(c + "=") =>
-            val raw = seg.substring(c.length + 1)
-            if (raw == DataSkipping.HiveNullPartition) None
-            else Some(DataSkipping.unescapePath(raw))
-        }.flatten
-      }
-      GraftManifestScan.ManifestFile(rel, st, stats.get(rel), pvals)
+      val segs = partSegments(rel, cloneRoot)
+      val pvals = parts.map(c => segs.collectFirst {
+        case Array(`c`, raw) if raw != DataSkipping.HiveNullPartition =>
+          DataSkipping.unescapePath(raw)
+      })
+      org.apache.spark.sql.GraftManifestScan.ManifestFile(rel,
+        new Path(qualified, rel), stats(rel), pvals)
     }
   }
 
@@ -4181,27 +4202,23 @@ object ManifestTable {
 
   /** EXACT row count of a snapshot from manifest statistics alone —
     * no data I/O (every commit records per-file parquet row counts,
-    * which are exact). `None` if any live file lacks stats (disabled
-    * collection): the metadata answer is never
-    * approximate, it is exact or absent. At 100 TB this answers
-    * `count(*)` in a metadata walk.
+    * which are exact). At 100 TB this answers `count(*)` in a
+    * metadata walk.
     */
   def rowCount(spark: SparkSession, table: String,
-      version: Long = -1L): Option[Long] =
+      version: Long = -1L): Long =
     rowsOf(snapshot(spark, table, version))
 
-  private def rowsOf(snap: Snapshot): Option[Long] =
-    if (snap.files.forall(snap.stats.contains))
-      // deletion vectors subtract exactly: each DV's count was taken
-      // through the DV-filtered read, so DVs on one file are disjoint
-      Some(snap.files.iterator.map(snap.stats(_).rows).sum -
-        snap.dvs.valuesIterator.flatten.map(_.rows).sum)
-    else None
+  private def rowsOf(snap: Snapshot): Long =
+    // deletion vectors subtract exactly: each DV's count was taken
+    // through the DV-filtered read, so DVs on one file are disjoint
+    snap.files.iterator.map(snap.stats(_).rows).sum -
+      snap.dvs.valuesIterator.flatten.map(_.rows).sum
 
   /** EXACT column min/max of a snapshot from manifest statistics
     * alone — no data I/O (footer extremes are exact; the global
     * extreme is the extreme of the per-file extremes). `None` when any
-    * live file lacks a usable bound for the column (stats missing,
+    * live file lacks a usable bound for the column (range unknown,
     * unsupported type, oversized strings) — exact or absent, never
     * approximate. All-null files contribute no bound; a table whose
     * every row is null yields None. At 100 TB this answers
@@ -4254,10 +4271,9 @@ object ManifestTable {
     }
     var mn: Option[Any] = None
     var mx: Option[Any] = None
-    for (f <- snap.files) snap.stats.get(f) match {
-      case None => return None
-      case Some(fst) if fst.rows == 0 => () // empty file: no bound needed
-      case Some(fst) => fst.cols.get(statKey) match {
+    // an empty file needs no bound
+    for (f <- snap.files; fst = snap.stats(f) if fst.rows > 0)
+      fst.cols.get(statKey) match {
         case Some(DataSkipping.ColStats(Some(lo), Some(hi), _)) =>
           val (cl, ch) = (coerce(lo), coerce(hi))
           if (cl.isEmpty || ch.isEmpty) return None
@@ -4268,7 +4284,6 @@ object ManifestTable {
             if nulls == fst.rows => () // all-null file: no bound
         case _ => return None
       }
-    }
     mn.zip(mx)
   }
 
@@ -4385,7 +4400,7 @@ object ManifestTable {
     * version still present, oldest first — commit kind
     * (`replace` = write/compact, `append`, `rewrite` = delete/merge),
     * files added/removed (−1 = a replace's implicit remove-all), rows
-    * added (from manifest stats; null when any added file lacks them),
+    * added (from manifest stats),
     * the txn-watermark map as JSON, the quality audit, and the commit
     * wall-clock (`ts_millis`, monotonized manifest mtime — what
     * `TIMESTAMP AS OF` resolves against). Metadata-only: reads each
@@ -4400,11 +4415,8 @@ object ManifestTable {
     val timeOf: Map[Long, Long] = commitTimes(fs, p, vs, parsed).toMap
     val rows = vs.sorted.map { v =>
       val m = parsed(v)
-      def rowsOf(addList: Seq[String]): Option[Long] =
-        if (addList.nonEmpty && addList.forall(m.stats.contains))
-          Some(addList.iterator.map(m.stats(_).rows).sum)
-        else if (addList.isEmpty) Some(0L)
-        else None
+      def rowsOf(addList: Seq[String]): Long =
+        addList.iterator.map(m.stats(_).rows).sum
       // pointer bases answer from their inline head (nFiles/refRows) —
       // history never loads a sidecar
       val (kind, added, removed, rowsAdded) = m match {
@@ -4441,31 +4453,18 @@ object ManifestTable {
   }
 
   /** Metadata-only FILE CENSUS of a snapshot (the `$files` metadata
-    * table): one row per live data file — table-relative path, size,
-    * exact row count from manifest statistics (null for stats-less
-    * files) and rows removed by live deletion vectors. One recursive
-    * listing per snapshot dir, never a data read.
+    * table): one row per live data file — table-relative path, size
+    * and exact row count from manifest statistics, and rows removed by
+    * live deletion vectors. A pure metadata walk: zero filesystem
+    * round-trips even at millions of files.
     */
   def filesReport(spark: SparkSession, table: String,
       version: Long = -1L): DataFrame = {
     val snap = snapshot(spark, table, version)
-    val rows: Seq[(String, Long, Option[Long], Long)] =
-      if (snap.files.forall(f => snap.stats.get(f).exists(_.bytes > 0)))
-        // manifest-recorded sizes: zero filesystem round-trips — the
-        // census is a pure metadata walk even at millions of files
-        snap.files.map { f =>
-          val st = snap.stats(f)
-          (f, st.bytes, Some(st.rows),
-            snap.dvs.getOrElse(f, Seq.empty).map(_.rows).sum)
-        }
-      else {
-        // files without size stats: one recursive listing per
-        // snapshot dir, never a per-file status RPC
-        snap.manifestFiles.map { mf =>
-            (mf.rel, mf.status.getLen, mf.stats.map(_.rows),
-              snap.dvs.getOrElse(mf.rel, Seq.empty).map(_.rows).sum)
-          }
-      }
+    val rows = snap.files.map { f =>
+      val st = snap.stats(f)
+      (f, st.bytes, st.rows, snap.dvs.getOrElse(f, Seq.empty).map(_.rows).sum)
+    }
     val sq = spark
     import sq.implicits._
     rows.toDF("file", "size_bytes", "rows", "dv_deleted_rows")
@@ -4476,8 +4475,8 @@ object ManifestTable {
     * commit wall-clock, partition layout, file/byte/row census,
     * live deletion-vector count, and the user table properties as
     * JSON. Pure metadata: one snapshot resolution plus the commit-
-    * time walk `t$$history` does; row count is exact-or-null
-    * ([[rowCount]]). Served as the `t$$detail` metadata table and
+    * time walk `t$$history` does; row count is exact ([[rowCount]]).
+    * Served as the `t$$detail` metadata table and
     * `CALL system.describe_detail(table => 'ns.t')`.
     */
   def detailReport(spark: SparkSession, table: String): DataFrame = {
@@ -4486,10 +4485,7 @@ object ManifestTable {
     require(vs.nonEmpty, s"no committed version in $table")
     val snap = new Snapshot(spark, table, fs, p, vs.last,
       readManifest(fs, p, vs.last), cs)
-    val bytes: Option[Long] =
-      if (snap.files.forall(f => snap.stats.get(f).exists(_.bytes > 0)))
-        Some(snap.files.iterator.map(snap.stats(_).bytes).sum)
-      else None // stats-less files: exact or absent, like rows
+    val bytes = snapshotBytes(snap.files, snap.stats)
     val lastModified =
       commitTimes(fs, p, vs, Map(snap.version -> snap.manifest)).last._2
     val propsJson = mapper.writeValueAsString {
@@ -4565,7 +4561,7 @@ object ManifestTable {
   /** The per-commit classification walk of `(from, s.version]`, oldest
     * first, shared by [[consumeChanges]], [[streamBatch]] and the
     * file-granular streaming source. Each append commit comes with its
-    * added files and their manifest-recorded sizes, in the manifest's
+    * added files and their manifest-recorded stats, in the manifest's
     * own (restart-stable) add order; a pure offset commit, compaction
     * or metadata commit comes with none (same rows; an offset still
     * advances past it). The walk stops at the first rewrite commit
@@ -4574,8 +4570,8 @@ object ManifestTable {
     * it. A vacuumed (unreadable) log prefix throws.
     */
   private[graft] def appendsBetween(s: Snapshot, from: Long)
-      : (Seq[(Long, Seq[(String, Long)])], Option[Long]) = {
-    val out = Seq.newBuilder[(Long, Seq[(String, Long)])]
+      : (Seq[(Long, Seq[(String, FileStats)])], Option[Long]) = {
+    val out = Seq.newBuilder[(Long, Seq[(String, FileStats)])]
     val walk = commitsBetween(s.fs, s.root, s.table, from, s.version,
       "change feed", "exactly-once delivery cannot be reconstructed; " +
         "re-sync a consumer from a full snapshot, restart a stream from a " +
@@ -4583,27 +4579,27 @@ object ManifestTable {
     while (walk.hasNext) walk.next() match {
       case (v, d: Delta)
           if d.remove.isEmpty && d.dvs.isEmpty && d.dataChange =>
-        out += v -> d.add.map(f =>
-          f -> d.stats.get(f).map(_.bytes).getOrElse(0L))
+        out += v -> d.add.map(f => f -> d.stats(f))
       case (v, other) if !other.dataChange => out += v -> Seq.empty
       case (v, _) => return (out.result(), Some(v))
     }
     (out.result(), None)
   }
 
-  /** The delivery plan for the consumed range: the files to read and
-    * whether they are a SNAPSHOT delivery (initial catch-up or a
-    * full-resync after a rewrite — must be delivered-and-advanced even
+  /** The delivery plan for the consumed range: the files to read with
+    * their stats, and whether they are a SNAPSHOT delivery (initial
+    * catch-up or a full-resync after a rewrite — must be delivered-and-advanced even
     * when EMPTY, because "the table is now empty" is itself the
     * change) vs an incremental append delivery (empty = nothing
     * happened, no commit needed).
     */
   private def changedFilesBetween(s: Snapshot, consumerId: String,
-      from: Long, onRewrite: String): (Seq[String], Boolean) = {
-    if (from == 0) return (s.files, true)
+      from: Long, onRewrite: String): (Seq[(String, FileStats)], Boolean) = {
+    def whole = (s.files.map(f => f -> s.stats(f)), true)
+    if (from == 0) return whole
     appendsBetween(s, from) match {
-      case (adds, None) => (adds.flatMap(_._2.map(_._1)), false)
-      case _ if onRewrite == ConsumeFullResync => (s.files, true)
+      case (adds, None) => (adds.flatMap(_._2), false)
+      case _ if onRewrite == ConsumeFullResync => whole
       case (_, Some(rewriteAt)) => throw new IllegalStateException(
         s"consumed range ($from, ${s.version}] of ${s.table} contains a rewrite " +
           s"commit (v$rewriteAt: delete/merge/overwrite) that a file-level " +
@@ -4628,9 +4624,9 @@ object ManifestTable {
       fromVersion: Long, toVersion: Long): DataFrame = {
     val s = snapshot(spark, table, toVersion)
     val files =
-      if (fromVersion == 0) s.files
+      if (fromVersion == 0) s.files.map(f => f -> s.stats(f))
       else appendsBetween(s, fromVersion) match {
-        case (adds, None) => adds.flatMap(_._2.map(_._1))
+        case (adds, None) => adds.flatMap(_._2)
         case (_, Some(rewriteAt)) => throw streamRewriteError(
           table, fromVersion, toVersion, rewriteAt)
       }
@@ -4646,26 +4642,25 @@ object ManifestTable {
         "from a fresh checkpoint to re-snapshot the table, or gate " +
         "rewrites to quiesced windows (compactions are skipped).")
 
-  /** Plan one streaming micro-batch over an EXPLICIT file subset —
-    * the delivery half [[streamBatch]] and the file/byte-granular
-    * admission path ([[appendsBetween]] / [[snapshotFilesWithSizes]])
-    * share: schema pinned to `s`, column-mapping projection, and — for
-    * a snapshot delivery (`whole`) — the snapshot's stats and the DV
-    * anti-join (applying the FULL snapshot DV set to a subset is exact:
-    * DV rows for undelivered files simply never match).
+  /** Plan one streaming micro-batch over an EXPLICIT file subset, each
+    * file with its stats (an append range's come from the commits that
+    * added them, so files a later compaction removed still plan with no
+    * listing) — the delivery half [[streamBatch]] and the
+    * file/byte-granular admission path ([[appendsBetween]] /
+    * [[snapshotFilesWithStats]]) share: schema pinned to `s`,
+    * column-mapping projection, and — for a snapshot delivery
+    * (`whole`) — the DV anti-join (applying the FULL snapshot DV set
+    * to a subset is exact: DV rows for undelivered files simply never
+    * match).
     */
   private[graft] def streamFilesBatch(spark: SparkSession, s: Snapshot,
-      files: Seq[String], whole: Boolean): DataFrame = {
-    // the snapshot's stats map also covers range-scoped files (stats
-    // ride adds); files later removed by a compaction in the range
-    // still resolve statuses from their immutable snapshot dirs. Only a
-    // snapshot delivery resolves the snapshot's file list
-    val stats: Map[String, FileStats] = if (whole) s.stats else Map.empty
+      files: Seq[(String, FileStats)], whole: Boolean): DataFrame = {
     // column-mapped table: the relation reads PHYSICAL columns; one
     // projection after the DV anti-join restores the logical names
     // (the same step as [[scan]], which declares the source's schema)
     val rel = org.apache.spark.sql.GraftManifestScan.relation(spark, s.root,
-      manifestFilesOf(s.fs, s.root, s.table, files, stats, s.parts), s.parts,
+      manifestFilesOf(s.fs, s.root, files.map(_._1), files.toMap, s.parts,
+        s.cloneRoot), s.parts,
       physicalSchema(s.schema, rowIds = false), isStreaming = true)
     // initial-snapshot batch of a DV-bearing table: apply the vectors
     // (append-range batches cannot carry DVs — a DV commit in the
@@ -4677,16 +4672,16 @@ object ManifestTable {
   }
 
   /** The snapshot at `version` as a DETERMINISTICALLY ORDERED file
-    * list with manifest-recorded sizes — the unit the file/byte-
-    * granular streaming admission indexes into. The order (rel-path
-    * sort) must be reproducible across restarts and source instances:
-    * a checkpointed mid-snapshot offset `(version, i)` is a position
-    * in exactly this list.
+    * list with manifest-recorded stats (sizes included) — the unit the
+    * file/byte-granular streaming admission indexes into. The order
+    * (rel-path sort) must be reproducible across restarts and source
+    * instances: a checkpointed mid-snapshot offset `(version, i)` is a
+    * position in exactly this list.
     */
-  private[graft] def snapshotFilesWithSizes(spark: SparkSession,
-      table: String, version: Long): Seq[(String, Long)] = {
+  private[graft] def snapshotFilesWithStats(spark: SparkSession,
+      table: String, version: Long): Seq[(String, FileStats)] = {
     val snap = snapshot(spark, table, version)
-    snap.files.map(f => f -> snap.stats.get(f).map(_.bytes).getOrElse(0L))
+    snap.files.map(f => f -> snap.stats(f))
   }
 
   /** One CDC STREAMING micro-batch: the row-level changes of
@@ -4736,11 +4731,6 @@ object ManifestTable {
         ct.fold(col(ChangeTypeCol))(lit(_).as(ChangeTypeCol))): _*)
         .withColumn(CommitVersionCol, lit(v))
     }
-    def relationOf(files: Seq[String], parts: Seq[String],
-        schema: org.apache.spark.sql.types.StructType): DataFrame =
-      org.apache.spark.sql.GraftManifestScan.relation(spark, p,
-        manifestFilesOf(fs, p, table, files, Map.empty, parts), parts,
-        schema, isStreaming = true)
     val frames: Seq[DataFrame] =
       commitsBetween(fs, p, table, fromVersion, toVersion, "CDC stream",
         "restart from a fresh checkpoint to re-snapshot, or keep a longer " +
@@ -4750,15 +4740,15 @@ object ManifestTable {
           case d: Delta if d.cdcDir.isDefined =>
             // recorded change rows, already carrying the _change_type
             // column, read by name under the schema at `toVersion`
-            val rel = new Path(p, d.cdcDir.get)
-            val chFiles = listDataFiles(fs, rel)
-              .map(st => relativize(p, st.getPath)).sorted
-            Seq(align(relationOf(chFiles, Seq.empty,
-              changeFileSchema(baseFields)), None, v))
+            Seq(align(org.apache.spark.sql.GraftManifestScan.streamingDir(
+              spark, new Path(p, d.cdcDir.get), changeFileSchema(baseFields)),
+              None, v))
           case d: Delta
               if d.remove.isEmpty && d.dvs.isEmpty && d.add.nonEmpty =>
-            val rel = relationOf(d.add, d.parts,
-              physicalSchema(sTo.schema, rowIds = false))
+            val rel = org.apache.spark.sql.GraftManifestScan.relation(spark, p,
+              manifestFilesOf(fs, p, d.add, d.stats, d.parts, sTo.cloneRoot),
+              d.parts, physicalSchema(sTo.schema, rowIds = false),
+              isStreaming = true)
             Seq(align(toLogical(rel, sTo.mapping), Some("insert"), v))
           case d: Delta if d.remove.isEmpty && d.dvs.isEmpty =>
             Seq.empty // metadata-only commit
@@ -4830,22 +4820,11 @@ object ManifestTable {
     // the hot incremental path skips the snapshot resolve entirely
     val frame =
       if (added.isEmpty) scanOf(spark, s).limit(0)
-      else try {
-        s.read(added, if (isSnapshot) s.dvs else Map.empty)
-          .drop(RowIdCol) // public surface: the hidden row id stays hidden
-      } catch { case e @ (_: org.apache.spark.sql.AnalysisException |
-          _: java.io.FileNotFoundException) =>
-        // normally unreachable (vacuum reclaims an add-file only
-        // together with the manifest naming it, and the walk throws
-        // the log-prefix error first) — this is the belt for a vacuum
-        // RACING this very poll between the walk and the read. Only a
-        // missing file is that race; other I/O failures propagate
-        throw new java.io.IOException(
-          s"consumer '$consumerId' of $table references data files " +
-            "vacuum already reclaimed (a vacuum raced this poll) — " +
-            "re-sync with a fresh consumer id or keep a longer " +
-            "vacuum retention", e)
-      }
+      // public surface: the hidden row id stays hidden. A vacuum
+      // racing this poll between the walk and the read fails `deliver`
+      // with the reclaimed file named; the cursor does not advance
+      else s.read(added.map(_._1), if (isSnapshot) s.dvs else Map.empty,
+        fileStats = added.toMap).drop(RowIdCol)
     deliver(frame, from, current)
     commitConsumerOffset(spark, table, key, current)
   }
@@ -4933,8 +4912,11 @@ object ManifestTable {
     // must report the default, not null, exactly like the snapshot
     // read path
     val baseFields = sTo.schema.fields.toSeq
-    def readTo(files: Seq[String], dvs: Map[String, Seq[DvRef]]): DataFrame =
-      sTo.read(files, dvs)
+    // `stats` covers `files`: the commit's own for its adds, the
+    // version before's for what it removed or marked
+    def readTo(files: Seq[String], dvs: Map[String, Seq[DvRef]],
+        stats: Map[String, FileStats]): DataFrame =
+      sTo.read(files, dvs, fileStats = stats)
     // cast-to-base normalizes pre-widening narrow files so the multiset
     // diffs (exceptAll) type-align across a widening commit
     def align(df: DataFrame): DataFrame = {
@@ -4964,7 +4946,8 @@ object ManifestTable {
           case d: Delta if d.dvs.nonEmpty =>
             val dvDirs = d.dvs.values.flatten.map(_.path).toSeq.distinct
             val targets = d.dvs.keys.toSeq.sorted
-            val tagged = sTo.read(targets, Map.empty, keepIdentity = true)
+            val tagged = sTo.read(targets, Map.empty, keepIdentity = true,
+              fileStats = prev.stats)
             val dels = tag(tagged.join(dvEntries(spark, sTo.table, dvDirs),
               Seq(DvFileCol, DvIdxCol), "inner")
               .drop(DvFileCol, DvIdxCol), "delete", v)
@@ -4973,26 +4956,27 @@ object ManifestTable {
             // appended rows are born — emitting only the deletes would
             // silently drop the post-images from the feed
             if (d.add.isEmpty) Seq(dels)
-            else Seq(dels, tag(readTo(d.add, Map.empty), "insert", v))
+            else Seq(dels, tag(readTo(d.add, Map.empty, d.stats), "insert", v))
           case d: Delta if d.remove.isEmpty =>
             if (d.add.isEmpty) Seq.empty // pure offset/DDL commit
-            else Seq(tag(readTo(d.add, Map.empty), "insert", v))
+            else Seq(tag(readTo(d.add, Map.empty, d.stats), "insert", v))
           case d: Delta =>
-            val old = align(readTo(d.remove, prev.dvs))
+            val before = prev
+            val old = align(readTo(d.remove, before.dvs, before.stats))
             if (d.add.isEmpty) // pure delete: every pre-image row died
               Seq(tag(old, "delete", v))
             else {
-              val neu = align(readTo(d.add, Map.empty))
+              val neu = align(readTo(d.add, Map.empty, d.stats))
               Seq(tag(old.exceptAll(neu), "delete", v),
                 tag(neu.exceptAll(old), "insert", v))
             }
           case _ => // Replace or Ref base: overwrite/truncate (v=1: create)
             val cur = sTo.at(v, Some(mv))
-            val neu = align(readTo(cur.files, cur.dvs))
+            val neu = align(readTo(cur.files, cur.dvs, cur.stats))
             if (v == 1) Seq(tag(neu, "insert", v))
             else {
               val before = prev
-              val old = align(readTo(before.files, before.dvs))
+              val old = align(readTo(before.files, before.dvs, before.stats))
               Seq(tag(old.exceptAll(neu), "delete", v),
                 tag(neu.exceptAll(old), "insert", v))
             }
@@ -5098,13 +5082,13 @@ object ManifestTable {
       where match {
         case Some(cond) =>
           val selected = t.prune(DataSkipping.expressionOf(cond))
-          val selBytes = snapshotBytes(fs, p, selected, snapB.stats)
+          val selBytes = snapshotBytes(selected, snapB.stats)
           val selHasDvs = selected.exists(snapB.dvs.contains)
           // one selected file with no DVs and no re-clustering ask is
           // already compact — nothing to do, no commit
           if (selected.size <= 1 && !selHasDvs && clusterBy.isEmpty) {
             result = Sinks.CompactStats(before.size, before.size,
-              snapshotBytes(fs, p, before, snapB.stats))
+              snapshotBytes(before, snapB.stats))
             None
           } else {
             val sub0 = t.read(selected)
@@ -5121,11 +5105,9 @@ object ManifestTable {
                 sub0.repartitionByRange(targetFiles, clusterBy.map(_.asc): _*)
                   .sortWithinPartitions(clusterBy.map(_.asc): _*)
             val subRows = math.max(
-              if (selected.forall(snapB.stats.contains))
-                selected.iterator.map(snapB.stats(_).rows).sum -
-                  selected.iterator.flatMap(f =>
-                    snapB.dvs.getOrElse(f, Seq.empty)).map(_.rows).sum
-              else sub0.count(), 1L)
+              selected.iterator.map(snapB.stats(_).rows).sum -
+                selected.iterator.flatMap(f =>
+                  snapB.dvs.getOrElse(f, Seq.empty)).map(_.rows).sum, 1L)
             val bpr = math.max(selBytes / subRows, 1L)
             val phys = toPhysical(sub, t.mapping)
             val fresh = writeSnapshot(fs, p, phys, t.next, t.parts,
@@ -5137,7 +5119,7 @@ object ManifestTable {
               remove = selected))
           }
         case None => // whole-table compaction: a replace
-          val totalBytes = snapshotBytes(fs, p, before, snapB.stats)
+          val totalBytes = snapshotBytes(before, snapB.stats)
           // the internal funnel, not read(): a compaction must carry
           // the hidden row-id column through (ids survive
           // reorganizations). An EMPTY snapshot reads TYPED
@@ -5204,8 +5186,7 @@ object ManifestTable {
   /** Post-commit auto-compact check — BEST-EFFORT by contract: the
     * triggering append already committed, so every failure (lost
     * race against a concurrent writer, IO error) only defers the
-    * cleanup to the next commit's check. Files without recorded
-    * byte stats are skipped (unknowable size — never rewrite blind).
+    * cleanup to the next commit's check.
     */
   private def maybeAutoCompact(spark: SparkSession, table: String,
       props: Map[String, String]): Unit =
@@ -5218,8 +5199,7 @@ object ManifestTable {
         val minFiles = t.props.get(AutoCompactMinFilesProp)
           .flatMap(_.toIntOption).getOrElse(16)
         val snap = t.snap
-        val small = snap.files.filter(f => snap.stats.get(f)
-          .exists(st => st.bytes > 0 && st.bytes < target))
+        val small = snap.files.filter(f => snap.stats(f).bytes < target)
         // DV-ratio trigger: live files whose shadowed-row fraction
         // exceeds the (opt-in) threshold — rewriting them applies the
         // vectors, so the table self-heals without small files
@@ -5228,16 +5208,16 @@ object ManifestTable {
         val live = snap.files.toSet
         val shadowed = maxDvRatio.toSeq.flatMap { r =>
           snap.dvs.keysIterator.filter { f =>
-            live(f) && snap.stats.get(f).exists(st => st.rows > 0 &&
-              snap.dvs(f).iterator.map(_.rows).sum.toDouble / st.rows > r)
+            live(f) && snap.stats(f).rows > 0 &&
+              snap.dvs(f).iterator.map(_.rows).sum.toDouble /
+                snap.stats(f).rows > r
           }.toSeq
         }
         val smallSel = if (small.size >= minFiles) small else Seq.empty
         val selected = (smallSel ++ shadowed).distinct
         if (selected.isEmpty) None
         else {
-          val smallBytes = selected.iterator
-            .flatMap(snap.stats.get(_).map(_.bytes)).sum
+          val smallBytes = snapshotBytes(selected, snap.stats)
           val targetFiles = math.max(1L,
             (smallBytes + target - 1) / target).toInt
           val sub0 = t.read(selected)
@@ -5271,26 +5251,13 @@ object ManifestTable {
       }: Unit
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Total on-disk bytes of `relFiles`: manifest-recorded sizes when
-    * every file carries one (zero filesystem round-trips — the commit
-    * path recorded the length with the footer stats), else ONE
-    * recursive listing per snapshot dir. Never a per-file status RPC —
-    * on an object store that loop is O(files) serial round-trips
-    * (VERDICT r12 "What's wrong").
+  /** Total on-disk bytes of `relFiles` from their manifest-recorded
+    * sizes: zero filesystem round-trips (the commit path recorded each
+    * length with the footer stats).
     */
-  private[graft] def snapshotBytes(fs: FileSystem, p: Path,
-      relFiles: Seq[String],
-      stats: Map[String, FileStats]): Long = {
-    if (relFiles.forall(f => stats.get(f).exists(_.bytes > 0)))
-      relFiles.iterator.map(stats(_).bytes).sum
-    else {
-      val byRel: Map[String, Long] = relFiles
-        .map(snapBaseOf).distinct
-        .flatMap(sd => listDataFiles(fs, snapBasePath(p, sd))
-          .map(st => relativize(p, st.getPath) -> st.getLen)).toMap
-      relFiles.iterator.map(f => byRel.getOrElse(f, 0L)).sum
-    }
-  }
+  private[graft] def snapshotBytes(relFiles: Seq[String],
+      stats: Map[String, FileStats]): Long =
+    relFiles.iterator.map(stats(_).bytes).sum
 
   /** What one narrow pass over identity-tagged rows learns
     * ([[filePass]]): the row count of each file, and — when the vector
@@ -6351,19 +6318,31 @@ object ManifestTable {
     * there are at most [[DriverKeyBound]] of them. A source the driver
     * holds (a `LocalRelation`) is read with no job. Any other runs ONE
     * narrow pass with no shuffle, in which a partition gives up past
-    * its share of the bound, unless the plan's own estimate — its row
-    * count, else its size over the key row's size — is over the bound
-    * already. None: the source takes the aggregate guard.
+    * its share of the bound, unless the source's row count is over the
+    * bound already: a bare parquet read's from its footers (read on the
+    * driver, no job), any other plan's own estimate — its row count,
+    * else its size over the key row's size. None: the source takes the
+    * aggregate guard.
     */
   private[graft] def sourceKeys(keys: DataFrame): Option[Seq[IndexedSeq[Any]]] = {
     import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.planning.PhysicalOperation
     import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val types = keys.schema.fields.map(_.dataType).toIndexedSeq
     if (!types.forall(valueEqual)) return None
     val bound = DriverKeyBound
     val plan = keys.queryExecution.optimizedPlan
-    def estimated: BigInt = plan.stats.rowCount.getOrElse(
-      plan.stats.sizeInBytes / EstimationUtils.getSizePerRow(plan.output))
+    def estimated: BigInt = plan match {
+      // a bare parquet read (projections only): its footers' count
+      case PhysicalOperation(_, Nil, LogicalRelation(HadoopFsRelation(
+          i: PartitioningAwareFileIndex, _, _, _, _: ParquetFileFormat, _),
+          _, _, _, _)) => DataSkipping.footerRows(
+        keys.sparkSession.sparkContext.hadoopConfiguration, i.allFiles(), bound)
+      case _ => plan.stats.rowCount.getOrElse(
+        plan.stats.sizeInBytes / EstimationUtils.getSizePerRow(plan.output))
+    }
     // the keys of `rows` with no null field, or null past `cap` keys
     def take(rows: Iterator[InternalRow], cap: Long): Array[IndexedSeq[Any]] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[IndexedSeq[Any]]
@@ -6436,7 +6415,7 @@ object ManifestTable {
         val pred = keyPairs.zip(b).map { case ((tk, _), (lo, hi)) =>
           col(tk) >= lo && col(tk) <= hi }.reduce(_ && _)
         val predExpr = DataSkipping.expressionOf(pred)
-        t.snap.files.filter(f => DataSkipping.mayMatch(t.lstats.get(f), predExpr))
+        t.snap.files.filter(f => DataSkipping.mayMatch(t.lstats(f), predExpr))
       }
     val keyFrame = source.select(sCols.map(col): _*)
     val types = keyFrame.schema.fields.map(_.dataType).toIndexedSeq
@@ -6628,7 +6607,7 @@ object ManifestTable {
         else {
           val preds = bySource.flatMap(_.condition).map(pruneExpr)
           t.snap.files.filter(f =>
-            preds.exists(e => DataSkipping.mayMatch(t.lstats.get(f), e)))
+            preds.exists(e => DataSkipping.mayMatch(t.lstats(f), e)))
         }
       // inserts: source rows whose key matches NO live target row.
       // Key lookup scans only the key-candidate files (other files

@@ -7,6 +7,7 @@ import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationP
 import org.apache.spark.sql.types.StructType
 
 import graft.sinks.ManifestTable
+import graft.sinks.DataSkipping.FileStats
 
 /** `spark.readStream.format("graft")` — a Structured Streaming SOURCE
   * that tails a manifest table's delta log (VERDICT r11 next-round
@@ -282,10 +283,10 @@ final class GraftManifestSource(spark: SparkSession, table: String,
     * memoized per version (re-resolved identically on restart; the
     * sort makes the order instance-independent).
     */
-  private var snapMemo: (Long, IndexedSeq[(String, Long)]) = (-1L, null)
-  private def snapshotList(v: Long): IndexedSeq[(String, Long)] = {
+  private var snapMemo: (Long, IndexedSeq[(String, FileStats)]) = (-1L, null)
+  private def snapshotList(v: Long): IndexedSeq[(String, FileStats)] = {
     if (snapMemo._1 != v)
-      snapMemo = v -> ManifestTable.snapshotFilesWithSizes(spark, table, v)
+      snapMemo = v -> ManifestTable.snapshotFilesWithStats(spark, table, v)
         .toIndexedSeq
     snapMemo._2
   }
@@ -391,7 +392,7 @@ final class GraftManifestSource(spark: SparkSession, table: String,
         var nf = 0L
         var nb = 0L
         while (i < list.size && !limitReached(nf, nb)) {
-          nb += list(i.toInt)._2; nf += 1; i += 1
+          nb += list(i.toInt)._2.bytes; nf += 1; i += 1
         }
         return Some(
           if (i >= list.size) GraftVersionOffset(snapV) // snapshot done
@@ -432,7 +433,7 @@ final class GraftManifestSource(spark: SparkSession, table: String,
       while (i < fs0.size) {
         if (limitReached(nf, nb))
           return Some(GraftVersionOffset(v, i, snap = false))
-        nb += fs0(i.toInt)._2; nf += 1; i += 1
+        nb += fs0(i.toInt)._2.bytes; nf += 1; i += 1
       }
       pos = GraftVersionOffset(v) // version fully admitted
       vi += 1
@@ -469,7 +470,7 @@ final class GraftManifestSource(spark: SparkSession, table: String,
         val i1 = if (endO.snap) endO.index else list.size.toLong
         return ManifestTable.streamFilesBatch(spark,
           ManifestTable.snapshot(spark, table, snapV),
-          list.slice(i0.toInt, i1.toInt).map(_._1), whole = true)
+          list.slice(i0.toInt, i1.toInt), whole = true)
       }
       // incremental slice: rest of a mid-adds start version, whole
       // versions between, head of a mid-adds end version
@@ -487,7 +488,7 @@ final class GraftManifestSource(spark: SparkSession, table: String,
             from.index else 0L
           afterStart.take((endO.index - already).toInt)
         } else afterStart
-      }.map(_._1)
+      }
       ManifestTable.streamFilesBatch(spark, s, files, whole = false)
     }
 

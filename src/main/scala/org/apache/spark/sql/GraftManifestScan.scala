@@ -3,7 +3,7 @@ package org.apache.spark.sql
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, FileSourceConstantMetadataStructField, FileSourceMetadataAttribute}
-import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -49,12 +49,17 @@ import graft.sinks.DataSkipping.FileStats
   */
 object GraftManifestScan {
 
-  /** One manifest data file: table-relative path, its on-disk status,
-    * its manifest statistics (None = stats-less → never pruned),
-    * and its partition values in `partCols` order (None = null).
+  /** One manifest data file: its manifest entry (`rel`), its location,
+    * its manifest statistics and its partition values in `partCols`
+    * order (None = null). Its status is built from the location and the
+    * recorded byte size, so planning a scan lists nothing; it carries
+    * no modification time (`_metadata.file_modification_time` reads the
+    * epoch).
     */
-  final case class ManifestFile(rel: String, status: FileStatus,
-      stats: Option[FileStats], partValues: Seq[Option[String]])
+  final case class ManifestFile(rel: String, path: Path, stats: FileStats,
+      partValues: Seq[Option[String]]) {
+    val status: FileStatus = new FileStatus(stats.bytes, false, 1, 0L, 0L, path)
+  }
 
   /** The `_metadata` field that carries each row's manifest rel path. */
   val FileField = "graft_file"
@@ -138,7 +143,7 @@ object GraftManifestScan {
       // predicates from the post-scan Filter, trusting the index to
       // apply them exactly — best-effort stats pruning here would
       // return unfiltered rows for any shape DataSkipping cannot
-      // prove (modulus, UDF, stats-less file). Evaluate them the way
+      // prove (modulus, UDF, unknown range). Evaluate them the way
       // PartitioningAwareFileIndex does: bind to the partition row
       // and eval per file. (Dynamic pruning filters are stripped by
       // FileSourceScanExec before this call.)
@@ -178,14 +183,13 @@ object GraftManifestScan {
       // exactly the Delta/Iceberg index-lookup shape
       val kept =
         if (statConjuncts.isEmpty ||
-          !rangeKept.exists(_.stats.exists(_.bloom.nonEmpty))) rangeKept
+          !rangeKept.exists(_.stats.bloom.nonEmpty)) rangeKept
         else {
           val pred = statConjuncts.reduce(
             org.apache.spark.sql.catalyst.expressions.And(_, _))
-          val statsMap = rangeKept.flatMap(f => f.stats.map(f.rel -> _)).toMap
           val keptRels = graft.sinks.ManifestTable.bloomPrune(
             SparkSession.active, tableRoot, rangeKept.map(_.rel),
-            statsMap, pred).toSet
+            rangeKept.map(f => f.rel -> f.stats).toMap, pred).toSet
           rangeKept.filter(f => keptRels.contains(f.rel))
         }
       val res = kept.groupBy(partRow).toSeq
@@ -258,5 +262,18 @@ object GraftManifestScan {
     val rel = HadoopFsRelation(index, partitionSchema, dataSchema,
       None, new ManifestParquetFormat, Map.empty[String, String])(cs)
     classic.Dataset.ofRows(cs, LogicalRelation(rel, isStreaming = isStreaming))
+  }
+
+  /** A streaming parquet relation over every file under `dir`, found
+    * by Spark's own listing: a commit's recorded change files, which
+    * the manifest names by dir only.
+    */
+  def streamingDir(spark: SparkSession, dir: Path,
+      schema: StructType): DataFrame = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val index = new InMemoryFileIndex(cs, Seq(dir), Map.empty, Some(schema))
+    val rel = HadoopFsRelation(index, index.partitionSchema, schema, None,
+      new ParquetFileFormat, Map.empty[String, String])(cs)
+    classic.Dataset.ofRows(cs, LogicalRelation(rel, isStreaming = true))
   }
 }

@@ -39,6 +39,13 @@ import GraftManifestScan.ManifestFile
   */
 object GraftTableV2 {
 
+  /** (total bytes, total rows) of `files` from their manifest stats;
+    * None for no files.
+    */
+  private def sizeOf(files: Seq[ManifestFile]): Option[(Long, Long)] =
+    Option.when(files.nonEmpty)((files.iterator.map(_.stats.bytes).sum,
+      files.iterator.map(_.stats.rows).sum))
+
   /** Parse the idempotent-retry options (Delta's batch txn recipe:
     * `.writeTo(t).option("txnAppId", a).option("txnVersion", n)`) off
     * a write's options. Shared by the V1 insert path AND the dynamic
@@ -146,15 +153,10 @@ object GraftTableV2 {
       */
     def stickyProps: Map[String, String] = tblProps
 
-    /** (total bytes, total rows) over the snapshot's files when every
-      * file carries stats — the per-row width hint the broadcast-bound
-      * pricing uses.
+    /** (total bytes, total rows) over the snapshot's files, if any —
+      * the per-row width hint the broadcast-bound pricing uses.
       */
-    def sizeHint: Option[(Long, Long)] =
-      if (files.nonEmpty && files.forall(_.stats.isDefined))
-        Some((files.iterator.map(_.stats.get.bytes).sum,
-          files.iterator.map(_.stats.get.rows).sum))
-      else None
+    def sizeHint: Option[(Long, Long)] = sizeOf(files)
 
     override val schema: StructType =
       StructType(dataSchema.fields ++ partSchema.fields)
@@ -780,16 +782,12 @@ object GraftTableV2 {
       */
     def tableProps: Map[String, String] = tblProps
 
-    /** (total bytes, total rows) over the SNAPSHOT's files when every
-      * file carries stats — the same per-row width / staleness anchor
-      * [[GraftV2Table.sizeHint]] exposes pre-pushdown, so the hint
-      * rule can price a post-pushdown scan relation too.
+    /** (total bytes, total rows) over the SNAPSHOT's files — the same
+      * per-row width / staleness anchor [[GraftV2Table.sizeHint]]
+      * exposes pre-pushdown, so the hint rule can price a post-pushdown
+      * scan relation too.
       */
-    def sizeHint: Option[(Long, Long)] =
-      if (files.nonEmpty && files.forall(_.stats.isDefined))
-        Some((files.iterator.map(_.stats.get.bytes).sum,
-          files.iterator.map(_.stats.get.rows).sum))
-      else None
+    def sizeHint: Option[(Long, Long)] = sizeOf(files)
 
     override def estimateStatistics(): connector.read.Statistics = {
       val base = super.estimateStatistics() // sizeInBytes over pruned files
@@ -798,16 +796,13 @@ object GraftTableV2 {
         fileIndex.listFiles(partitionFilters, dataFilters)
           .flatMap(_.files.map(_.getPath)).toSet
       val pruned = files.filter(f => prunedPaths.contains(f.status.getPath))
-      val rowCount: java.util.OptionalLong =
-        if (pruned.nonEmpty && pruned.forall(_.stats.isDefined))
-          java.util.OptionalLong.of(pruned.iterator.map(_.stats.get.rows).sum)
-        else if (pruned.isEmpty) java.util.OptionalLong.of(0L)
-        else java.util.OptionalLong.empty()
+      val rowCount =
+        java.util.OptionalLong.of(pruned.iterator.map(_.stats.rows).sum)
       val colStats = new java.util.HashMap[
         connector.expressions.NamedReference,
         connector.read.colstats.ColumnStatistics]()
-      if (pruned.nonEmpty && pruned.forall(_.stats.isDefined)) {
-        val stats = pruned.map(_.stats.get)
+      if (pruned.nonEmpty) {
+        val stats = pruned.map(_.stats)
         // a stats-model bound → the CATALYST-internal value the
         // ColumnStat contract expects for the column's type (None =
         // not convertible: keep the stat absent rather than lie)

@@ -46,7 +46,7 @@ class DeletionVectorSpec extends AnyFunSuite with SparkSuite {
     // time travel: the pre-delete version still sees the row
     assert(ManifestTable.read(spark, t, version = 1).count() == 100)
     // metadata-only row count stays exact
-    assert(ManifestTable.rowCount(spark, t).contains(99L))
+    assert(ManifestTable.rowCount(spark, t) == 99L)
     // bounds go absent (a DV may have clipped an extreme), never stale
     assert(ManifestTable.columnBounds(spark, t, "id").isEmpty)
   }
@@ -230,7 +230,7 @@ class DeletionVectorSpec extends AnyFunSuite with SparkSuite {
     // re-enter a sidecar or rowCount double-subtracts
     ManifestTable.deleteVectors(spark, t, col("id") < 15L)
     assert(ManifestTable.read(spark, t).count() == 85)
-    assert(ManifestTable.rowCount(spark, t).contains(85L))
+    assert(ManifestTable.rowCount(spark, t) == 85L)
     // a fully-covered predicate is a no-op commit
     val v = ManifestTable.currentVersion(spark, t)
     assert(ManifestTable.deleteVectors(spark, t, col("id") < 15L) == v,
@@ -268,7 +268,7 @@ class DeletionVectorSpec extends AnyFunSuite with SparkSuite {
       .collect().map(_.getLong(0)).sorted.toSeq ==
       (0L until 20L).filterNot(Set(5L, 7L)))
     // the rewritten file dropped its DV entry; counts stay exact
-    assert(ManifestTable.rowCount(spark, t).contains(98L))
+    assert(ManifestTable.rowCount(spark, t) == 98L)
     // merge touching a DV'd file keeps the deletion too
     ManifestTable.deleteVectors(spark, t, col("id") === 41L)
     ManifestTable.merge(spark,
@@ -296,7 +296,7 @@ class DeletionVectorSpec extends AnyFunSuite with SparkSuite {
     assert(ManifestTable.read(spark, t).filter(col("lang") === "lang1")
       .collect().map(_.getLong(0)).sorted.toSeq ==
       (10L until 60L).filter(_ % 3 == 1))
-    assert(ManifestTable.rowCount(spark, t).contains(57L))
+    assert(ManifestTable.rowCount(spark, t) == 57L)
     // update through the DV'd partition materializes it for the
     // rewritten files and keeps the deletion
     ManifestTable.update(spark, t, col("lang") === "lang1",
@@ -354,7 +354,7 @@ class DeletionVectorSpec extends AnyFunSuite with SparkSuite {
     // compaction resolves the hit files and materializes the deletion
     ManifestTable.compact(spark, t)
     assert(ManifestTable.read(spark, t).count() == 54)
-    assert(ManifestTable.rowCount(spark, t).contains(54L))
+    assert(ManifestTable.rowCount(spark, t) == 54L)
   }
 
   test("SQL catalog refuses a DV-bearing table until compaction (feature gate)") {

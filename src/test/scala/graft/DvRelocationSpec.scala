@@ -77,9 +77,8 @@ class DvRelocationSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("shallow clones read inherited vectors and their own under both readers") {
-    // no `=` in this root: a clone names its files by absolute path, and
-    // the partition layout is read off every `key=value` segment of it
-    val src = Files.createTempDirectory("graft_dvmove").resolve("x y%z").toString
+    // a clone names its files by absolute path, under this `k=…` root
+    val src = awkwardRoot()
     ManifestTable.write(spark, base, src)
     ops(src)
     def fresh(name: String) =

@@ -8,11 +8,26 @@ import java.nio.file.Files
 /** File-level data skipping + row-level delete/merge on manifest
   * tables: stats collection, range pruning (MEASURED file counts, not
   * just result equality), copy-on-write rewrite narrowness, and the
-  * fail-open contract for stats-less files.
+  * fail-open contract for files whose column ranges are unknown.
   */
 class ManifestSkippingSpec extends AnyFunSuite with SparkSuite {
   private def freshTable(): String =
     Files.createTempDirectory("graft_skip").resolve("t").toString
+
+  /** Commit `t`'s live files again as its next version, each with its
+    * rows and bytes but no column ranges (the foreign-writer shape):
+    * every range unknown.
+    */
+  private def forgetRanges(t: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    val s = ManifestTable.snapshot(spark, t)
+    val p = new Path(t)
+    assert(ManifestTable.commitManifest(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      s.version + 1, s.files, s.schema.json,
+      stats = s.stats.map { case (f, st) => f -> st.copy(cols = Map.empty) },
+      parts = s.parts))
+  }
 
   /** 100 rows in 5 range-localized files: file k holds ids [20k, 20k+20). */
   private def rangedTable(): String = {
@@ -177,18 +192,11 @@ class ManifestSkippingSpec extends AnyFunSuite with SparkSuite {
     assert(ManifestTable.readWhere(spark, t, col("id").isNull).count() == 0)
   }
 
-  test("stats-less files (hand-committed manifest) are never pruned") {
-    import org.apache.hadoop.fs.Path
+  test("range-less files (hand-committed manifest) are never pruned") {
     val t = rangedTable()
-    val (fsP, p) = {
-      val pp = new Path(t)
-      (pp.getFileSystem(spark.sparkContext.hadoopConfiguration), pp)
-    }
-    // commit v2 re-listing the same files WITHOUT stats (the legacy/
-    // foreign-writer shape): pruning must keep everything
-    val files = ManifestTable.currentFiles(spark, t)
-    assert(ManifestTable.commitManifest(fsP, p, 2L, files,
-      ManifestTable.tableSchema(spark, t).get.json))
+    // v2 re-lists the same files with rows and bytes but no ranges:
+    // pruning must keep everything
+    forgetRanges(t)
     val (kept, total) = ManifestTable.skippingReport(spark, t, col("id") === 57L)
     assert(kept == total && total == 5)
     assert(ManifestTable.readWhere(spark, t, col("id") === 57L).count() == 1)
@@ -420,13 +428,8 @@ class ManifestSkippingSpec extends AnyFunSuite with SparkSuite {
         .toDF("id", "v").coalesce(1), t2)
     assert(ManifestTable.columnBounds(spark, t2, "v").isEmpty)
     assert(ManifestTable.columnBounds(spark, t2, "id").contains((1L, 2L)))
-    // a stats-less file makes the answer absent, never wrong
-    import org.apache.hadoop.fs.Path
-    val p = new Path(t)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(ManifestTable.commitManifest(fs, p, 2L,
-      ManifestTable.currentFiles(spark, t),
-      ManifestTable.tableSchema(spark, t).get.json))
+    // a file with an unknown range makes the answer absent, never wrong
+    forgetRanges(t)
     assert(ManifestTable.columnBounds(spark, t, "id").isEmpty)
   }
 
@@ -482,9 +485,9 @@ class ManifestSkippingSpec extends AnyFunSuite with SparkSuite {
       Seq((1L, "replace"), (2L, "rewrite"), (3L, "append")))
     assert(h(0)._5 == 100L && h(1)._4 == 1 && h(2)._5 == 1L)
     // exact count from metadata alone == the scanned count
-    assert(ManifestTable.rowCount(spark, t).contains(81L))
+    assert(ManifestTable.rowCount(spark, t) == 81L)
     assert(ManifestTable.read(spark, t).count() == 81L)
-    assert(ManifestTable.rowCount(spark, t, version = 1).contains(100L))
+    assert(ManifestTable.rowCount(spark, t, version = 1) == 100L)
   }
 
   test("native FileIndex scan: a plain .filter prunes files at scan planning") {
@@ -593,14 +596,13 @@ class ManifestSkippingSpec extends AnyFunSuite with SparkSuite {
     assert(scan.filter(pmod(col("part"), lit(2)) === 0).count() == 20)
     assert(scan.filter(pmod(col("part"), lit(2)) === 0)
       .select("part").distinct().collect().map(_.getInt(0)).toSet == Set(0, 2))
-    // stats-less files (collection disabled) still partition-filter exactly
-    spark.conf.set("spark.graft.manifest.collectStats", "false")
-    try {
-      val t2 = freshTable()
-      ManifestTable.write(spark, df, t2, partitionCols = Seq("part"))
-      assert(ManifestTable.fileStats(spark, t2).isEmpty)
-      assert(ManifestTable.scan(spark, t2).filter(col("part") === 1).count() == 10)
-    } finally spark.conf.unset("spark.graft.manifest.collectStats")
+    // files with no column ranges (partition ranges included) still
+    // partition-filter exactly
+    val t2 = freshTable()
+    ManifestTable.write(spark, df, t2, partitionCols = Seq("part"))
+    forgetRanges(t2)
+    assert(ManifestTable.fileStats(spark, t2).values.forall(_.cols.isEmpty))
+    assert(ManifestTable.scan(spark, t2).filter(col("part") === 1).count() == 10)
   }
 
   test("append without partitionCols inherits the recorded physical layout") {
@@ -733,7 +735,7 @@ class ManifestSkippingSpec extends AnyFunSuite with SparkSuite {
     ManifestTable.deleteVectors(spark, t,
       col("id") >= 70000L && col("id") < 70100L)
     assert(ManifestTable.currentFiles(spark, t).size == 30)
-    assert(ManifestTable.rowCount(spark, t).contains(149900L))
+    assert(ManifestTable.rowCount(spark, t) == 149900L)
     // a 100-key merge bounded to one file's range rewrites ≤2 of 30
     val before = ManifestTable.currentFiles(spark, t).toSet
     val src = spark.range(30000L, 30100L).toDF("id")
@@ -1282,7 +1284,7 @@ class ManifestSkippingSpec extends AnyFunSuite with SparkSuite {
     // DV materialization rides the scoped rewrite like the full one
     ManifestTable.deleteVectors(spark, t,
       col("id") < 5L && col("lang") === "en")
-    assert(ManifestTable.rowCount(spark, t).contains(75L))
+    assert(ManifestTable.rowCount(spark, t) == 75L)
     ManifestTable.compact(spark, t, where = Some(col("lang") === "en"))
     assert(!ManifestTable.hasDeletionVectors(spark, t),
       "in-scope DVs materialize through the scoped rewrite")

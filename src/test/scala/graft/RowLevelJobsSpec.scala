@@ -14,8 +14,9 @@ import java.nio.file.Files
   * by the key set: its pass and its write, plus the key pass and the
   * read's own schema job for a parquet source. A source with more keys
   * than the driver holds takes the aggregate guard and the semi- and
-  * anti-joins, after a key pass that gives up unless the plan's row
-  * count shows it over the bound first. A condition builder
+  * anti-joins, with no key pass when its row count shows it over the
+  * bound first: a parquet source's from its footers, a range's from
+  * its plan. A condition builder
   * (`deleteWhere`, and SQL DELETE with a condition filter pushdown cannot
   * translate) costs what a predicate does when a second read finds the
   * same rows, and a merge-on-read update re-reads its touched rows
@@ -64,8 +65,9 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
     s"$cat.db.t"
   }
 
-  /** One more key than the driver holds, 20 of them in the table: the
-    * key pass gives up and the aggregate guard runs. */
+  /** One more key than the driver holds, 20 of them in the table: its
+    * footers count the rows, and the aggregate guard runs with no key
+    * pass. */
   private lazy val overFile: String = parquet(spark.range(
     80L, 81L + ManifestTable.DriverKeyBound).select(col("id"), lit("o").as("tag")))
 
@@ -130,11 +132,11 @@ class RowLevelJobsSpec extends AnyFunSuite with SparkSuite {
       "update/cow" -> 2, "deleteNow/cow" -> 4, "updateNow/cow" -> 4,
       "merge/cow" -> 2,
       "mergeParquet/cow" -> 4, "mergeWidened/cow" -> 2,
-      "mergeOverBound/cow" -> 9, "mergeOverRange/cow" -> 7,
+      "mergeOverBound/cow" -> 8, "mergeOverRange/cow" -> 7,
       "delete/mor" -> 1, "deleteWhere/mor" -> 1, "sqlDelete/mor" -> 1,
       "update/mor" -> 2, "deleteNow/mor" -> 2, "updateNow/mor" -> 4,
       "merge/mor" -> 2,
       "mergeParquet/mor" -> 4, "mergeWidened/mor" -> 2,
-      "mergeOverBound/mor" -> 8, "mergeOverRange/mor" -> 6), counts)
+      "mergeOverBound/mor" -> 7, "mergeOverRange/mor" -> 6), counts)
   }
 }

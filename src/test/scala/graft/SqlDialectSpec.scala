@@ -288,8 +288,8 @@ class SqlDialectSpec extends AnyFunSuite with SparkSuite {
     assert(spark.sql(s"SELECT count(*) FROM $cat.db.legacy")
       .head().getLong(0) == 61L)
     // ... statistics were collected at convert (exact metadata count)
-    assert(ManifestTable.rowCount(spark, s"$wh/db/legacy")
-      .contains(61L), "converted files must carry exact stats")
+    assert(ManifestTable.rowCount(spark, s"$wh/db/legacy") == 61L,
+      "converted files must carry exact stats")
     // ... history shows the adoption; time travel reads v1
     val ops = spark.sql(s"DESCRIBE HISTORY $cat.db.legacy")
       .collect().map(_.getAs[String]("operation")).toSeq
